@@ -30,9 +30,12 @@ Everything data-sized is JVM-side higher-order array functions
 (``transform``, ``zip_with``, ``aggregate``) — no Python in the loop.
 """
 
+import functools
 import hashlib
 import math
+import operator
 import os
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window
@@ -1823,7 +1826,7 @@ def similarity_ivfpq_index_probe(spark, sf_dir):
     and the final probe prunes to each query's {_NPROBE} best cells
     before ADC-ranking only those cells' resolved rows. The oracle
     replays coarse training, the library's cell-assignment cosine
-    (``dot / sqrt(n2 * cn2)`` — the exact op tree `_cell_scored`
+    (``dot / sqrt(n2 * cn2)`` — the exact op tree `_argmax_cell_d`
     evaluates, so assignment ties break identically), PQ encoding for
     base and shard, latest-wins supersession, tombstones, probing, and
     candidate-restricted ADC. Scale shape: probes touch O(batch x
@@ -2191,30 +2194,11 @@ def _norm_vectors(frame, id_col, vec_col, op):
     )
 
 
-def _cell_scored(frame, cents):
-    """Every (_id, _v, _n2) row scored against every broadcast
-    centroid (cent_id, _cv, _cn2): adds _dot and _cos. Retained for
-    QUERY-batch-sized scoring; corpus-sized assignment goes through
-    the packed-model folds below (round 18)."""
-    dot = F.expr(
-        "aggregate(zip_with(_v, _cv, (x, y) -> x * y),"
-        " cast(0.0 AS double), (acc, x) -> acc + x)"
-    )
-    return (
-        frame.crossJoin(F.broadcast(cents))
-        .withColumn("_dot", dot)
-        .withColumn(
-            "_cos", F.col("_dot") / F.sqrt(F.col("_n2") * F.col("_cn2"))
-        )
-    )
-
-
 def _cents_packed_d(cents):
     """Double-family twin of `_cents_packed`: the (cent_id, _cv, _cn2)
     model as ONE single-row broadcast frame holding a cent_id-sorted
-    struct array, so assignment is a per-row fold instead of
-    `_cell_scored`'s n x ncells explosion + argmax shuffle (guide
-    §2.4)."""
+    struct array, so assignment is a per-row fold instead of an
+    n x ncells crossJoin + argmax shuffle (guide §2.4)."""
     return F.broadcast(
         cents.agg(
             F.array_sort(
@@ -2224,9 +2208,9 @@ def _cents_packed_d(cents):
     )
 
 
-# Per-centroid cosine inside the fold — the identical expression tree
-# `_cell_scored` evaluates (same float fold order for the dot, same
-# single sqrt of the norm product), so cosines are bit-identical.
+# Per-centroid cosine inside the fold: ``dot / sqrt(n2 * cn2)`` with
+# the dot folded in dimension order and a single sqrt of the norm
+# product — the op tree the registered oracles replay.
 _COS_D_CT = (
     "aggregate(zip_with(_v, ct._cv, (x, y) -> x * y),"
     " cast(0.0 AS double), (acc, x) -> acc + x)"
@@ -2245,9 +2229,10 @@ def _argmax_cell_d(frame, cents):
     """Input columns + _cell: each (_id, _v, _n2) row's argmax-cosine
     cell under the broadcast model, as a pure per-row fold — the
     shared assignment core of `_train_double_cells`' Lloyd rounds,
-    `ivf_topk`, and every index build/ingest path. Bit-identical
-    winners to the old `_cell_scored` + max_by shape (empty-model
-    edge: NULL best is filtered, matching the empty crossJoin).
+    `ivf_topk`, and every index build/ingest/commit path — the same
+    winners a crossJoin + max_by((cos, -cent_id)) aggregate picks
+    (empty-model edge: the NULL best is filtered, matching an empty
+    crossJoin).
     Routed through explode(array(...)) so the fold evaluates ONCE per
     row — see `_argmax_cell_int`'s lambda-CSE note."""
     cols = list(frame.columns)
@@ -2263,9 +2248,10 @@ def _argmax_cell_d(frame, cents):
 
 def _topn_cells_d(frame, cents, nprobe):
     """Input columns + _cell, one row per kept cell: each row's
-    ``nprobe`` best cells by the same (cos DESC, cent_id ASC)
-    comparator the old row_number window ordered by — an in-place
-    sort of the packed model, sliced and exploded."""
+    ``nprobe`` best cells by the (cos DESC, cent_id ASC) comparator a
+    row_number window over a crossJoin would order by — an in-place
+    sort of the packed model, sliced and exploded; the cell pick of
+    `ivf_topk`, `semantic_prune` and every index probe."""
     order = (
         "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1"
         " WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1"
@@ -2533,154 +2519,70 @@ def semantic_prune(
 
 
 # ---------------------------------------------------------------------------
-# Library surface: persisted ANN index (round 10) — the embedding
-# analog of dedup.minhash_index_build / minhash_index_probe: "the
-# index is the asset". Build trains + commits once; probes answer
-# query batches against the committed index without retraining, and
-# can append their own batch as an ingest delta (FAISS IVF-Flat add).
+# Library surface: persisted ANN indexes — the embedding analog of
+# dedup.minhash_index_build / minhash_index_probe: "the index is the
+# asset". Three families, ONE log-structured lifecycle:
+#
+#   family  model snapshot(s)      log table  log payload
+#   ivf     centroids              postings   (cell, v, n2)
+#   pq      codebook               codes      (codes)
+#   ivfpq   centroids + codebook   postings   (cell, codes)
+#
+# Each family is an `_IndexSpec` (its tables, payload, tombstone
+# encoding and live predicate, plus the codec hooks that validate a
+# batch, encode it into log rows and score a probe); ONE skeleton
+# function per lifecycle step serves all three:
+#
+# - BUILD (`_index_build`): the family wrapper trains its model(s) —
+#   or takes injected pre-trained ones, the train-on-a-sample pattern —
+#   and the shared tail pins every model with an eager
+#   ``localCheckpoint`` so it evaluates exactly ONCE (encoding, stamp
+#   and commit all read the same rows, so a nondeterministic injected
+#   frame can never leave log rows encoded under a different evaluation
+#   than probes will read), stamps every log row with the build stamp,
+#   and commits at the END, models first: each model is a SNAPSHOT
+#   (retain=2 keeps the previous one for time travel) and the log BASE
+#   commits with retain=1, so a same-path rebuild RESETS the log (old
+#   cells/codes are meaningless under retrained models). A mid-build
+#   failure leaves the old index serving. The commits are not atomic
+#   together, but a crash between them is DETECTED by the stamps. The
+#   pins are released after the final commit (`_release_pin`) on
+#   success and failure paths; pinned blocks are non-reliable storage,
+#   so an executor lost mid-build fails the build loudly (re-run it).
+# - STAMPS: every live log row carries ``build_id`` — the XOR of the
+#   content hashes (`_model_build_hash`) of the family's committed
+#   models — and ``stamp_fmt`` (`_STAMP_FMT`). Probes verify resolved
+#   live rows scan-side (`_stamp_guard`); every append first verifies
+#   the newest live log row (`_assert_log_stamp`).
+# - RESOLVE (`_resolved_log`): latest-wins per vec_id on the commit
+#   version (the whole payload + stamp as ONE atomic unit), THEN
+#   tombstone winners drop — so a delete raced by an older ingest
+#   still deletes, a later re-ingest resurrects, and an identical
+#   re-commit is idempotent.
+# - PROBE (`_index_probe`): answers a batch against the committed
+#   models + resolved log, no retraining. Batch ids collapse up front
+#   (`_pq_dedup_ids`). With ``commit=True`` the gate-checkpoint-append
+#   tail runs: stamp gate, eager ``localCheckpoint`` of the answer (a
+#   CALLER-owned pin — release it with `release_model_pin`), then the
+#   batch's delta appends with RETAIN_ALL (the log IS the index).
+# - INGEST (`_index_ingest`): the identical delta without the probe; a
+#   plain count, and a degenerate batch is a no-op returning 0.
+# - DELETE (`_index_delete`): one tombstone row per distinct id as the
+#   next delta; deleting an unknown id is a no-op.
+# - COMPACT (`_index_compact`): commits the RESOLVED view as the new
+#   base (retain=1) — NOT the generic `compact_state_versions`, which
+#   would freeze superseded rows at their replacements' version.
+# - STATS (`_index_stats`): one summary row; stats MEASURE damage and
+#   never raise — a log whose model snapshot is missing reads out with
+#   ``model_hash`` NULL and ``n_stale`` = ``n_live``.
+#
+# Model drift under heavy ingest is the documented limit of every
+# family; a fresh same-path build is the retrain lever.
 # ---------------------------------------------------------------------------
 
-
-def ivf_index_build(
-    corpus,
-    index_path,
-    ncells=None,
-    rounds=2,
-    id_col="vec_id",
-    vec_col="emb",
-    centroids=None,
-):
-    """Library operator: train an IVF-Flat index over ``corpus`` and
-    COMMIT it as two versioned state tables under ``index_path`` —
-    ``centroids/`` (one snapshot: the trained spherical k-means cells,
-    ~sqrt(n) rows) and ``postings/`` (the inverted lists: one row per
-    corpus vector with its argmax cell AND the vector itself, v0 of a
-    log-structured table that later `ivf_index_probe(commit=True)`
-    ingest batches append to). The corpus is fingerprinted ONCE; every
-    later query batch probes the committed rows — the same
-    index-is-the-asset posture the registered
-    `similarity_incremental_ingest` proves query-side and
-    `minhash_index_build` provides for text. Training and assignment
-    ride the exact machinery of `ivf_topk` (deterministic seeds,
-    lazily-chained Lloyd rounds, broadcast centroids, one driver
-    collect of the ~sqrt(n) centroid frame), so a probe-all read of
-    the committed index provably equals `cosine_topk` (pinned in
-    tests/test_similarity_api.py). Writes are the engine's crash-safe
-    `write_state_version` commits (scratch write + atomic rename;
-    readers never see a partial index). A SAME-PATH rebuild resets the
-    postings log (see the retention note below); its two commits are
-    not atomic TOGETHER, but the mismatch is DETECTED: every posting
-    row is stamped with the content hash of the centroids it was
-    assigned under (`_model_build_hash`), and probes verify the stamp
-    against the COMMITTED centroids — a rebuild that crashed between
-    its commits (or a probe racing one) fails loudly instead of
-    silently scoring old postings against new centroids. Pass
-    pre-trained ``centroids`` (``(cent_id, cv, cn2)``, as committed by
-    any build of this family) to skip training and index the full
-    corpus under the supplied model — the train-on-a-sample pattern,
-    matching `pq_index_build` / `ivfpq_index_build`; ``ncells`` /
-    ``rounds`` are ignored when centroids are supplied. Measured:
-    `BENCH_INDEX_PROBE_r16.json` records this path as
-    `ivf_flat_assign_only` (full x30 corpus under 1/30-sample-trained
-    centroids) against the full-corpus-Lloyd `ivf_flat` build — the
-    sample-trained build collapses to ~assignment cost, the 100 TB
-    build story measured rather than asserted. Returns the
-    number of indexed vectors (zero-norm vectors are dropped: cosine
-    is undefined for them, matching the whole ANN family). Corpus ids
-    are expected unique (the FAISS add-with-ids contract; dup-id
-    handling is specified only for probe/ingest BATCHES, which collapse
-    duplicates up front — `_pq_dedup_ids`)."""
-    from spark_data_test_spark.state import write_state_version
-
-    c = _norm_vectors(corpus, id_col, vec_col, "ivf_index_build").persist()
-    try:
-        if centroids is None:
-            cent_table = _train_double_cells(
-                c, ncells, rounds, "ivf_index_build"
-            ).select(
-                "cent_id",
-                F.col("_cv").alias("cv"),
-                F.col("_cn2").alias("cn2"),
-            )
-        else:
-            cent_table = centroids.select("cent_id", "cv", "cn2")
-        # pin the model with an eager localCheckpoint so it evaluates
-        # exactly ONCE: assignment, the build stamp, and the commit
-        # below all read the same pinned rows, so a nondeterministic
-        # injected centroid frame (sample(), limit()) can never leave
-        # postings assigned or stamped under a different evaluation
-        # than the model probes will read. Pinning (instead of
-        # commit-then-re-read, ADVICE r15) keeps BOTH commits at the
-        # END of the build: a mid-build failure of a same-path rebuild
-        # (OOM, bad input, interrupt) leaves the old index fully
-        # serving instead of new models over old stamped logs. The
-        # pinned blocks are model-sized (~sqrt(n) rows) and released
-        # explicitly after the final commit (ADVICE r16,
-        # `_release_pin`) on success AND failure paths; localCheckpoint
-        # is non-reliable storage, so losing an executor mid-build
-        # fails the build loudly — re-run it, the same crash posture
-        # as the non-atomic commits themselves.
-        pinned = cent_table.localCheckpoint(eager=True)
-        try:
-            bid = _model_build_hash(pinned, ["cent_id", "cv", "cn2"])
-            cents = F.broadcast(
-                pinned.select(
-                    "cent_id",
-                    F.col("cv").alias("_cv"),
-                    F.col("cn2").alias("_cn2"),
-                )
-            )
-            # round-18 fold assign: the same argmax winners as the old
-            # _cell_scored + max_by aggregate (identical cosine tree,
-            # identical (cos, -cent_id) comparator) with no n x ncells
-            # explosion and no corpus-sized exchange — each posting row
-            # keeps its own v/n2 in place instead of F.first over a
-            # shuffled group
-            assign = _argmax_cell_d(c, cents).select(
-                F.col("_id").alias("vec_id"),
-                F.col("_cell").alias("cell"),
-                F.col("_v").alias("v"),
-                F.col("_n2").alias("n2"),
-                F.lit(bid).alias("build_id"),
-                F.lit(_STAMP_FMT).cast("integer").alias("stamp_fmt"),
-            )
-            # both commits at the END, model first: centroids are a
-            # SNAPSHOT table (retrains replace it; retain=2 keeps the
-            # previous snapshot for time travel); postings are the BASE
-            # of a log table — committed with retain=1 so a REBUILD at
-            # an existing index_path RESETS the log (pruning every
-            # posting version of the previous index, whose cell ids are
-            # meaningless under the new centroids); the ingest deltas
-            # that `ivf_index_probe(commit=True)` appends afterwards
-            # use RETAIN_ALL so the log accumulates from this fresh
-            # base. A crash BETWEEN the two commits is detected (stamp
-            # mismatch, see `_model_build_hash`); a crash before either
-            # leaves the old index untouched and serving.
-            assign = assign.persist()
-            try:
-                n = assign.count()
-                os.makedirs(index_path, exist_ok=True)
-                write_state_version(
-                    pinned, f"{index_path}/centroids", retain=2
-                )
-                write_state_version(
-                    assign, f"{index_path}/postings", retain=1
-                )
-            finally:
-                assign.unpersist()
-            return n
-        finally:
-            _release_pin(pinned)
-    finally:
-        c.unpersist()
-
-
-# Tombstone marker in the postings log: real cells are nonnegative
-# cent_ids, so a posting row with this cell is a committed DELETE
-# (`ivf_index_delete`). The latest-wins resolve keeps the newest row
-# per id as usual, THEN drops tombstone winners — a delete older than
-# a re-ingest is correctly superseded, and compaction (which commits
-# the resolved view) physically drops deleted ids from the log.
+# Tombstone marker of the cell-keyed logs: real cells are nonnegative
+# cent_ids, so a posting row with this cell is a committed DELETE (the
+# codes log marks deletes with NULL codes instead).
 _TOMBSTONE_CELL = -1
 
 # Build-stamp FORMULA version, persisted as `stamp_fmt` alongside
@@ -2771,17 +2673,16 @@ def _model_build_hash(model, cols):
     """Order-independent content hash of a small model frame —
     ``xxhash64(xor, count, masked sum)`` over per-row xxhash64s of the
     named columns, the exact aggregate `_build_hash_expr` defines —
-    the BUILD STAMP that makes a
-    crashed rebuild detectable: every build stamps this hash of the
-    model(s) it committed into the postings/codes rows it writes, and
-    every probe recomputes the hash from the COMMITTED model(s) and
-    verifies each resolved live row matches. A crash between a
-    rebuild's model commit and its log commit (either order) leaves
-    rows stamped with a DIFFERENT build than the committed model hashes
-    to, so the next probe fails loudly instead of silently scoring
-    stale codes against the wrong model. The hash identifies model
-    CONTENT, not the build event: an identical retrain re-stamps
-    identically, which is exactly right — its codes are valid. One
+    the BUILD STAMP that makes a crashed rebuild detectable: every
+    build stamps the hash of the model(s) it committed into the log
+    rows it writes, and every probe recomputes it from the COMMITTED
+    model(s) and verifies each resolved live row matches. A crash
+    between a rebuild's model commit and its log commit (either order)
+    leaves rows stamped with a DIFFERENT build than the committed
+    model hashes to, so the next probe fails loudly instead of
+    silently scoring stale rows against the wrong model. The hash
+    identifies model CONTENT, not the build event: an identical
+    retrain re-stamps identically, which is exactly right. One
     model-sized aggregate, no corpus touch.
 
     A bare bit_xor is multiplicity-blind (pairs of identical rows
@@ -2804,27 +2705,12 @@ def _model_build_hash(model, cols):
 
 
 def _build_hash_expr(cols):
-    """The build-stamp aggregate as a SQL expression string, so probes
-    that fold the expected stamp into an EXISTING model agg (no extra
-    action) evaluate the exact formula `_model_build_hash` stamps with
-    — one definition, no drift between the stamping and checking
-    sides."""
+    """The build-stamp aggregate as a SQL expression string, so the
+    model agg that also reads a model's shape (`_model_stamp`)
+    evaluates the exact formula `_model_build_hash` defines — one
+    definition, no drift between the stamping and checking sides."""
     rh = f"xxhash64({', '.join(cols)})"
     return f"xxhash64(bit_xor({rh}), count(*), sum({rh} & 2147483647))"
-
-
-def _pq_codebook_row(codebook):
-    """Shape + content summary of a committed PQ codebook in ONE
-    model-sized aggregate — ``m1`` (max subspace index), ``subdim``,
-    and ``bid`` (the content hash, `_build_hash_expr` exactly).
-    Shared by every codes-based probe/ingest call site so the
-    stamp-parity contract between a probe and its ingest sibling
-    cannot drift one copy at a time."""
-    return codebook.agg(
-        F.max("s").alias("m1"),
-        F.max(F.size("csub")).alias("subdim"),
-        F.expr(_build_hash_expr(["s", "cent_id", "csub"])).alias("bid"),
-    ).first()
 
 
 def _stamp_guard(frame, payload_col, expected, op, live):
@@ -2883,29 +2769,23 @@ def _assert_log_stamp(spark, log_path, expected, op, live):
     """Crashed-rebuild gate for every LOG-APPENDING path at O(newest
     live row), not O(index): walk the log's committed versions NEWEST
     FIRST and verify the first live row found carries the committed
-    model's content hash. The probe paths additionally verify the
-    live rows their ANSWER resolves scan-side (`_stamp_guard`), but
-    that alone cannot gate a commit: a cell-pruned (or empty) answer
-    may evaluate no pre-existing row at all, and one commit landing
-    on a crashed-rebuild log would stamp a NEW-model delta on top of
-    an all-old-stamped log — permanently blinding this gate's
-    newest-live-row witness for every later append. So BOTH commit
-    paths (probe ``commit=True`` and the ingest-only entries) run
-    this gate before appending; a pure ingest pays nothing else. A
-    crashed rebuild (model snapshot advanced, log not reset) leaves
-    the ENTIRE existing log stamped under the old model, so the
-    newest live row alone witnesses it. Without this gate an ingest
-    loop would keep "successfully" appending batches (stamped under
-    the NEW model) onto a log every probe rejects, and the diagnosed
-    repair — a same-path rebuild, which resets the log — would then
-    silently discard them. ``live`` maps a version frame to its
-    non-tombstone predicate (tombstones deliberately carry NULL
-    stamps and prove nothing about the log's model). Cost shape: on
-    an ingest cadence the newest version IS the previous batch delta,
-    so this reads one batch-sized file; tombstone-only deltas step
-    back one version; a fresh post-build log reads the base version's
-    first live row (pushed single-column read). A log with no live
-    row anywhere cannot contradict the model — appending is safe."""
+    model's content hash. The probes additionally verify the live rows
+    their ANSWER resolves scan-side (`_stamp_guard`), but that alone
+    cannot gate a commit: a cell-pruned (or empty) answer may evaluate
+    no pre-existing row at all, and one commit landing on a
+    crashed-rebuild log would stamp a NEW-model delta on top of an
+    all-old-stamped log — permanently blinding this gate's
+    newest-live-row witness for every later append, and the repair (a
+    same-path rebuild, which resets the log) would then silently
+    discard the appended batches. A crashed rebuild leaves the ENTIRE
+    existing log stamped under the old model, so the newest live row
+    alone witnesses it. ``live`` returns the family's non-tombstone
+    predicate (tombstones deliberately carry NULL stamps and prove
+    nothing about the log's model). Cost shape: on an ingest cadence
+    the newest version IS the previous batch delta, so this reads one
+    batch-sized file; tombstone-only deltas step back one version. A
+    log with no live row anywhere cannot contradict the model —
+    appending is safe."""
     from spark_data_test_spark.state import _committed_state_version
 
     cur = _committed_state_version(log_path)
@@ -2919,7 +2799,7 @@ def _assert_log_stamp(spark, log_path, expected, op, live):
             # pre-stamping release wrote this version: its live rows
             # resolve with NULL stamps, which every probe rejects
             part = part.withColumn("build_id", F.lit(None).cast("long"))
-        row = part.where(live(part)).select("build_id").first()
+        row = part.where(live()).select("build_id").first()
         if row is None:
             continue  # tombstone-only delta: step back one version
         if row.build_id is None or int(row.build_id) != int(expected):
@@ -2936,95 +2816,284 @@ def _assert_log_stamp(spark, log_path, expected, op, live):
         return
 
 
-def _resolved_postings(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the postings log: a re-ingested id may
-    appear in several deltas — possibly with a CHANGED vector in a
-    DIFFERENT cell — so each read resolves per vec_id on the commit
-    version (max_by): deterministic, and an id can never occupy two
-    ranks. Tombstone rows (`ivf_index_delete`) participate in the
-    resolve and are filtered AFTER it, so the newest commit decides
-    whether an id is live. Same shuffle cost as a plain
-    dropDuplicates over the log; `ivf_index_compact` keeps the log
-    short. Returns None for a missing/empty log."""
+class _Model(NamedTuple):
+    """One committed model snapshot of an index family."""
+
+    table: str
+    hash_cols: tuple  # the build-stamp hash covers these columns
+    shape: Callable  # () -> shape agg columns, folded into the stamp agg
+    stats: tuple  # shape columns the family's stats report
+
+
+_CENTROIDS = _Model(
+    "centroids",
+    ("cent_id", "cv", "cn2"),
+    lambda: [F.max(F.size("cv")).alias("dim")],
+    (),
+)
+_CODEBOOK = _Model(
+    "codebook",
+    ("s", "cent_id", "csub"),
+    lambda: [
+        (F.max("s") + 1).cast("long").alias("m"),
+        F.max(F.size("csub")).alias("subdim"),
+        F.count(F.lit(1)).alias("n_code_rows"),
+    ],
+    ("m", "n_code_rows"),
+)
+
+
+class _IndexSpec(NamedTuple):
+    """One persisted-index family: everything the shared lifecycle
+    skeleton needs to know about it (see the section comment)."""
+
+    name: str  # public prefix of the family's ``{name}_index_*`` calls
+    models: tuple  # `_Model` snapshots, in commit order
+    model_noun: str  # names the models in the half-built-index error
+    log: str  # log table under the index path
+    payload: tuple  # log columns between vec_id and the stamps
+    tombstone: dict  # payload column -> tombstone value (others NULL)
+    live: Callable  # () -> the non-tombstone predicate
+    guard_col: str  # payload column the scan-side stamp guard rewrites
+    # (deduped batch, committed, op, id_col, vec_col) -> the validated
+    # (_id, _v[, _n2]) batch, or None when it holds no nonzero vector
+    batch: Callable
+    # ((_id, _v, _n2) vectors, {table: model frame}) -> (vec_id, *payload)
+    encode: Callable
+    # (batch, resolved log, committed, nprobe) -> (query_id, vec_id, score)
+    score: Callable
+    score_col: str
+    score_desc: bool
+    # (resolved log, stale predicate) -> one-row live-side stats frame
+    stats_live: Callable
+    stats_cols: tuple  # the family's public stats column order
+
+
+class _Committed(NamedTuple):
+    """The committed models of an index, verified-stamp ready."""
+
+    frames: dict  # table -> committed model frame
+    stamp: int  # the build stamp live log rows must carry
+    shape: dict  # merged shape-agg values of every model
+
+
+def _model_stamp(spec, frames):
+    """(build stamp, shape) of ``frames`` ({table: model frame or
+    None}) in ONE model-sized agg per present model: the content hash
+    (`_build_hash_expr`) and the model's shape columns ride the same
+    action. The stamp is the XOR of every model's hash, or None when a
+    model is missing."""
+    hashes, shape = [], {}
+    for m in spec.models:
+        frame = frames[m.table]
+        if frame is None:
+            continue
+        row = frame.agg(
+            F.expr(_build_hash_expr(m.hash_cols)).alias("_h"), *m.shape()
+        ).first().asDict()
+        hashes.append(int(row.pop("_h") or 0))
+        shape.update(row)
+    if len(hashes) < len(spec.models):
+        return None, shape
+    return functools.reduce(operator.xor, hashes, 0), shape
+
+
+def _read_models(spec, spark, index_path):
+    from spark_data_test_spark.state import read_state_table
+
+    return {
+        m.table: read_state_table(spark, f"{index_path}/{m.table}")
+        for m in spec.models
+    }
+
+
+def _read_log(spec, spark, index_path):
+    """Every committed log version, each row tagged with its version
+    ``_pv``; None for a missing log."""
     from spark_data_test_spark.state import read_state_union
 
-    log = read_state_union(
+    return read_state_union(
         spark,
-        f"{index_path}/postings",
+        f"{index_path}/{spec.log}",
         version_col="_pv",
         allow_missing_columns=True,
     )
+
+
+def _committed(spec, spark, index_path, op):
+    """The committed models of the index every probe and ingest reads,
+    raising on a missing index and on a half-built one (models
+    committed but no log — a build that crashed between its commits:
+    never graft deltas onto or score against half an index)."""
+    from spark_data_test_spark.state import _committed_state_version
+
+    frames = _read_models(spec, spark, index_path)
+    if any(f is None for f in frames.values()):
+        raise ValueError(
+            f"{op}: no committed index at {index_path}"
+            f" (run {spec.name}_index_build first)"
+        )
+    if _committed_state_version(f"{index_path}/{spec.log}") is None:
+        raise ValueError(
+            f"{op}: index at {index_path} has {spec.model_noun} but no"
+            f" committed {spec.log} (re-run {spec.name}_index_build)"
+        )
+    return _Committed(frames, *_model_stamp(spec, frames))
+
+
+def _stamped(rows, stamp):
+    """Log rows stamped with the build stamp and the formula version."""
+    return rows.withColumn("build_id", F.lit(int(stamp))).withColumn(
+        "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
+    )
+
+
+def _resolved_log(spec, spark, index_path, expect_build=None):
+    """LATEST-WINS view of an index log: per vec_id the newest commit's
+    payload and stamps win as ONE atomic unit (max_by on the version —
+    deterministic, and an id can never occupy two ranks), THEN
+    tombstone winners drop, so the newest commit decides whether an id
+    is live. Same shuffle cost as a plain dropDuplicates over the log.
+    Logs written before build stamping (no ``build_id``) or before
+    stamp-format versioning (no ``stamp_fmt``) resolve with NULLs,
+    which the probe guard reads as stale. With ``expect_build`` every
+    surviving row's stamp is verified scan-side (`_stamp_guard`).
+    Returns None for a missing log."""
+    log = _read_log(spec, spark, index_path)
     if log is None:
         return None
-    if "build_id" not in log.columns:
-        # a log committed entirely by a pre-stamping release: resolve
-        # with NULL stamps (the probe guard reads them as stale and
-        # directs the operator to rebuild)
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        # pre-format-versioning log (round <= 16): NULL format, so the
-        # guard's migration diagnosis stays honest about the ambiguity
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
+    for col, typ in (("build_id", "long"), ("stamp_fmt", "integer")):
+        if col not in log.columns:
+            log = log.withColumn(col, F.lit(None).cast(typ))
+    cols = [*spec.payload, "build_id", "stamp_fmt"]
     out = (
         log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell", "v", "n2", "build_id", "stamp_fmt"),
-                F.col("_pv"),
-            ).alias("_p")
-        )
-        .select(
-            "vec_id", "_p.cell", "_p.v", "_p.n2", "_p.build_id",
-            "_p.stamp_fmt",
-        )
-        .where(F.col("cell") >= 0)
+        .agg(F.max_by(F.struct(*cols), F.col("_pv")).alias("_p"))
+        .select("vec_id", *[f"_p.{c}" for c in cols])
+        .where(spec.live())
     )
     if expect_build is not None:
         out = _stamp_guard(
-            out, "v", expect_build, "ivf_index_probe",
-            live=F.col("cell") >= 0,
+            out, spec.guard_col, expect_build, f"{spec.name}_index_probe",
+            live=spec.live(),
         )
     return out
 
 
-def ivf_index_compact(spark, index_path):
-    """Library operator: fold the IVF postings LOG into one resolved
-    snapshot — the LSM compaction step for the persisted ANN index.
-    NOT the generic `compact_state_versions`: that folds the raw union,
-    which would freeze superseded rows of a re-ingested id at the SAME
-    version as their replacements and break the latest-wins read. This
-    compactor applies the index's merge rule (newest commit per vec_id)
-    BEFORE committing, so the folded snapshot holds exactly one row per
-    indexed vector; later `ivf_index_probe(commit=True)` deltas extend
-    the log from this fresh base. Returns the committed snapshot
-    version, or None for a missing index."""
+def _index_build(spec, index_path, vectors, models):
+    """The shared build tail: pin, stamp, encode ``vectors`` and commit
+    (see the section comment). ``models`` maps each model table to
+    ``(frame, already_pinned)`` — a model the wrapper trained itself is
+    already `pq_train`'s eager pin (re-pinning would copy it twice and
+    leak the inner pin); only the rest are pinned here. Returns the
+    number of indexed vectors."""
     from spark_data_test_spark.state import write_state_version
 
-    resolved = _resolved_postings(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(
-        resolved, f"{index_path}/postings", retain=1
-    )
+    pins = {t: f for t, (f, pinned) in models.items() if pinned}
+    try:
+        for m in spec.models:
+            if m.table not in pins:
+                pins[m.table] = models[m.table][0].localCheckpoint(
+                    eager=True
+                )
+        stamp, _ = _model_stamp(spec, pins)
+        rows = _stamped(spec.encode(vectors, pins), stamp).persist()
+        try:
+            n = rows.count()
+            os.makedirs(index_path, exist_ok=True)
+            for m in spec.models:
+                write_state_version(
+                    pins[m.table], f"{index_path}/{m.table}", retain=2
+                )
+            write_state_version(rows, f"{index_path}/{spec.log}", retain=1)
+        finally:
+            rows.unpersist()
+        return n
+    finally:
+        for frame in pins.values():
+            _release_pin(frame)
 
 
-def ivf_index_delete(spark, index_path, ids, id_col="vec_id"):
-    """Library operator: REMOVE vectors from the committed IVF index —
-    the takedown / license-revocation event a 100 TB corpus index must
-    absorb without a rebuild. Commits one TOMBSTONE posting row per
-    distinct id (cell = -1, no vector) as the next log delta; the
-    latest-wins read resolves each id to its newest commit and drops
-    tombstone winners, so a deleted id vanishes from every subsequent
-    probe, a delete RACED by an older ingest still deletes (the
-    tombstone's version is higher), a later `ivf_index_probe(
-    commit=True)` re-ingest resurrects the id, and deleting an
-    unknown id is a harmless no-op. `ivf_index_compact` commits the
-    RESOLVED view, so compaction after a delete physically drops both
-    the tombstone and every superseded row — the full LSM lifecycle:
-    build / ingest / resolve / DELETE / compact.
+def _index_probe(
+    spec, queries, index_path, k, nprobe, id_col, vec_col, commit
+):
+    from spark_data_test_spark.state import RETAIN_ALL, write_state_version
 
-    ``ids`` is either an iterable of id values or a DataFrame whose
-    ``id_col`` holds them. Returns the committed delta version."""
+    op = f"{spec.name}_index_probe"
+    spark = queries.sparkSession
+    committed = _committed(spec, spark, index_path, op)
+    log = _resolved_log(spec, spark, index_path, expect_build=committed.stamp)
+    # a dup batch id would interleave two vectors' candidates in ONE
+    # rank window (duplicate neighbors, corrupt ranks); persisted
+    # BEFORE the validation first()s so the dedup shuffle runs once
+    d = _pq_dedup_ids(queries, id_col, vec_col).persist()
+    try:
+        q = spec.batch(d, committed, op, id_col, vec_col)
+        if q is None:
+            raise ValueError(f"{op}: query batch has no nonzero vectors")
+        score = F.col(spec.score_col)
+        w = Window.partitionBy("query_id").orderBy(
+            score.desc() if spec.score_desc else score.asc(),
+            F.col("vec_id").asc(),
+        )
+        result = (
+            spec.score(q, log, committed, nprobe)
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= int(k))
+            .select(
+                "query_id",
+                F.col("vec_id").alias("neighbor_id"),
+                "rank",
+                spec.score_col,
+            )
+        )
+        if not commit:
+            return result
+        log_path = f"{index_path}/{spec.log}"
+        _assert_log_stamp(spark, log_path, committed.stamp, op, spec.live)
+        result = result.localCheckpoint(eager=True)
+        # the delta is encoded from the SAME validated batch the answer
+        # used: a row dropped from the answer never reaches the log
+        write_state_version(
+            _stamped(spec.encode(q, committed.frames), committed.stamp),
+            log_path,
+            retain=RETAIN_ALL,
+        )
+        return result
+    finally:
+        d.unpersist()
+
+
+def _index_ingest(spec, batch, index_path, id_col, vec_col):
+    from spark_data_test_spark.state import RETAIN_ALL, write_state_version
+
+    op = f"{spec.name}_index_ingest"
+    spark = batch.sparkSession
+    committed = _committed(spec, spark, index_path, op)
+    log_path = f"{index_path}/{spec.log}"
+    _assert_log_stamp(spark, log_path, committed.stamp, op, spec.live)
+    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
+    try:
+        if d.first() is None:
+            return 0
+        q = spec.batch(d, committed, op, id_col, vec_col)
+        if q is None:
+            return 0
+        delta = _stamped(
+            spec.encode(q, committed.frames), committed.stamp
+        ).persist()
+        try:
+            n = delta.count()
+            if n:
+                write_state_version(delta, log_path, retain=RETAIN_ALL)
+        finally:
+            delta.unpersist()
+        return n
+    finally:
+        d.unpersist()
+
+
+def _index_delete(spec, spark, index_path, ids, id_col):
     from pyspark.sql import DataFrame
 
     from spark_data_test_spark.state import (
@@ -3033,41 +3102,459 @@ def ivf_index_delete(spark, index_path, ids, id_col="vec_id"):
         write_state_version,
     )
 
-    base = read_state_table(spark, f"{index_path}/postings")
+    op = f"{spec.name}_index_delete"
+    base = read_state_table(spark, f"{index_path}/{spec.log}")
     if base is None:
         raise ValueError(
-            f"ivf_index_delete: no committed postings at {index_path}"
-            " (run ivf_index_build first)"
+            f"{op}: no committed {spec.log} at {index_path}"
+            f" (run {spec.name}_index_build first)"
         )
     types = {f.name: f.dataType for f in base.schema.fields}
     if "build_id" not in types:
         raise ValueError(
-            f"ivf_index_delete: the log at {index_path} predates build"
+            f"{op}: the log at {index_path} predates build"
             f" stamping (committed by an earlier release) — re-run"
-            f" ivf_index_build to upgrade it before deleting"
+            f" {spec.name}_index_build to upgrade it before deleting"
         )
     if isinstance(ids, DataFrame):
         idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
     else:
         ids = list(ids)
         if not ids:
-            raise ValueError("ivf_index_delete: empty id set")
-        idf = spark.createDataFrame(
-            [(i,) for i in ids], ["vec_id"]
-        ).distinct()
+            raise ValueError(f"{op}: empty id set")
+        idf = spark.createDataFrame([(i,) for i in ids], ["vec_id"]).distinct()
+    # tombstones carry no stamp (and no stamp format): they never
+    # survive resolution, so the probe-side check never sees them
     tomb = idf.select(
         F.col("vec_id").cast(types["vec_id"]),
-        F.lit(_TOMBSTONE_CELL).cast(types["cell"]).alias("cell"),
-        F.lit(None).cast(types["v"]).alias("v"),
-        F.lit(None).cast(types["n2"]).alias("n2"),
-        # tombstones carry no stamp (and no stamp format): they never
-        # survive resolution, so the probe-side check never sees them
+        *[
+            F.lit(spec.tombstone.get(c)).cast(types[c]).alias(c)
+            for c in spec.payload
+        ],
         F.lit(None).cast(types["build_id"]).alias("build_id"),
         F.lit(None).cast("integer").alias("stamp_fmt"),
     )
     return write_state_version(
-        tomb, f"{index_path}/postings", retain=RETAIN_ALL
+        tomb, f"{index_path}/{spec.log}", retain=RETAIN_ALL
     )
+
+
+def _index_compact(spec, spark, index_path):
+    from spark_data_test_spark.state import write_state_version
+
+    resolved = _resolved_log(spec, spark, index_path)
+    if resolved is None:
+        return None
+    return write_state_version(
+        resolved, f"{index_path}/{spec.log}", retain=1
+    )
+
+
+def _index_stats(spec, spark, index_path):
+    """The shared stats readout: the family's live-side aggregates over
+    the resolved log, the log-side volume (``n_log_rows``,
+    ``n_versions``, ``n_tombstones``), the model stamp as
+    ``model_hash`` and the models' shape columns, in the family's
+    column order. All aggregates run distributed; only the one summary
+    row is collected."""
+    log = _read_log(spec, spark, index_path)
+    if log is None:
+        return None
+    stamp, shape = _model_stamp(spec, _read_models(spec, spark, index_path))
+    if stamp is None:
+        # a log without its committed model(s) is CORRUPTED state (the
+        # build commits models before the log): every live row is
+        # unverifiable, so all of them count stale
+        model_hash = F.lit(None).cast("long")
+        stale = F.lit(True)
+    else:
+        model_hash = F.lit(stamp).cast("long")
+        stale = ~F.col("build_id").eqNullSafe(model_hash)
+    live = spec.stats_live(_resolved_log(spec, spark, index_path), stale)
+    raw = log.agg(
+        F.count(F.lit(1)).alias("n_log_rows"),
+        F.count_distinct("_pv").alias("n_versions"),
+        F.coalesce(F.sum((~spec.live()).cast("long")), F.lit(0))
+        .cast("long")
+        .alias("n_tombstones"),
+    )
+    fixed = {"model_hash": model_hash}
+    for m in spec.models:
+        for c in m.stats:
+            fixed[c] = F.lit(shape.get(c)).cast("long")
+    return live.crossJoin(F.broadcast(raw)).select(
+        *[fixed.get(c, F.col(c)).alias(c) for c in spec.stats_cols]
+    )
+
+
+def _pq_dedup_ids(corpus, id_col, vec_col):
+    """One row per id, deterministically: a batch (or corpus) may carry
+    the same id twice with DIFFERENT vectors; both would land in ONE
+    commit version, where the latest-wins read's max_by on the version
+    ties arbitrarily. Keep the greatest (squared-norm, vector) pair per
+    id — norm first so a zero-norm duplicate can never outrank a live
+    vector and then silently vanish in the IVF family's zero-norm drop
+    (ADVICE r15: lexicographic-greatest alone kept e.g. [0,0] over
+    [-1,-5], erasing the id from both the answer and the commit);
+    vector order (arrays are orderable) breaks exact-norm ties."""
+    v = F.col(vec_col)
+    n2 = F.expr(
+        f"aggregate({vec_col}, cast(0.0 as double), (a, x) -> a + x * x)"
+    )
+    return (
+        corpus.select(
+            F.col(id_col).alias(id_col),
+            F.col(vec_col).cast("array<double>").alias(vec_col),
+        )
+        .where(v.isNotNull())
+        .groupBy(id_col)
+        .agg(F.max_by(vec_col, F.struct(n2, v)).alias(vec_col))
+    )
+
+
+def _pq_pack_codes(codes, id_col):
+    """(id, s, code) x m -> one (vec_id, codes array) row per id: the
+    log-table unit, so latest-wins resolves a re-ingested id's m codes
+    as ONE atomic replacement (never a mix of old and new subspaces)."""
+    return (
+        codes.groupBy(id_col)
+        .agg(
+            F.array_sort(F.collect_list(F.struct("s", "code"))).alias("_p")
+        )
+        .select(
+            F.col(id_col).alias("vec_id"),
+            F.expr("transform(_p, r -> r.code)").alias("codes"),
+        )
+    )
+
+
+# -- family codec hooks -----------------------------------------------------
+
+
+def _dim_locked(q):
+    """First-row dim lock over a ``_v`` frame: ``(rows of that dim,
+    dim)`` — ragged rows are a data bug upstream and drop rather than
+    mis-split or NULL-pad a ``zip_with`` — or ``(q, None)`` when the
+    frame is empty."""
+    first = q.select(F.size("_v").alias("d")).first()
+    if first is None:
+        return q, None
+    dim = int(first.d)
+    return q.where(F.size("_v") == dim), dim
+
+
+def _check_pq_dims(dim, committed, op):
+    m, subdim = int(committed.shape["m"]), int(committed.shape["subdim"])
+    if dim % m:
+        raise ValueError(
+            f"{op}: vector dim {dim} not divisible by"
+            f" the committed codebook's m={m}"
+        )
+    if dim // m != subdim:
+        raise ValueError(
+            f"{op}: subvector dim {dim // m} != committed codebook"
+            f" subvector dim {subdim} (dim {dim}, m={m})"
+        )
+
+
+def _ivf_batch(d, committed, op, id_col, vec_col):
+    """Zero-norm drop + dim lock against the COMMITTED centroid dim: a
+    mismatched vector would NULL-pad the cosine fold and land an
+    unsound posting row. An all-zero-norm batch passes through empty
+    (the probe answers nothing, the ingest commits nothing)."""
+    q, dim = _dim_locked(_norm_vectors(d, id_col, vec_col, op))
+    cdim = int(committed.shape["dim"] or 0)
+    if dim is not None and dim != cdim:
+        raise ValueError(
+            f"{op}: batch vector dim {dim} != committed centroid dim {cdim}"
+        )
+    return q
+
+
+def _pq_batch(d, committed, op, id_col, vec_col):
+    q, dim = _pq_frame(d, id_col, vec_col, op)
+    _check_pq_dims(dim, committed, op)
+    return q
+
+
+def _ivfpq_batch(d, committed, op, id_col, vec_col):
+    """Zero-norm drop (a zero vector has no coarse cell), then the
+    codebook shape checks; None for an all-zero-norm batch."""
+    q, dim = _dim_locked(_norm_vectors(d, id_col, vec_col, op))
+    if dim is None:
+        return None
+    _check_pq_dims(dim, committed, op)
+    return q
+
+
+def _cents(frames):
+    """The committed centroids under the cell folds' column names, in
+    ONE partition: the folds pack the model with a global agg, which
+    then plans no exchange (the model is ~sqrt(n) rows)."""
+    return frames["centroids"].coalesce(1).select(
+        "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
+    )
+
+
+def _probed_cells(q, committed, nprobe):
+    """(query_id, cell): each query's ``nprobe`` best committed cells."""
+    return _topn_cells_d(q, _cents(committed.frames), nprobe).select(
+        F.col("_id").alias("query_id"), F.col("_cell").alias("cell")
+    )
+
+
+def _packed_codes(vectors, frames):
+    """(vec_id, codes): each vector encoded against the committed
+    codebook, its m codes packed into one atomic log row."""
+    return _pq_pack_codes(
+        pq_encode(vectors, frames["codebook"], id_col="_id", vec_col="_v"),
+        "_id",
+    )
+
+
+def _ivf_encode(vectors, frames):
+    """(vec_id, cell, v, n2): each vector's argmax-cosine committed
+    cell, carrying the vector itself (IVF-Flat inverted lists)."""
+    return _argmax_cell_d(vectors, _cents(frames)).select(
+        F.col("_id").alias("vec_id"),
+        F.col("_cell").alias("cell"),
+        F.col("_v").alias("v"),
+        F.col("_n2").alias("n2"),
+    )
+
+
+def _ivfpq_encode(vectors, frames):
+    """(vec_id, cell, codes): cell and codes as one atomic log row."""
+    return (
+        _ivf_encode(vectors, frames)
+        .select("vec_id", "cell")
+        .join(_packed_codes(vectors, frames), "vec_id")
+    )
+
+
+def _ivf_score(q, log, committed, nprobe):
+    # the posting lists carry the vectors: exact cosine inside the
+    # probed cells; the query side joins unhinted (AQE broadcasts
+    # small batches, only the centroid frame is force-broadcast)
+    qe = q.select(
+        F.col("_id").alias("query_id"),
+        F.col("_v").alias("_qv"),
+        F.col("_n2").alias("_qn2"),
+    )
+    dot = F.expr(
+        "aggregate(zip_with(_qv, v, (x, y) -> x * y),"
+        " cast(0.0 AS double), (acc, x) -> acc + x)"
+    )
+    return (
+        _probed_cells(q, committed, nprobe)
+        .join(log, "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .join(qe, "query_id")
+        .withColumn("cosine", dot / F.sqrt(F.col("_qn2") * F.col("n2")))
+    )
+
+
+def _adc(candidates, q, committed, keys):
+    """(query_id, vec_id, adc_dist): each candidate's ADC distance, the
+    sum of its m lookups in the query's exact float distance table to
+    every codebook entry (nq x m x ncodes rows, joined WITHOUT a hint —
+    AQE broadcasts modest batches); self-matches excluded."""
+    m, subdim = int(committed.shape["m"]), int(committed.shape["subdim"])
+    tables = (
+        _pq_split(q, m, subdim)
+        .join(F.broadcast(committed.frames["codebook"]), "s")
+        .withColumn("d", F.expr(_PQ_L2F))
+        .select(F.col("_id").alias("query_id"), "s", "cent_id", "d")
+    )
+    return (
+        candidates.join(tables, keys)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("d").alias("adc_dist"))
+    )
+
+
+def _pq_score(q, log, committed, nprobe):
+    # flat PQ: every live code row is a candidate (O(index) per query)
+    flat = log.select("vec_id", F.posexplode("codes").alias("s", "cent_id"))
+    return _adc(flat, q, committed, ["s", "cent_id"])
+
+
+def _ivfpq_score(q, log, committed, nprobe):
+    # only the probed cells' CODE rows are candidates
+    flat = log.select(
+        "vec_id", "cell", F.posexplode("codes").alias("s", "cent_id")
+    )
+    cand = _probed_cells(q, committed, nprobe).join(flat, "cell")
+    return _adc(cand, q, committed, ["query_id", "s", "cent_id"])
+
+
+def _cell_stats(resolved, stale):
+    # n_live and the stale count fold out of the per-cell histogram,
+    # so the resolve subplan executes ONCE for all live-side stats
+    per_cell = resolved.groupBy("cell").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(stale.cast("long")).alias("_st"),
+    )
+    return per_cell.agg(
+        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
+        F.count(F.lit(1)).alias("n_cells_used"),
+        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
+            "max_cell_rows"
+        ),
+        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
+    )
+
+
+def _code_stats(resolved, stale):
+    per_bucket = (
+        resolved.select(
+            F.posexplode("codes").alias("s", "code"),
+            stale.cast("long").alias("_st"),
+        )
+        .groupBy("s", "code")
+        .agg(F.count(F.lit(1)).alias("_n"), F.sum("_st").alias("_sts"))
+    )
+    # every live row contributes exactly ONE code in subspace 0
+    # whatever m it was encoded under, so row counts fold out of the
+    # s=0 buckets — never divide by the CURRENT codebook's m, which
+    # miscounts rows a crashed retrain left encoded under an old model
+    # with a different m (the exact damage n_stale exists to measure)
+    s0 = F.col("s") == 0
+    return per_bucket.agg(
+        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
+            "max_code_rows"
+        ),
+        F.coalesce(F.sum(F.when(s0, F.col("_n"))), F.lit(0))
+        .cast("long")
+        .alias("n_live"),
+        F.coalesce(F.sum(F.when(s0, F.col("_sts"))), F.lit(0))
+        .cast("long")
+        .alias("n_stale"),
+    )
+
+
+_IVF_FLAT = _IndexSpec(
+    name="ivf",
+    models=(_CENTROIDS,),
+    model_noun="centroids",
+    log="postings",
+    payload=("cell", "v", "n2"),
+    tombstone={"cell": _TOMBSTONE_CELL},
+    live=lambda: F.col("cell") >= 0,
+    guard_col="v",
+    batch=_ivf_batch,
+    encode=_ivf_encode,
+    score=_ivf_score,
+    score_col="cosine",
+    score_desc=True,
+    stats_live=_cell_stats,
+    stats_cols=(
+        "n_live", "n_cells_used", "n_log_rows", "n_versions",
+        "n_tombstones", "max_cell_rows", "model_hash", "n_stale",
+    ),
+)
+_PQ = _IndexSpec(
+    name="pq",
+    models=(_CODEBOOK,),
+    model_noun="a codebook",
+    log="codes",
+    payload=("codes",),
+    tombstone={},
+    live=lambda: F.col("codes").isNotNull(),
+    guard_col="codes",
+    batch=_pq_batch,
+    encode=_packed_codes,
+    score=_pq_score,
+    score_col="adc_dist",
+    score_desc=False,
+    stats_live=_code_stats,
+    stats_cols=(
+        "n_live", "m", "n_code_rows", "n_log_rows", "n_versions",
+        "n_tombstones", "max_code_rows", "model_hash", "n_stale",
+    ),
+)
+_IVF_PQ = _IndexSpec(
+    name="ivfpq",
+    models=(_CENTROIDS, _CODEBOOK),
+    model_noun="models",
+    log="postings",
+    payload=("cell", "codes"),
+    tombstone={"cell": _TOMBSTONE_CELL},
+    live=lambda: F.col("cell") >= 0,
+    guard_col="codes",
+    batch=_ivfpq_batch,
+    encode=_ivfpq_encode,
+    score=_ivfpq_score,
+    score_col="adc_dist",
+    score_desc=False,
+    stats_live=_cell_stats,
+    stats_cols=(
+        "n_live", "n_cells_used", "max_cell_rows", "m", "n_code_rows",
+        "n_log_rows", "n_versions", "n_tombstones", "model_hash",
+        "n_stale",
+    ),
+)
+
+# the per-family latest-wins views, by their long-standing names
+_resolved_postings = functools.partial(_resolved_log, _IVF_FLAT)
+_resolved_codes = functools.partial(_resolved_log, _PQ)
+_resolved_ivfpq_postings = functools.partial(_resolved_log, _IVF_PQ)
+
+
+def _trained_centroids(c, ncells, rounds, op):
+    """Committed-schema (cent_id, cv, cn2) centroids trained over a
+    normalized (_id, _v, _n2) frame."""
+    return _train_double_cells(c, ncells, rounds, op).select(
+        "cent_id", F.col("_cv").alias("cv"), F.col("_cn2").alias("cn2")
+    )
+
+
+# -- IVF-Flat index ---------------------------------------------------------
+
+
+def ivf_index_build(
+    corpus,
+    index_path,
+    ncells=None,
+    rounds=2,
+    id_col="vec_id",
+    vec_col="emb",
+    centroids=None,
+):
+    """Library operator: train an IVF-Flat index over ``corpus`` and
+    COMMIT it under ``index_path`` as ``centroids/`` (the trained
+    spherical k-means cells, ~sqrt(n) rows) and ``postings/`` (the
+    inverted lists: one row per corpus vector with its argmax cell AND
+    the vector itself). Training and assignment ride the exact
+    machinery of `ivf_topk` (deterministic seeds, lazily-chained Lloyd
+    rounds, broadcast centroids, one collect of the centroid
+    frame), so a probe-all read of the committed index provably equals
+    `cosine_topk` (pinned in tests/test_similarity_api.py). Pass
+    pre-trained ``centroids`` (``(cent_id, cv, cn2)``, as committed by
+    any build of this family) to skip training and index the full
+    corpus under them; ``ncells`` / ``rounds`` are then ignored.
+    `BENCH_INDEX_PROBE_r16.json` records that path as
+    `ivf_flat_assign_only`: the sample-trained build collapses to
+    ~assignment cost. Returns the number of indexed vectors
+    (zero-norm vectors are dropped: cosine is undefined for them).
+    Corpus ids are expected unique (the FAISS add-with-ids contract;
+    only probe/ingest BATCHES collapse duplicate ids). Commit, pin and
+    stamp rules: see the persisted-index section comment."""
+    c = _norm_vectors(corpus, id_col, vec_col, "ivf_index_build").persist()
+    try:
+        if centroids is None:
+            centroids = _trained_centroids(
+                c, ncells, rounds, "ivf_index_build"
+            )
+        return _index_build(
+            _IVF_FLAT,
+            index_path,
+            c,
+            {"centroids": (centroids.select("cent_id", "cv", "cn2"), False)},
+        )
+    finally:
+        c.unpersist()
 
 
 def ivf_index_probe(
@@ -3080,327 +3567,80 @@ def ivf_index_probe(
     commit=False,
 ):
     """Library operator: answer an ANN query batch against the
-    COMMITTED IVF index at ``index_path`` — no retraining, no corpus
-    rescan: cost is O(batch x probed cells). Each query scores the
-    broadcast committed centroids, probes its ``nprobe`` best cells,
-    and exact-rescores only those cells' posting rows (the postings
-    carry the vectors, so no resolver frame is needed — IVF-Flat
-    inverted lists). Returns ``(query_id, neighbor_id, rank, cosine)``
-    with the family's shared contract: (cosine desc, neighbor_id)
-    tie-break, self-matches excluded, zero-norm queries dropped. With
-    ``nprobe`` >= the committed cell count the probe is exhaustive and
-    provably equals `cosine_topk` over the indexed corpus.
+    COMMITTED IVF-Flat index — no retraining, no corpus rescan: cost
+    is O(batch x probed cells). Each query probes its ``nprobe`` best
+    cells under the broadcast committed centroids and exact-rescores
+    only those cells' posting rows (the postings carry the vectors).
+    Returns ``(query_id, neighbor_id, rank, cosine)``: (cosine desc,
+    neighbor_id) tie-break, self-matches excluded, zero-norm queries
+    dropped (an all-zero-norm batch answers no rows), a batch of the
+    wrong dim raises. With ``nprobe`` >= the committed cell count the
+    probe is exhaustive and provably equals `cosine_topk` over the
+    indexed corpus.
 
-    With ``commit=True`` the batch's own vectors are assigned to their
+    With ``commit=True`` the batch's vectors are assigned to their
     argmax committed cell and appended as the next postings delta
-    AFTER the probe result materializes — ingestion without retrain,
-    exactly how a FAISS IVF index absorbs adds (and the probe-then-
-    commit pattern of `minhash_index_probe`). Delta commits retain
-    every version — the log IS the index; fold it with
-    `ivf_index_compact(spark, index_path)` to reclaim space at any
-    cadence (NOT the generic `compact_state_versions`, which would
-    freeze superseded rows at the same version as their replacements
-    and break the latest-wins read). Re-committed ids resolve LATEST-WINS
-    at read (each posting row carries its commit version; the newest
-    version's row defines the id's vector and cell — the LSM read
-    rule), so an identical re-commit is idempotent and a CHANGED
-    vector deterministically replaces the old one at its new cell;
-    `ivf_index_delete` rides the same rule with tombstone rows, so a
-    re-commit after a delete resurrects the id.
-    Drifted centroids from heavy ingest are the operator's documented
-    limit: recall degrades gracefully, and a fresh `ivf_index_build`
-    over the grown corpus is the re-train lever (a same-path rebuild
-    RESETS the postings log, so no stale cell ids survive a retrain).
-    The ``commit=True`` result is an eager ``localCheckpoint`` whose
-    pin is CALLER-owned — release it with `release_model_pin` once
-    read (ADVICE r17); a pure-ingest workload should call
+    after the answer materializes (FAISS IVF ``add`` without retrain);
+    the answer is a CALLER-owned eager ``localCheckpoint`` — release it
+    with `release_model_pin`. A pure-ingest workload should call
     `ivf_index_ingest` instead (identical delta, no probe work, no
-    pinned frame)."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = queries.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    if cents_raw is None:
-        raise ValueError(
-            f"ivf_index_probe: no committed index at {index_path}"
-            " (run ivf_index_build first)"
-        )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
-    )
-    # build-stamp check: resolved live postings must be stamped with
-    # the COMMITTED centroids' content hash (crashed-rebuild
-    # detector); the centroid dim for the batch dim-lock rides the
-    # same model-sized agg — no extra action
-    expected, cdim = _ivf_model_hash_dim(cents_raw)
-    postings = _resolved_postings(
-        spark, index_path, expect_build=expected
-    )
-    if postings is None:
-        # centroids committed but no postings: a build that crashed
-        # between its two commits — surface it, don't join against None
-        raise ValueError(
-            f"ivf_index_probe: index at {index_path} has centroids but "
-            "no committed postings (re-run ivf_index_build)"
-        )
-    # collapse duplicate batch ids up front (greatest (norm, vector)
-    # pair), the family rule shared with pq_index_probe / ivfpq_index_probe: a dup
-    # id would interleave both vectors' candidates in ONE rank window,
-    # producing duplicate neighbor_ids and corrupt ranks
-    queries = _pq_dedup_ids(queries, id_col, vec_col)
-    qn = _norm_vectors(queries, id_col, vec_col, "ivf_index_probe")
-    # persist BEFORE the validation first() so the dim-lock action
-    # seeds the same cache every later scan reads — not a second
-    # execution of the dedup shuffle
-    qn = qn.persist()
-    try:
-        # read AND commit paths validate (the pq family's posture): a
-        # mis-dim query NULL-pads the zip_with scoring, so without the
-        # check a read probe returns NULL-cosine rows and a commit
-        # lands unsound posting rows in the log with a success count
-        q = _validated_ivf_batch(qn, cdim, "ivf_index_probe")
-        wq = Window.partitionBy("_id").orderBy(
-            F.col("_cos").desc(), "cent_id"
-        )
-        probes = (
-            _cell_scored(q, cents)
-            .withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= int(nprobe))
-            .select(
-                F.col("_id").alias("query_id"),
-                F.col("cent_id").alias("cell"),
-            )
-        )
-        # posting lists join on cell; the query side joins WITHOUT a
-        # broadcast hint (batches can be large — AQE broadcasts small
-        # ones on its own; only the ~sqrt(n) centroid frame above is
-        # unconditionally broadcast)
-        qe = q.select(
-            F.col("_id").alias("query_id"),
-            F.col("_v").alias("_qv"),
-            F.col("_n2").alias("_qn2"),
-        )
-        dot = F.expr(
-            "aggregate(zip_with(_qv, v, (x, y) -> x * y),"
-            " cast(0.0 AS double), (acc, x) -> acc + x)"
-        )
-        scored = (
-            probes.join(postings, "cell")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .join(qe, "query_id")
-            .withColumn("cosine", dot / F.sqrt(F.col("_qn2") * F.col("n2")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), "vec_id"
-        )
-        result = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= F.lit(int(k)))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "rank",
-                "cosine",
-            )
-        )
-        if not commit:
-            return result
-        # commit gate BEFORE materializing the answer: a cell-pruned
-        # answer may evaluate no pre-existing posting row, so the
-        # scan-side guard alone cannot stop this append from landing
-        # a new-stamped delta on a crashed-rebuild log (which would
-        # blind the ingest entries' newest-live-row gate)
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/postings",
-            expected,
-            "ivf_index_probe",
-            live=lambda part: part["cell"] >= 0,
-        )
-        result = result.localCheckpoint(eager=True)
-        # the batch was deduped up front, so a commit version never
-        # holds two rows for one id (the latest-wins read's max_by on
-        # the version would tie arbitrarily otherwise); the delta is
-        # the ONE shared definition `ivf_index_ingest` also commits
-        batch = _ivf_commit_delta(q, cents, expected)
-        # ingest deltas extend the LOG from the build's base — see
-        # state.RETAIN_ALL for the log-table retention convention
-        from spark_data_test_spark.state import RETAIN_ALL
-
-        write_state_version(
-            batch, f"{index_path}/postings", retain=RETAIN_ALL
-        )
-        return result
-    finally:
-        qn.unpersist()
-
-
-def _ivf_model_hash_dim(cents_raw):
-    """(content hash, vector dim) of the committed IVF centroids in
-    ONE model-sized aggregate — the build stamp every IVF-Flat path
-    checks/writes plus the dim the batch dim-lock compares against,
-    so neither costs a second driver action. Hash formula is
-    `_build_hash_expr` exactly (see `_model_build_hash`)."""
-    row = cents_raw.agg(
-        F.expr(_build_hash_expr(["cent_id", "cv", "cn2"])).alias("h"),
-        F.max(F.size("cv")).alias("d"),
-    ).first()
-    # empty-model witness is the max(), not the hash: an empty frame
-    # still hashes the fixed (NULL, 0, NULL) aggregate triple to a
-    # non-NULL value (see _model_build_hash) — keep that hash so the
-    # stamp side stays formula-faithful, and report dim 0
-    if row is None:
-        return 0, 0
-    h = 0 if row.h is None else int(row.h)
-    return h, (0 if row.d is None else int(row.d))
-
-
-def _validated_ivf_batch(q, cdim, op):
-    """Dim validation for every IVF-Flat batch (read probe,
-    probe-commit, and ingest alike, so the shared-delta contract
-    covers the error path too): first-row dim lock against the
-    COMMITTED centroid dim (``cdim``, precomputed on the model agg —
-    no extra action here beyond the one first()) — without it
-    `_cell_scored`'s zip_with NULL-pads a mismatched vector, max_by
-    assigns it an arbitrary cell, and unsound posting rows land in
-    the log with a success count. Raises on a wrong-dim batch (the
-    pq/ivfpq siblings' "not divisible" / "subvector dim" analogue);
-    rows deviating from the locked dim drop like `_pq_frame`'s ragged
-    rule. An empty frame (all zero-norm) passes through — the caller
-    decides the empty-batch contract."""
-    first = q.select(F.size("_v").alias("d")).first()
-    if first is None:
-        return q
-    dim = int(first.d)
-    if dim != int(cdim):
-        raise ValueError(
-            f"{op}: batch vector dim {dim} != committed centroid"
-            f" dim {int(cdim)}"
-        )
-    return q.where(F.size("_v") == dim)
-
-
-def _ivf_commit_delta(q, cents, expected):
-    """The IVF-Flat ingest delta — ONE definition shared by
-    `ivf_index_probe(commit=True)` and `ivf_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: per deduped batch id, the argmax
-    committed cell (cosine desc, cent_id tie-break), the raw vector
-    and its norm (IVF-Flat inverted lists carry the vectors), stamped
-    with the VERIFIED committed centroids' content hash."""
-    return (
-        _cell_scored(q, cents)
-        .groupBy("_id")
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(
-                    F.col("_cos").alias("c"),
-                    (-F.col("cent_id")).alias("nc"),
-                ),
-            ).alias("cell"),
-            F.first("_v").alias("v"),
-            F.first("_n2").alias("n2"),
-        )
-        .select(
-            F.col("_id").alias("vec_id"),
-            "cell",
-            "v",
-            "n2",
-            F.lit(int(expected)).alias("build_id"),
-            F.lit(_STAMP_FMT).cast("integer").alias("stamp_fmt"),
-        )
+    pinned frame). Latest-wins, tombstone and compaction rules: see
+    the persisted-index section comment."""
+    return _index_probe(
+        _IVF_FLAT, queries, index_path, k, nprobe, id_col, vec_col, commit
     )
 
 
 def ivf_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed IVF-Flat
-    index WITHOUT answering a query against it (round 18, VERDICT r17
-    item 2) — the pure-ingest sibling of ``ivf_index_probe(
-    commit=True)``, completing the three-index ingest symmetry with
-    `pq_index_ingest` / `ivfpq_index_ingest`. Each batch row is
-    assigned to its argmax cell under the broadcast committed
-    centroids and lands (with its raw vector — IVF-Flat inverted
-    lists carry the vectors) as the next postings delta — O(batch)
-    work, no probe of any cell's posting rows. For every batch that
-    commits at least one row the delta is IDENTICAL to what
-    ``ivf_index_probe(batch, ..., commit=True)`` would commit (shared
-    `_ivf_commit_delta` definition; pinned in
-    tests/test_similarity_api.py): the same up-front duplicate-id
-    collapse, zero-norm drop, dim validation, argmax cell rule, and
-    build stamp — latest-wins / tombstone semantics at read are
-    unchanged. Deliberate divergences from the probe path: the result
-    is a plain count (no eagerly-pinned frame for the caller to
-    release), and a DEGENERATE batch — empty, or emptied by the
-    zero-norm drop — is a no-op returning 0 where the probe path
-    would write an empty delta version. Before appending, the newest
-    live log row's build stamp is verified against the committed
-    centroids (`_assert_log_stamp` — the O(1-row) crashed-rebuild
-    gate the probe-commit path also runs before ITS append).
-    Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
+    index WITHOUT answering a query against it — each row assigned to
+    its argmax committed cell, landing with its raw vector as the next
+    postings delta, O(batch) work. For every batch that commits at
+    least one row the delta is IDENTICAL to what ``ivf_index_probe(
+    batch, ..., commit=True)`` would commit (pinned in
+    tests/test_similarity_api.py). A batch that is empty or all
+    zero-norm is a no-op returning 0. Returns the number of rows
+    committed."""
+    return _index_ingest(_IVF_FLAT, batch, index_path, id_col, vec_col)
 
-    spark = batch.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    if cents_raw is None:
-        raise ValueError(
-            f"ivf_index_ingest: no committed index at {index_path}"
-            " (run ivf_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/postings") is None:
-        # centroids committed but no postings log: a build crashed
-        # between its commits — refuse to graft deltas onto half an
-        # index
-        raise ValueError(
-            f"ivf_index_ingest: index at {index_path} has centroids"
-            " but no committed postings (re-run ivf_index_build)"
-        )
-    expected, cdim = _ivf_model_hash_dim(cents_raw)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/postings",
-        expected,
-        "ivf_index_ingest",
-        live=lambda part: part["cell"] >= 0,
-    )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        # empty-batch no-op BEFORE _norm_vectors (which raises on an
-        # empty frame); an all-zero-norm batch instead passes through
-        # the validation first() and counts 0 below
-        if d.first() is None:
-            return 0
-        q = _validated_ivf_batch(
-            _norm_vectors(d, id_col, vec_col, "ivf_index_ingest"),
-            cdim,
-            "ivf_index_ingest",
-        )
-        delta = _ivf_commit_delta(q, cents, expected).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/postings", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+
+def ivf_index_delete(spark, index_path, ids, id_col="vec_id"):
+    """Library operator: REMOVE vectors from the committed IVF-Flat
+    index without a rebuild — one tombstone posting row (cell = -1, no
+    vector) per distinct id as the next log delta; a deleted id
+    vanishes from every later probe, a later re-ingest resurrects it,
+    and `ivf_index_compact` physically drops it. ``ids`` is an
+    iterable of id values or a DataFrame whose ``id_col`` holds them.
+    Returns the committed delta version."""
+    return _index_delete(_IVF_FLAT, spark, index_path, ids, id_col)
+
+
+def ivf_index_compact(spark, index_path):
+    """Library operator: fold the IVF-Flat postings LOG into one
+    resolved snapshot (newest commit per vec_id, tombstones dropped)
+    that later deltas extend. Returns the committed snapshot version,
+    or None for a missing index."""
+    return _index_compact(_IVF_FLAT, spark, index_path)
+
+
+def ivf_index_stats(spark, index_path):
+    """Library operator: observability readout for the persisted
+    IVF-Flat index — the numbers that schedule compaction and
+    retrains. Returns a single-row frame:
+
+    - ``n_live`` / ``n_cells_used``: resolved live vectors and the
+      distinct cells they occupy (cell skew -> retrain signal),
+    - ``n_log_rows`` / ``n_versions``: raw postings-log volume and
+      committed version count (log depth -> compaction signal),
+    - ``n_tombstones``: committed delete markers still in the log,
+    - ``max_cell_rows``: the hottest cell's live row count (probe
+      latency is bounded by the probed cells' sizes),
+    - ``model_hash`` / ``n_stale``: the committed centroids' content
+      hash and the count of live rows stamped with a DIFFERENT build
+      (NULL and ``n_live`` when the centroids are missing).
+
+    Returns None for a missing index."""
+    return _index_stats(_IVF_FLAT, spark, index_path)
 
 
 # ---------------------------------------------------------------------------
@@ -3428,13 +3668,10 @@ def _pq_frame(corpus, id_col, vec_col, op):
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).where(F.col("_v").isNotNull())
-    first = f.select(F.size("_v").alias("d")).first()
-    if first is None:
+    f, dim = _dim_locked(f)
+    if dim is None:
         raise ValueError(f"{op}: empty input frame")
-    dim = int(first.d)
-    # rows with a deviant length are dropped rather than silently
-    # mis-split (ragged vector columns are a data bug upstream)
-    return f.where(F.size("_v") == dim), dim
+    return f, dim
 
 
 def _pq_split(frame, m, subdim):
@@ -3681,150 +3918,7 @@ def pq_topk(
     )
 
 
-def ivf_index_stats(spark, index_path):
-    """Library operator: observability readout for the persisted IVF
-    index — the numbers an operator of a 100 TB corpus index watches
-    to schedule compaction and retrains. Returns a single-row frame:
-
-    - ``n_live`` / ``n_cells_used``: resolved live vectors and the
-      distinct cells they occupy (cell skew -> retrain signal),
-    - ``n_log_rows`` / ``n_versions``: raw postings-log volume and
-      committed version count (log depth -> compaction signal),
-    - ``n_tombstones``: committed delete markers still in the log
-      (reclaimed by `ivf_index_compact`),
-    - ``max_cell_rows``: the hottest cell's live row count (probe
-      latency is bounded by the probed cells' sizes),
-    - ``model_hash`` / ``n_stale``: the committed centroids' content
-      hash and the count of live rows stamped with a DIFFERENT build
-      (round 15). Probes FAIL loudly on any stale row; stats MEASURE
-      the damage without raising — the health check an operator runs
-      after a suspected crashed rebuild, before deciding to re-run
-      the build. A postings log with NO committed centroids at all
-      (corrupted half-state) reads out as ``model_hash`` NULL with
-      ``n_stale`` = ``n_live`` — every live row unverifiable (ADVICE
-      r15: stats observe even fully damaged indexes).
-
-    All aggregates run distributed over the log; only the single
-    summary row reaches the driver. Returns None for a missing
-    index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    cents = read_state_table(spark, f"{index_path}/centroids")
-    # a postings log without committed centroids is CORRUPTED state
-    # (the build commits model before log), but stats MEASURE damage,
-    # they never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash NULL and n_stale = n_live,
-    # since every live row is unverifiable against a missing model.
-    if cents is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(cents, ["cent_id", "cv", "cn2"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    resolved = _resolved_postings(spark, index_path)
-    # n_live and the stale count fold out of the per-cell histogram,
-    # so the resolve subplan executes ONCE for all live-side stats
-    per_cell = resolved.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(stale.cast("long")).alias("_st"),
-    )
-    cells = per_cell.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
-        F.count(F.lit(1)).alias("n_cells_used"),
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_cell_rows"
-        ),
-        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(
-            (F.col("cell") == F.lit(_TOMBSTONE_CELL)).cast("long")
-        ).alias("n_tombstones"),
-    )
-    return (
-        cells.crossJoin(F.broadcast(raw))
-        .select(
-            "n_live",
-            "n_cells_used",
-            "n_log_rows",
-            "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
-            "max_cell_rows",
-            exp_lit.alias("model_hash"),
-            "n_stale",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ index — round 14 (ref: none — north-star extension).
-# Composes the frame-level PQ trio (`pq_train`/`pq_encode`) with the
-# versioned-state lifecycle the IVF index already has: a `codebook/`
-# SNAPSHOT (the trained model, m x ncodes rows) plus a `codes/` LOG
-# (one row per vector holding its m packed codes — 4 small ints vs a
-# 256-byte raw vector, the memory story that makes a 100 TB embedding
-# corpus searchable). Build / probe(commit=True) ingest / delete /
-# compact / stats ride the exact helpers and merge rule the IVF
-# postings log uses, so every lifecycle guarantee (latest-wins,
-# tombstone-after-resolve, compaction == resolved view) carries over.
-# ---------------------------------------------------------------------------
-
-
-def _pq_dedup_ids(corpus, id_col, vec_col):
-    """One row per id, deterministically: a batch (or corpus) may carry
-    the same id twice with DIFFERENT vectors; both would land in ONE
-    commit version, where the latest-wins read's max_by on the version
-    ties arbitrarily. Keep the greatest (squared-norm, vector) pair per
-    id — norm first so a zero-norm duplicate can never outrank a live
-    vector and then silently vanish in the IVF family's zero-norm drop
-    (ADVICE r15: lexicographic-greatest alone kept e.g. [0,0] over
-    [-1,-5], erasing the id from both the answer and the commit);
-    vector order (arrays are orderable) breaks exact-norm ties."""
-    v = F.col(vec_col)
-    n2 = F.expr(
-        f"aggregate({vec_col}, cast(0.0 as double), (a, x) -> a + x * x)"
-    )
-    return (
-        corpus.select(
-            F.col(id_col).alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .where(v.isNotNull())
-        .groupBy(id_col)
-        .agg(F.max_by(vec_col, F.struct(n2, v)).alias(vec_col))
-    )
-
-
-def _pq_pack_codes(codes, id_col):
-    """(id, s, code) x m -> one (vec_id, codes array) row per id: the
-    log-table unit, so latest-wins resolves a re-ingested id's m codes
-    as ONE atomic replacement (never a mix of old and new subspaces)."""
-    return (
-        codes.groupBy(id_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("s", "code"))).alias("_p")
-        )
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.expr("transform(_p, r -> r.code)").alias("codes"),
-        )
-    )
+# -- PQ index ---------------------------------------------------------------
 
 
 def pq_index_build(
@@ -3838,31 +3932,17 @@ def pq_index_build(
     codebook=None,
 ):
     """Library operator: train a PQ codebook over ``corpus`` and COMMIT
-    it as two versioned state tables under ``index_path`` —
-    ``codebook/`` (one snapshot: the `pq_train` model, m x ncodes
-    rows) and ``codes/`` (one row per corpus vector with its m packed
-    codes, v0 of a log-structured table that `pq_index_probe(
-    commit=True)` ingest batches append to). The committed index
-    stores CODES, not vectors — the memory-bounded ANN form a 100 TB
-    embedding corpus actually deploys (the registered
-    `similarity_ivfpq_ann` proves the IVF+PQ composition; this is the
-    persisted-asset half). Writes are the engine's crash-safe
-    `write_state_version` commits (scratch write + atomic rename); a
-    SAME-PATH rebuild resets the codes log (old codes are meaningless
-    under a retrained codebook), and — same posture as
-    `ivf_index_build` — the two commits are not atomic together but
-    the mismatch is DETECTED: every codes row carries the content hash
-    of the codebook it was encoded against, and probes verify the
-    stamp against the committed codebook. Pass a pre-trained
-    ``codebook`` (a `pq_train` frame) to skip training and encode the
-    corpus against it — the train-on-a-sample, build-the-full-corpus
-    pattern a 100 TB deployment uses (FAISS trains on a slice, then
-    ``add``s everything); ``m``/``ncodes``/``rounds`` are ignored when
-    a codebook is supplied. Duplicate ids in the corpus are collapsed
-    deterministically (greatest (squared-norm, vector) pair).
-    Returns the number of indexed vectors."""
-    from spark_data_test_spark.state import write_state_version
-
+    it under ``index_path`` as ``codebook/`` (the `pq_train` model, m x
+    ncodes rows) and ``codes/`` (one row per corpus vector with its m
+    packed codes). The committed index stores CODES, not vectors — 4
+    small ints instead of a 256-byte vector, the memory-bounded form a
+    100 TB embedding corpus deploys. Pass a pre-trained ``codebook``
+    (a `pq_train` frame) to skip training and encode the corpus
+    against it — FAISS trains on a slice, then ``add``s everything;
+    ``m`` / ``ncodes`` / ``rounds`` are then ignored. Duplicate corpus
+    ids collapse deterministically (greatest (squared-norm, vector)
+    pair). Returns the number of indexed vectors. Commit, pin and
+    stamp rules: see the persisted-index section comment."""
     c = _pq_dedup_ids(corpus, id_col, vec_col)
     trained_here = codebook is None
     if trained_here:
@@ -3870,421 +3950,74 @@ def pq_index_build(
             c, m=m, ncodes=ncodes, rounds=rounds,
             id_col=id_col, vec_col=vec_col,
         )
-    # pin the model with an eager localCheckpoint so it evaluates
-    # exactly ONCE: the encoding, the build stamp, and the commit
-    # below all read the same pinned rows — a nondeterministic
-    # injected codebook frame can never leave codes encoded or
-    # stamped under a different evaluation than the model probes will
-    # read. Pinning (instead of commit-then-re-read, ADVICE r15)
-    # keeps BOTH commits at the END of the build, so a mid-build
-    # failure of a same-path rebuild leaves the old index fully
-    # serving. Commit order (model, then log): codebook SNAPSHOT
-    # (retain=2 keeps the previous model for time travel), codes LOG
-    # BASE (retain=1 so a same-path rebuild resets the log; ingest
-    # deltas append with RETAIN_ALL from this base); a crash between
-    # the two is detected by the stamp guard. The pin is released
-    # after the final commit (`_release_pin`, ADVICE r16) on success
-    # and failure paths alike; executor-loss posture: see
-    # ivf_index_build's pin note. A codebook we trained OURSELVES is
-    # already `pq_train`'s eager localCheckpoint — re-pinning it would
-    # copy the model a second time AND leak the inner pin — so only an
-    # injected (possibly nondeterministic) codebook gets the
-    # defensive pin here.
-    pinned_cb = (
-        codebook if trained_here else codebook.localCheckpoint(eager=True)
+    return _index_build(
+        _PQ,
+        index_path,
+        c.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
+        {"codebook": (codebook, trained_here)},
     )
-    try:
-        bid = _model_build_hash(pinned_cb, ["s", "cent_id", "csub"])
-        packed = (
-            _pq_pack_codes(
-                pq_encode(c, pinned_cb, id_col=id_col, vec_col=vec_col),
-                id_col,
-            )
-            .withColumn("build_id", F.lit(bid))
-            .withColumn(
-                "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
-            )
-        )
-        packed = packed.persist()
-        try:
-            n = packed.count()
-            os.makedirs(index_path, exist_ok=True)
-            write_state_version(
-                pinned_cb, f"{index_path}/codebook", retain=2
-            )
-            write_state_version(packed, f"{index_path}/codes", retain=1)
-        finally:
-            packed.unpersist()
-        return n
-    finally:
-        _release_pin(pinned_cb)
-
-
-def _resolved_codes(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the codes log — the PQ twin of
-    `_resolved_postings`: each read resolves per vec_id on the commit
-    version (max_by, the (codes, build_id) pair as ONE atomic unit),
-    then drops tombstone winners (NULL codes, see `pq_index_delete`),
-    so the newest commit decides whether an id is live and which codes
-    it carries. With ``expect_build`` every surviving row's build
-    stamp is verified scan-side against the committed codebook's
-    content hash (crashed-rebuild detector, see `_model_build_hash`).
-    Returns None for a missing log."""
-    from spark_data_test_spark.state import read_state_union
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/codes",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    if "build_id" not in log.columns:
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
-    out = (
-        log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("codes", "build_id", "stamp_fmt"), F.col("_pv")
-            ).alias("_p")
-        )
-        .select("vec_id", "_p.codes", "_p.build_id", "_p.stamp_fmt")
-        .where(F.col("codes").isNotNull())
-    )
-    if expect_build is not None:
-        out = _stamp_guard(
-            out, "codes", expect_build, "pq_index_probe",
-            live=F.col("codes").isNotNull(),
-        )
-    return out
 
 
 def pq_index_probe(
     queries, index_path, k=10, id_col="vec_id", vec_col="emb", commit=False
 ):
     """Library operator: answer an ANN query batch against the
-    COMMITTED PQ index at ``index_path`` — no retraining, no raw
-    corpus: each query builds an exact float distance TABLE to every
-    codebook entry (m x ncodes rows — the asymmetric-distance trick:
-    the query stays exact, only the corpus is quantized) and every
-    live code row's ADC distance is the sum of m table lookups.
-    Returns ``(query_id, neighbor_id, rank, adc_dist)`` with
-    `pq_topk`'s contract: (adc_dist asc, neighbor_id) tie-break,
-    self-matches excluded; a probe of the committed index provably
-    equals `pq_topk(corpus, queries, codebook=<committed model>)`
-    (pinned in tests/test_pq_index_api.py).
+    COMMITTED PQ index — no retraining, no raw corpus: each query
+    builds an exact float distance TABLE to every codebook entry (the
+    asymmetric-distance trick: the query stays exact, only the corpus
+    is quantized) and every live code row's ADC distance is the sum of
+    m table lookups — O(index) per call. Returns ``(query_id,
+    neighbor_id, rank, adc_dist)`` with `pq_topk`'s contract: (adc_dist
+    asc, neighbor_id) tie-break, self-matches excluded; an empty batch
+    or one whose dim does not fit the committed codebook raises. A
+    probe provably equals `pq_topk(corpus, queries, codebook=<committed
+    model>)` (pinned in tests/test_pq_index_api.py).
 
-    With ``commit=True`` the batch's vectors are encoded against the
-    COMMITTED codebook and appended as the next codes delta AFTER the
-    probe result materializes — ingestion without retrain, the exact
-    probe-then-commit pattern of `ivf_index_probe`. Re-committed ids
-    resolve latest-wins at read; `pq_index_delete` rides the same rule
-    with NULL-codes tombstones; fold the log with `pq_index_compact`.
-    Codebook drift under heavy ingest is the documented limit (ADC
-    error grows as the corpus distribution leaves the trained cells);
-    a fresh `pq_index_build` is the retrain lever and resets the
-    log. The ``commit=True`` result is an eager ``localCheckpoint``
-    whose pin is CALLER-owned — release it with `release_model_pin`
-    once read (ADVICE r17). A pure-ingest workload should call
-    `pq_index_ingest` instead: it commits the identical delta WITHOUT
-    the flat ADC scan this probe pays (O(index) per call — the
-    measured x30 lifecycle slope, DECOMP_INDEX_LIFECYCLE r17) and
-    returns no pinned frame."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = queries.sparkSession
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if codebook is None:
-        raise ValueError(
-            f"pq_index_probe: no committed index at {index_path}"
-            " (run pq_index_build first)"
-        )
-    cb_row = _pq_codebook_row(codebook)
-    expected = int(cb_row.bid)
-    codes = _resolved_codes(spark, index_path, expect_build=expected)
-    if codes is None:
-        raise ValueError(
-            f"pq_index_probe: index at {index_path} has a codebook but "
-            "no committed codes (re-run pq_index_build)"
-        )
-    # a batch carrying one id twice would sum BOTH rows' distance-table
-    # entries into one ADC score — collapse deterministically up front,
-    # the same rule the commit path already applies; persisted BEFORE
-    # the validation first() so the dedup shuffle runs once, not once
-    # per action (released in the finally — for a lazy commit=False
-    # return the caller's evaluation recomputes, exactly as before)
-    queries = _pq_dedup_ids(queries, id_col, vec_col).persist()
-    try:
-        qframe, dim, mq = _pq_shape_checked(
-            queries, cb_row, "pq_index_probe", id_col, vec_col
-        )
-        cb = F.broadcast(codebook)
-        qsub = _pq_split(qframe, mq, dim // mq)
-        # per-query distance table: nq x m x ncodes rows, joined to the
-        # exploded live codes WITHOUT a hint (AQE broadcasts modest
-        # batches; a huge batch shuffles on (s, cent_id))
-        qd = (
-            qsub.join(cb, "s")
-            .withColumn("d", F.expr(_PQ_L2F))
-            .select(F.col("_id").alias("_q"), "s", "cent_id", "d")
-        )
-        flat = codes.select(
-            "vec_id", F.posexplode("codes").alias("s", "cent_id")
-        )
-        adc = (
-            flat.join(qd, ["s", "cent_id"])
-            .where(F.col("vec_id") != F.col("_q"))
-            .groupBy("_q", "vec_id")
-            .agg(F.sum("d").alias("adc_dist"))
-        )
-        w = Window.partitionBy("_q").orderBy(
-            F.col("adc_dist").asc(), F.col("vec_id").asc()
-        )
-        result = (
-            adc.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select(
-                F.col("_q").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-                "rank",
-                "adc_dist",
-            )
-        )
-        if not commit:
-            return result
-        # commit gate BEFORE materializing the answer: an answer that
-        # evaluates no pre-existing code row (e.g. an empty batch after
-        # filters) would let this append land a new-stamped delta on a
-        # crashed-rebuild log and blind the newest-live-row gate
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/codes",
-            expected,
-            "pq_index_probe",
-            live=lambda part: part["codes"].isNotNull(),
-        )
-        result = result.localCheckpoint(eager=True)
-        # commit exactly the rows the probe ANSWERED for: encode the
-        # dedup-and-dim-validated qframe (a mixed-dim batch's deviant
-        # rows were dropped from the answer and must not reach the
-        # codes log, where pq_encode's own first-row dim lock could
-        # otherwise flip which side survives); the delta is the ONE
-        # shared definition `pq_index_ingest` also commits
-        batch = _pq_commit_delta(
-            qframe, codebook, expected, id_col, vec_col
-        )
-        write_state_version(
-            batch, f"{index_path}/codes", retain=RETAIN_ALL
-        )
-        return result
-    finally:
-        queries.unpersist()
-
-
-def _pq_shape_checked(dedup, cb_row, op, id_col, vec_col):
-    """Batch shape validation shared by the PQ-codes commit paths
-    (`pq_index_probe` and `pq_index_ingest`) — which rows REACH the
-    shared `_pq_commit_delta` is part of the identical-delta
-    contract, so the deciding code has one definition too: first-row
-    dim lock + ragged-row drop (`_pq_frame`), then the two
-    committed-codebook shape checks (m divisibility, subvector dim)
-    against the shape agg's ``cb_row``. Returns ``(qframe, dim, mq)``
-    — ``mq`` so the caller's `_pq_split` width and the divisibility
-    check here share one derivation; raises with ``op``-prefixed
-    messages on a shape mismatch (and via `_pq_frame` on an empty
-    frame — the ingest path checks emptiness first because its
-    contract is a 0-count no-op)."""
-    qframe, dim = _pq_frame(dedup, id_col, vec_col, op)
-    mq = int(cb_row.m1) + 1
-    if dim % mq:
-        raise ValueError(
-            f"{op}: vector dim {dim} not divisible by"
-            f" the committed codebook's m={mq}"
-        )
-    if dim // mq != int(cb_row.subdim):
-        raise ValueError(
-            f"{op}: subvector dim {dim // mq} != committed codebook"
-            f" subvector dim {int(cb_row.subdim)} (dim {dim}, m={mq})"
-        )
-    return qframe, dim, mq
-
-
-def _pq_commit_delta(qframe, codebook, expected, id_col, vec_col):
-    """The PQ ingest delta — ONE definition shared by
-    `pq_index_probe(commit=True)` and `pq_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: the dedup-and-dim-validated batch
-    encoded against the VERIFIED committed codebook, packed to one
-    (vec_id, codes) row per id, stamped with the codebook's content
-    hash and the current stamp format."""
-    return _pq_pack_codes(
-        pq_encode(
-            qframe.select(
-                F.col("_id").alias(id_col), F.col("_v").alias(vec_col)
-            ),
-            codebook,
-            id_col=id_col,
-            vec_col=vec_col,
-        ),
-        id_col,
-    ).withColumn("build_id", F.lit(int(expected))).withColumn(
-        "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
+    With ``commit=True`` the batch is encoded against the committed
+    codebook and appended as the next codes delta after the answer
+    materializes; the answer is a CALLER-owned eager
+    ``localCheckpoint`` — release it with `release_model_pin`. A
+    pure-ingest workload should call `pq_index_ingest`: the identical
+    delta WITHOUT the O(index) ADC scan (the measured x30 lifecycle
+    slope, DECOMP_INDEX_LIFECYCLE r17) and no pinned frame."""
+    return _index_probe(
+        _PQ, queries, index_path, k, None, id_col, vec_col, commit
     )
 
 
 def pq_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed PQ index
-    WITHOUT answering a query against it (round 18, VERDICT r17 item
-    2) — the pure-ingest sibling of ``pq_index_probe(commit=True)``.
-    The batch is encoded against the committed codebook and its packed
-    codes land as the next codes delta — O(batch x codebook) work.
-    The probe-then-commit path additionally ADC-scans ALL n live codes
-    (the flat-PQ probe contract, O(index) per call), which an
-    ingest-cadence workload pays just to discard the answer —
-    `DECOMP_INDEX_LIFECYCLE.json` (round 17) measured that scan as the
-    entire x30 lifecycle slope. For every batch that commits at least
-    one row the delta is IDENTICAL to what
-    ``pq_index_probe(batch, ..., commit=True)`` would commit (shared
-    `_pq_commit_delta` definition; pinned in
-    tests/test_pq_index_api.py): the same up-front duplicate-id
-    collapse (`_pq_dedup_ids`), first-row dim lock and ragged-row
-    drop (`_pq_frame`), dim validation, and build stamp — dup
-    collapse against rows ALREADY in the index needs no probe at all,
-    because the log contract resolves a re-ingested id latest-wins at
-    read. Deliberate divergences from the probe path: the result is a
-    plain count (no eagerly-pinned frame for the caller to release),
-    and an empty batch is a no-op returning 0. Before appending, the
-    newest live log row's build stamp is verified against the
-    committed codebook (`_assert_log_stamp` — the O(1-row)
-    crashed-rebuild gate the probe-commit path also runs before ITS
-    append). Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = batch.sparkSession
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if codebook is None:
-        raise ValueError(
-            f"pq_index_ingest: no committed index at {index_path}"
-            " (run pq_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/codes") is None:
-        # codebook committed but no codes log: a build crashed between
-        # its commits — refuse to graft deltas onto half an index
-        raise ValueError(
-            f"pq_index_ingest: index at {index_path} has a codebook but"
-            " no committed codes (re-run pq_index_build)"
-        )
-    cb_row = _pq_codebook_row(codebook)
-    expected = int(cb_row.bid)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/codes",
-        expected,
-        "pq_index_ingest",
-        live=lambda part: part["codes"].isNotNull(),
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        if d.first() is None:
-            return 0
-        qframe, _, _ = _pq_shape_checked(
-            d, cb_row, "pq_index_ingest", id_col, vec_col
-        )
-        delta = _pq_commit_delta(
-            qframe, codebook, expected, id_col, vec_col
-        ).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/codes", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+    WITHOUT answering a query against it — the batch is encoded against
+    the committed codebook and its packed codes land as the next codes
+    delta, O(batch x codebook) work. For every batch that commits at
+    least one row the delta is IDENTICAL to what ``pq_index_probe(
+    batch, ..., commit=True)`` would commit (pinned in
+    tests/test_pq_index_api.py); duplicates of ids ALREADY in the
+    index need no probe, they resolve latest-wins at read. An empty
+    batch is a no-op returning 0. Returns the number of rows
+    committed."""
+    return _index_ingest(_PQ, batch, index_path, id_col, vec_col)
 
 
 def pq_index_delete(spark, index_path, ids, id_col="vec_id"):
     """Library operator: REMOVE vectors from the committed PQ index —
-    the takedown event, identical in contract to `ivf_index_delete`:
-    one NULL-codes TOMBSTONE row per distinct id as the next log
-    delta; latest-wins resolves each id to its newest commit and drops
-    tombstone winners, so a deleted id vanishes from every subsequent
-    probe, a later re-ingest resurrects it, deleting an unknown id is
-    a harmless no-op, and `pq_index_compact` physically drops both the
-    tombstone and every superseded row. ``ids`` is an iterable of id
+    one NULL-codes tombstone row per distinct id as the next log delta
+    (the `ivf_index_delete` contract). ``ids`` is an iterable of id
     values or a DataFrame whose ``id_col`` holds them. Returns the
     committed delta version."""
-    from pyspark.sql import DataFrame
-
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    base = read_state_table(spark, f"{index_path}/codes")
-    if base is None:
-        raise ValueError(
-            f"pq_index_delete: no committed codes at {index_path}"
-            " (run pq_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if "build_id" not in types:
-        raise ValueError(
-            f"pq_index_delete: the log at {index_path} predates build"
-            f" stamping (committed by an earlier release) — re-run"
-            f" pq_index_build to upgrade it before deleting"
-        )
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("pq_index_delete: empty id set")
-        idf = spark.createDataFrame([(i,) for i in ids], ["vec_id"]).distinct()
-    tomb = idf.select(
-        F.col("vec_id").cast(types["vec_id"]),
-        F.lit(None).cast(types["codes"]).alias("codes"),
-        # tombstones carry no stamp: they never survive resolution
-        F.lit(None).cast(types["build_id"]).alias("build_id"),
-        F.lit(None).cast("integer").alias("stamp_fmt"),
-    )
-    return write_state_version(tomb, f"{index_path}/codes", retain=RETAIN_ALL)
+    return _index_delete(_PQ, spark, index_path, ids, id_col)
 
 
 def pq_index_compact(spark, index_path):
     """Library operator: fold the PQ codes LOG into one resolved
-    snapshot — the LSM compaction step, applying the index's merge
-    rule (newest commit per vec_id, tombstone winners dropped) BEFORE
-    committing, exactly as `ivf_index_compact` does for postings.
-    Returns the committed snapshot version, or None for a missing
-    index."""
-    from spark_data_test_spark.state import write_state_version
-
-    resolved = _resolved_codes(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(resolved, f"{index_path}/codes", retain=1)
+    snapshot. Returns the committed snapshot version, or None for a
+    missing index."""
+    return _index_compact(_PQ, spark, index_path)
 
 
 def pq_index_stats(spark, index_path):
     """Library operator: observability readout for the persisted PQ
-    index — the compaction/retrain scheduler's inputs, the PQ twin of
-    `ivf_index_stats`. Returns a single-row frame:
+    index. Returns a single-row frame:
 
     - ``n_live``: resolved live vectors,
     - ``m`` / ``n_code_rows``: committed model shape (subspaces and
@@ -4297,118 +4030,20 @@ def pq_index_stats(spark, index_path):
       means the codebook no longer separates it; retrain),
     - ``model_hash`` / ``n_stale``: the committed codebook's content
       hash and the count of live rows stamped with a DIFFERENT build
-      (round 15). Probes FAIL loudly on any stale row; stats MEASURE
-      the damage without raising. A codes log with NO committed
-      codebook at all (corrupted half-state) reads out as
-      ``model_hash`` / ``m`` / ``n_code_rows`` NULL with ``n_stale``
-      = ``n_live`` (ADVICE r15: stats observe even fully damaged
-      indexes).
+      (``model_hash`` / ``m`` / ``n_code_rows`` NULL and ``n_stale`` =
+      ``n_live`` when the codebook is missing).
 
-    All aggregates run distributed over the log; only the single
-    summary row reaches the driver. Returns None for a missing
-    index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/codes",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    # a codes log without a committed codebook is CORRUPTED state (the
-    # build commits model before log), but stats MEASURE damage, they
-    # never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash / m / n_code_rows NULL and
-    # n_stale = n_live, every live row unverifiable.
-    if codebook is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(codebook, ["s", "cent_id", "csub"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    resolved = _resolved_codes(spark, index_path)
-    per_bucket = (
-        resolved.select(
-            F.posexplode("codes").alias("s", "code"),
-            stale.cast("long").alias("_st"),
-        )
-        .groupBy("s", "code")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_st").alias("_sts"),
-        )
-    )
-    live = per_bucket.agg(
-        # every live row contributes exactly ONE code in subspace 0
-        # whatever m it was encoded under, so row counts fold out of
-        # the s=0 buckets — never divide by the CURRENT codebook's m,
-        # which miscounts rows a crashed retrain left encoded under an
-        # old model with a different m (the exact damage n_stale
-        # exists to measure)
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_code_rows"
-        ),
-        F.coalesce(
-            F.sum(F.when(F.col("s") == 0, F.col("_n"))), F.lit(0)
-        ).cast("long").alias("_live_rows"),
-        F.coalesce(
-            F.sum(F.when(F.col("s") == 0, F.col("_sts"))), F.lit(0)
-        ).cast("long").alias("_stale_rows"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(F.col("codes").isNull().cast("long")).alias("n_tombstones"),
-    )
-    if codebook is None:
-        model = spark.range(1).select(
-            F.lit(None).cast("long").alias("m"),
-            F.lit(None).cast("long").alias("n_code_rows"),
-        )
-    else:
-        model = codebook.agg(
-            (F.max("s") + 1).cast("long").alias("m"),
-            F.count(F.lit(1)).alias("n_code_rows"),
-        )
-    return (
-        live.crossJoin(F.broadcast(raw))
-        .crossJoin(F.broadcast(model))
-        .select(
-            F.col("_live_rows").alias("n_live"),
-            "m",
-            "n_code_rows",
-            "n_log_rows",
-            "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
-            "max_code_rows",
-            exp_lit.alias("model_hash"),
-            F.col("_stale_rows").alias("n_stale"),
-        )
-    )
+    Returns None for a missing index."""
+    return _index_stats(_PQ, spark, index_path)
 
 
-# ---------------------------------------------------------------------------
-# Persisted IVF-PQ index — round 14 (ref: none — north-star extension).
-# The composed production ANN architecture (the FAISS IVFPQ shape, the
+# -- IVF-PQ index -----------------------------------------------------------
+# The composed production ANN architecture (the FAISS IVFPQ shape; the
 # registered `similarity_ivfpq_ann` proves the frame-level math): the
 # coarse quantizer prunes WHICH vectors each query inspects (nprobe
-# cells), PQ compresses WHAT is scored there (m codes per candidate,
-# ADC table lookups — never raw floats). The persisted form commits
-# BOTH models as snapshots (centroids + codebook) and one postings log
-# of (vec_id, cell, codes) rows — at 100 TB the inverted lists hold
-# only ids and codes, so they fit where raw vectors cannot, and every
-# lifecycle rule (latest-wins, tombstones, resolving compaction) is
-# shared with the IVF-Flat and PQ indexes above.
-# ---------------------------------------------------------------------------
+# cells), PQ compresses WHAT is scored there (m codes per candidate).
+# At 100 TB the inverted lists hold only ids, cells and codes, so they
+# fit where raw vectors cannot.
 
 
 def ivfpq_index_build(
@@ -4425,185 +4060,47 @@ def ivfpq_index_build(
     codebook=None,
 ):
     """Library operator: train BOTH ANN models over ``corpus`` — the
-    IVF coarse quantizer (spherical k-means, `_train_double_cells`'s
-    deterministic seeds and lazily-chained Lloyd rounds) and the PQ
-    codebook (`pq_train` on the same surviving vectors, raw-vector
-    encoding exactly as the registered `similarity_ivfpq_ann`
-    composes them) — and COMMIT three state tables under
-    ``index_path``: ``centroids/`` and ``codebook/`` snapshots
-    (retain=2 for time travel) plus ``postings/``, the log base of
-    one ``(vec_id, cell, codes)`` row per vector. Duplicate ids
-    collapse deterministically (greatest (squared-norm, vector)
-    pair); zero-norm vectors are dropped (cosine cell assignment is undefined for them — the
-    ANN-family contract). A same-path rebuild resets the postings log
-    (old cells AND old codes are meaningless under retrained models);
-    the three commits are not atomic together, but every posting row
-    is stamped with the XOR-combined content hash of BOTH committed
-    models and probes verify the stamp, so a crashed rebuild fails
-    the next probe loudly (see `_model_build_hash`). Pass pre-trained
-    ``centroids`` (``(cent_id, cv, cn2)``, as committed by any build
-    of this family) and/or ``codebook`` (a `pq_train` frame) to skip
-    that training stage and index the full corpus under the supplied
-    model — the train-on-a-sample, add-everything pattern.
-    Returns the number of indexed vectors."""
-    from spark_data_test_spark.state import write_state_version
-
-    d = _pq_dedup_ids(corpus, id_col, vec_col)
-    c = _norm_vectors(d, id_col, vec_col, "ivfpq_index_build").persist()
+    IVF coarse quantizer (`_train_double_cells`' deterministic seeds
+    and lazily-chained Lloyd rounds) and the PQ codebook (`pq_train`
+    on the same surviving vectors, raw-vector encoding exactly as the
+    registered `similarity_ivfpq_ann` composes them) — and COMMIT
+    ``centroids/`` and ``codebook/`` plus ``postings/``, one
+    ``(vec_id, cell, codes)`` row per vector, stamped with the XOR of
+    BOTH models' content hashes. Duplicate ids collapse
+    deterministically (greatest (squared-norm, vector) pair);
+    zero-norm vectors are dropped (no cosine cell). Pass pre-trained
+    ``centroids`` (``(cent_id, cv, cn2)``) and/or ``codebook`` (a
+    `pq_train` frame) to skip that training stage. Returns the number
+    of indexed vectors. Commit, pin and stamp rules: see the
+    persisted-index section comment."""
+    c = _norm_vectors(
+        _pq_dedup_ids(corpus, id_col, vec_col),
+        id_col, vec_col, "ivfpq_index_build",
+    ).persist()
     try:
-        surv = c.select(
-            F.col("_id").alias(id_col), F.col("_v").alias(vec_col)
-        )
         if centroids is None:
-            cent_table = _train_double_cells(
+            centroids = _trained_centroids(
                 c, ncells, rounds, "ivfpq_index_build"
-            ).select(
-                "cent_id",
-                F.col("_cv").alias("cv"),
-                F.col("_cn2").alias("cn2"),
             )
-        else:
-            cent_table = centroids.select("cent_id", "cv", "cn2")
         cb_trained_here = codebook is None
         if cb_trained_here:
             codebook = pq_train(
-                surv, m=m, ncodes=ncodes, rounds=pq_rounds,
-                id_col=id_col, vec_col=vec_col,
+                c, m=m, ncodes=ncodes, rounds=pq_rounds,
+                id_col="_id", vec_col="_v",
             )
-        # pin BOTH models with eager localCheckpoints so each
-        # evaluates exactly ONCE: cell assignment, encoding, the
-        # stamp, and the commits below all read the same pinned rows,
-        # so nondeterministic injected model frames can never leave
-        # postings built under a different evaluation than the models
-        # probes will read. Pinning (instead of commit-then-re-read,
-        # ADVICE r15) keeps all three commits at the END of the
-        # build: a mid-build failure of a same-path rebuild leaves
-        # the old index fully serving. Both pins are released after
-        # the final commit (`_release_pin`, ADVICE r16) on success
-        # and failure paths; executor-loss posture: see
-        # ivf_index_build's pin note. A codebook trained HERE is
-        # already `pq_train`'s eager localCheckpoint (re-pinning would
-        # copy the model twice and leak the inner pin), so only an
-        # injected codebook gets the defensive pin.
-        try:
-            pinned_cents = cent_table.localCheckpoint(eager=True)
-        except BaseException:
-            # a self-trained codebook is already pq_train's eager pin:
-            # release it even when the CENTROID pin is what failed
-            if cb_trained_here:
-                _release_pin(codebook)
-            raise
-        try:
-            pinned_cb = (
-                codebook
-                if cb_trained_here
-                else codebook.localCheckpoint(eager=True)
-            )
-        except BaseException:
-            # only the injected path can raise here (a bare assignment
-            # cannot), so the self-trained codebook pin is not at risk.
-            # If the injected codebook's eager localCheckpoint failed
-            # AFTER partially materializing checkpoint blocks, no frame
-            # handle survives to release them — that partial pin is
-            # reclaimed by the ContextCleaner GC backstop, the
-            # documented best-effort posture (ADVICE r17)
-            _release_pin(pinned_cents)
-            raise
-        try:
-            bid = _model_build_hash(
-                pinned_cents, ["cent_id", "cv", "cn2"]
-            ) ^ _model_build_hash(pinned_cb, ["s", "cent_id", "csub"])
-            cents = F.broadcast(
-                pinned_cents.select(
-                    "cent_id",
-                    F.col("cv").alias("_cv"),
-                    F.col("cn2").alias("_cn2"),
-                )
-            )
-            # round-18 fold assign (see ivf_index_build): identical
-            # argmax winners, no n x ncells explosion, no corpus-sized
-            # exchange; ids are unique here (`_pq_dedup_ids` upstream)
-            assign = _argmax_cell_d(c, cents).select(
-                F.col("_id").alias("vec_id"), F.col("_cell").alias("cell")
-            )
-            packed = _pq_pack_codes(
-                pq_encode(
-                    surv, pinned_cb, id_col=id_col, vec_col=vec_col
+        return _index_build(
+            _IVF_PQ,
+            index_path,
+            c,
+            {
+                "centroids": (
+                    centroids.select("cent_id", "cv", "cn2"), False
                 ),
-                id_col,
-            )
-            postings = (
-                assign.join(packed, "vec_id")
-                .withColumn("build_id", F.lit(bid))
-                .withColumn(
-                    "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
-                )
-            )
-            postings = postings.persist()
-            try:
-                n = postings.count()
-                os.makedirs(index_path, exist_ok=True)
-                write_state_version(
-                    pinned_cents, f"{index_path}/centroids", retain=2
-                )
-                write_state_version(
-                    pinned_cb, f"{index_path}/codebook", retain=2
-                )
-                write_state_version(
-                    postings, f"{index_path}/postings", retain=1
-                )
-            finally:
-                postings.unpersist()
-            return n
-        finally:
-            _release_pin(pinned_cents)
-            _release_pin(pinned_cb)
+                "codebook": (codebook, cb_trained_here),
+            },
+        )
     finally:
         c.unpersist()
-
-
-def _resolved_ivfpq_postings(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the IVF-PQ postings log: per vec_id the
-    newest commit's (cell, codes, build_id) triple wins as ONE atomic
-    unit (a re-ingested vector can change cell and codes together,
-    never a mix), then tombstone winners (cell = -1) drop. With
-    ``expect_build`` every surviving row's build stamp is verified
-    scan-side against the committed models' combined content hash
-    (crashed-rebuild detector). Returns None for a missing log."""
-    from spark_data_test_spark.state import read_state_union
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    if "build_id" not in log.columns:
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
-    out = (
-        log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell", "codes", "build_id", "stamp_fmt"),
-                F.col("_pv"),
-            ).alias("_p")
-        )
-        .select(
-            "vec_id", "_p.cell", "_p.codes", "_p.build_id",
-            "_p.stamp_fmt",
-        )
-        .where(F.col("cell") >= 0)
-    )
-    if expect_build is not None:
-        out = _stamp_guard(
-            out, "codes", expect_build, "ivfpq_index_probe",
-            live=F.col("cell") >= 0,
-        )
-    return out
 
 
 def ivfpq_index_probe(
@@ -4616,391 +4113,56 @@ def ivfpq_index_probe(
     commit=False,
 ):
     """Library operator: answer an ANN query batch against the
-    COMMITTED IVF-PQ index — cost is O(batch x probed cells), and the
-    probed rows are CODES, not vectors: each query scores the
-    broadcast centroids, keeps its ``nprobe`` best cells, and ranks
-    only those cells' posting rows by ADC distance (per-query exact
-    float distance table to every codebook entry; a candidate's
-    distance is m table lookups on its codes). Returns ``(query_id,
-    neighbor_id, rank, adc_dist)`` with the PQ family contract:
-    (adc_dist asc, neighbor_id) tie-break, self-matches excluded,
-    zero-norm queries dropped (they have no meaningful coarse cell).
-    With ``nprobe`` >= the committed cell count the probe is
-    exhaustive and provably equals `pq_topk` with the committed
-    codebook over the live corpus (pinned in
-    tests/test_ivfpq_index_api.py — the composed analogue of the
-    IVF-Flat index's probe-all == cosine_topk pin).
+    COMMITTED IVF-PQ index — O(batch x probed cells), and the probed
+    rows are CODES, not vectors: each query keeps its ``nprobe`` best
+    cells under the broadcast centroids and ranks only those cells'
+    posting rows by ADC distance. Returns ``(query_id, neighbor_id,
+    rank, adc_dist)``: (adc_dist asc, neighbor_id) tie-break,
+    self-matches excluded, zero-norm queries dropped (they have no
+    coarse cell) — a batch with NO nonzero vector raises. With
+    ``nprobe`` >= the committed cell count the probe is exhaustive and
+    provably equals `pq_topk` with the committed codebook over the
+    live corpus (pinned in tests/test_ivfpq_index_api.py).
 
-    With ``commit=True`` the batch is assigned to committed cells AND
-    encoded against the committed codebook, then appended as the next
-    postings delta after the probe result materializes — the shared
-    probe-then-commit ingest pattern. `ivfpq_index_delete` /
-    `ivfpq_index_compact` / `ivfpq_index_stats` complete the
-    lifecycle. Model drift under heavy ingest is the documented
-    limit; a fresh `ivfpq_index_build` retrains both models and
-    resets the log. The ``commit=True`` result is an eager
-    ``localCheckpoint`` whose pin is CALLER-owned — release it with
-    `release_model_pin` once read (ADVICE r17); a pure-ingest
-    workload should call `ivfpq_index_ingest` instead (identical
-    delta, no probe work, no pinned frame)."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = queries.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if cents_raw is None or codebook is None:
-        raise ValueError(
-            f"ivfpq_index_probe: no committed index at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    # expected build stamp = XOR of both committed models' content
-    # hashes; one extra model-sized agg for the centroids, the codebook
-    # hash rides the existing shape agg below
-    cent_hash = _model_build_hash(cents_raw, ["cent_id", "cv", "cn2"])
-    cb_row = _pq_codebook_row(codebook)
-    expected = cent_hash ^ int(cb_row.bid)
-    postings = _resolved_ivfpq_postings(
-        spark, index_path, expect_build=expected
-    )
-    if postings is None:
-        raise ValueError(
-            f"ivfpq_index_probe: index at {index_path} has models but "
-            "no committed postings (re-run ivfpq_index_build)"
-        )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
-    )
-    # collapse duplicate batch ids up front (greatest (norm, vector)
-    # pair): a dup id
-    # would otherwise mix two rows' cells in one probe window and sum
-    # both distance tables into one ADC score; persisted BEFORE the
-    # validation first()s so the dedup shuffle runs once, not once
-    # per action
-    queries = _pq_dedup_ids(queries, id_col, vec_col).persist()
-    try:
-        q, dim, mq = _ivfpq_shape_checked(
-            queries, cb_row, "ivfpq_index_probe", id_col, vec_col
-        )
-        if q is None:
-            raise ValueError(
-                "ivfpq_index_probe: query batch has no nonzero vectors"
-            )
-        q = q.persist()
-    except BaseException:
-        queries.unpersist()
-        raise
-    try:
-        wq = Window.partitionBy("_id").orderBy(
-            F.col("_cos").desc(), "cent_id"
-        )
-        probes = (
-            _cell_scored(q, cents)
-            .withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= int(nprobe))
-            .select(
-                F.col("_id").alias("query_id"),
-                F.col("cent_id").alias("cell"),
-            )
-        )
-        qd = (
-            _pq_split(q.select("_id", "_v"), mq, dim // mq)
-            .join(F.broadcast(codebook), "s")
-            .withColumn("d", F.expr(_PQ_L2F))
-            .select(F.col("_id").alias("query_id"), "s", "cent_id", "d")
-        )
-        flat = postings.select(
-            "vec_id", "cell", F.posexplode("codes").alias("s", "cent_id")
-        )
-        # probes join the exploded cell lists on cell, then the
-        # query distance tables on (query_id, s, cent_id) — both
-        # UNHINTED (AQE broadcasts modest batches; only the two
-        # model-sized frames above are unconditionally broadcast)
-        adc = (
-            probes.join(flat, "cell")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .join(qd, ["query_id", "s", "cent_id"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("d").alias("adc_dist"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("vec_id").asc()
-        )
-        result = (
-            adc.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "rank",
-                "adc_dist",
-            )
-        )
-        if not commit:
-            return result
-        # commit gate BEFORE materializing the answer: a cell-pruned
-        # answer may evaluate no pre-existing posting row, so the
-        # scan-side guard alone cannot stop this append from landing
-        # a new-stamped delta on a crashed-rebuild log (which would
-        # blind the ingest entries' newest-live-row gate)
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/postings",
-            expected,
-            "ivfpq_index_probe",
-            live=lambda part: part["cell"] >= 0,
-        )
-        result = result.localCheckpoint(eager=True)
-        # commit exactly the rows the probe ANSWERED for: reuse the
-        # persisted, dedup-and-dim-filtered q rather than re-deriving
-        # from the raw batch — a ragged row excluded from the answer
-        # must never reach the postings log (and the batch is not
-        # re-normalized a second time); the delta is the ONE shared
-        # definition `ivfpq_index_ingest` also commits
-        write_state_version(
-            _ivfpq_commit_delta(
-                q, cents, codebook, expected, id_col, vec_col
-            ),
-            f"{index_path}/postings",
-            retain=RETAIN_ALL,
-        )
-        return result
-    finally:
-        q.unpersist()
-        queries.unpersist()
-
-
-def _ivfpq_shape_checked(dedup, cb_row, op, id_col, vec_col):
-    """Batch shape validation shared by the IVF-PQ commit paths
-    (`ivfpq_index_probe` and `ivfpq_index_ingest`) — which rows REACH
-    the shared `_ivfpq_commit_delta` is part of the identical-delta
-    contract, so the deciding code has one definition too: normalize
-    (drops zero-norm rows), first-row dim lock, the two
-    committed-codebook shape checks against the shape agg's
-    ``cb_row``, then the ragged-row drop. Returns ``(q, dim, mq)``,
-    or ``(None, None, mq)`` when the batch is empty after the
-    zero-norm drop
-    — the CALLER owns the degenerate contract (the probe raises "no
-    nonzero vectors", the ingest no-ops to 0); shape mismatches raise
-    here with ``op``-prefixed messages. ``mq`` is returned (always)
-    so the caller's `_pq_split` width and the divisibility check
-    here share one derivation."""
-    mq = int(cb_row.m1) + 1
-    q = _norm_vectors(dedup, id_col, vec_col, op)
-    first = q.select(F.size("_v").alias("d")).first()
-    if first is None:
-        return None, None, mq
-    dim = int(first.d)
-    if dim % mq:
-        raise ValueError(
-            f"{op}: vector dim {dim} not divisible by"
-            f" the committed codebook's m={mq}"
-        )
-    if dim // mq != int(cb_row.subdim):
-        raise ValueError(
-            f"{op}: subvector dim {dim // mq} != committed codebook"
-            f" subvector dim {int(cb_row.subdim)} (dim {dim}, m={mq})"
-        )
-    # ragged rows would mis-split in _pq_split; drop them like
-    # _pq_frame does
-    return q.where(F.size("_v") == dim), dim, mq
-
-
-def _ivfpq_commit_delta(q, cents, codebook, expected, id_col, vec_col):
-    """The IVF-PQ ingest delta — ONE definition shared by
-    `ivfpq_index_probe(commit=True)` and `ivfpq_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: per deduped, dim-filtered batch id
-    the argmax committed cell AND the packed codes against the
-    committed codebook as one atomic posting row, stamped with the
-    XOR-combined content hash of BOTH verified committed models."""
-    batch_assign = (
-        _cell_scored(q, cents)
-        .groupBy("_id")
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(
-                    F.col("_cos").alias("c"),
-                    (-F.col("cent_id")).alias("nc"),
-                ),
-            ).alias("cell")
-        )
-        .select(F.col("_id").alias("vec_id"), "cell")
-    )
-    surv = q.select(
-        F.col("_id").alias(id_col), F.col("_v").alias(vec_col)
-    )
-    batch_codes = _pq_pack_codes(
-        pq_encode(surv, codebook, id_col=id_col, vec_col=vec_col),
-        id_col,
-    )
-    return (
-        batch_assign.join(batch_codes, "vec_id")
-        .withColumn("build_id", F.lit(int(expected)))
-        .withColumn("stamp_fmt", F.lit(_STAMP_FMT).cast("integer"))
+    With ``commit=True`` the batch is cell-assigned AND encoded against
+    the committed models, then appended as the next postings delta
+    after the answer materializes; the answer is a CALLER-owned eager
+    ``localCheckpoint`` — release it with `release_model_pin`. A
+    pure-ingest workload should call `ivfpq_index_ingest` instead
+    (identical delta, no probe work, no pinned frame)."""
+    return _index_probe(
+        _IVF_PQ, queries, index_path, k, nprobe, id_col, vec_col, commit
     )
 
 
 def ivfpq_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed IVF-PQ index
-    WITHOUT answering a query against it (round 18, VERDICT r17 item
-    2) — the pure-ingest sibling of ``ivfpq_index_probe(commit=True)``.
-    Each batch row is cell-assigned against the committed centroids
-    and encoded against the committed codebook, then the (vec_id,
-    cell, codes) rows land as the next postings delta — O(batch x
-    models) work, never a candidate scan of the index, which the
-    probe-then-commit path pays just to discard the answer on an
-    ingest-cadence workload. For every batch that commits at least
-    one row the delta is IDENTICAL to what
-    ``ivfpq_index_probe(batch, ..., commit=True)`` would commit
-    (shared `_ivfpq_commit_delta` definition; pinned in
-    tests/test_ivfpq_index_api.py): the same up-front duplicate-id
-    collapse, zero-norm drop, ragged-row drop, dim validation, argmax
-    cell rule, and build stamp — latest-wins / tombstone semantics at
-    read are unchanged. Deliberate divergences from the probe path:
-    the result is a plain count (no eagerly-pinned frame for the
-    caller to release), and a DEGENERATE batch — empty, or emptied by
-    the zero-norm / ragged filters — is a no-op returning 0 where the
-    probe path raises on an all-zero-norm batch. Before appending,
-    the newest live log row's build stamp is verified against the
-    committed models (`_assert_log_stamp` — the O(1-row)
-    crashed-rebuild gate the probe-commit path also runs before ITS
-    append). Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = batch.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if cents_raw is None or codebook is None:
-        raise ValueError(
-            f"ivfpq_index_ingest: no committed index at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/postings") is None:
-        # models committed but no postings log: a build crashed between
-        # its commits — refuse to graft deltas onto half an index
-        raise ValueError(
-            f"ivfpq_index_ingest: index at {index_path} has models but"
-            " no committed postings (re-run ivfpq_index_build)"
-        )
-    cent_hash = _model_build_hash(cents_raw, ["cent_id", "cv", "cn2"])
-    cb_row = _pq_codebook_row(codebook)
-    expected = cent_hash ^ int(cb_row.bid)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/postings",
-        expected,
-        "ivfpq_index_ingest",
-        live=lambda part: part["cell"] >= 0,
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        # empty-batch no-op BEFORE the shape check (whose
-        # _norm_vectors raises on an empty frame)
-        if d.first() is None:
-            return 0
-        q, _, _ = _ivfpq_shape_checked(
-            d, cb_row, "ivfpq_index_ingest", id_col, vec_col
-        )
-        if q is None:
-            return 0  # every batch vector was zero-norm
-        cents = F.broadcast(
-            cents_raw.select(
-                "cent_id",
-                F.col("cv").alias("_cv"),
-                F.col("cn2").alias("_cn2"),
-            )
-        )
-        delta = _ivfpq_commit_delta(
-            q, cents, codebook, expected, id_col, vec_col
-        ).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/postings", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+    WITHOUT answering a query against it — each row cell-assigned
+    against the committed centroids and encoded against the committed
+    codebook, landing as the next postings delta, O(batch x models)
+    work. For every batch that commits at least one row the delta is
+    IDENTICAL to what ``ivfpq_index_probe(batch, ..., commit=True)``
+    would commit (pinned in tests/test_ivfpq_index_api.py). A batch
+    that is empty, or emptied by the zero-norm / ragged filters, is a
+    no-op returning 0 (where the probe raises on an all-zero-norm
+    batch). Returns the number of rows committed."""
+    return _index_ingest(_IVF_PQ, batch, index_path, id_col, vec_col)
 
 
 def ivfpq_index_delete(spark, index_path, ids, id_col="vec_id"):
     """Library operator: REMOVE vectors from the committed IVF-PQ
-    index — identical takedown contract to the IVF-Flat and PQ
-    indexes: one tombstone posting row per distinct id (cell = -1,
-    NULL codes) as the next log delta; latest-wins resolution drops
-    tombstone winners, a later re-ingest resurrects, deleting an
-    unknown id is a no-op, and `ivfpq_index_compact` physically
-    reclaims. ``ids`` is an iterable of id values or a DataFrame
-    whose ``id_col`` holds them. Returns the committed delta
-    version."""
-    from pyspark.sql import DataFrame
-
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    base = read_state_table(spark, f"{index_path}/postings")
-    if base is None:
-        raise ValueError(
-            f"ivfpq_index_delete: no committed postings at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if "build_id" not in types:
-        raise ValueError(
-            f"ivfpq_index_delete: the log at {index_path} predates build"
-            f" stamping (committed by an earlier release) — re-run"
-            f" ivfpq_index_build to upgrade it before deleting"
-        )
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("ivfpq_index_delete: empty id set")
-        idf = spark.createDataFrame([(i,) for i in ids], ["vec_id"]).distinct()
-    tomb = idf.select(
-        F.col("vec_id").cast(types["vec_id"]),
-        F.lit(_TOMBSTONE_CELL).cast(types["cell"]).alias("cell"),
-        F.lit(None).cast(types["codes"]).alias("codes"),
-        # tombstones carry no stamp: they never survive resolution
-        F.lit(None).cast(types["build_id"]).alias("build_id"),
-        F.lit(None).cast("integer").alias("stamp_fmt"),
-    )
-    return write_state_version(
-        tomb, f"{index_path}/postings", retain=RETAIN_ALL
-    )
+    index — one tombstone posting row (cell = -1, NULL codes) per
+    distinct id as the next log delta (the `ivf_index_delete`
+    contract). ``ids`` is an iterable of id values or a DataFrame whose
+    ``id_col`` holds them. Returns the committed delta version."""
+    return _index_delete(_IVF_PQ, spark, index_path, ids, id_col)
 
 
 def ivfpq_index_compact(spark, index_path):
-    """Library operator: fold the IVF-PQ postings LOG into one
-    resolved snapshot — the shared LSM compaction rule (newest commit
-    per vec_id BEFORE committing, tombstone winners dropped). Returns
-    the committed snapshot version, or None for a missing index."""
-    from spark_data_test_spark.state import write_state_version
-
-    resolved = _resolved_ivfpq_postings(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(
-        resolved, f"{index_path}/postings", retain=1
-    )
+    """Library operator: fold the IVF-PQ postings LOG into one resolved
+    snapshot. Returns the committed snapshot version, or None for a
+    missing index."""
+    return _index_compact(_IVF_PQ, spark, index_path)
 
 
 def ivfpq_index_stats(spark, index_path):
@@ -5012,96 +4174,13 @@ def ivfpq_index_stats(spark, index_path):
     live rows — probe latency bound), ``m`` / ``n_code_rows`` (the
     committed PQ model's shape), ``n_log_rows`` / ``n_versions`` /
     ``n_tombstones`` (log depth -> compaction signal), and
-    ``model_hash`` / ``n_stale`` (round 15: the XOR-combined content
-    hash of BOTH committed models, and the count of live rows stamped
-    with a different build — probes FAIL loudly on any stale row;
-    stats MEASURE the damage without raising; a postings log missing
-    either committed model reads out as ``model_hash`` NULL with
-    ``n_stale`` = ``n_live``, plus ``m`` / ``n_code_rows`` NULL when
-    the codebook is the missing one — ADVICE r15: stats observe even
-    fully damaged indexes). All aggregates run distributed; one
-    summary row reaches the driver. Returns None for a missing
+    ``model_hash`` / ``n_stale`` (the XOR-combined content hash of BOTH
+    committed models and the count of live rows stamped with a
+    different build; ``model_hash`` NULL and ``n_stale`` = ``n_live``
+    when either model is missing, plus ``m`` / ``n_code_rows`` NULL
+    when the codebook is the missing one). Returns None for a missing
     index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    cents = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    # a postings log without BOTH committed models is CORRUPTED state
-    # (the build commits models before log), but stats MEASURE damage,
-    # they never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash NULL and n_stale = n_live,
-    # every live row unverifiable against the missing model(s).
-    if cents is None or codebook is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(
-            cents, ["cent_id", "cv", "cn2"]
-        ) ^ _model_build_hash(codebook, ["s", "cent_id", "csub"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    per_cell = (
-        _resolved_ivfpq_postings(spark, index_path)
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(stale.cast("long")).alias("_st"),
-        )
-    )
-    cells = per_cell.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
-        F.count(F.lit(1)).alias("n_cells_used"),
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_cell_rows"
-        ),
-        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(
-            (F.col("cell") == F.lit(_TOMBSTONE_CELL)).cast("long")
-        ).alias("n_tombstones"),
-    )
-    if codebook is None:
-        model = spark.range(1).select(
-            F.lit(None).cast("long").alias("m"),
-            F.lit(None).cast("long").alias("n_code_rows"),
-        )
-    else:
-        model = codebook.agg(
-            (F.max("s") + 1).cast("long").alias("m"),
-            F.count(F.lit(1)).alias("n_code_rows"),
-        )
-    return (
-        cells.crossJoin(F.broadcast(raw))
-        .crossJoin(F.broadcast(model))
-        .select(
-            "n_live",
-            "n_cells_used",
-            "max_cell_rows",
-            "m",
-            "n_code_rows",
-            "n_log_rows",
-            "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
-            exp_lit.alias("model_hash"),
-            "n_stale",
-        )
-    )
+    return _index_stats(_IVF_PQ, spark, index_path)
 
 
 def refine_topk(
