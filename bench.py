@@ -300,19 +300,6 @@ def main():
             qmap[warm_q](spark, "/root/testdata/sf0.001").write.format(
                 "noop"
             ).mode("overwrite").save()
-        # Stage the planted media corpora (PNG/WAV/Y4M files under /tmp)
-        # BEFORE the timed passes (round 19; VERDICT r18 item 1): the
-        # staging is a one-time landing job — at cluster scale the media
-        # lake already exists and only decode is steady-state — and on a
-        # cold /tmp it was charged to whichever timed pass touched it
-        # first (the 15.97 s multimodal_real_image_decode driver line in
-        # r18 vs its ~1-2 s warm decode cost, and the bogus 0.04 core-
-        # scaling ratio that staging produced). Symmetric with the memo
-        # clears: queries still call their stagers, which no-op on the
-        # fresh marker.
-        from spark_data_test_spark.operators import multimodal as _mm
-
-        _mm.prestage_media(spark, sf_dir)
     except Exception as exc:
         # a broken warmup means every timed query pays first-run codegen
         # — keep going, but SAY so instead of silently inflating numbers
@@ -321,6 +308,19 @@ def main():
         # drop warmup-scale cached frames so the timed run starts clean
         # even when warmup aborted partway
         clear_memo_caches()
+    # Stage the planted media corpora (PNG/WAV/Y4M files under /tmp)
+    # BEFORE the timed passes, in its own try so a failed warmup cannot
+    # skip it: the staging is a one-time landing job (at cluster scale
+    # the media lake already exists and only decode is steady-state),
+    # and on a cold /tmp it would be charged to whichever timed pass
+    # touched it first. Queries still call their stagers, which no-op
+    # on the fresh marker.
+    try:
+        from spark_data_test_spark.operators import multimodal as _mm
+
+        _mm.prestage_media(spark, sf_dir)
+    except Exception as exc:
+        print(f"bench media staging failed: {exc!r}", file=sys.stderr)
 
     # Two timed passes, min per query: run-to-run variance on a shared
     # box swamps single-shot timings (measured 2-3x on identical code);

@@ -695,43 +695,22 @@ def orders_market_basket(spark, sf_dir):
     of orders containing both (frequent-itemset support at k=2).
 
     The quadratic step is bounded by BASKET size, not corpus size: the
-    self-join runs per order key and a TPC-H order holds <= 7 line
+    pair expansion runs per order key and a TPC-H order holds <= 7 line
     items, so pair volume is <= 21x the order count — linear in the
     data with a constant basket factor, the canonical co-occurrence
     shape. The final top-k is fully tie-broken (support, part_a,
     part_b), so the cut is deterministic at every scale — and it plans
     as TakeOrderedAndProject (per-partition top-25 heaps merged on the
     driver), not a single-task global-sort window, so the pair-support
-    frame never funnels through one partition.
-
-    Round-18 shape (guide §2.1 — remove the shuffle): the old
-    distinct -> self-join-on-ok spent an exchange on the (ok, pk)
-    distinct plus the join's exchanges before it could count pairs.
-    Now ONE map-side-combinable aggregate collects each order's
-    distinct-part basket as a sorted array (set semantics = the old
-    distinct), the basket's pairs expand IN-TASK from the sorted array
-    ((pks[i], pks[j]), j > i — so part_a < part_b by construction,
-    exactly the join's output rows), and the support count is the only
-    pair-sized exchange left — and it ships map-side partial counts,
-    not raw pair rows. Per-row memory is bounded by basket size, the
-    same bound the join's per-key fan-out had."""
+    frame never funnels through one partition. Each order's distinct
+    parts expand to pairs in-task (`bucket_pairs`, ``cap=None`` — the
+    basket-size data contract bounds every bucket), and the support
+    count ships map-side partial counts, not raw pair rows."""
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     )
-    baskets = li.groupBy("ok").agg(
-        F.sort_array(F.collect_set("pk")).alias("pks")
-    )
     sup = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(pks, (x, i) -> "
-                    "transform(slice(pks, i + 2, size(pks)), "
-                    "y -> named_struct('part_a', x, 'part_b', y))))"
-                )
-            ).alias("e")
-        )
-        .select("e.part_a", "e.part_b")
+        bucket_pairs(li, ("ok",), "pk", None, out_a="part_a", out_b="part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("support"))
     )
@@ -1378,14 +1357,11 @@ def rfm_segments(
     )
 
 
-# Hot-basket gate for the library `market_basket` pair expansion (see
-# `spark_utils.bucket_pairs` and dedup's `_BUCKET_CAP` for the
-# rationale): a basket at or under this many distinct items expands
-# in-task from one sorted collect_set; above it, the old streaming
-# basket self-join takes over so one mega-basket can never become a
+# Size gate for the library `market_basket` pair expansion
+# (`spark_utils.bucket_pairs`): one mega-basket can never become a
 # single basket-sized aggregation buffer. The registered
-# `orders_market_basket` keeps the ungated fold — TPC-H orders hold
-# <= 7 items by data contract.
+# `orders_market_basket` passes ``cap=None`` — TPC-H orders hold <= 7
+# items by data contract.
 _BASKET_CAP = 4096
 
 
@@ -1402,8 +1378,7 @@ def market_basket(df, basket_col, item_col, min_support=1, k=None):
 
     Scale shape: (basket, item) rows are deduplicated FIRST, and the
     quadratic step expands pairs IN-TASK per basket through the gated
-    `bucket_pairs` helper (round 19, ported from the registered
-    query's round-18 fold): baskets at or under `_BASKET_CAP` items
+    `bucket_pairs` helper: baskets at or under `_BASKET_CAP` items
     collect into one sorted set and expand without a join, while a
     hot mega-basket streams through the fallback basket self-join
     instead of a basket-sized aggregation buffer — pair volume is

@@ -45,6 +45,7 @@ from spark_data_test_spark.utils.spark_utils import (
     FrameCache,
     bucket_pairs,
     checkpointed,
+    expand_group_pairs as _expand_group_pairs,
     local_df,
     release_frame,
 )
@@ -52,22 +53,14 @@ from spark_data_test_spark.utils.spark_utils import (
 _N_HASHES = 12
 _BANDS = 4  # rows-per-band = 3
 
-# Hot-bucket gate for the LSH banding expansions (round 19; VERDICT r18
-# "What's wrong" #3): a band bucket at or under this many members is
-# collected into ONE sorted array and expanded in-task (the round-18
-# shape — one exchange, no join); a bucket ABOVE it falls back to the
-# streaming bucket self-join, because collecting it would materialize a
-# corpus-proportional array in a single aggregation buffer (the
-# executor-OOM / 2 GB BufferHolder hazard degenerate signatures —
-# boilerplate or empty-text docs sharing a band hash — create at 100 TB;
-# the old self-join had the same skewed pair VOLUME but never an
-# O(bucket) buffer). 4096 members ≈ a few-hundred-KB array per buffer —
-# far under any executor limit — while buckets that large are already
-# pathological for LSH (8M pairs each) and belong on the streaming
-# path. See `spark_utils.bucket_pairs` for the gate mechanics; the
-# stop-capped sites (containment rare shingles <= _STOP_SH_DF = 128,
-# n-gram postings <= _NGRAM_STOP_DF) are bounded by construction and
-# stay ungated.
+# Size gate for the LSH banding expansions (`spark_utils.bucket_pairs`):
+# a band bucket above this many members streams through the bucket
+# self-join instead of one corpus-proportional aggregation buffer.
+# 4096 members is a few-hundred-KB array, far under any executor
+# limit, while buckets that large (8M pairs each) are already
+# pathological for LSH. The stop-capped sites (containment rare
+# shingles <= _STOP_SH_DF, n-gram postings <= _NGRAM_STOP_DF) are
+# bounded by construction and pass ``cap=None``.
 _BUCKET_CAP = 4096
 
 # --- shared SQL fragments -------------------------------------------------
@@ -246,9 +239,8 @@ def _cached_gid_pairs(spark, sf_dir):
 
     def build():
         # The band index is eagerly checkpointed because the gated
-        # expansion (`_band_pairs` -> `bucket_pairs`) consumes it three
-        # times (size pass, cold aggregate, hot fallback join) — each
-        # read would otherwise re-run the whole minhash subtree. The
+        # expansion reads it three times — each read would otherwise
+        # re-run the whole minhash subtree. The
         # pair frame itself is checkpointed too (as in the simhash
         # fingerprint cache): the lineage re-analyzes on the driver for
         # every downstream consumer, and truncating it to a leaf
@@ -275,31 +267,6 @@ def _cached_gid_pairs(spark, sf_dir):
             release_frame(bands)
 
     return _GID_PAIRS_CACHE.get_or_create(key, build)
-
-
-def _expand_group_pairs(members, gid_pairs):
-    """Group-level candidates -> doc-level candidate pairs: every cross
-    pair of two candidate groups, plus every intra-group pair (identical
-    texts share every band by construction). Disjoint by construction
-    (same vs different gid), so no distinct is needed."""
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
-    cross = (
-        gid_pairs.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-        )
-    )
-    m1 = members.select("gid", F.col("doc_id").alias("_da"))
-    m2 = members.select("gid", F.col("doc_id").alias("_db"))
-    intra = (
-        m1.join(m2, "gid")
-        .where(F.col("_da") < F.col("_db"))
-        .select(F.col("_da").alias("doc_a"), F.col("_db").alias("doc_b"))
-    )
-    return cross.unionByName(intra)
 
 
 def _cached_band_pairs(spark, sf_dir):
@@ -357,28 +324,11 @@ def _minhash(sh):
 
 
 def _band_pairs(bands):
-    """(band, sig) buckets -> candidate pairs via the GATED in-task
-    expansion (``doc_a < doc_b``, distinct over bands).
-
-    Input is a `_band_index` frame — one row per (doc, band), bands
-    built in ONE pass over the signature table (explode of an inline
-    array) rather than a 4-way union, which would re-evaluate the
-    whole minhash subtree once per band. Round-18 shape (guide
-    §2.1/§2.4 — remove the shuffle): each bucket's member list is
-    collected in ONE map-side-combinable aggregate and pairs expand
-    IN-TASK over the sorted array, replacing the bucket self-join's
-    two exchanges with one. Round-19 gate (guide §5 — bound per-task
-    memory; see `bucket_pairs` and `_BUCKET_CAP`): buckets above the
-    cap fall back to the streaming self-join, so a degenerate band
-    signature can never materialize a corpus-proportional array in a
-    single aggregation buffer — identical pair set either way; the
-    trailing distinct is unchanged.
-
-    Callers pass a CHEAP-TO-RESCAN bands frame: the gate reads it
-    three times (size pass, cold aggregate, hot join), so production
-    (`_cached_gid_pairs`) eagerly checkpoints the band index first
-    and releases it once the pair frame is materialized.
-    """
+    """(band, sig) buckets of a `_band_index` frame -> distinct
+    candidate pairs (``doc_a < doc_b``) through the gated
+    `bucket_pairs` at `_BUCKET_CAP`. The bands frame must be cheap to
+    rescan (the gate reads it three times): production eagerly
+    checkpoints the band index first."""
     return bucket_pairs(
         bands,
         ("band", "sig"),
@@ -624,76 +574,32 @@ def _sp_banded(fp):
     ).select("gid", "lo", "hi", "bs.band", "bs.sig")
 
 
-def _sp_bucket_pairs(bands, max_hamming=_SP_HAM_K, cap=_BUCKET_CAP):
-    """Verified simhash candidate rows ``(gid_a, gid_b, hamming)`` with
+def _sp_gid_pairs(bands, max_hamming=_SP_HAM_K, cap=_BUCKET_CAP):
+    """Verified simhash group pairs ``(gid_a, gid_b, hamming)`` with
     ``gid_a < gid_b`` and ``hamming <= max_hamming`` from `_sp_banded`
-    rows — one row per qualifying (bucket, pair), so callers dedup with
-    the groupBy(min) they already run.
-
-    Round-18 shape (guide §2.1/§2.4 — remove the shuffle): each band
-    bucket's (gid, lo, hi) members are collected in ONE map-side-
-    combinable aggregate ((gid, band) rows are unique, so collect_list
-    IS the old bucket contents; sort_array orders by gid, the struct's
-    first field) and candidate pairs expand IN-TASK over the sorted
-    array — ms[i] x ms[j], j > i, so gid_a < gid_b by construction,
-    exactly the rows the old bucket self-join emitted. The exact
-    hamming verify runs INSIDE the expansion and the <= K filter
-    prunes before anything is materialized, so the only shuffle
-    proportional to candidate volume is the caller's verify groupBy,
-    and it sees just the survivors. Two-level explode (posexplode,
-    then the i-tail slice) keeps per-row transient memory O(bucket).
-
-    Round-19 gate (guide §5 — bound per-task memory; the simhash key
-    space is only _SP_BANDS x 256 buckets, so bucket membership grows
-    O(corpus) by construction): buckets above ``cap`` members fall
-    back to the streaming bucket self-join — with the same in-join
-    verify, so the <= K filter still precedes any shuffle — instead of
-    materializing a corpus-proportional struct array in one
-    aggregation buffer. Identical row set either way. The bands frame
-    is read three times (size pass, cold aggregate, hot join); every
-    caller derives it from an eagerly checkpointed fingerprint frame,
-    so each read is an explode over a leaf scan."""
-    sizes = bands.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("_n"))
-    hot = sizes.where(F.col("_n") > int(cap)).select("band", "sig")
-    cold_rows = (
-        bands.join(F.broadcast(hot), ["band", "sig"], "left_anti")
-        .groupBy("band", "sig")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("gid", "lo", "hi"))).alias(
-                "ms"
-            )
-        )
-        .where(F.size("ms") >= 2)
-        .select(F.col("ms"), F.posexplode("ms").alias("pos", "m"))
+    rows. Each band bucket's packed fingerprints expand through the
+    gated `bucket_pairs`; the exact hamming filter is pushed into both
+    of its branches (right after the in-task expansion, and into the
+    fallback join's condition), so the only shuffle proportional to
+    candidate volume is the groupBy(min) that dedups a pair's several
+    band collisions, and it sees just the survivors. Every caller
+    derives the bands from an eagerly checkpointed fingerprint frame,
+    so the gate's three reads are explodes over a leaf scan."""
+    members = bands.select("band", "sig", F.struct("gid", "lo", "hi").alias("m"))
+    return (
+        bucket_pairs(members, ("band", "sig"), "m", cap)
         .select(
-            "m",
-            F.explode(F.expr("slice(ms, pos + 2, size(ms))")).alias("o"),
-        )
-        .select(
-            F.col("m.gid").alias("gid_a"),
-            F.col("o.gid").alias("gid_b"),
+            F.col("m_a.gid").alias("gid_a"),
+            F.col("m_b.gid").alias("gid_b"),
             F.expr(
-                "bit_count(m.lo ^ o.lo) + bit_count(m.hi ^ o.hi)"
-            ).cast("long").alias("hamming"),
-        )
-        .where(F.col("hamming") <= F.lit(int(max_hamming)))
-    )
-    hot_rows = bands.join(F.broadcast(hot), ["band", "sig"])
-    a, b = hot_rows.alias("a"), hot_rows.alias("b")
-    hot_pairs = (
-        a.join(b, ["band", "sig"])
-        .where(F.expr("a.gid < b.gid"))
-        .select(
-            F.expr("a.gid").alias("gid_a"),
-            F.expr("b.gid").alias("gid_b"),
-            F.expr(
-                "CAST(bit_count(a.lo ^ b.lo)"
-                " + bit_count(a.hi ^ b.hi) AS BIGINT)"
+                "CAST(bit_count(m_a.lo ^ m_b.lo)"
+                " + bit_count(m_a.hi ^ m_b.hi) AS BIGINT)"
             ).alias("hamming"),
         )
         .where(F.col("hamming") <= F.lit(int(max_hamming)))
+        .groupBy("gid_a", "gid_b")
+        .agg(F.min("hamming").alias("hamming"))
     )
-    return cold_rows.unionByName(hot_pairs)
 
 
 @query(
@@ -749,10 +655,9 @@ def dedup_simhash_pairs(spark, sf_dir):
     extractions — identical arithmetic in Spark and DuckDB, ~6x faster
     than per-position string comparison on both engines. At 100 TB:
     banding is one exchange of the band rows plus the gated in-task
-    expansion (`_sp_bucket_pairs`; buckets over `_BUCKET_CAP` members
-    stream through the fallback self-join instead of one aggregation
-    buffer — the byte-band key space is only 8 x 256, so bucket size
-    grows with the corpus by construction); a pair's candidates dedup
+    expansion (`_sp_gid_pairs`; the byte-band key space is only
+    8 x 256, so bucket size grows with the corpus by construction and
+    the `_BUCKET_CAP` gate matters here); a pair's candidates dedup
     AFTER the <= K filter, so no shuffle carries the raw collision
     volume."""
     corpus = _near_corpus(spark, sf_dir)
@@ -798,49 +703,50 @@ def dedup_simhash_pairs(spark, sf_dir):
 
     key = (spark.sparkContext.applicationId, sf_dir)
     fp = _SIM_FP_CACHE.get_or_create(key, build_fp)
-    # Gated in-task banding (see `_sp_banded`/`_sp_bucket_pairs`): the
-    # exact hamming verify runs INSIDE the expansion (or inside the
-    # hot-bucket fallback join) and the <= K filter prunes before
-    # anything is materialized, so the only shuffle proportional to
-    # candidate volume is the verify groupBy below, and it sees just
-    # the survivors. No distinct on raw candidates: a pair sharing k
-    # bands appears k times, each copy scores the same exact hamming,
-    # so dedup stays in the groupBy(min). The bands projection rescans
-    # the checkpointed fingerprint leaf, so the gate's three reads are
-    # cheap.
-    gpairs = (
-        _sp_bucket_pairs(_sp_banded(fp))
-        .groupBy("gid_a", "gid_b")
-        .agg(F.min("hamming").alias("hamming"))
-    )
+    gpairs = _sp_gid_pairs(_sp_banded(fp))
     # membership restricted to groups that HAVE a fingerprint (zero-token
     # texts drop out, as in the per-doc oracle)
     memb = _SIM_MEMB_CACHE.get_or_create(
         key, lambda: docs.join(fp.select("gid"), "gid").persist()
     )
-    ma = memb.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
-    mb = memb.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
-    cross = (
-        gpairs.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "hamming",
-        )
+    return _expand_group_pairs(memb, gpairs, hamming=0)
+
+
+def _jaccard_verify(gsh, gpairs, tau_1e6):
+    """Exact shingle-set Jaccard on candidate group pairs: ``(gid_a,
+    gid_b, jaccard_1e6)`` for the pairs of ``gpairs`` whose Jaccard
+    over the ``(gid, sh)`` rows of ``gsh`` is at least ``tau_1e6``
+    micro-units. The shingle table is first restricted to groups that
+    appear in some candidate pair (a semi-join shape), so the
+    set-intersection join runs over the candidate slice, not the full
+    vocabulary. Join strategies are left to AQE: on a dup-heavy corpus
+    the candidate set is bounded only by duplicate density, and a
+    forced broadcast would OOM the driver exactly when dedup matters
+    most. The double compare is the one the DuckDB oracles replay."""
+    cand_gids = (
+        gpairs.select(F.col("gid_a").alias("gid"))
+        .union(gpairs.select(F.col("gid_b").alias("gid")))
+        .distinct()
     )
-    m1 = memb.select("gid", F.col("doc_id").alias("_da"))
-    m2 = memb.select("gid", F.col("doc_id").alias("_db"))
-    intra = (
-        m1.join(m2, "gid")
-        .where(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            F.lit(0).cast("long").alias("hamming"),
+    sh_cand = gsh.join(cand_gids, "gid")
+    sizes = sh_cand.groupBy("gid").agg(F.count("*").alias("n"))
+    a, b = sh_cand.alias("a"), sh_cand.alias("b")
+    inter = (
+        gpairs.join(a, F.col("a.gid") == F.col("gid_a"))
+        .join(
+            b,
+            (F.col("b.gid") == F.col("gid_b")) & (F.col("b.sh") == F.col("a.sh")),
         )
+        .groupBy("gid_a", "gid_b")
+        .agg(F.count("*").alias("i"))
     )
-    return cross.unionByName(intra)
+    jac = F.lit(1000000.0) * F.col("i") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
+    return (
+        inter.join(sizes.alias("sa"), F.col("sa.gid") == F.col("gid_a"))
+        .join(sizes.alias("sb"), F.col("sb.gid") == F.col("gid_b"))
+        .where(jac >= F.lit(int(tau_1e6)))
+        .select("gid_a", "gid_b", F.round(jac).cast("long").alias("jaccard_1e6"))
+    )
 
 
 @query(
@@ -874,65 +780,14 @@ def dedup_near_jaccard(spark, sf_dir):
     candidate text pair and expanded to doc pairs afterwards (identical
     texts in the same group get Jaccard exactly 1e6 — i = n, so
     1e6 * n / (n + n - n) — without computing anything). On a corpus
-    with k exact copies per text this cuts the verify join by k^2.
-
-    The group-shingle table is first restricted to groups that appear
-    in some candidate pair (a semi-join shape), so the set-intersection
-    join runs over the candidate slice, not the full vocabulary. Join
-    strategies are left to AQE: on a dup-heavy corpus the candidate set
-    is bounded only by duplicate density, and a forced broadcast would
-    OOM the driver exactly when dedup matters most — AQE's runtime
-    sizes pick broadcast when it is actually small."""
-    sh = _cached_shingles(spark, sf_dir)
-    members = _cached_members(spark, sf_dir)
-    gpairs = _cached_gid_pairs(spark, sf_dir)
-    cand_gids = (
-        gpairs.select(F.col("gid_a").alias("gid"))
-        .union(gpairs.select(F.col("gid_b").alias("gid")))
-        .distinct()
+    with k exact copies per text this cuts the verify join by k^2
+    (`_jaccard_verify` runs on the candidate slice)."""
+    gpairs = _jaccard_verify(
+        _cached_shingles(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
     )
-    sh_cand = sh.join(cand_gids, "gid")
-    sizes = sh_cand.groupBy("gid").agg(F.count("*").alias("n"))
-    a, b = sh_cand.alias("a"), sh_cand.alias("b")
-    inter = (
-        gpairs.join(a, F.col("a.gid") == F.col("gid_a"))
-        .join(
-            b,
-            (F.col("b.gid") == F.col("gid_b")) & (F.col("b.sh") == F.col("a.sh")),
-        )
-        .groupBy("gid_a", "gid_b")
-        .agg(F.count("*").alias("i"))
+    return _expand_group_pairs(
+        _cached_members(spark, sf_dir), gpairs, jaccard_1e6=1_000_000
     )
-    jac = F.lit(1000000.0) * F.col("i") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    cross_groups = (
-        inter.join(sizes.alias("sa"), F.col("sa.gid") == F.col("gid_a"))
-        .join(sizes.alias("sb"), F.col("sb.gid") == F.col("gid_b"))
-        .where(jac >= 500000)
-        .select("gid_a", "gid_b", F.round(jac).cast("long").alias("jaccard_1e6"))
-    )
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
-    cross = (
-        cross_groups.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "jaccard_1e6",
-        )
-    )
-    m1 = members.select("gid", F.col("doc_id").alias("_da"))
-    m2 = members.select("gid", F.col("doc_id").alias("_db"))
-    intra = (
-        m1.join(m2, "gid")
-        .where(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            F.lit(1000000).cast("long").alias("jaccard_1e6"),
-        )
-    )
-    return cross.unionByName(intra)
 
 
 _EMB_NPROBE = 3  # trained cells each vector lands in (multi-probe)
@@ -1554,29 +1409,13 @@ def _cached_gid_co_counts(spark, sf_dir, sampled=False):
             .agg(F.collect_set("sh").alias("hs"))
             .persist()
         )
-        # Round-18 discovery shapes, chosen PER VARIANT by interleaved
-        # A/B (guide §1.1 — the empirical loop decides, and the two
-        # variants sit in different regimes):
-        # * FULL build (containment): the rare-shingle posting lists
-        #   are collected in ONE map-side-combinable aggregate
-        #   ((gid, sh) rows are distinct, so collect_set IS the old
-        #   per-shingle bucket) and discovery pairs expand IN-TASK
-        #   over the sorted array — gs[i] x gs[j], j > i, so ga < gb
-        #   by construction, exactly the rows the old rare self-join
-        #   emitted; i_rare is the same count of shared rare shingles
-        #   per pair. The stop-shingle cap bounds every bucket at
-        #   _STOP_SH_DF gids, so the per-row expansion is provably
-        #   bounded — the same df^2 discovery volume as before with
-        #   ONE exchange of the posting rows instead of the
-        #   self-join's two (plus its sorts, plus the shr persist the
-        #   double read needed). Measured 0.74x on the containment
-        #   line over three alternated rounds at sf0.1.
-        # * SAMPLED build (the recall eval): volume is deliberately
-        #   quartered before discovery, so the exchange savings cannot
-        #   pay for the aggregate's per-bucket array work — the
-        #   expansion shape measured ~1.3x SLOWER end-to-end there,
-        #   and the persisted-shr self-join stays (the persist feeds
-        #   the join's two subtree reads).
+        # Discovery shape per variant, chosen by interleaved A/B: the
+        # FULL build (containment) expands pairs in-task from the
+        # rare-shingle posting lists, each bounded at _STOP_SH_DF gids
+        # by the hot anti-join; the SAMPLED build (the recall eval)
+        # quarters the volume first, where the aggregate's per-bucket
+        # array work measured ~1.3x slower end-to-end than the
+        # persisted self-join (the persist feeds its two reads).
         if sampled:
             shr = sh.join(F.broadcast(hot), "sh", "left_anti").persist()
             a, b = shr.alias("a"), shr.alias("b")
@@ -1594,16 +1433,7 @@ def _cached_gid_co_counts(spark, sf_dir, sampled=False):
         else:
             shr = sh.join(F.broadcast(hot), "sh", "left_anti")
             co = (
-                shr.groupBy("sh")
-                .agg(F.sort_array(F.collect_set("gid")).alias("gs"))
-                .where(F.size("gs") >= 2)
-                .select(F.col("gs"), F.posexplode("gs").alias("pos", "ga"))
-                .select(
-                    "ga",
-                    F.explode(
-                        F.expr("slice(gs, pos + 2, size(gs))")
-                    ).alias("gb"),
-                )
+                bucket_pairs(shr, ("sh",), "gid", None, out_a="ga", out_b="gb")
                 .groupBy("ga", "gb")
                 .agg(F.count(F.lit(1)).alias("i_rare"))
             )
@@ -2832,8 +2662,8 @@ def corpus_source_similarity(spark, sf_dir):
     consults before assigning per-source sampling weights (two crawls
     of the same site should not both get full weight, and an eval
     source overlapping a training source is a leak). Plan shape: one
-    shingle explode + per-source distinct (hash aggregate), a
-    shingle-keyed self-join whose fan-out is bounded by the SOURCE
+    shingle explode + per-source distinct (hash aggregate), an in-task
+    per-shingle pair expansion whose fan-out is bounded by the SOURCE
     count squared per shingle — independent of corpus size — and a
     tiny per-pair aggregate; only pairs with at least one shared
     shingle are emitted. At thousands of sources the exact join would
@@ -2855,31 +2685,15 @@ def corpus_source_similarity(spark, sf_dir):
         )
         .distinct()
     )
-    # Shingle-grouped source SETS instead of a shingle self-join: one
-    # aggregate collapses each shingle to its (bounded-by-source-count)
-    # member set, and pair expansion happens AFTER the aggregate on
-    # rows whose width is the source count, never corpus-sized — so
-    # the only shingle-cardinality shuffles are the distinct and the
-    # set-building aggregate.
-    srcsets = ssh.groupBy("sh").agg(
-        F.array_sort(F.collect_set("source")).alias("srcs")
-    )
-    pair_expr = (
-        "flatten(transform(srcs, (a, i) ->"
-        " transform(slice(srcs, i + 2, size(srcs)),"
-        " b -> struct(a AS source_a, b AS source_b))))"
-    )
+    # Pairs expand in-task from each shingle's source set, whose width
+    # is the source count, never corpus-sized — no shingle-keyed
+    # self-join.
     shared = (
-        srcsets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.source_a", "p.source_b")
+        bucket_pairs(ssh, ("sh",), "source", None, "source_a", "source_b")
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    sizes = (
-        srcsets.select(F.explode("srcs").alias("source"))
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    sizes = ssh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("n_b"))
     return (
@@ -2959,25 +2773,12 @@ def source_overlap(docs, group_col="source", text_col="text", max_groups=512):
         )
         .distinct()
     )
-    grpsets = ssh.groupBy("sh").agg(
-        F.array_sort(F.collect_set("_grp")).alias("grps")
-    )
-    pair_expr = (
-        "flatten(transform(grps, (a, i) ->"
-        " transform(slice(grps, i + 2, size(grps)),"
-        " b -> struct(a AS group_a, b AS group_b))))"
-    )
     shared = (
-        grpsets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.group_a", "p.group_b")
+        bucket_pairs(ssh, ("sh",), "_grp", None, "group_a", "group_b")
         .groupBy("group_a", "group_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    sizes = (
-        grpsets.select(F.explode("grps").alias("_grp"))
-        .groupBy("_grp")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    sizes = ssh.groupBy("_grp").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.select(
         F.col("_grp").alias("group_a"), F.col("n").alias("n_a")
     )
@@ -3263,16 +3064,13 @@ def near_dup_pairs(docs, tau_1e6=500000):
     Architecture matches the registered pipeline
     (`dedup_minhash_lsh` -> `dedup_near_jaccard`):
     EXACT-DEDUP-BEFORE-NEAR-DUP — the whole LSH pipeline runs once per
-    DISTINCT text, the gated in-task banding expansion (`_band_pairs`;
-    round 19 ported from the registered pipeline — the bucket
-    self-join survives only as the over-`_BUCKET_CAP` fallback) and
-    the Jaccard verify are bounded by candidate GROUPS (k exact copies
-    of a text shrink both by k^2), and doc pairs are reconstructed by
-    a members join at the end. The verify is computed once per
-    distinct text pair on the candidate slice of the group-shingle
-    table; join strategies are left to AQE. The returned frame is an
-    executor-local checkpoint (pair-volume-sized, dup-proportional) so
-    the internal caches are released before the caller executes it."""
+    DISTINCT text, the gated banding expansion (`_band_pairs`) and
+    the Jaccard verify (`_jaccard_verify`) are bounded by candidate
+    GROUPS (k exact copies of a text shrink both by k^2), and doc
+    pairs are reconstructed by a members join at the end. The returned
+    frame is an executor-local checkpoint (pair-volume-sized,
+    dup-proportional) so the internal caches are released before the
+    caller executes it."""
     docs = docs.select("doc_id", "text")
     members = docs.select("doc_id", F.md5("text").alias("gid")).persist()
     gsh = (
@@ -3296,64 +3094,9 @@ def near_dup_pairs(docs, tau_1e6=500000):
             F.col("doc_a").alias("gid_a"),
             F.col("doc_b").alias("gid_b"),
         )
-        cand_gids = (
-            gpairs.select(F.col("gid_a").alias("gid"))
-            .union(gpairs.select(F.col("gid_b").alias("gid")))
-            .distinct()
-        )
-        sh_cand = gsh.join(cand_gids, "gid")
-        sizes = sh_cand.groupBy("gid").agg(F.count("*").alias("n"))
-        ca, cb = sh_cand.alias("ca"), sh_cand.alias("cb")
-        inter = (
-            gpairs.join(ca, F.col("ca.gid") == F.col("gid_a"))
-            .join(
-                cb,
-                (F.col("cb.gid") == F.col("gid_b"))
-                & (F.col("cb.sh") == F.col("ca.sh")),
-            )
-            .groupBy("gid_a", "gid_b")
-            .agg(F.count("*").alias("i"))
-        )
-        jac = (
-            F.lit(1000000.0)
-            * F.col("i")
-            / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-        )
-        cross_groups = (
-            inter.join(sizes.alias("sa"), F.col("sa.gid") == F.col("gid_a"))
-            .join(sizes.alias("sb"), F.col("sb.gid") == F.col("gid_b"))
-            .where(jac >= F.lit(int(tau_1e6)))
-            .select(
-                "gid_a",
-                "gid_b",
-                F.round(jac).cast("long").alias("jaccard_1e6"),
-            )
-        )
-        ma = members.select(
-            F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da")
-        )
-        mb = members.select(
-            F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db")
-        )
-        cross = (
-            cross_groups.join(ma, "gid_a")
-            .join(mb, "gid_b")
-            .select(
-                F.least("_da", "_db").alias("doc_a"),
-                F.greatest("_da", "_db").alias("doc_b"),
-                "jaccard_1e6",
-            )
-        )
-        intra = (
-            ma.join(mb, F.col("gid_a") == F.col("gid_b"))
-            .where(F.col("_da") < F.col("_db"))
-            .select(
-                F.col("_da").alias("doc_a"),
-                F.col("_db").alias("doc_b"),
-                F.lit(1000000).cast("long").alias("jaccard_1e6"),
-            )
-        )
-        return cross.unionByName(intra).localCheckpoint(eager=True)
+        return _expand_group_pairs(
+            members, _jaccard_verify(gsh, gpairs, tau_1e6), jaccard_1e6=1_000_000
+        ).localCheckpoint(eager=True)
     finally:
         members.unpersist()
         gsh.unpersist()
@@ -3430,29 +3173,11 @@ def containment_pairs(docs, tau_1e6=_CONTAIN_1E6, stop_df=_STOP_SH_DF):
         .persist()
     )
     try:
-        # Round-19 port of the registered full build's discovery shape
-        # (`_cached_gid_co_counts`, sampled=False; guide §2.1/§2.4):
-        # per-rare-shingle posting lists are collected in ONE map-side-
-        # combinable aggregate ((gid, sh) rows are distinct, so
-        # collect_set IS the old per-shingle bucket) and discovery
-        # pairs expand IN-TASK over the sorted array — gs[i] x gs[j],
-        # j > i, so ga < gb by construction, exactly the rows the old
-        # rare self-join emitted. Every bucket is bounded at
-        # ``stop_df`` gids by the hot anti-join above, so the
-        # per-bucket array is capped by construction — no size gate
-        # needed (unlike the LSH banding sites).
+        # in-task discovery over the rare-shingle posting lists, each
+        # bounded at ``stop_df`` gids by the hot anti-join above
         shr = gsh.join(F.broadcast(hot), "sh", "left_anti")
         co = (
-            shr.groupBy("sh")
-            .agg(F.sort_array(F.collect_set("gid")).alias("gs"))
-            .where(F.size("gs") >= 2)
-            .select(F.col("gs"), F.posexplode("gs").alias("pos", "ga"))
-            .select(
-                "ga",
-                F.explode(
-                    F.expr("slice(gs, pos + 2, size(gs))")
-                ).alias("gb"),
-            )
+            bucket_pairs(shr, ("sh",), "gid", None, out_a="ga", out_b="gb")
             .groupBy("ga", "gb")
             .agg(F.count(F.lit(1)).alias("i_rare"))
         )
@@ -3530,10 +3255,8 @@ def simhash_near_dup_pairs(docs, max_hamming=_SP_HAM_K):
     never pair (matching the registered query's semantics).
 
     Group-level like the rest of the family: fingerprints, banding,
-    and the packed-popcount hamming verify (INSIDE the gated in-task
-    banding expansion — `_sp_bucket_pairs`, ported from the registered
-    query in round 19; the banding self-join survives only as the
-    over-`_BUCKET_CAP` fallback) run once per DISTINCT text; doc pairs
+    and the packed-popcount hamming verify (pushed into the gated
+    banding expansion, `_sp_gid_pairs`) run once per DISTINCT text; doc pairs
     are reconstructed by a members join. The result is an
     executor-local checkpoint (pair-volume-sized) so the fingerprint
     checkpoints release before the caller executes it."""
@@ -3555,41 +3278,11 @@ def simhash_near_dup_pairs(docs, max_hamming=_SP_HAM_K):
         )
     )
     try:
-        # fp is an eager checkpoint, so the gate's three band-frame
-        # reads are explodes over a leaf scan; groupBy(min) dedups a
-        # pair's multiple band collisions exactly as the old
-        # post-filter distinct did (hamming is determined by the pair)
-        gpairs = (
-            _sp_bucket_pairs(_sp_banded(fp), max_hamming=max_hamming)
-            .groupBy("gid_a", "gid_b")
-            .agg(F.min("hamming").alias("hamming"))
-        )
+        gpairs = _sp_gid_pairs(_sp_banded(fp), max_hamming=max_hamming)
         m_fp = members.join(fp.select("gid"), "gid")
-        ma = m_fp.select(
-            F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da")
+        return _expand_group_pairs(m_fp, gpairs, hamming=0).localCheckpoint(
+            eager=True
         )
-        mb = m_fp.select(
-            F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db")
-        )
-        cross = (
-            gpairs.join(ma, "gid_a")
-            .join(mb, "gid_b")
-            .select(
-                F.least("_da", "_db").alias("doc_a"),
-                F.greatest("_da", "_db").alias("doc_b"),
-                "hamming",
-            )
-        )
-        intra = (
-            ma.join(mb, F.col("gid_a") == F.col("gid_b"))
-            .where(F.col("_da") < F.col("_db"))
-            .select(
-                F.col("_da").alias("doc_a"),
-                F.col("_db").alias("doc_b"),
-                F.lit(0).cast("long").alias("hamming"),
-            )
-        )
-        return cross.unionByName(intra).localCheckpoint(eager=True)
     finally:
         members.unpersist()
         release_frame(sums)

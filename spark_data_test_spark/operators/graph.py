@@ -36,7 +36,7 @@ integers in both engines.
 import pyspark.sql.functions as F
 
 from spark_data_test_spark.operators.relational import query, t
-from spark_data_test_spark.utils.spark_utils import FrameCache
+from spark_data_test_spark.utils.spark_utils import FrameCache, bucket_pairs
 
 # Every graph query starts from the same projected edge list; memoize
 # it per (session, sf_dir) like the dedup pipeline caches its shingles
@@ -63,40 +63,19 @@ def _edges(spark, sf_dir):
     """Undirected co-purchase edge list (u < v, distinct), memoized and
     persisted per (session, sf_dir).
 
-    Round-18 shape (guide §2.1 — remove the shuffle): ONE aggregate
-    collects each order's distinct-part basket as a sorted array
-    (collect_set is map-side-combinable, so the exchange carries
-    per-order partial sets, and set semantics ARE the old per-(ok, pk)
-    distinct), and the per-basket pair fan-out happens IN-TASK with an
-    index-lambda expansion over the sorted array — pairs (pks[i],
-    pks[j]), j > i, so u < v by construction, exactly the rows the old
-    distinct -> self-join-on-ok produced. That drops the pre-join
-    distinct exchange AND both self-join exchanges; the only shuffles
-    left are the basket aggregate and the final edge distinct. The
-    quadratic step stays bounded by BASKET size exactly as before (a
-    TPC-H order holds <= 7 line items; the array is the basket, so
-    per-row memory is the same bound the join's fan-out had — cap or
-    sample hot baskets upstream when the bipartite side is skewed,
-    as the module docstring already directs)."""
+    Each order's distinct parts expand to pairs in-task
+    (`bucket_pairs` with ``cap=None``): a TPC-H order holds <= 7 line
+    items, so the basket bounds every bucket — cap or sample hot
+    baskets upstream when the bipartite side is skewed, as the module
+    docstring directs. The only shuffles are the basket aggregate and
+    the final edge distinct."""
 
     def build():
         li = t(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
-        baskets = li.groupBy("ok").agg(
-            F.sort_array(F.collect_set("pk")).alias("pks")
-        )
         return (
-            baskets.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(pks, (x, i) -> "
-                        "transform(slice(pks, i + 2, size(pks)), "
-                        "y -> named_struct('u', x, 'v', y))))"
-                    )
-                ).alias("e")
-            )
-            .select("e.u", "e.v")
+            bucket_pairs(li, ("ok",), "pk", None, out_a="u", out_b="v")
             .distinct()
             .persist()
         )

@@ -36,8 +36,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from spark_data_test_spark.operators.dedup import _BUCKET_CAP
 from spark_data_test_spark.operators.relational import query, t
-from spark_data_test_spark.utils.spark_utils import FrameCache, checkpointed
+from spark_data_test_spark.utils.spark_utils import (
+    FrameCache,
+    bucket_pairs,
+    checkpointed,
+    expand_group_pairs,
+    release_frame,
+)
 
 # Decoded-pixel memo: the binaryFile listing + Arrow decode of the
 # staged PNG corpus is the most expensive scan in the module, and both
@@ -67,12 +74,18 @@ def prestage_media(spark, sf_dir):
     between passes, so the recorded lines measure the decode work
     itself. Query-side behavior is unchanged: each query still calls
     its stager, which no-ops on the fresh marker."""
-    import hashlib as _hashlib
+    _stage_png_files(spark, sf_dir, _media_root("png", sf_dir))
+    _stage_wav_files(spark, sf_dir, _media_root("wav", sf_dir))
+    _stage_y4m_files(spark, sf_dir, _media_root("y4m", sf_dir))
 
-    digest = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    _stage_png_files(spark, sf_dir, f"/tmp/spark_graft_png/{digest}")
-    _stage_wav_files(spark, sf_dir, f"/tmp/spark_graft_wav/{digest}")
-    _stage_y4m_files(spark, sf_dir, f"/tmp/spark_graft_y4m/{digest}")
+
+def _media_root(kind, sf_dir):
+    """Staging directory of the planted ``kind`` corpus ("png", "wav",
+    "y4m", or the streaming "wav_arrivals") for ``sf_dir`` — the one
+    derivation shared by the decode queries, `prestage_media` and the
+    streaming WAV arrivals."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    return f"/tmp/spark_graft_{kind}/{digest}"
 
 
 try:  # pragma: no cover - PIL optional; stdlib PNG path always works
@@ -561,8 +574,7 @@ def multimodal_real_image_decode(spark, sf_dir):
     job, no shuffle. (`source_binaryfile_roundtrip` keeps the
     listing-based source covered for corpora that really do arrive
     unmanifested.)"""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_png/{digest}"
+    root = _media_root("png", sf_dir)
     _stage_png_files(spark, sf_dir, root)
 
     def extract(batches):
@@ -680,15 +692,15 @@ def multimodal_phash_neardup(spark, sf_dir):
     image mean — the classic aHash, division-free in exact integers),
     and near-dup pairs found by byte-banding: by pigeonhole,
     hamming <= 7 over 8 bands of 8 bits means at least one band
-    matches exactly, so the band bucket self-join finds EVERY
-    qualifying pair (candidacy is complete, not probabilistic) and
-    the exact popcount verify runs only inside the buckets.
+    matches exactly, so banding finds EVERY qualifying pair
+    (candidacy is complete, not probabilistic) and the exact popcount
+    verify runs only inside the buckets (`_phash_gid_pairs`).
 
     Scale shape, mirroring the text simhash family's exact-dup
     collapse: hashes are computed once per DISTINCT image content
-    (gid = pixel hex), the band self-join runs over distinct-content
-    fingerprints only — k byte-identical copies of an image cost the
-    join nothing extra — and doc pairs are reconstructed by a members
+    (gid = pixel hex), banding runs over distinct-content
+    fingerprints only — k byte-identical copies of an image cost it
+    nothing extra — and doc pairs are reconstructed by a members
     expansion (intra-group pairs are hamming 0 by construction). At
     real corpus sizes the band width is the knob that bounds random
     8-bit-band collisions (production simhash dedup runs 4x16-bit
@@ -704,50 +716,32 @@ def multimodal_phash_neardup(spark, sf_dir):
     return _phash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
-def _build_phash_pairs(spark, sf_dir):
-    dec = multimodal_real_image_decode(spark, sf_dir).select(
-        "doc_id", "pixel_hex"
-    )
-    members = dec.select(F.col("pixel_hex").alias("gid"), "doc_id")
-    # Spark-side hash uses HIGHER-ORDER array functions (transform /
-    # aggregate loops) instead of an unrolled 1024-call expression:
-    # Catalyst's CollapseProject would merge staged projections back
-    # into one giant expression that blows the whole-stage-codegen
-    # method-size limit and drops the pipeline to interpreted
-    # execution (observed as janino compile failures in the x30
-    # amplified run of the 16-bit predecessor). The loop form compiles
-    # compactly; the arithmetic is identical and the DuckDB oracle
-    # keeps the flat relational form.
+def _phash_fp(members):
+    """(gid, h) — the packed 64-bit aHash per DISTINCT pixel content,
+    checkpointed (the banding gate reads it three times).
+
+    The hash uses HIGHER-ORDER array functions (transform / aggregate
+    loops) instead of an unrolled 1024-call expression: Catalyst's
+    CollapseProject would merge staged projections back into one
+    giant expression that blows the whole-stage-codegen method-size
+    limit and drops the pipeline to interpreted execution. The full
+    hash is PACKED INTO ONE BIGINT (bit 64 rides the sign bit — XOR
+    and popcount are two's-complement-safe), so band sigs are byte
+    extractions and the exact verify is one codegen-friendly
+    ``bit_count(ha ^ hb)``. The explicit repartition after the
+    distinct is load-bearing, exactly as in `_audio_envelope_fp`: AQE
+    coalesces the small distinct output to ONE partition, serializing
+    the heavy interpreted 64-term aggregate projection onto one core.
+    The DuckDB oracle keeps the flat relational form."""
     px = (
         f"transform(sequence(1, {_PHASH_BITS}), j -> "
         f"16 * (instr('{_HEXDIGITS}', substring(gid, 2*j - 1, 1)) - 1)"
         f" + (instr('{_HEXDIGITS}', substring(gid, 2*j, 1)) - 1))"
     )
-    # the full 64-bit hash is PACKED INTO ONE BIGINT (bit 64 rides the
-    # sign bit — XOR and popcount are two's-complement-safe), band
-    # sigs are byte extractions from it, and the exact verify is a
-    # single codegen-friendly bit_count(ha ^ hb) evaluated INSIDE the
-    # banding join with the <= K filter BEFORE any pair dedup — the
-    # simhash family's filter-before-pair-shuffle discipline. (The
-    # first cut carried the hash as an 8-byte ARRAY and verified with
-    # zip_with/aggregate lambdas after an array-carrying
-    # dropDuplicates: ~5 s of interpreted higher-order evaluation over
-    # the ~450k random byte-collision candidates at sf0.1, vs
-    # milliseconds for the packed popcount.)
-    # checkpointed: BOTH sides of the band self-join consume fp, and
-    # without truncation each side re-runs the distinct + 64-pixel
-    # hash lineage (measured 6.5 s vs 0.7 s for the join at sf0.1).
-    # The explicit repartition after the distinct is load-bearing,
-    # exactly as in `_audio_envelope_fp`: AQE coalesces the small
-    # distinct output to ONE partition, serializing the heavy
-    # interpreted 64-term aggregate projection onto one core
-    # (~1-1.5 s of the 2.2 s sf0.1 line; a 100x corpus would turn the
-    # single core into the whole job). The rows are one hex string
-    # each, so the extra round-robin exchange is noise.
-    fp = checkpointed(
+    return checkpointed(
         members.select("gid")
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism)
+        .repartition(members.sparkSession.sparkContext.defaultParallelism)
         .selectExpr("gid", f"{px} AS p")
         .selectExpr("gid", "p", "aggregate(p, 0, (a, x) -> a + x) AS tot")
         .selectExpr(
@@ -758,49 +752,38 @@ def _build_phash_pairs(spark, sf_dir):
             " ELSE cast(0 AS bigint) END)) AS h",
         )
     )
+
+
+def _phash_gid_pairs(fp, max_hamming):
+    """Verified ``(gid_a, gid_b, hamming)`` content pairs from `_phash_fp`
+    rows: byte-band buckets through the gated `bucket_pairs`, with the
+    exact popcount filter pushed into both of its branches before the
+    groupBy(min) that dedups a pair's several band collisions."""
     bands = fp.selectExpr(
         "gid", "h", f"explode(sequence(0, {_PHASH_BANDS - 1})) AS band"
-    ).selectExpr("gid", "h", "band", "shiftright(h, 8 * band) & 255 AS sig")
-    a, b = bands.alias("a"), bands.alias("b")
-    cross = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.gid") < F.col("b.gid")),
-        )
+    ).selectExpr(
+        "band", "shiftright(h, 8 * band) & 255 AS sig", "struct(gid, h) AS m"
+    )
+    return (
+        bucket_pairs(bands, ("band", "sig"), "m", _BUCKET_CAP)
         .select(
-            F.col("a.gid").alias("gid_a"),
-            F.col("b.gid").alias("gid_b"),
-            F.expr("cast(bit_count(a.h ^ b.h) AS bigint)").alias("hamming"),
+            F.col("m_a.gid").alias("gid_a"),
+            F.col("m_b.gid").alias("gid_b"),
+            F.expr("cast(bit_count(m_a.h ^ m_b.h) AS bigint)").alias("hamming"),
         )
-        .where(F.col("hamming") <= _PHASH_HAM_K)
+        .where(F.col("hamming") <= max_hamming)
         .groupBy("gid_a", "gid_b")
         .agg(F.min("hamming").alias("hamming"))
     )
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
-    cross_docs = (
-        cross.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "hamming",
-        )
+
+
+def _build_phash_pairs(spark, sf_dir):
+    dec = multimodal_real_image_decode(spark, sf_dir).select(
+        "doc_id", "pixel_hex"
     )
-    intra_docs = (
-        ma.join(mb, F.col("gid_a") == F.col("gid_b"))
-        .where(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            F.lit(0).cast("long").alias("hamming"),
-        )
-    )
-    return cross_docs.unionByName(intra_docs).select(
-        "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
-    )
+    members = dec.select(F.col("pixel_hex").alias("gid"), "doc_id")
+    gpairs = _phash_gid_pairs(_phash_fp(members), _PHASH_HAM_K)
+    return expand_group_pairs(members, gpairs, hamming=0)
 
 
 def phash_near_dup_pairs(
@@ -818,13 +801,13 @@ def phash_near_dup_pairs(
 
     Same exact-recall architecture as the registered query: hashes
     are computed once per DISTINCT pixel content (k byte-identical
-    copies cost the self-join nothing), bit j of the packed-BIGINT
+    copies cost the banding nothing), bit j of the packed-BIGINT
     aHash is pixel j vs the image mean (division-free integers), and
     candidacy is byte-banding — by pigeonhole, hamming <= 7 over 8
     bands of 8 bits means at least one band matches exactly, so the
-    band bucket self-join finds EVERY qualifying pair and the
-    popcount verify (a codegen `bit_count` INSIDE the join, before
-    any pair dedup) is exact, not probabilistic. ``max_hamming``
+    banding finds EVERY qualifying pair and the popcount verify (a
+    codegen `bit_count` inside the banding expansion, before any pair
+    dedup) is exact, not probabilistic. ``max_hamming``
     must stay <= 7 — beyond that the pigeonhole guarantee breaks.
     Doc pairs are reconstructed by a members expansion (identical
     images pair at hamming 0); the result is an executor-local
@@ -840,90 +823,14 @@ def phash_near_dup_pairs(
     members = images.select(
         F.col(pixels_col).alias("gid"), F.col(id_col).alias("doc_id")
     ).persist()
-    spark = images.sparkSession
-    px = (
-        f"transform(sequence(1, {_PHASH_BITS}), j -> "
-        f"16 * (instr('{_HEXDIGITS}', substring(gid, 2*j - 1, 1)) - 1)"
-        f" + (instr('{_HEXDIGITS}', substring(gid, 2*j, 1)) - 1))"
-    )
-    # same three load-bearing moves as the registered pipeline
-    # (_build_phash_pairs): checkpoint the fingerprints (both sides of
-    # the self-join consume them), repartition after the distinct (AQE
-    # would coalesce the heavy interpreted hash projection onto one
-    # core), loop-form higher-order hash (unrolled form blows the
-    # codegen method-size limit)
-    fp = checkpointed(
-        members.select("gid")
-        .distinct()
-        .repartition(spark.sparkContext.defaultParallelism)
-        .selectExpr("gid", f"{px} AS p")
-        .selectExpr("gid", "p", "aggregate(p, 0, (a, x) -> a + x) AS tot")
-        .selectExpr(
-            "gid",
-            f"aggregate(sequence(1, {_PHASH_BITS}), cast(0 AS bigint),"
-            f" (a, j) -> a + (CASE WHEN {_PHASH_BITS} * element_at(p, j)"
-            " >= tot THEN shiftleft(cast(1 AS bigint), j - 1)"
-            " ELSE cast(0 AS bigint) END)) AS h",
-        )
-    )
+    fp = _phash_fp(members)
     try:
-        bands = fp.selectExpr(
-            "gid", "h", f"explode(sequence(0, {_PHASH_BANDS - 1})) AS band"
-        ).selectExpr(
-            "gid", "h", "band", "shiftright(h, 8 * band) & 255 AS sig"
-        )
-        a, b = bands.alias("a"), bands.alias("b")
-        cross = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.sig") == F.col("b.sig"))
-                & (F.col("a.gid") < F.col("b.gid")),
-            )
-            .select(
-                F.col("a.gid").alias("gid_a"),
-                F.col("b.gid").alias("gid_b"),
-                F.expr("cast(bit_count(a.h ^ b.h) AS bigint)").alias(
-                    "hamming"
-                ),
-            )
-            .where(F.col("hamming") <= max_hamming)
-            .groupBy("gid_a", "gid_b")
-            .agg(F.min("hamming").alias("hamming"))
-        )
-        ma = members.select(
-            F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da")
-        )
-        mb = members.select(
-            F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db")
-        )
-        cross_docs = (
-            cross.join(ma, "gid_a")
-            .join(mb, "gid_b")
-            .select(
-                F.least("_da", "_db").alias("doc_a"),
-                F.greatest("_da", "_db").alias("doc_b"),
-                "hamming",
-            )
-        )
-        intra_docs = (
-            ma.join(mb, F.col("gid_a") == F.col("gid_b"))
-            .where(F.col("_da") < F.col("_db"))
-            .select(
-                F.col("_da").alias("doc_a"),
-                F.col("_db").alias("doc_b"),
-                F.lit(0).cast("long").alias("hamming"),
-            )
-        )
-        return (
-            cross_docs.unionByName(intra_docs)
-            .select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-            .localCheckpoint(eager=True)
+        gpairs = _phash_gid_pairs(fp, max_hamming)
+        return expand_group_pairs(members, gpairs, hamming=0).localCheckpoint(
+            eager=True
         )
     finally:
         members.unpersist()
-        from spark_data_test_spark.utils.spark_utils import release_frame
-
         release_frame(fp)
 
 
@@ -1215,8 +1122,7 @@ def audio_decoded(spark, sf_dir):
     decoded inside ``mapInPandas`` by the chunk-walking `decode_wav`.
     Memoized per (application, sf_dir): the features report and the
     fingerprint near-dup consume the identical frame."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_wav/{digest}"
+    root = _media_root("wav", sf_dir)
     _stage_wav_files(spark, sf_dir, root)
 
     def extract(batches):
@@ -1351,8 +1257,7 @@ def multimodal_audio_features(spark, sf_dir):
 
 def _audio_envelope_fp(members):
     """(gid, ea) — the 8-frame L1-energy envelope per DISTINCT clip
-    content, checkpointed (both sides of the band self-join consume
-    it). Frame energies decode DIRECTLY from the hex in one pass —
+    content, checkpointed (the banding gate reads it three times). Frame energies decode DIRECTLY from the hex in one pass —
     |int16| as least(u, 65536 - u), no intermediate sample array: a
     staged `s` column gets CollapseProject-inlined into every
     element_at(s, j) site of the nested aggregate, re-evaluating the
@@ -1360,7 +1265,7 @@ def _audio_envelope_fp(members):
     sf0.1 for the staged form vs sub-second for this one — the
     interpreted-higher-order cousin of the phash codegen lesson).
     The ``distinct()`` is the exact-dup collapse: k byte-identical
-    clips cost the banding self-join nothing extra (pinned by
+    clips cost the banding nothing extra (pinned by
     tests/test_skew_banding.py).
 
     The explicit ``repartition`` after the distinct is load-bearing:
@@ -1433,11 +1338,11 @@ def multimodal_audio_fingerprint(spark, sf_dir):
 
     Scale shape, mirroring the phash family discipline: envelopes are
     computed once per DISTINCT clip content (gid = pcm hex) so
-    byte-identical copies cost the band join nothing; the envelope
-    frame is CHECKPOINTED because both sides of the self-join consume
-    it (the round-7 fp lesson — without truncation each side re-runs
-    the decode+envelope lineage); the frames_diff verify runs INSIDE
-    the banding join with the <= 2 filter BEFORE the pair dedup. The
+    byte-identical copies cost the banding nothing; the envelope
+    frame is CHECKPOINTED because the `bucket_pairs` gate reads it
+    three times (without truncation each read re-runs the
+    decode+envelope lineage); the frames_diff verify is pushed into
+    the banding expansion with the <= 2 filter BEFORE the pair dedup. The
     verify compares two 8-int arrays per candidate; unlike the phash
     popcount it is not packable into one BIGINT (8 frames x ~18-bit
     energies = 144 bits), but band signatures here are exact ~18-bit
@@ -1452,57 +1357,25 @@ def multimodal_audio_fingerprint(spark, sf_dir):
     fp = _audio_envelope_fp(members)
     bands = fp.selectExpr(
         "gid", "ea", f"explode(sequence(1, {_AUD_FRAMES})) AS k"
-    ).selectExpr("gid", "ea", "k", "element_at(ea, k) AS sig")
-    a, b = bands.alias("a"), bands.alias("b")
+    ).selectExpr("k", "element_at(ea, k) AS sig", "struct(gid, ea) AS m")
     diff = (
         f"aggregate(sequence(1, {_AUD_FRAMES}), cast(0 AS bigint), (acc, i) ->"
-        " acc + IF(element_at(a.ea, i) != element_at(b.ea, i),"
+        " acc + IF(element_at(m_a.ea, i) != element_at(m_b.ea, i),"
         " cast(1 AS bigint), cast(0 AS bigint)))"
     )
-    cross = (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.gid") < F.col("b.gid")),
-        )
+    gpairs = (
+        bucket_pairs(bands, ("k", "sig"), "m", _BUCKET_CAP)
         .select(
-            F.col("a.gid").alias("gid_a"),
-            F.col("b.gid").alias("gid_b"),
+            F.col("m_a.gid").alias("gid_a"),
+            F.col("m_b.gid").alias("gid_b"),
             F.expr(diff).alias("frames_diff"),
         )
         .where(F.col("frames_diff") <= 2)
         .groupBy("gid_a", "gid_b")
         .agg(F.min("frames_diff").alias("frames_diff"))
     )
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
-    cross_docs = (
-        cross.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "frames_diff",
-        )
-    )
-    intra_docs = (
-        ma.join(mb, F.col("gid_a") == F.col("gid_b"))
-        .where(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            F.lit(0).cast("long").alias("frames_diff"),
-        )
-    )
-    return (
-        cross_docs.unionByName(intra_docs)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("frames_diff").cast("long").alias("frames_diff"),
-        )
-        .orderBy("doc_a", "doc_b")
+    return expand_group_pairs(members, gpairs, frames_diff=0).orderBy(
+        "doc_a", "doc_b"
     )
 
 
@@ -1661,8 +1534,7 @@ def video_decoded(spark, sf_dir):
     corpus read back through the manifest-driven scan and decoded
     inside ``mapInPandas`` by the marker-walking `decode_y4m`;
     memoized per (application, sf_dir)."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_y4m/{digest}"
+    root = _media_root("y4m", sf_dir)
     _stage_y4m_files(spark, sf_dir, root)
 
     def extract(batches):

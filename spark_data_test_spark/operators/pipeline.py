@@ -204,8 +204,8 @@ def corpus_dedup_waterfall(spark, sf_dir):
     distinct-text group table (`_cached_members`, min-doc_id
     representative per md5(text) gid) and the stage-3 candidates ARE
     the memoized gid-level band pairs (`_cached_gid_pairs`) verified
-    with the near-jaccard expression tree. Exact-before-near is the
-    production ordering BECAUSE it makes the band self-join run over
+    by `dedup_near_jaccard`'s `_jaccard_verify`. Exact-before-near is
+    the production ordering BECAUSE it makes the banding run over
     distinct texts only -- the k^2 bucket shrinkage, here obtained
     structurally. The stage-0/1 corpus counts fold to ONE aggregate
     over ``documents`` (the plant populations are closed-form row
@@ -219,42 +219,13 @@ def corpus_dedup_waterfall(spark, sf_dir):
         _cached_gid_pairs,
         _cached_members,
         _cached_shingles,
+        _jaccard_verify,
     )
 
     members = _cached_members(spark, sf_dir)
-    gpairs = _cached_gid_pairs(spark, sf_dir)
-    sh = _cached_shingles(spark, sf_dir)
-    # near-dup verify: exact Jaccard on the candidate group slice,
-    # identical expression tree to dedup_near_jaccard's (the double
-    # compare agrees across engines)
-    cand_gids = (
-        gpairs.select(F.col("gid_a").alias("gid"))
-        .union(gpairs.select(F.col("gid_b").alias("gid")))
-        .distinct()
-    )
-    sh_cand = sh.join(cand_gids, "gid")
-    sizes = sh_cand.groupBy("gid").agg(F.count("*").alias("n"))
-    a, b = sh_cand.alias("a"), sh_cand.alias("b")
-    inter = (
-        gpairs.join(a, F.col("a.gid") == F.col("gid_a"))
-        .join(
-            b,
-            (F.col("b.gid") == F.col("gid_b")) & (F.col("b.sh") == F.col("a.sh")),
-        )
-        .groupBy("gid_a", "gid_b")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = (
-        F.lit(1000000.0)
-        * F.col("i")
-        / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    )
-    verified = (
-        inter.join(sizes.alias("sa"), F.col("sa.gid") == F.col("gid_a"))
-        .join(sizes.alias("sb"), F.col("sb.gid") == F.col("gid_b"))
-        .where(jac >= 500000)
-        .select("gid_a", "gid_b")
-    )
+    verified = _jaccard_verify(
+        _cached_shingles(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
+    ).select("gid_a", "gid_b")
     # greedy min-id survivor rule at group level: each group's
     # survivor is its min doc_id; a verified group pair removes the
     # larger survivor

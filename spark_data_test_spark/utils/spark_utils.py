@@ -159,74 +159,130 @@ class FrameCache:
 
 
 def bucket_pairs(rows, key_cols, member_col, cap, out_a="m_a", out_b="m_b"):
-    """Unordered member pairs per bucket — the size-GATED in-task
-    expansion shared by the LSH banding and co-occurrence sites.
+    """Unordered member pairs per bucket — the one bucket-to-pair
+    expansion behind every banding, inverted-index and co-occurrence
+    site.
 
-    Input: one row per (bucket key, member); rows MUST be unique per
-    (key, member) — both branches below assume it (the aggregate
-    dedups via ``collect_set``, the join does not), and every engine
-    call site feeds a distinct band-index / posting / basket frame.
-    Output: one row per (bucket, unordered member pair) with
-    ``out_a < out_b`` by the member column's natural ordering; a pair
-    sharing several buckets appears once per bucket, so callers dedup
-    (``distinct``) or aggregate (pair support counts) downstream,
-    exactly as they did over the old bucket self-join's output.
+    Input: one row per (bucket key, member). Output: one row per
+    (bucket, unordered member pair) with ``out_a < out_b`` by the
+    member column's natural ordering (a struct member orders by its
+    first field, so put the unique id first); a pair sharing several
+    buckets appears once per bucket, so callers dedup (``distinct``)
+    or aggregate (pair support counts, ``min`` of a verify score)
+    downstream. NULL members never pair; a NULL bucket key forms a
+    bucket (groupBy semantics) on both branches below.
 
-    The gate (round-19; VERDICT r18 "What's wrong" #3): buckets at or
-    under ``cap`` members expand IN-TASK from one sorted
+    Buckets at or under ``cap`` members expand IN-TASK from one sorted
     map-side-combinable ``collect_set`` aggregate (one exchange of the
-    bucket rows, no join — the round-18 shape), via a TWO-LEVEL explode
-    (posexplode, then the i-tail slice) so per-row transient memory is
-    O(bucket), never O(bucket^2). Buckets ABOVE the cap — degenerate
-    keys at corpus scale: an empty-text band signature, a boilerplate
-    mega-bucket — would otherwise materialize a corpus-proportional
-    array in a single aggregation buffer (the executor-OOM / 2 GB
-    BufferHolder hazard the old streaming self-join never had), so they
-    fall back to exactly that self-join: identical pair set, O(1)
-    memory per comparison, pair VOLUME still quadratic-per-bucket
-    because that is the bucket semantics either way. The oversized-key
-    list is found with one count aggregate and is broadcast — it is
-    bounded by total-rows / cap, the genuinely small head.
+    bucket rows, no join), via a two-level explode (posexplode, then
+    the i-tail slice) so per-row transient memory is O(bucket), never
+    O(bucket^2). Buckets ABOVE ``cap`` — degenerate keys such as an
+    empty-text band signature or a boilerplate mega-bucket — would
+    otherwise materialize a corpus-proportional array in a single
+    aggregation buffer, so they fall back to the streaming bucket
+    self-join: identical pair set, O(1) memory per comparison. The
+    oversized-key list comes from one count aggregate and is broadcast
+    (it holds at most total-rows / cap keys); both the gate and the
+    fallback match keys null-safely, so a NULL-keyed mega-bucket takes
+    the fallback like any other. Gated, ``rows`` must be unique per
+    (key, member) — the self-join does not dedup — and cheap to
+    rescan (persisted, checkpointed, or a narrow projection of one):
+    it is read three times (size pass, cold aggregate, hot join).
 
-    The caller must pass a CHEAP-TO-RESCAN ``rows`` frame (persisted,
-    checkpointed, or a narrow projection of one): it is consumed three
-    times (size pass, cold aggregate, hot join). NULL members never
-    pair (as in the self-join); a NULL bucket KEY forms a bucket
-    (groupBy semantics) but can never match the broadcast hot list, so
-    it always expands on the cold path — no engine site produces NULL
-    bucket keys (band sigs, shingles and grams are non-null by
-    construction; `market_basket` pre-filters), so pre-filter NULL
-    keys if a new caller can see them at degenerate sizes."""
+    ``cap=None`` skips the size pass and the fallback: every bucket
+    expands in-task. Only for sites whose buckets are bounded by
+    construction (a stop-df cap, a group-count limit, a basket-size
+    data contract); duplicate rows are then harmless."""
     keys = list(key_cols)
+
+    def in_task(bucket_rows, by):
+        return (
+            bucket_rows.groupBy(*by)
+            .agg(F.sort_array(F.collect_set(member_col)).alias("_ms"))
+            .where(F.size("_ms") >= 2)
+            .select(F.col("_ms"), F.posexplode("_ms").alias("_pos", out_a))
+            .select(
+                out_a,
+                F.explode(F.expr("slice(_ms, _pos + 2, size(_ms))")).alias(
+                    out_b
+                ),
+            )
+        )
+
+    if cap is None:
+        return in_task(rows, keys)
     cap = int(cap)
     if cap < 2:
-        raise ValueError("bucket_pairs: cap must be >= 2")
-    sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-    hot = sizes.where(F.col("_n") > cap).select(*keys)
-    cold_pairs = (
-        rows.join(F.broadcast(hot), keys, "left_anti")
-        .groupBy(*keys)
-        .agg(F.sort_array(F.collect_set(member_col)).alias("_ms"))
-        .where(F.size("_ms") >= 2)
-        .select(F.col("_ms"), F.posexplode("_ms").alias("_pos", out_a))
-        .select(
-            out_a,
-            F.explode(F.expr("slice(_ms, _pos + 2, size(_ms))")).alias(
-                out_b
-            ),
-        )
+        raise ValueError("bucket_pairs: cap must be >= 2 (or None)")
+    # One struct bucket key: a struct is never NULL, so plain equi-joins
+    # on it match NULL key parts null-safely, and Catalyst still sees
+    # the hot list's keys as distinct (a `<=>` join hides that and
+    # inflates the hot rows' size estimate past the broadcast limit).
+    keyed = rows.select(F.struct(*keys).alias("_bk"), member_col)
+    hot = (
+        keyed.groupBy("_bk")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > cap)
+        .select("_bk")
     )
-    hot_rows = rows.join(F.broadcast(hot), keys)
+    hot_rows = keyed.join(F.broadcast(hot), "_bk")
     a, b = hot_rows.alias("a"), hot_rows.alias("b")
     hot_pairs = (
-        a.join(b, keys)
+        a.join(b, "_bk")
         .where(F.col(f"a.{member_col}") < F.col(f"b.{member_col}"))
         .select(
             F.col(f"a.{member_col}").alias(out_a),
             F.col(f"b.{member_col}").alias(out_b),
         )
     )
+    cold_pairs = in_task(keyed.join(F.broadcast(hot), "_bk", "left_anti"), ["_bk"])
     return cold_pairs.unionByName(hot_pairs)
+
+
+def expand_group_pairs(members, gid_pairs, **intra):
+    """Group pairs -> doc pairs ``(doc_a, doc_b, *carried)`` with
+    ``doc_a < doc_b`` — the one group-to-doc expansion behind every
+    exact-dedup-before-near-dup pipeline.
+
+    ``members`` holds ``(gid, doc_id)`` rows; ``gid_pairs`` holds
+    candidate ``(gid_a, gid_b, ...)`` rows of two DIFFERENT groups.
+    Every cross pair of a candidate group pair is emitted, carrying
+    every non-key column of ``gid_pairs`` (a hamming distance, a
+    Jaccard score); every pair inside one group is emitted too,
+    because identical contents pair with themselves, and gets the
+    constants named in ``intra`` (e.g. ``hamming=0``), cast to the
+    carried column's type. The two halves are disjoint (same versus
+    different gid), so no distinct is needed."""
+    carried = [c for c in gid_pairs.columns if c not in ("gid_a", "gid_b")]
+    if sorted(intra) != sorted(carried):
+        raise ValueError(
+            f"expand_group_pairs: intra constants {sorted(intra)} must "
+            f"name exactly the carried columns {sorted(carried)}"
+        )
+    ma = members.select(F.col("gid").alias("gid_a"), F.col("doc_id").alias("_da"))
+    mb = members.select(F.col("gid").alias("gid_b"), F.col("doc_id").alias("_db"))
+    cross = (
+        gid_pairs.join(ma, "gid_a")
+        .join(mb, "gid_b")
+        .select(
+            F.least("_da", "_db").alias("doc_a"),
+            F.greatest("_da", "_db").alias("doc_b"),
+            *carried,
+        )
+    )
+    m1 = members.select("gid", F.col("doc_id").alias("_da"))
+    m2 = members.select("gid", F.col("doc_id").alias("_db"))
+    dtypes = dict(gid_pairs.dtypes)
+    within = (
+        m1.join(m2, "gid")
+        .where(F.col("_da") < F.col("_db"))
+        .select(
+            F.col("_da").alias("doc_a"),
+            F.col("_db").alias("doc_b"),
+            *[F.lit(intra[c]).cast(dtypes[c]).alias(c) for c in carried],
+        )
+    )
+    return cross.unionByName(within)
 
 
 def source_fingerprint(path):

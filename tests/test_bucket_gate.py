@@ -1,6 +1,6 @@
 """Round-19 tests for the size-GATED in-task pair expansion
-(`spark_utils.bucket_pairs` and the simhash variant
-`dedup._sp_bucket_pairs`) — VERDICT r18 item 2: LSH band buckets had no
+(`spark_utils.bucket_pairs` and its simhash composition
+`dedup._sp_gid_pairs`) — VERDICT r18 item 2: LSH band buckets had no
 size bound, so a degenerate signature could materialize a
 corpus-proportional array in one aggregation buffer. The gate routes
 oversized buckets through the old streaming self-join; these tests pin
@@ -24,8 +24,9 @@ def _brute_pairs(spark, rows):
     for k, m in rows:
         buckets.setdefault(k, []).append(m)
     # a NULL bucket key still forms a bucket (groupBy keeps the NULL
-    # group; the helper documents that it always takes the cold path);
-    # NULL members never pair (collect_set drops them, < is never true)
+    # group; the gate matches it null-safely, so an over-cap NULL
+    # bucket takes the fallback); NULL members never pair (collect_set
+    # drops them, < is never true)
     for ms in buckets.values():
         ms = [m for m in ms if m is not None]
         for i in range(len(ms)):
@@ -35,26 +36,68 @@ def _brute_pairs(spark, rows):
     return sorted(out)
 
 
-@pytest.mark.parametrize("cap", [2, 3, 8])
+@pytest.mark.parametrize("cap", [2, 3, 8, None])
 def test_bucket_pairs_matches_bruteforce_across_the_gate(spark, cap):
     """Mixed bucket sizes straddling the cap: singleton (no pairs),
     pair, exactly-cap, cap+1 and 3x-cap buckets, plus a NULL member
-    (never pairs) — the cold expansion and the hot fallback must
-    together emit exactly the self-join's rows."""
+    (never pairs) and a NULL bucket key under and over the cap — the
+    cold expansion and the hot fallback must together emit exactly
+    the self-join's rows. ``cap=None`` expands every bucket in-task."""
+    n = 8 if cap is None else cap
     rows = []
     rows += [("single", 10)]
     rows += [("dup", 1), ("dup", 2)]
-    rows += [("atcap", m) for m in range(cap)]
-    rows += [("overcap", m) for m in range(cap + 1)]
-    rows += [("big", m) for m in range(3 * cap)]
+    rows += [("atcap", m) for m in range(n)]
+    rows += [("overcap", m) for m in range(n + 1)]
+    rows += [("big", m) for m in range(3 * n)]
     rows += [("withnull", 5), ("withnull", None), ("withnull", 7)]
-    rows += [(None, 100), (None, 101)]  # NULL bucket key: cold path
-    df = spark.createDataFrame(rows, "k string, m long")
-    got = sorted(
-        tuple(r)
-        for r in bucket_pairs(df, ("k",), "m", cap).select("m_a", "m_b").collect()
-    )
-    assert got == _brute_pairs(spark, rows)
+    cold_null = rows + [(None, 100), (None, 101)]  # NULL bucket key: cold path
+    # NULL bucket key over the cap: matched null-safely, so it streams
+    # through the fallback instead of escaping the gate
+    hot_null = rows + [(None, 100 + m) for m in range(n + 1)]
+    for case in (cold_null, hot_null):
+        df = spark.createDataFrame(case, "k string, m long")
+        got = sorted(
+            tuple(r)
+            for r in bucket_pairs(df, ("k",), "m", cap)
+            .select("m_a", "m_b")
+            .collect()
+        )
+        assert got == _brute_pairs(spark, case)
+
+
+def _in_task_agg_rows(spark):
+    """Rows out of the collect_set (ObjectHashAggregate) nodes of the
+    last SQL execution, read from Spark's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    eid = runs.apply(runs.size() - 1).executionId()
+    values = store.executionMetrics(eid)
+    nodes = store.planGraph(eid).allNodes()
+    total = 0
+    for i in range(nodes.size()):
+        if nodes.apply(i).name() != "ObjectHashAggregate":
+            continue
+        metrics = nodes.apply(i).metrics()
+        for j in range(metrics.size()):
+            if metrics.apply(j).name() == "number of output rows":
+                v = values.get(metrics.apply(j).accumulatorId())
+                total += int(v.get().replace(",", "")) if v.isDefined() else 0
+    return total
+
+
+def test_bucket_pairs_gates_an_over_cap_null_key(spark):
+    """ADVICE r19: an over-cap bucket whose key is NULL must take the
+    streaming fallback, not the in-task aggregate — the gate matches
+    keys null-safely. The control (an under-cap bucket) shows the
+    metric does count in-task rows."""
+    hot = spark.createDataFrame([(None, m) for m in range(5)], "k string, m long")
+    assert len(bucket_pairs(hot, ("k",), "m", 2).collect()) == 10
+    assert _in_task_agg_rows(spark) == 0
+    cold = spark.createDataFrame([(None, 1), (None, 2)], "k string, m long")
+    assert len(bucket_pairs(cold, ("k",), "m", 2).collect()) == 1
+    assert _in_task_agg_rows(spark) > 0
 
 
 def test_bucket_pairs_degenerate_bucket_at_production_cap(spark):
@@ -91,13 +134,14 @@ def test_bucket_pairs_rejects_tiny_cap(spark):
 
 @pytest.mark.parametrize("cap", [2, 16])
 def test_sp_bucket_pairs_matches_self_join(spark, cap):
-    """The simhash struct variant (verify inside the expansion) against
-    the old banding self-join formulation, on synthetic packed
-    fingerprints whose band buckets straddle the cap."""
+    """The simhash composition (`bucket_pairs` over a struct member,
+    hamming verify on its output) against the old banding self-join
+    formulation, on synthetic packed fingerprints whose band buckets
+    straddle the cap."""
     from spark_data_test_spark.operators.dedup import (
         _SP_HAM_K,
         _sp_banded,
-        _sp_bucket_pairs,
+        _sp_gid_pairs,
     )
 
     rows = []
@@ -110,13 +154,7 @@ def test_sp_bucket_pairs_matches_self_join(spark, cap):
     fp = spark.createDataFrame(rows, "gid string, lo long, hi long")
     bands = _sp_banded(fp).persist()
     try:
-        got = sorted(
-            tuple(r)
-            for r in _sp_bucket_pairs(bands, cap=cap)
-            .groupBy("gid_a", "gid_b")
-            .agg(F.min("hamming").alias("hamming"))
-            .collect()
-        )
+        got = sorted(tuple(r) for r in _sp_gid_pairs(bands, cap=cap).collect())
         a, b = bands.alias("a"), bands.alias("b")
         ref = sorted(
             tuple(r)

@@ -691,12 +691,13 @@ def test_band_pairs_expansion_is_in_task(spark, sf_dir):
 def test_simhash_pair_banding_is_in_task(spark, sf_dir):
     """Round-19 pin (guide §2.1 + §5, VERDICT r18 item 2): the simhash
     banding candidates expand in-task from per-bucket member arrays
-    with the exact-hamming verify INSIDE the expansion; buckets over
-    `_BUCKET_CAP` stream through the gated fallback self-join (verify
-    still in-join). At most ONE join line may mention the band/sig
-    keys — the gated fallback — and the broadcast LeftAnti gate plus
-    the collect_list ObjectHashAggregate must be present. The other
-    joins are the membership expansion joins, all keyed on gid."""
+    (`bucket_pairs`) with the exact-hamming verify pushed right after
+    the expansion; buckets over `_BUCKET_CAP` stream through the gated
+    fallback self-join (verify in its join condition). At most ONE
+    join line may mention the band/sig keys — the gated fallback — and
+    the broadcast LeftAnti gate plus the collect_set
+    ObjectHashAggregate must be present. The other joins are the
+    membership expansion joins, all keyed on gid."""
     from spark_data_test_spark.operators.dedup import dedup_simhash_pairs
     from spark_data_test_spark.plans.audit import simple_plan
 
@@ -710,6 +711,14 @@ def test_simhash_pair_banding_is_in_task(spark, sf_dir):
     assert len(band_joins) <= 1, band_joins
     assert "LeftAnti" in plan, plan
     assert "ObjectHashAggregate" in plan, plan
+    # the hamming predicate filters right after the in-task expansion:
+    # no Exchange between the i-tail Generate and the verify Filter
+    lines = plan.splitlines()
+    gen = next(i for i, l in enumerate(lines) if "Generate explode(slice(" in l)
+    verify = max(
+        i for i in range(gen) if "Filter" in lines[i] and "bit_count" in lines[i]
+    )
+    assert not any("Exchange" in l for l in lines[verify:gen]), lines[verify : gen + 1]
 
 
 def test_gid_co_discovery_is_in_task(spark, sf_dir):
