@@ -1,12 +1,18 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness and per-query timing tool at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+    python bench.py [query ...]
+
+With no names it times HEADLINE and prints ONE JSON line:
   {"metric": "headline_total", "value": N, "unit": "sec",
    "queries": {...}, "sf": 0.1}
+With names it times just those queries under the same protocol and
+prints the same line with metric "adhoc_total". SPARK_GRAFT_AMPLIFY=N
+stages an N-times amplified copy of the tables and times at that scale.
 
 Each query is materialized with a noop-format write (full execution, no
-driver collect overhead). Session startup and a warmup action are
-excluded from timings.
+driver collect overhead). Session startup and a fixed warmup are
+excluded from timings; each line is the min of two passes, with every
+session memo cleared before each pass.
 """
 
 import json
@@ -128,6 +134,19 @@ HEADLINE = [
     "multimodal_image_resize",
 ]
 
+# JIT-warmed at the smallest sf before timing (after the comparison
+# pipeline), so per-query timings measure steady-state work, not
+# first-run codegen compilation of each plan family.
+WARMUP = (
+    "tpch_q1_pricing_summary",
+    "dedup_simhash",
+    "dedup_near_jaccard",
+    "dedup_embedding_cosine",
+    "similarity_cosine_topk",
+    "text_language_id",
+    "events_sessionization",
+)
+
 
 def _stage_amplified(spark, sf_dir, factor):
     """Stage a ``factor``x amplified copy of the tables under /tmp for
@@ -201,40 +220,6 @@ def _stage_amplified(spark, sf_dir, factor):
     return root
 
 
-def _clear_all_memo_caches():
-    """Release session memo caches (engine results, dedup
-    shingles/pairs). A failed clear would silently turn later
-    timings into cache hits, so failures are REPORTED, not
-    swallowed — the timing harness depends on this running.
-    Module-level so ad-hoc timing scripts (scripts/time_queries.py,
-    the amplified studies) share the exact same clear set."""
-    clearers = [
-        ("engine", "spark_data_test_spark.operators.comparison_queries",
-         "clear_engine_cache"),
-        ("dedup", "spark_data_test_spark.operators.dedup",
-         "clear_dedup_cache"),
-        ("similarity", "spark_data_test_spark.operators.similarity",
-         "clear_similarity_cache"),
-        ("graph", "spark_data_test_spark.operators.graph",
-         "clear_graph_cache"),
-        ("sketches", "spark_data_test_spark.operators.sketches",
-         "clear_sketch_cache"),
-        ("ml", "spark_data_test_spark.operators.ml", "clear_ml_cache"),
-        ("multimodal", "spark_data_test_spark.operators.multimodal",
-         "clear_multimodal_cache"),
-    ]
-    import importlib
-
-    for label, mod_name, fn_name in clearers:
-        try:
-            getattr(importlib.import_module(mod_name), fn_name)()
-        except Exception as exc:
-            print(
-                f"bench cache clear failed ({label}): {exc!r}",
-                file=sys.stderr,
-            )
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -245,6 +230,15 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from spark_data_test_spark.utils.spark_utils import clear_all
+
+    # Names are checked before the session starts: a typo must not
+    # cost a JVM start and a warmup.
+    names = list(dict.fromkeys(sys.argv[1:]))
+    qmap = entry_mod.queries()
+    unknown = [n for n in names if n not in qmap]
+    if unknown:
+        sys.exit(f"bench: unknown queries: {' '.join(unknown)}")
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -270,33 +264,17 @@ def main():
         sf_dir = _stage_amplified(spark, sf_dir, amplify)
         sf = round(sf * amplify, 4)
 
-    qmap = entry_mod.queries()
-    clear_memo_caches = _clear_all_memo_caches
-
     # Warmup, excluded from timings: touch the biggest input (fs cache)
     # and run the comparison pipeline once at the smallest sf so the
     # join/window/hash codegen paths are JIT-compiled before measuring.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     try:
-        from spark_data_test_spark.operators import comparison_queries as _cq
-
         for _ in range(2):
-            _cq.clear_engine_cache()
+            clear_all()
             qmap["compare_overall_report"](spark, "/root/testdata/sf0.001").collect()
             qmap["compare_lineitem_overall"](spark, "/root/testdata/sf0.001").collect()
-        _cq.clear_engine_cache()
-        # JIT-warm the remaining headline families at the smallest sf so
-        # per-query timings measure steady-state work, not first-run
-        # codegen compilation of each plan family.
-        for warm_q in (
-            "tpch_q1_pricing_summary",
-            "dedup_simhash",
-            "dedup_near_jaccard",
-            "dedup_embedding_cosine",
-            "similarity_cosine_topk",
-            "text_language_id",
-            "events_sessionization",
-        ):
+        clear_all()
+        for warm_q in WARMUP:
             qmap[warm_q](spark, "/root/testdata/sf0.001").write.format(
                 "noop"
             ).mode("overwrite").save()
@@ -307,7 +285,7 @@ def main():
     finally:
         # drop warmup-scale cached frames so the timed run starts clean
         # even when warmup aborted partway
-        clear_memo_caches()
+        clear_all()
     # Stage the planted media corpora (PNG/WAV/Y4M files under /tmp)
     # BEFORE the timed passes, in its own try so a failed warmup cannot
     # skip it: the staging is a one-time landing job (at cluster scale
@@ -330,8 +308,8 @@ def main():
     # designed cross-query reuse.
     timings = {}
     for _pass in range(2):
-        clear_memo_caches()
-        for name in HEADLINE:
+        clear_all()
+        for name in names or HEADLINE:
             fn = qmap[name]
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -339,7 +317,7 @@ def main():
             timings[name] = min(timings.get(name, dt), dt)
 
     result = {
-        "metric": "headline_total",
+        "metric": "adhoc_total" if names else "headline_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,

@@ -46,6 +46,7 @@ def main():
 
     import bench
     from spark_data_test_spark.operators import dedup
+    from spark_data_test_spark.utils.spark_utils import clear_all
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -70,7 +71,7 @@ def main():
         stages = {}
         counts = {}
         for _pass in range(2):
-            bench._clear_all_memo_caches()
+            clear_all()
 
             t0 = time.time()
             sh = dedup._cached_shingles(spark, sf_dir)

@@ -50,6 +50,7 @@ def main():
     from pyspark.sql import functions as F
 
     import bench
+    from spark_data_test_spark.utils.spark_utils import clear_all
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -201,7 +202,7 @@ def main():
     for factor in factors:
         best, counts = None, None
         for _ in range(2):
-            bench._clear_all_memo_caches()
+            clear_all()
             stages, cts = run_factor(factor)
             if best is None:
                 best, counts = stages, cts

@@ -69,6 +69,7 @@ def main():
 
     import __spark_entry__ as entry_mod
     import bench
+    from spark_data_test_spark.utils.spark_utils import clear_all
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -213,7 +214,7 @@ def main():
             # before the lifecycle rows in bench.py) — warm them here
             # UNTIMED so the model stage measures the memo-hit
             # resolution the registered lines actually pay
-            bench._clear_all_memo_caches()
+            clear_all()
             _pq_codebook(spark, sf_dir).count()
             train_ivf_centroids(spark, sf_dir).count()
             for qname, stage_fn in (

@@ -96,12 +96,6 @@ def _release_engine_result(res):
 _ENGINE_CACHE = FrameCache(max_entries=4, release=_release_engine_result)
 
 
-def clear_engine_cache():
-    """Release every memoized engine result (blocks + dict entries).
-    The bench calls this between warmup and timed runs."""
-    _ENGINE_CACHE.clear()
-
-
 def _run_engine(spark, sf_dir):
     # applicationId is unique per context and never recycled, unlike
     # id() which CPython can reuse after a stopped session is collected

@@ -279,21 +279,6 @@ def _cached_band_pairs(spark, sf_dir):
     )
 
 
-def clear_dedup_cache():
-    """Release every memoized dedup frame (blocks + dict entries)."""
-    _MEMBERS_CACHE.clear()
-    _SHINGLE_CACHE.clear()
-    _GID_PAIRS_CACHE.clear()
-    _PAIRS_CACHE.clear()
-    _EMB_PAYLOAD_CACHE.clear()
-    _EMB_GROUPS_CACHE.clear()
-    _EMB_PAIRS_CACHE.clear()
-    _SIM_FP_CACHE.clear()
-    _SIM_MEMB_CACHE.clear()
-    _GID_CO_CACHE.clear()
-    _NGRAM_CACHE.clear()
-
-
 def _minhash(sh):
     """Per-doc MinHash signature via a distinct-shingle dictionary.
 

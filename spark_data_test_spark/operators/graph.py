@@ -44,11 +44,6 @@ from spark_data_test_spark.utils.spark_utils import FrameCache, bucket_pairs
 _EDGES_CACHE = FrameCache(max_entries=2)
 
 
-def clear_graph_cache():
-    """Release the memoized edge list (bench calls this between passes)."""
-    _EDGES_CACHE.clear()
-
-
 # Shared SQL CTE prefix: distinct bipartite pairs -> undirected edges.
 _EDGES_SQL = """
     pairs AS (

@@ -22,6 +22,7 @@ sigmoid and per-row integer-rounded residuals summed exactly.
 import pyspark.sql.functions as F
 
 from spark_data_test_spark.operators.relational import query, t
+from spark_data_test_spark.utils.spark_utils import register_memo
 
 
 @query(
@@ -350,13 +351,7 @@ def _logistic_feat(spark, sf_dir):
 # back (they are adjacent in the bench headline and driver window)
 # pays the _GD_ITERS aggregate passes once — same pattern as the
 # trained-centroid memo in similarity.py.
-_LOGISTIC_MEMO = {}
-
-
-def clear_ml_cache():
-    """Release the trained-weight memo (bench harness hook — cleared
-    between timing passes like every other session memo cache)."""
-    _LOGISTIC_MEMO.clear()
+_LOGISTIC_MEMO = register_memo({})
 
 
 def _fit_logistic(feat, sf_dir=None):

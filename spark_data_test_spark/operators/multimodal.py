@@ -53,14 +53,6 @@ from spark_data_test_spark.utils.spark_utils import (
 _DECODE_CACHE = FrameCache(max_entries=2)
 
 
-def clear_multimodal_cache():
-    """Release the decoded-frame memos (bench harness hook)."""
-    _DECODE_CACHE.clear()
-    _AUDIO_CACHE.clear()
-    _VIDEO_CACHE.clear()
-    _PHASH_PAIRS_CACHE.clear()
-
-
 def prestage_media(spark, sf_dir):
     """Stage the planted PNG/WAV/Y4M corpora for ``sf_dir`` if they are
     not already current (bench harness hook; VERDICT r18 item 1).

@@ -41,7 +41,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from spark_data_test_spark.operators.relational import query, t
-from spark_data_test_spark.utils.spark_utils import FrameCache, local_df
+from spark_data_test_spark.utils.spark_utils import (
+    FrameCache,
+    local_df,
+    register_memo,
+)
 
 _DIM = 64
 _NQ = 8  # query vectors: vec_id < 8
@@ -262,25 +266,16 @@ def _assign_cells(emb, cents, nprobe):
 
 # Trained centroids memo: (sf_dir, rounds) -> (rows, schema). Centroid
 # state is driver-resident between Lloyd rounds anyway (ncells * dim
-# ints), so memoizing the collected rows is free; bench clears this
-# between passes via clear_similarity_cache.
-_CENTROID_MEMO = {}
+# ints), so memoizing the collected rows is free. `clear_all` drops it
+# together with the PQ frame memos; the PERSISTED trained state
+# (parquet under _centroid_state_path) survives on purpose — training
+# is a separate, stored step and the ANN queries read trained centroids.
+_CENTROID_MEMO = register_memo({})
 
 # Bump whenever the TRAINING ARITHMETIC changes: persisted centroid
 # state trained by older code must be invisible to newer code (the
 # data fingerprint alone cannot see code changes).
 _TRAIN_STATE_VERSION = 1
-
-
-def clear_similarity_cache():
-    """Drop the in-session centroid memo and the PQ frames. The
-    PERSISTED trained state (parquet under _centroid_state_path)
-    survives on purpose — that is the production shape: training is a
-    separate, stored step and the ANN queries read trained centroids
-    (VERDICT r3 item 2)."""
-    _CENTROID_MEMO.clear()
-    _PQ_CODEBOOK_CACHE.clear()
-    _PQ_CODES_CACHE.clear()
 
 
 def _emb_fingerprint(sf_dir):

@@ -30,12 +30,6 @@ from spark_data_test_spark.utils.spark_utils import FrameCache
 _SKETCH_CACHE = FrameCache(max_entries=2)
 
 
-def clear_sketch_cache():
-    """Release memoized sketch frames (bench calls this between passes)."""
-    _SKETCH_CACHE.clear()
-    _MG_CACHE.clear()
-
-
 _HLL_BOUND = 0.05  # acceptance bound; lgk=12 registers give ~1.6% rse
 
 

@@ -1827,7 +1827,8 @@ def streaming_media_arrivals(spark, sf_dir):
     if stale:
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root, exist_ok=True)
-        _stage_wav_files(spark, sf_dir, _media_root("wav", sf_dir))
+        full = _media_root("wav", sf_dir)
+        _stage_wav_files(spark, sf_dir, full)
         # the manifest is written DISTRIBUTED (no driver-side id list);
         # 4 files so the availableNow drain is a genuine multi-batch
         # catch-up under maxFilesPerTrigger=1

@@ -84,11 +84,34 @@ def release_frame(df, release_checkpoint=True):
         pass
 
 
+# Every session memo in the package. FrameCache instances add
+# themselves on construction and plain dict memos through
+# `register_memo`, so only imported modules (the only ones whose memos
+# can hold anything) appear here and no hand-kept list can go stale.
+_MEMOS = []
+
+
+def register_memo(store):
+    """Add a session memo (anything with ``clear()``) to the set that
+    `clear_all` resets; returns ``store`` for ``_MEMO = register_memo({})``."""
+    _MEMOS.append(store)
+    return store
+
+
+def clear_all():
+    """Reset every registered session memo: cached frames are released
+    (blocks included) and their entries dropped. Timing harnesses call
+    this between passes so a pass measures real work, not memo hits."""
+    for store in _MEMOS:
+        store.clear()
+
+
 class FrameCache:
     """Bounded keyed memo of persisted DataFrames, shared by the engine
     and the dedup pipeline. Eviction is LRU (a cache hit refreshes the
     entry's position); evicted and cleared entries are released through
     the supplied callback so cached blocks never outlive their use.
+    Every instance registers itself for `clear_all`.
 
     Thread-safe: store mutations hold a lock (drivers submitting jobs
     from a ThreadPoolExecutor are a supported caller). The builder runs
@@ -115,6 +138,7 @@ class FrameCache:
             else self._release
         )
         self._lock = threading.Lock()
+        register_memo(self)
 
     def _safe_release(self, value, evict=False):
         try:

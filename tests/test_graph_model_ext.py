@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from spark_data_test_spark.operators import dedup, graph, temporal, text
 from spark_data_test_spark.operators.relational import t
+from spark_data_test_spark.utils.spark_utils import clear_all
 
 
 def test_rolling_window_matches_bruteforce(spark, sf_dir):
@@ -70,9 +71,9 @@ def test_triangle_count_on_known_graph(spark, sf_dir, tmp_path):
     )
     sf = str(tmp_path / "sf")
     li.write.parquet(f"{sf}/lineitem.parquet")
-    graph.clear_graph_cache()
+    clear_all()
     row = graph.graph_triangle_count(spark, sf).collect()[0]
-    graph.clear_graph_cache()
+    clear_all()
     assert (row.n_nodes, row.n_edges, row.n_triangles) == (5, 7, 4)
     # wedges: deg 3,3,3,4,1 -> 3+3+3+6+0 = 15
     assert row.n_wedges == 15
@@ -152,7 +153,7 @@ def test_hll_rollup_accuracy(spark, sf_dir):
     for k, est in rows.items():
         assert abs(est - exact[k]) <= max(2, 0.05 * exact[k]), (k, est, exact[k])
     # order/partitioning insensitivity: rerun must match exactly
-    sketches.clear_sketch_cache()
+    clear_all()
     again = {
         r.event_type: r.distinct_users_est
         for r in sketches.hll_estimates(spark, sf_dir).collect()

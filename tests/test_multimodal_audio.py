@@ -104,3 +104,30 @@ def test_audio_fingerprint_finds_every_twin(spark, sf_dir):
         key = (doc_id, doc_id + mm._AUD_PLANT_OFFSET)
         assert key in pairs
         assert pairs[key] <= 1
+
+
+def test_media_arrivals_stage_a_cold_root(spark, sf_dir, tmp_path):
+    """A corpus nothing has staged yet (a fresh sf_dir maps to fresh
+    media roots) lands its WAVs and manifest, and the stream decodes
+    every announced clip: one per audio-corpus row with doc_id % 4 = 0."""
+    import shutil
+
+    from spark_data_test_spark.streaming.windows import streaming_media_arrivals
+
+    cold = str(tmp_path / "sf")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40).write.parquet(
+        f"{cold}/documents.parquet"
+    )
+    try:
+        row = streaming_media_arrivals(spark, cold).first()
+        want = sorted(
+            r.doc_id
+            for r in mm._audio_corpus(spark, cold).where("doc_id % 4 = 0").collect()
+        )
+        assert want
+        assert (row.n_clips, row.first_doc, row.last_doc) == (
+            len(want), want[0], want[-1]
+        )
+    finally:
+        for kind in ("wav", "wav_arrivals"):
+            shutil.rmtree(mm._media_root(kind, cold), ignore_errors=True)

@@ -20,6 +20,7 @@ from spark_data_test_spark.operators.relational import (
     t,
 )
 from spark_data_test_spark.streaming import windows as streaming_windows
+from spark_data_test_spark.utils.spark_utils import clear_all
 
 
 def test_dedup_exact_removes_planted_copies(spark, sf_dir):
@@ -456,15 +457,14 @@ def test_embedding_group_expansion_on_duplicate_vectors(spark, sf_dir, tmp_path)
     src.unionByName(dups).write.mode("overwrite").parquet(
         f"{out_dir}/embeddings.parquet"
     )
-    dedup.clear_dedup_cache()
+    clear_all()
     try:
         got = {
             (r["vec_a"], r["vec_b"]): r["cos_1e6"]
             for r in dedup.dedup_embedding_cosine(spark, out_dir).collect()
         }
     finally:
-        dedup.clear_dedup_cache()
-        similarity.clear_similarity_cache()
+        clear_all()
     emb = {
         r["vec_id"]: np.round(np.array(r["embedding"], dtype=np.float64) * 1e6)
         for r in spark.read.parquet(f"{out_dir}/embeddings.parquet").collect()
@@ -509,7 +509,7 @@ def test_short_text_duplicates_never_pair(spark, sf_dir, tmp_path):
     src.unionByName(extra).write.mode("overwrite").parquet(
         f"{out_dir}/documents.parquet"
     )
-    dedup.clear_dedup_cache()
+    clear_all()
     try:
         pairs = dedup.dedup_minhash_lsh(spark, out_dir).collect()
         short_ids = {900001, 900002, 900003}
@@ -517,7 +517,7 @@ def test_short_text_duplicates_never_pair(spark, sf_dir, tmp_path):
             r["doc_a"] in short_ids or r["doc_b"] in short_ids for r in pairs
         )
     finally:
-        dedup.clear_dedup_cache()
+        clear_all()
 
 
 def test_semantic_prune_curve_invariants(spark, sf_dir):

@@ -20,6 +20,7 @@ from spark_data_test_spark.plans.audit import (
     plan_op_counts,
     scan_read_schema,
 )
+from spark_data_test_spark.utils.spark_utils import clear_all
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -140,16 +141,15 @@ def test_embedding_dedup_join_discipline(spark, sf_dir):
     # de-optimization this family exists to avoid. (Broadcast
     # nested-loop against the ncells-row centroid frame is fine — the
     # small side is bounded by sqrt(n).)
-    from spark_data_test_spark.operators import dedup, similarity
+    from spark_data_test_spark.operators import dedup
     from spark_data_test_spark.plans.audit import simple_plan
 
-    dedup.clear_dedup_cache()
+    clear_all()
     try:
         df = dedup.dedup_embedding_cosine(spark, sf_dir)
         assert "CartesianProduct" not in simple_plan(df)
     finally:
-        dedup.clear_dedup_cache()
-        similarity.clear_similarity_cache()
+        clear_all()
 
 
 def test_observe_metrics_ride_the_action(spark, sf_dir):
@@ -292,11 +292,10 @@ def test_pair_frame_memos_are_shared(spark, sf_dir):
     # InMemoryTableScan instead of re-running the sibling's pipeline
     # (the cross-consumer recompute PLANS_r08.md flagged). Plans are
     # inspected WITHOUT executing; caches cleared after.
-    from spark_data_test_spark.operators import dedup, multimodal, similarity
+    from spark_data_test_spark.operators import dedup, multimodal
     from spark_data_test_spark.plans.audit import simple_plan
 
-    dedup.clear_dedup_cache()
-    multimodal.clear_multimodal_cache()
+    clear_all()
     try:
         dedup.dedup_embedding_cosine(spark, sf_dir)  # owns the memo
         curve_plan = simple_plan(
@@ -315,9 +314,7 @@ def test_pair_frame_memos_are_shared(spark, sf_dir):
         )
         assert "InMemoryTableScan" in cm_plan
     finally:
-        dedup.clear_dedup_cache()
-        multimodal.clear_multimodal_cache()
-        similarity.clear_similarity_cache()
+        clear_all()
 
 
 def test_dq_check_row_rules_fuse_into_one_scan(spark, sf_dir):
@@ -435,7 +432,7 @@ def test_containment_family_broadcast_discipline(spark, sf_dir):
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    dedup.clear_dedup_cache()  # force a fresh gid-co build
+    clear_all()  # force a fresh gid-co build
     try:
         dedup.dedup_containment(spark, sf_dir)
         docs = (
@@ -446,7 +443,7 @@ def test_containment_family_broadcast_discipline(spark, sf_dir):
         containment_pairs(docs)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        dedup.clear_dedup_cache()
+        clear_all()
     for plan in (dedup._last_gid_co_plan, dedup._last_containment_plan):
         assert plan is not None, "plan hooks were not captured"
         bhj = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
@@ -730,7 +727,7 @@ def test_gid_co_discovery_is_in_task(spark, sf_dir):
     pin). Asserted on the pre-persist build hook."""
     from spark_data_test_spark.operators import dedup
 
-    dedup.clear_dedup_cache()
+    clear_all()
     try:
         dedup.dedup_containment(spark, sf_dir)
         plan = dedup._last_gid_co_plan
@@ -740,7 +737,7 @@ def test_gid_co_discovery_is_in_task(spark, sf_dir):
                 assert "sh#" not in line, line
         assert "Generate" in plan, plan
     finally:
-        dedup.clear_dedup_cache()
+        clear_all()
 
 
 def test_ngram_partner_expansion_is_in_task(spark, sf_dir):
@@ -772,13 +769,10 @@ def test_graph_edges_build_has_no_self_join(spark, sf_dir):
     self-join on the order key are gone, so no join node may appear in
     the cached build plan (the InMemoryRelation section of the explain
     output carries the build subtree)."""
-    from spark_data_test_spark.operators.graph import (
-        _edges,
-        clear_graph_cache,
-    )
+    from spark_data_test_spark.operators.graph import _edges
     from spark_data_test_spark.plans.audit import formatted_plan
 
-    clear_graph_cache()
+    clear_all()
     try:
         plan = formatted_plan(_edges(spark, sf_dir))
         assert "Generate" in plan, plan
@@ -786,4 +780,4 @@ def test_graph_edges_build_has_no_self_join(spark, sf_dir):
                      "BroadcastHashJoin", "CartesianProduct"):
             assert join not in plan, plan
     finally:
-        clear_graph_cache()
+        clear_all()

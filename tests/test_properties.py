@@ -176,6 +176,47 @@ def test_frame_cache_eviction_order_and_release():
     assert set(released) == {"va", "vb", "vc", "vb2"}
 
 
+def test_clear_all_releases_every_memo(spark):
+    """Every module-level memo in the operators package (FrameCache or
+    ``*_MEMO`` dict) is registered, and one `clear_all` empties them
+    all and unpersists the frames they hold."""
+    import importlib
+    import pkgutil
+
+    from spark_data_test_spark import operators
+    from spark_data_test_spark.operators import graph
+    from spark_data_test_spark.utils import spark_utils
+    from spark_data_test_spark.utils.spark_utils import FrameCache, clear_all
+
+    caches, dicts = {}, {}
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, value in vars(mod).items():
+            if isinstance(value, FrameCache):
+                caches[id(value)] = value
+            elif name.endswith("_MEMO") and isinstance(value, dict):
+                dicts[id(value)] = value
+    assert caches and dicts
+    registered = {id(store) for store in spark_utils._MEMOS}
+    assert set(caches) | set(dicts) <= registered
+
+    key = ("test_clear_all", "sentinel")
+    df = spark.range(5).persist()
+    df.count()
+    assert graph._EDGES_CACHE.get_or_create(key, lambda: df) is df
+    assert df.storageLevel.useMemory
+    for cache in caches.values():
+        cache.get_or_create(key, object)
+    for memo in dicts.values():
+        memo[key] = object()
+
+    clear_all()
+    assert all(not cache._store for cache in caches.values())
+    assert all(not memo for memo in dicts.values())
+    level = df.storageLevel
+    assert not (level.useMemory or level.useDisk)
+
+
 # --- media codec roundtrips (no Spark session needed) ---------------------
 
 _pcm_bytes = st.binary(min_size=0, max_size=256).map(

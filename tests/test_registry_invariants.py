@@ -91,3 +91,14 @@ def test_priority_lists_are_disjoint_and_registered():
     all_listed = window | queue | backlog
     unregistered = sorted(all_listed - set(names))
     assert not unregistered, f"priority names not registered: {unregistered}"
+
+
+def test_bench_names_are_registered():
+    """Every name bench.py times or warms resolves to a registered
+    query, and no headline line is timed twice."""
+    import bench
+
+    names = set(_registry_names()[0])
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+    missing = [n for n in (*bench.HEADLINE, *bench.WARMUP) if n not in names]
+    assert not missing, f"bench names not in the registry: {missing}"

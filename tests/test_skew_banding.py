@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_data_test_spark.operators import dedup as dd
+from spark_data_test_spark.utils.spark_utils import clear_all
 
 N_HOT = 10_000  # docs sharing the pathological content
 N_DISTINCT = 200  # well-behaved distinct docs alongside
@@ -135,7 +136,7 @@ def test_audio_envelope_banding_collapses_identical_clips(spark, tmp_path):
         for i in range(n_distinct)
     ]
     root = _write_documents(spark, tmp_path / "audio_hot", texts)
-    mm.clear_multimodal_cache()
+    clear_all()
     try:
         dec = mm.audio_decoded(spark, root).select("doc_id", "pcm_hex")
         members = dec.select(F.col("pcm_hex").alias("gid"), "doc_id")
@@ -162,4 +163,4 @@ def test_audio_envelope_banding_collapses_identical_clips(spark, tmp_path):
         # a handful at most; doc-level banding would give ~2e6 per band
         assert cand < 1000
     finally:
-        mm.clear_multimodal_cache()
+        clear_all()

@@ -263,14 +263,12 @@ def test_cdc_upsert_merges_across_microbatches(spark, sf_dir, tmp_path):
 def test_sketch_rollup_equals_batch_across_microbatches(spark, sf_dir, tmp_path):
     """Two-batch HLL fold must equal the one-shot batch rollup EXACTLY
     (register max-merge is associative + idempotent)."""
-    from spark_data_test_spark.operators.sketches import (
-        clear_sketch_cache,
-        hll_estimates,
-    )
+    from spark_data_test_spark.operators.sketches import hll_estimates
     from spark_data_test_spark.streaming.windows import (
         read_state_table,
         sketch_apply_batch,
     )
+    from spark_data_test_spark.utils.spark_utils import clear_all
 
     ev = t(spark, sf_dir, "events")
     median_us = ev.selectExpr("unix_micros(ts) AS us").approxQuantile(
@@ -312,7 +310,7 @@ def test_sketch_rollup_equals_batch_across_microbatches(spark, sf_dir, tmp_path)
         )
         .collect()
     }
-    clear_sketch_cache()
+    clear_all()
     batch = {
         r.event_type: r.distinct_users_est
         for r in hll_estimates(spark, sf_dir).collect()
