@@ -32,6 +32,8 @@ swap ``xxhash64(sh, seed)`` for ~10x hash throughput without changing
 shape.
 """
 
+import contextlib
+
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -144,16 +146,78 @@ SHINGLES_EXPR = (
 )
 
 
-def _shingles(corpus):
-    """Distinct strided char-8-gram shingles per doc (set semantics)."""
+def _shingles(corpus, id_col="doc_id"):
+    """Distinct strided char-8-gram shingles per ``id_col`` (set
+    semantics)."""
     return (
         corpus.where(F.length("text") >= 8)
-        .select(
-            "doc_id",
-            F.explode(F.expr(SHINGLES_EXPR)).alias("sh"),
-        )
+        .select(id_col, F.explode(F.expr(SHINGLES_EXPR)).alias("sh"))
         .distinct()
     )
+
+
+def _members(docs):
+    """``(doc_id, gid)`` text-group membership, ``gid = md5(text)``."""
+    return docs.select("doc_id", F.md5("text").alias("gid"))
+
+
+def _reps(docs):
+    """``(gid, text)``: one row per DISTINCT text."""
+    return docs.select(F.md5("text").alias("gid"), "text").dropDuplicates(["gid"])
+
+
+@contextlib.contextmanager
+def _scoped(*frames):
+    """Release persisted or checkpointed ``frames`` when the ``with``
+    block exits; ``persist()`` returns its frame, so
+    ``with _scoped(df.persist()) as (df,):`` persists for the block."""
+    try:
+        yield frames
+    finally:
+        for frame in frames:
+            release_frame(frame)
+
+
+# --- dedup stages -----------------------------------------------------------
+#
+# Each twinned operator (registered ``(spark, sf_dir)`` query and
+# root-exported ``docs -> frame`` function) is one chain of the stages
+# below. Stages build frames and leave lifetimes to the caller: the
+# registered query holds their results in the FrameCache memos, the
+# library export persists, checkpoints and releases its own. The
+# context-manager stages own scaffolding that must outlive only the
+# caller's materialization, and release it when the block exits.
+
+
+def _text_groups(docs, keep_short=False):
+    """Text-groups stage: ``(members, gsh)`` — the ``(doc_id, gid)``
+    members and the ``(gid, sh)`` shingles of each distinct text of a
+    ``(doc_id, text)`` frame. Texts are deduped BEFORE the explode, so
+    shingling cost tracks the distinct-text count, not the doc count.
+    Members cover the docs that can shingle at all (length >= 8) — the
+    only docs the registered pipeline could ever pair; the library
+    exports pass ``keep_short=True`` so identical short texts still pair
+    through the group expansion."""
+    long_docs = docs.where(F.length("text") >= 8)
+    members = _members(docs if keep_short else long_docs)
+    return members, _shingles(_reps(long_docs), "gid")
+
+
+@contextlib.contextmanager
+def _minhash_gid_pairs(gsh):
+    """MinHash group-pair candidates stage: distinct ``(gid_a, gid_b)``
+    (``gid_a < gid_b``) band collisions of the ``(gid, sh)`` rows. The
+    band index is eagerly checkpointed because the gated expansion
+    reads it three times — each read would otherwise re-run the whole
+    minhash subtree — and released when the block exits, so the caller
+    materializes what it keeps inside the block."""
+    bands = checkpointed(
+        _band_index(_minhash(gsh.withColumnRenamed("gid", "doc_id")))
+    )
+    with _scoped(bands):
+        yield _band_pairs(bands).select(
+            F.col("doc_a").alias("gid_a"), F.col("doc_b").alias("gid_b")
+        )
 
 
 # EXACT-DEDUP-BEFORE-NEAR-DUP: every text-derived structure (shingles,
@@ -199,80 +263,41 @@ _SIM_MEMB_CACHE = FrameCache(max_entries=2)
 _NGRAM_CACHE = FrameCache(max_entries=2)
 
 
+def _key(spark, sf_dir):
+    return (spark.sparkContext.applicationId, sf_dir)
+
+
 def _cached_members(spark, sf_dir):
-    """(gid, doc_id) text-group membership, restricted to docs that can
-    shingle at all (length >= 8) — the same docs the per-doc pipeline
-    could ever pair, so expansion introduces no spurious members."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Memoized `_text_groups` members of the near-dup corpus."""
     return _MEMBERS_CACHE.get_or_create(
-        key,
-        lambda: _near_corpus(spark, sf_dir)
-        .where(F.length("text") >= 8)
-        .select(F.md5("text").alias("gid"), "doc_id")
-        .persist(),
+        _key(spark, sf_dir),
+        lambda: _text_groups(_near_corpus(spark, sf_dir))[0].persist(),
     )
 
 
 def _cached_shingles(spark, sf_dir):
-    """(gid, sh) distinct shingles per DISTINCT text: texts are deduped
-    (dropDuplicates on gid) BEFORE the explode, so shingling cost tracks
-    the distinct-text count, not the doc count."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Memoized `_text_groups` shingles of the near-dup corpus."""
     return _SHINGLE_CACHE.get_or_create(
-        key,
-        lambda: _shingles(
-            _near_corpus(spark, sf_dir)
-            .where(F.length("text") >= 8)
-            .select(F.md5("text").alias("gid"), "text")
-            .dropDuplicates(["gid"])
-            .select(F.col("gid").alias("doc_id"), "text")
-        )
-        .withColumnRenamed("doc_id", "gid")
-        .persist(),
+        _key(spark, sf_dir),
+        lambda: _text_groups(_near_corpus(spark, sf_dir))[1].persist(),
     )
 
 
 def _cached_gid_pairs(spark, sf_dir):
-    """Distinct candidate GROUP pairs (gid_a < gid_b) from banding over
-    the per-distinct-text signatures."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Memoized `_minhash_gid_pairs` over the cached shingles, checkpointed
+    (a leaf scan: the lineage would re-analyze on the driver for every
+    downstream consumer)."""
 
     def build():
-        # The band index is eagerly checkpointed because the gated
-        # expansion reads it three times — each read would otherwise
-        # re-run the whole minhash subtree. The
-        # pair frame itself is checkpointed too (as in the simhash
-        # fingerprint cache): the lineage re-analyzes on the driver for
-        # every downstream consumer, and truncating it to a leaf
-        # collapses that to a scan. Both materializations are eager, so
-        # the bands leaf can be released as soon as the pair frame
-        # exists.
-        bands = checkpointed(
-            _band_index(
-                _minhash(
-                    _cached_shingles(spark, sf_dir).withColumnRenamed(
-                        "gid", "doc_id"
-                    )
-                )
-            )
-        )
-        try:
-            return checkpointed(
-                _band_pairs(bands).select(
-                    F.col("doc_a").alias("gid_a"),
-                    F.col("doc_b").alias("gid_b"),
-                )
-            )
-        finally:
-            release_frame(bands)
+        with _minhash_gid_pairs(_cached_shingles(spark, sf_dir)) as gpairs:
+            return checkpointed(gpairs)
 
-    return _GID_PAIRS_CACHE.get_or_create(key, build)
+    return _GID_PAIRS_CACHE.get_or_create(_key(spark, sf_dir), build)
 
 
 def _cached_band_pairs(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
     return _PAIRS_CACHE.get_or_create(
-        key,
+        _key(spark, sf_dir),
         lambda: _expand_group_pairs(
             _cached_members(spark, sf_dir), _cached_gid_pairs(spark, sf_dir)
         ).persist(),
@@ -421,9 +446,7 @@ def dedup_simhash(spark, sf_dir):
     # fingerprint depends only on the text: tokenize each DISTINCT text
     # once (gid = md5(text)) and join fingerprints back to docs — on a
     # corpus with k exact copies per text the explode+vote shrinks k-fold
-    docs = d.select("doc_id", F.md5("text").alias("gid"))
-    reps = d.select(F.md5("text").alias("gid"), "text").dropDuplicates(["gid"])
-    tokens = reps.select(
+    tokens = _reps(d).select(
         "gid", F.explode(F.split("text", " ")).alias("tok")
     ).where(F.col("tok") != "")
     nib = lambda p: F.substring(F.md5("tok"), p + 1, 1)
@@ -456,7 +479,7 @@ def dedup_simhash(spark, sf_dir):
     )
     # inner join: docs whose text yields zero tokens have no fingerprint
     # row, exactly as in the per-doc formulation
-    return docs.join(fp, "gid").select("doc_id", "simhash")
+    return _members(d).join(fp, "gid").select("doc_id", "simhash")
 
 
 _SP_BITS = 64  # pair query uses the 64-bit fingerprint of Manku et al.
@@ -505,10 +528,7 @@ def _sp_vote_sums(corpus):
     exactly the oracle's formulation; vote bits are pure md5 functions
     of the token, so shard-only sums are bit-identical to what a full
     rebuild would produce."""
-    reps = corpus.select(
-        F.md5("text").alias("gid"), "text"
-    ).dropDuplicates(["gid"])
-    tokens = reps.select(
+    tokens = _reps(corpus).select(
         "gid", F.explode(F.split("text", " ")).alias("tok")
     ).where(F.col("tok") != "")
     # two md5 lanes -> 64 vote bits per distinct token
@@ -527,6 +547,34 @@ def _sp_vote_sums(corpus):
         F.expr("sum(b0) AS s0"),
         *[F.expr(f"sum(b{p}) AS s{p}") for p in range(1, _SP_BITS)],
     )
+
+
+@contextlib.contextmanager
+def _sp_fingerprints(docs):
+    """Centred SimHash fingerprint stage: ``(fp, totals)`` with ``fp``
+    the packed per-distinct-text ``(gid, lo, hi)`` fingerprints of a
+    ``(doc_id, text)`` frame and ``totals`` the one-row centring vector
+    ``(d, t0..t63)``. Bits are corpus-mean-centred signs (exact
+    integers: ``s_p * d >= t_p``): the tiny shared vocabulary makes raw
+    vote sums heavily biased, collapsing 60% of fingerprints into one
+    band bucket; centring rebalances every bit (at sf0.1 the band
+    candidate volume drops 12.5M -> 1.8M while planted recall RISES).
+    The vote sums are eagerly checkpointed BEFORE centring — the totals
+    aggregate and the packing projection both consume them, and without
+    the truncation the plan runs the explode+join+64-agg subtree twice
+    — and released when the block exits, so the caller materializes
+    (checkpoints, writes) what it keeps inside the block. The packing
+    projection reuses the oracle's `_SP_LO_SQL`/`_SP_HI_SQL` strings,
+    valid Spark SQL too, so both engines parse the same text."""
+    sums = checkpointed(_sp_vote_sums(docs))
+    with _scoped(sums):
+        totals = sums.agg(
+            F.expr("count(*) AS d"),
+            *[F.expr(f"sum(s{p}) AS t{p}") for p in range(_SP_BITS)],
+        )
+        yield sums.crossJoin(F.broadcast(totals)).selectExpr(
+            "gid", f"{_SP_LO_SQL} AS lo", f"{_SP_HI_SQL} AS hi"
+        ), totals
 
 
 def _sp_banded(fp):
@@ -646,55 +694,22 @@ def dedup_simhash_pairs(spark, sf_dir):
     AFTER the <= K filter, so no shuffle carries the raw collision
     volume."""
     corpus = _near_corpus(spark, sf_dir)
-    docs = corpus.select("doc_id", F.md5("text").alias("gid"))
+    key = _key(spark, sf_dir)
 
     def build_fp():
-        sums = _sp_vote_sums(corpus)
-        # checkpoint the per-group vote sums BEFORE centering: the
-        # totals aggregate and the packing projection both consume this
-        # frame, and without the truncation the physical plan runs the
-        # explode+join+64-agg subtree TWICE (once under the broadcast
-        # totals, once under the main side). One narrow row per
-        # distinct text, so the eager materialization is the same job
-        # the old single checkpoint ran anyway.
-        sums = checkpointed(sums)
-        # corpus-mean-centered sign (exact integers: s_p * d >= t_p):
-        # the tiny shared vocabulary makes raw vote sums heavily
-        # biased, collapsing 60% of fingerprints into one band bucket;
-        # centering rebalances every bit — measured at sf0.1 the band
-        # candidate volume drops 12.5M -> 1.8M while planted recall
-        # RISES (near-dup distances stay small, boilerplate spreads)
-        totals = sums.agg(
-            F.expr("count(*) AS d"),
-            *[F.expr(f"sum(s{p}) AS t{p}") for p in range(_SP_BITS)],
-        )
-        # localCheckpoint, not persist: every downstream consumer
-        # (banding, two verify joins, membership) re-ANALYZES the
-        # fingerprint lineage on the driver; truncating it to a leaf
-        # scan collapses that to milliseconds. The packing projection
-        # REUSES the oracle's _SP_LO_SQL/_SP_HI_SQL strings — they are
-        # valid Spark SQL too, so both engines parse the same text.
-        # (On a cluster, lost-executor recompute of a localCheckpoint
-        # is the usual caveat — this frame is one narrow row per
-        # distinct text and rebuilding it is exactly the cached path
-        # we'd rerun anyway.)
-        return checkpointed(
-            sums.crossJoin(F.broadcast(totals)).selectExpr(
-                "gid",
-                f"{_SP_LO_SQL} AS lo",
-                f"{_SP_HI_SQL} AS hi",
-            )
-        )
+        # a checkpoint, not a persist: every downstream consumer
+        # (banding, membership) re-ANALYZES the fingerprint lineage on
+        # the driver; a leaf scan collapses that to milliseconds
+        with _sp_fingerprints(corpus) as (fp, _):
+            return checkpointed(fp)
 
-    key = (spark.sparkContext.applicationId, sf_dir)
     fp = _SIM_FP_CACHE.get_or_create(key, build_fp)
-    gpairs = _sp_gid_pairs(_sp_banded(fp))
     # membership restricted to groups that HAVE a fingerprint (zero-token
     # texts drop out, as in the per-doc oracle)
     memb = _SIM_MEMB_CACHE.get_or_create(
-        key, lambda: docs.join(fp.select("gid"), "gid").persist()
+        key, lambda: _members(corpus).join(fp.select("gid"), "gid").persist()
     )
-    return _expand_group_pairs(memb, gpairs, hamming=0)
+    return _expand_group_pairs(memb, _sp_gid_pairs(_sp_banded(fp)), hamming=0)
 
 
 def _jaccard_verify(gsh, gpairs, tau_1e6):
@@ -871,7 +886,7 @@ def _embedding_pairs(spark, sf_dir):
     """(vec_a, vec_b, cos_1e6) — the verified embedding near-dup pair
     frame, memoized per (application, sf_dir) and persisted so each
     consumer pays the IVF cell self-join at most once per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _key(spark, sf_dir)
     return _EMB_PAIRS_CACHE.get_or_create(
         key, lambda: _build_embedding_pairs(spark, sf_dir).persist()
     )
@@ -896,7 +911,7 @@ def _build_embedding_pairs(spark, sf_dir):
     # loses nothing while the cell self-join shrinks k^2 per k-dup
     # group — measured 19.1 s -> ~4 s at the x10-amplified scale where
     # every vector has 10 exact copies.
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _key(spark, sf_dir)
     memb = _EMB_GROUPS_CACHE.get_or_create(
         key,
         lambda: emb.withColumn(
@@ -1295,13 +1310,12 @@ _GID_CO_SQL = f"""
 
 _GID_CO_CACHE = FrameCache(max_entries=2)
 
-# Most recent pre-persist plan of the gid-co build (and the
-# frame-level containment_pairs equivalent), captured so
+# Plan of the most recent `_gid_co_counts` build (either entry point),
+# captured before the caller persists or checkpoints it so
 # tests/test_plans.py can assert the broadcast discipline — the
-# returned frames are persisted/checkpointed, so the assertion cannot
-# be made on them (same pattern as _last_bucketed_probe_plan).
+# returned frames are leaf scans, so the assertion cannot be made on
+# them (same pattern as _last_bucketed_probe_plan).
 _last_gid_co_plan = None
-_last_containment_plan = None
 
 # Deterministic eval slice for the recall report: keep the distinct
 # texts whose md5 starts with a hex digit <= '7' (8 of 16 first chars,
@@ -1316,157 +1330,91 @@ _GID_CO_SAMPLED_SQL = _GID_CO_SQL.replace(
 )
 
 
-def _cached_gid_co_counts(spark, sf_dir, sampled=False):
-    """(ga, gb, i, na, nb) — EXACT shared-shingle count per
-    distinct-text pair with both shingle-set sizes, from the shingle
-    inverted index with STOP-SHINGLE-CAPPED discovery (the scale rule
-    the docstrings promised; now implemented):
+@contextlib.contextmanager
+def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
+    """gid co-count stage: ``(ga, gb, i, na, nb)`` — the EXACT
+    shared-shingle count of each distinct-text pair of the ``(gid, sh)``
+    rows with both shingle-set sizes, from the shingle inverted index
+    with STOP-SHINGLE-CAPPED discovery:
 
     * discovery: restricted to shingles with document frequency
-      <= _STOP_SH_DF, so its volume is bounded by per-RARE-shingle df
+      <= ``stop_df``, so its volume is bounded by per-RARE-shingle df
       squares — measured at sf0.1 the discovery input drops
       64.2M -> 20.8M rows and the discovered pair set 10.9M -> 6.2M,
       with ZERO truth (J >= 0.5) or containment (>= 0.8) pairs lost
       (every qualifying pair shares at least one sub-cap shingle; a
-      pair ALL of whose shared shingles sit in > _STOP_SH_DF docs is
-      boilerplate overlap by construction). The FULL build expands
-      pairs in-task from stop-capped posting lists; the SAMPLED build
-      keeps the rare-shingle self-join (the per-variant fork measured
-      in round 18 — see the shape comment below). At 100 TB this cap
-      is the difference between an inverted-index plan and a
-      licence-header cross-join — same rule as
-      corpus_duplicate_ngrams' stop grams.
-    * exactness: i is still the FULL intersection — the rare self-join
-      contributes i_rare, and the hot remainder comes from per-doc HOT
-      ARRAYS (hot vocabulary is small by construction: at most
-      total-occurrences / cap shingles can exceed the cap, 318 at
-      sf0.1), joined by gid and intersected in-task. No second
-      self-join over the hot shingles ever runs.
+      pair ALL of whose shared shingles sit in more than ``stop_df``
+      docs is boilerplate overlap by construction). Pairs expand
+      in-task from the rare-shingle posting lists, each bounded at
+      ``stop_df`` gids by the hot anti-join. At 100 TB this cap is the
+      difference between an inverted-index plan and a licence-header
+      cross-join — same rule as the n-gram stop grams.
+    * exactness: i is still the FULL intersection — discovery
+      contributes i_rare, and the hot remainder comes from per-text HOT
+      ARRAYS (at most total-occurrences / cap shingles can exceed the
+      cap, 318 at sf0.1), joined by gid and intersected in-task. No
+      second self-join over the hot shingles ever runs.
 
-    Memoized: the recall report and containment both consume it. The
-    ONLY forced broadcast is the HOT shingle list (shingles in more
-    than _STOP_SH_DF texts — at most total-occurrences / cap rows, the
-    genuinely small Zipf head, 318 at sf0.1): rare = all − hot, so the
-    discovery restriction is a LEFT ANTI join against broadcast(hot)
-    rather than an inner join against the corpus-cardinality rare
-    list. The per-text frames (sizes, hot arrays) join by gid with NO
-    hint — AQE broadcasts them while they fit on the driver and
-    shuffles when they don't, which is what a 100 TB corpus needs
-    (distinct texts grow linearly with the corpus).
+    The ONLY forced broadcast is the HOT shingle list (the genuinely
+    small Zipf head): rare = all − hot, so the discovery restriction is
+    a LEFT ANTI join against broadcast(hot) rather than an inner join
+    against the corpus-cardinality rare list. The per-text frames
+    (sizes, hot arrays) join by gid with NO hint — AQE broadcasts them
+    while they fit on the driver and shuffles when they don't.
 
-    ``sampled=True`` restricts the whole build to the deterministic
-    `_EVAL_SAMPLE_PRED` slice of distinct texts BEFORE the self-join
-    (input rows halve, join output quarters) — the eval-slice shape the
-    recall report runs; containment keeps the full build. The sampled
-    variant additionally PREFILTERS discovered pairs by a conservative
-    Jaccard upper bound (i <= i_rare + min(hot-array sizes)) at the
-    recall threshold BEFORE the hot-array attach and the persist: the
-    recall eval only ever reads truth pairs (J >= 0.5), the bound can
-    never evict one, and it collapses the persisted frame from ~1.85M
-    rows to the few thousand that could qualify. Rows below the bound
-    are absent from the sampled frame — exact i is guaranteed only at
-    or above the threshold, which is the contract the eval needs."""
-    key = (spark.sparkContext.applicationId, sf_dir, sampled)
+    ``sampled=True`` (the recall report's eval slice, whose caller has
+    already restricted ``gsh``) keeps the persisted rare-shingle
+    self-join for discovery — on the quartered volume the in-task
+    expansion measured ~1.3x slower end-to-end — and PREFILTERS
+    discovered pairs by a conservative Jaccard upper bound
+    (i <= i_rare + min(hot-array sizes)) at the recall threshold before
+    the hot-array attach: the eval only reads truth pairs (J >= 0.5),
+    the bound can never evict one, and it collapses the frame from
+    ~1.85M rows to the few thousand that could qualify. Rows below the
+    bound are absent — exact i is guaranteed only at or above it.
 
-    def build():
-        sh = _cached_shingles(spark, sf_dir)
+    The scaffolding frames are persisted for the block (each reference
+    below re-executes its subplan otherwise: hot twice, ha, hb and
+    sizes twice — measured 2x the whole build at sf0.1) and released
+    when it exits, so the caller materializes the result inside it."""
+    from spark_data_test_spark.plans.audit import simple_plan
+
+    global _last_gid_co_plan
+    sizes = gsh.groupBy("gid").agg(F.count(F.lit(1)).alias("n"))
+    shdf = gsh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+    hot = shdf.where(F.col("df") > stop_df).select("sh")
+    ghot = (
+        gsh.join(F.broadcast(hot), "sh")
+        .groupBy("gid")
+        .agg(F.collect_set("sh").alias("hs"))
+    )
+    shr = gsh.join(F.broadcast(hot), "sh", "left_anti")
+    scaffolds = (sizes, shdf, ghot, shr) if sampled else (sizes, shdf, ghot)
+    with _scoped(*(frame.persist() for frame in scaffolds)):
         if sampled:
-            # gid IS md5(text), so the slice predicate is a cheap
-            # first-character test on the key itself
-            sh = sh.where(F.substring("gid", 1, 1) <= "7")
-        # Persist the SCAFFOLDING frames: each DataFrame reference
-        # below re-executes its subplan independently (hot twice, ha,
-        # hb, and sizes twice), so without these persists the per-gid
-        # and per-shingle aggregates recompute once per consumer —
-        # measured 2x the whole build's cost at sf0.1. They are
-        # materialized via the final count() and unpersisted before
-        # return, so only the result frame outlives the build.
-        sizes = sh.groupBy("gid").agg(F.count(F.lit(1)).alias("n")).persist()
-        shdf = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).persist()
-        # hot (df > cap) is the small Zipf head — the one frame safe to
-        # force-broadcast at any corpus size; rare = all − hot, so
-        # anti-join(hot) == inner-join(rare) with no corpus-cardinality
-        # build side (the rare list grows with the distinct vocabulary)
-        hot = shdf.where(F.col("df") > _STOP_SH_DF).select("sh")
-        ghot = (
-            sh.join(F.broadcast(hot), "sh")
-            .groupBy("gid")
-            .agg(F.collect_set("sh").alias("hs"))
-            .persist()
-        )
-        # Discovery shape per variant, chosen by interleaved A/B: the
-        # FULL build (containment) expands pairs in-task from the
-        # rare-shingle posting lists, each bounded at _STOP_SH_DF gids
-        # by the hot anti-join; the SAMPLED build (the recall eval)
-        # quarters the volume first, where the aggregate's per-bucket
-        # array work measured ~1.3x slower end-to-end than the
-        # persisted self-join (the persist feeds its two reads).
-        if sampled:
-            shr = sh.join(F.broadcast(hot), "sh", "left_anti").persist()
             a, b = shr.alias("a"), shr.alias("b")
-            co = (
-                a.join(
-                    b,
-                    (F.col("a.sh") == F.col("b.sh"))
-                    & (F.col("a.gid") < F.col("b.gid")),
-                )
-                .groupBy(
-                    F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb")
-                )
-                .agg(F.count(F.lit(1)).alias("i_rare"))
-            )
+            co = a.join(
+                b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.gid") < F.col("b.gid"))
+            ).groupBy(F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb"))
         else:
-            shr = sh.join(F.broadcast(hot), "sh", "left_anti")
-            co = (
-                bucket_pairs(shr, ("sh",), "gid", None, out_a="ga", out_b="gb")
-                .groupBy("ga", "gb")
-                .agg(F.count(F.lit(1)).alias("i_rare"))
-            )
-        ha = ghot.select(F.col("gid").alias("ga"), F.col("hs").alias("ha"))
-        hb = ghot.select(F.col("gid").alias("gb"), F.col("hs").alias("hb"))
-        # per-text frames: join by gid with NO broadcast hint — these
-        # are corpus-cardinality (one row per distinct text); AQE
-        # broadcasts them while small, shuffles when they outgrow it
-        co = co.join(
-            sizes.withColumnRenamed("gid", "ga").withColumnRenamed(
-                "n", "na"
-            ),
-            "ga",
-        ).join(
-            sizes.withColumnRenamed("gid", "gb").withColumnRenamed(
-                "n", "nb"
-            ),
-            "gb",
+            co = bucket_pairs(
+                shr, ("sh",), "gid", None, out_a="ga", out_b="gb"
+            ).groupBy("ga", "gb")
+        co = (
+            co.agg(F.count(F.lit(1)).alias("i_rare"))
+            .join(sizes.toDF("ga", "na"), "ga")
+            .join(sizes.toDF("gb", "nb"), "gb")
         )
         if sampled:
-            # conservative truth-threshold prefilter (see docstring):
-            # i can exceed i_rare by at most the smaller HOT-ARRAY
-            # size, so bound J from above with integer-only arithmetic
-            # and drop the pairs no exact i could ever qualify
-            hsz = ghot.select("gid", F.size("hs").alias("nh"))
+            hsz = ghot.select("gid", F.size("hs"))
             i_max = F.col("i_rare") + F.least(
                 F.coalesce(F.col("nha"), F.lit(0)),
                 F.coalesce(F.col("nhb"), F.lit(0)),
             )
             co = (
-                co.join(
-                    hsz.withColumnRenamed("gid", "ga").withColumnRenamed(
-                        "nh", "nha"
-                    ),
-                    "ga",
-                    "left",
-                )
-                .join(
-                    hsz.withColumnRenamed("gid", "gb").withColumnRenamed(
-                        "nh", "nhb"
-                    ),
-                    "gb",
-                    "left",
-                )
-                .where(
-                    F.lit(2) * i_max
-                    >= F.col("na") + F.col("nb") - i_max
-                )
+                co.join(hsz.toDF("ga", "nha"), "ga", "left")
+                .join(hsz.toDF("gb", "nhb"), "gb", "left")
+                .where(F.lit(2) * i_max >= F.col("na") + F.col("nb") - i_max)
                 .drop("nha", "nhb")
             )
         i_hot = F.when(
@@ -1474,23 +1422,33 @@ def _cached_gid_co_counts(spark, sf_dir, sampled=False):
             F.size(F.array_intersect("ha", "hb")),
         ).otherwise(0)
         res = (
-            co.join(ha, "ga", "left")
-            .join(hb, "gb", "left")
+            co.join(ghot.toDF("ga", "ha"), "ga", "left")
+            .join(ghot.toDF("gb", "hb"), "gb", "left")
             .withColumn("i", (F.col("i_rare") + i_hot).cast("long"))
             .select("ga", "gb", "i", "na", "nb")
         )
-        from spark_data_test_spark.plans.audit import simple_plan
-
-        global _last_gid_co_plan
         _last_gid_co_plan = simple_plan(res)
-        out = res.persist()
-        out.count()  # materialize, then drop the scaffolding caches
-        scaffolds = (sizes, shdf, shr, ghot) if sampled else (sizes, shdf, ghot)
-        for scaffold in scaffolds:
-            scaffold.unpersist()
-        return out
+        yield res
 
-    return _GID_CO_CACHE.get_or_create(key, build)
+
+def _cached_gid_co_counts(spark, sf_dir, sampled=False):
+    """Memoized `_gid_co_counts` over the cached shingles: the recall
+    report reads the ``sampled`` build over the deterministic
+    `_EVAL_SAMPLE_PRED` slice of distinct texts (input rows halve, join
+    output quarters), containment the full build."""
+
+    def build():
+        sh = _cached_shingles(spark, sf_dir)
+        if sampled:
+            # gid IS md5(text), so the slice predicate is a cheap
+            # first-character test on the key itself
+            sh = sh.where(F.substring("gid", 1, 1) <= "7")
+        with _gid_co_counts(sh, sampled=sampled) as co:
+            out = co.persist()
+            out.count()  # materialize before the scaffolds are released
+            return out
+
+    return _GID_CO_CACHE.get_or_create(_key(spark, sf_dir) + (sampled,), build)
 
 
 @query(
@@ -1615,22 +1573,24 @@ def dedup_containment(spark, sf_dir):
     asymmetric i/min(|A|,|B|) score and the (contained, container)
     orientation resolved by set size. Equal-size pairs are excluded: at i/min >= 0.8 they are
     ordinary near-dups, already owned by the Jaccard query."""
-    cosz = _cached_gid_co_counts(spark, sf_dir)
-    score = (
-        F.lit(1000000.0) * F.col("i") / F.least(F.col("na"), F.col("nb"))
+    return _contained(_cached_gid_co_counts(spark, sf_dir), _CONTAIN_1E6).toDF(
+        "contained_gid", "container_gid", "containment_1e6"
     )
+
+
+def _contained(co, tau_1e6):
+    """``(gid_s, gid_l, containment_1e6)``: the `_gid_co_counts` pairs
+    whose smaller set lies at least ``tau_1e6`` micro-units inside the
+    larger, oriented (contained, container) by set size; equal-size
+    pairs are dropped (near-dups, the Jaccard family's jurisdiction)."""
+    score = F.lit(1000000.0) * F.col("i") / F.least("na", "nb")
     small_first = F.col("na") <= F.col("nb")
-    return (
-        cosz.where((score >= _CONTAIN_1E6) & (F.col("na") != F.col("nb")))
-        .select(
-            F.when(small_first, F.col("ga")).otherwise(F.col("gb")).alias(
-                "contained_gid"
-            ),
-            F.when(small_first, F.col("gb")).otherwise(F.col("ga")).alias(
-                "container_gid"
-            ),
-            F.round(score).cast("long").alias("containment_1e6"),
-        )
+    return co.where(
+        (score >= F.lit(tau_1e6)) & (F.col("na") != F.col("nb"))
+    ).select(
+        F.when(small_first, F.col("ga")).otherwise(F.col("gb")).alias("gid_s"),
+        F.when(small_first, F.col("gb")).otherwise(F.col("ga")).alias("gid_l"),
+        F.round(score).cast("long").alias("containment_1e6"),
     )
 
 
@@ -1698,47 +1658,56 @@ def corpus_duplicate_ngrams(spark, sf_dir):
     becoming a cross-join). Per-doc rollups are two further
     gram/doc-keyed aggregates — no all-pairs step anywhere."""
     grams = _NGRAM_CACHE.get_or_create(
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: t(spark, sf_dir, "documents")
+        _key(spark, sf_dir),
+        lambda: _ngrams(t(spark, sf_dir, "documents"), _NGRAM_N).persist(),
+    )
+    return _ngram_spans(grams, _NGRAM_STOP_DF).orderBy("doc_id")
+
+
+def _ngrams(docs, n):
+    """``(doc_id, g)``: the distinct word-``n``-grams of each doc of a
+    ``(doc_id, text)`` frame (adjacent slices of the non-empty
+    whitespace tokens; docs with fewer than ``n`` tokens carry none)."""
+    return (
+        docs.selectExpr("doc_id", "filter(split(text, ' '), x -> x != '') AS toks")
+        .where(F.expr(f"size(toks) >= {n}"))
         .selectExpr(
             "doc_id",
-            "filter(split(text, ' '), x -> x != '') AS toks",
-        )
-        .where(F.expr(f"size(toks) >= {_NGRAM_N}"))
-        .selectExpr(
-            "doc_id",
-            f"explode(transform(sequence(1, size(toks) - {_NGRAM_N - 1}),"
-            f" i -> array_join(slice(toks, i, {_NGRAM_N}), ' '))) AS g",
+            f"explode(transform(sequence(1, size(toks) - {n - 1}),"
+            f" i -> array_join(slice(toks, i, {n}), ' '))) AS g",
         )
         .distinct()
-        .persist(),
     )
+
+
+def _ngram_spans(grams, stop_df):
+    """n-gram partner stats stage: ``(doc_id, n_grams, n_dup_grams,
+    n_partner_docs, dup_permille)`` for every doc of the ``(doc_id, g)``
+    rows sharing a gram with 2 <= df <= ``stop_df``. ``grams`` is read
+    four times (df stats, per-doc rollup, posting build), so callers
+    persist it.
+
+    Partner pairs expand IN-TASK from per-dup-gram posting lists instead
+    of a second gram-keyed self-join of the full inverted index. The
+    posting lists are built ONLY for dup grams (the join against the
+    df-capped ``dup_grams`` runs first, so a boilerplate mega-gram above
+    the stop cap is never collected into an array), each list is
+    bounded at ``stop_df`` docs by that cap, and the directed (doc,
+    partner) rows stream from a two-level explode with O(list) per-row
+    transient memory. The join's output is already hash-partitioned by
+    g, so the posting aggregate adds no exchange."""
     gstats = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     dup_grams = gstats.where(
-        (F.col("df") >= 2) & (F.col("df") <= _NGRAM_STOP_DF)
+        (F.col("df") >= 2) & (F.col("df") <= stop_df)
     ).select("g")
     per_doc = (
         grams.join(dup_grams.withColumn("is_dup", F.lit(1)), "g", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.coalesce(F.col("is_dup"), F.lit(0))).alias(
-                "n_dup_grams"
-            ),
+            F.sum(F.coalesce(F.col("is_dup"), F.lit(0))).alias("n_dup_grams"),
         )
     )
-    # Round-18 shape (guide §2.1/§2.4 — remove the shuffle): partner
-    # pairs expand IN-TASK from per-dup-gram posting lists instead of a
-    # second gram-keyed self-join of the full inverted index. The
-    # posting lists are built ONLY for dup grams (the join against the
-    # df-capped dup_grams runs first, so a boilerplate mega-gram above
-    # the stop cap is never collected into an array), each list is
-    # bounded at _NGRAM_STOP_DF docs by that cap, and the directed
-    # (doc, partner) rows — exactly the old join's output — stream from
-    # a two-level explode with O(list) per-row transient memory. The
-    # join's output is already hash-partitioned by g, so the posting
-    # aggregate adds no exchange; the old shape's second shuffle of the
-    # whole gram table (the b side) and its sort-merge join are gone.
     partners = (
         grams.join(dup_grams, "g")
         .groupBy("g")
@@ -1746,9 +1715,7 @@ def corpus_duplicate_ngrams(spark, sf_dir):
         .select(F.col("ds"), F.explode("ds").alias("doc_id"))
         .select(
             "doc_id",
-            F.explode(F.expr("filter(ds, y -> y != doc_id)")).alias(
-                "partner"
-            ),
+            F.explode(F.expr("filter(ds, y -> y != doc_id)")).alias("partner"),
         )
         .groupBy("doc_id")
         .agg(F.countDistinct("partner").alias("n_partner_docs"))
@@ -1763,7 +1730,6 @@ def corpus_duplicate_ngrams(spark, sf_dir):
             "n_partner_docs",
             F.expr("1000 * n_dup_grams div n_grams").alias("dup_permille"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1799,73 +1765,13 @@ def duplicate_ngram_spans(
         )
     tcol = "`" + text_col.replace("`", "``") + "`"
     icol = "`" + id_col.replace("`", "``") + "`"
-    grams = (
-        docs.select(F.col(icol).alias("doc_id"), F.col(tcol).alias("text"))
-        .selectExpr(
-            "doc_id",
-            "filter(split(text, ' '), x -> x != '') AS toks",
-        )
-        .where(F.expr(f"size(toks) >= {n}"))
-        .selectExpr(
-            "doc_id",
-            f"explode(transform(sequence(1, size(toks) - {n - 1}),"
-            f" i -> array_join(slice(toks, i, {n}), ' '))) AS g",
-        )
-        .distinct()
-        .persist()
-    )
-    try:
-        gstats = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-        dup_grams = gstats.where(
-            (F.col("df") >= 2) & (F.col("df") <= stop_df)
-        ).select("g")
-        per_doc = (
-            grams.join(dup_grams.withColumn("is_dup", F.lit(1)), "g", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_grams"),
-                F.sum(F.coalesce(F.col("is_dup"), F.lit(0))).alias(
-                    "n_dup_grams"
-                ),
-            )
-        )
-        # Round-19 port of the registered query's partner shape (guide
-        # §2.1/§2.4): directed (doc, partner) rows stream from per-dup-
-        # gram posting lists via a two-level explode instead of a
-        # second gram-keyed self-join of the full inverted index. The
-        # posting lists are built ONLY for dup grams and each is
-        # bounded at ``stop_df`` docs by the df cap, so the per-bucket
-        # array is capped by construction — no size gate needed.
-        partners = (
-            grams.join(dup_grams, "g")
-            .groupBy("g")
-            .agg(F.collect_set("doc_id").alias("ds"))
-            .select(F.col("ds"), F.explode("ds").alias("doc_id"))
-            .select(
-                "doc_id",
-                F.explode(F.expr("filter(ds, y -> y != doc_id)")).alias(
-                    "partner"
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(F.countDistinct("partner").alias("n_partner_docs"))
-        )
+    docs = docs.select(F.col(icol).alias("doc_id"), F.col(tcol).alias("text"))
+    with _scoped(_ngrams(docs, n).persist()) as (grams,):
         return (
-            per_doc.where(F.col("n_dup_grams") > 0)
-            .join(partners, "doc_id")
-            .select(
-                F.col("doc_id").alias(id_col),
-                "n_grams",
-                "n_dup_grams",
-                "n_partner_docs",
-                F.expr("1000 * n_dup_grams div n_grams").alias(
-                    "dup_permille"
-                ),
-            )
+            _ngram_spans(grams, stop_df)
+            .withColumnRenamed("doc_id", id_col)
             .localCheckpoint(eager=True)
         )
-    finally:
-        grams.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -2107,7 +2013,7 @@ def _load_or_build_minhash_index(spark, sf_dir, force_rebuild=False):
         state = read_state_table(spark, state_path)
         if state is not None:
             return state.select("doc_id", "band", "sig")
-    index = _band_index(_minhash(_shingles(_hist_docs(spark, sf_dir))))
+    index = minhash_band_index(_hist_docs(spark, sf_dir))
     os.makedirs(state_path, exist_ok=True)
     write_state_version(index, state_path, retain=2)
     return read_state_table(spark, state_path).select("doc_id", "band", "sig")
@@ -2137,7 +2043,7 @@ def dedup_index_build(spark, sf_dir):
 
     from spark_data_test_spark.state import read_state_table, write_state_version
 
-    index = _band_index(_minhash(_shingles(_hist_docs(spark, sf_dir))))
+    index = minhash_band_index(_hist_docs(spark, sf_dir))
     state_path = _minhash_index_path(sf_dir)
     os.makedirs(state_path, exist_ok=True)
     write_state_version(index, state_path, retain=2)
@@ -2441,43 +2347,33 @@ def _load_or_build_simhash_index(spark, sf_dir):
     if state is not None:
         return state
     hist = _hist_docs(spark, sf_dir)
-    sums = checkpointed(_sp_vote_sums(hist))
-    totals = sums.agg(
-        F.expr("count(*) AS d"),
-        *[F.expr(f"sum(s{p}) AS t{p}") for p in range(_SP_BITS)],
-    )
-    fp = sums.crossJoin(F.broadcast(totals)).selectExpr(
-        "gid", f"{_SP_LO_SQL} AS lo", f"{_SP_HI_SQL} AS hi"
-    )
-    docfp = (
-        hist.select("doc_id", F.md5("text").alias("gid"))
-        .join(fp, "gid")
-        .select("doc_id", "lo", "hi")
-    )
-    meta = totals.selectExpr(
-        "explode(array("
-        + ", ".join(
-            [
-                f"named_struct('sig', CAST({p} AS BIGINT),"
-                f" 'lo', CAST(t{p} AS BIGINT))"
-                for p in range(_SP_BITS)
-            ]
-            + [
-                f"named_struct('sig', CAST({_SP_BITS} AS BIGINT),"
-                " 'lo', CAST(d AS BIGINT))"
-            ]
+    with _sp_fingerprints(hist) as (fp, totals):
+        docfp = _members(hist).join(fp, "gid").select("doc_id", "lo", "hi")
+        meta = totals.selectExpr(
+            "explode(array("
+            + ", ".join(
+                [
+                    f"named_struct('sig', CAST({p} AS BIGINT),"
+                    f" 'lo', CAST(t{p} AS BIGINT))"
+                    for p in range(_SP_BITS)
+                ]
+                + [
+                    f"named_struct('sig', CAST({_SP_BITS} AS BIGINT),"
+                    " 'lo', CAST(d AS BIGINT))"
+                ]
+            )
+            + ")) AS m"
+        ).selectExpr(
+            "CAST(-1 AS BIGINT) AS doc_id",
+            "CAST(-1 AS INT) AS band",
+            "m.sig AS sig",
+            "m.lo AS lo",
+            "CAST(0 AS BIGINT) AS hi",
         )
-        + ")) AS m"
-    ).selectExpr(
-        "CAST(-1 AS BIGINT) AS doc_id",
-        "CAST(-1 AS INT) AS band",
-        "m.sig AS sig",
-        "m.lo AS lo",
-        "CAST(0 AS BIGINT) AS hi",
-    )
-    index = _sp_band_rows(docfp).unionByName(meta)
-    os.makedirs(state_path, exist_ok=True)
-    write_state_version(index, state_path, retain=2)
+        os.makedirs(state_path, exist_ok=True)
+        write_state_version(
+            _sp_band_rows(docfp).unionByName(meta), state_path, retain=2
+        )
     return read_state_table(spark, state_path)
 
 
@@ -2576,9 +2472,7 @@ def dedup_incremental_simhash(spark, sf_dir):
         "gid", f"{lo_sql} AS lo", f"{hi_sql} AS hi"
     )
     sbands = _sp_band_rows(
-        shard.select("doc_id", F.md5("text").alias("gid"))
-        .join(sfp, "gid")
-        .select("doc_id", "lo", "hi")
+        _members(shard).join(sfp, "gid").select("doc_id", "lo", "hi")
     )
     ham = F.expr("bit_count(h.lo ^ n.lo) + bit_count(h.hi ^ n.hi)").cast(
         "long"
@@ -2656,37 +2550,40 @@ def corpus_source_similarity(spark, sf_dir):
     signature machinery over source-concatenated shingle sets); at
     typical mixing-pipeline source counts (dozens) exact is cheaper
     and exact."""
-    d = t(spark, sf_dir, "documents")
-    ssh = (
-        d.where(F.length("text") >= 8)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(text) - 7, 4),"
-                    " i -> substring(text, i, 8))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
+    return (
+        _shingle_overlap(t(spark, sf_dir, "documents"), "source", "text")
+        .toDF("source_a", "source_b", "n_shared", "n_a", "n_b", "jaccard_1e6")
+        .orderBy("source_a", "source_b")
     )
-    # Pairs expand in-task from each shingle's source set, whose width
-    # is the source count, never corpus-sized — no shingle-keyed
-    # self-join.
+
+
+def _shingle_overlap(docs, group_col, text_col):
+    """Per-group shingle overlap stage: ``(group_a, group_b, n_shared,
+    n_a, n_b, jaccard_1e6)`` — exact shingle-set Jaccard between every
+    pair of non-NULL ``group_col`` values sharing at least one shingle,
+    ``group_a < group_b``. Pairs expand in-task from each shingle's
+    group set, whose width is the group count, never corpus-sized — no
+    shingle-keyed self-join."""
+    gq = "`" + group_col.replace("`", "``") + "`"
+    tq = "`" + text_col.replace("`", "``") + "`"
+    ssh = _shingles(
+        docs.select(F.col(gq).alias("_grp"), F.col(tq).alias("text")).where(
+            F.col("_grp").isNotNull()
+        ),
+        "_grp",
+    )
     shared = (
-        bucket_pairs(ssh, ("sh",), "source", None, "source_a", "source_b")
-        .groupBy("source_a", "source_b")
+        bucket_pairs(ssh, ("sh",), "_grp", None, "group_a", "group_b")
+        .groupBy("group_a", "group_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    sizes = ssh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("n_b"))
+    sizes = ssh.groupBy("_grp").agg(F.count(F.lit(1)).alias("n"))
     return (
-        shared.join(F.broadcast(sa), "source_a")
-        .join(F.broadcast(sb), "source_b")
+        shared.join(F.broadcast(sizes.toDF("group_a", "n_a")), "group_a")
+        .join(F.broadcast(sizes.toDF("group_b", "n_b")), "group_b")
         .select(
-            "source_a",
-            "source_b",
+            "group_a",
+            "group_b",
             "n_shared",
             "n_a",
             "n_b",
@@ -2695,7 +2592,6 @@ def corpus_source_similarity(spark, sf_dir):
                 " as bigint)"
             ).alias("jaccard_1e6"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -2729,7 +2625,6 @@ def source_overlap(docs, group_col="source", text_col="text", max_groups=512):
     measured cardinality instead — raise it deliberately if your
     cluster has the memory, or pre-bucket the groups."""
     gq = "`" + group_col.replace("`", "``") + "`"
-    tq = "`" + text_col.replace("`", "``") + "`"
     n_groups = (
         docs.where(F.col(gq).isNotNull()).select(F.col(gq)).distinct().count()
     )
@@ -2742,49 +2637,7 @@ def source_overlap(docs, group_col="source", text_col="text", max_groups=512):
             "only if the cluster can hold group-count-wide arrays "
             "per shingle)"
         )
-    ssh = (
-        docs.select(
-            F.col(gq).alias("_grp"), F.col(tq).alias("text")
-        )
-        .where(F.col("_grp").isNotNull() & (F.length("text") >= 8))
-        .select(
-            "_grp",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(text) - 7, 4),"
-                    " i -> substring(text, i, 8))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    shared = (
-        bucket_pairs(ssh, ("sh",), "_grp", None, "group_a", "group_b")
-        .groupBy("group_a", "group_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sizes = ssh.groupBy("_grp").agg(F.count(F.lit(1)).alias("n"))
-    sa = sizes.select(
-        F.col("_grp").alias("group_a"), F.col("n").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col("_grp").alias("group_b"), F.col("n").alias("n_b")
-    )
-    return (
-        shared.join(F.broadcast(sa), "group_a")
-        .join(F.broadcast(sb), "group_b")
-        .select(
-            "group_a",
-            "group_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            F.expr(
-                "cast(round(1000000.0 * n_shared / (n_a + n_b - n_shared))"
-                " as bigint)"
-            ).alias("jaccard_1e6"),
-        )
-    )
+    return _shingle_overlap(docs, group_col, text_col)
 
 
 # Test-visible hook: formatted physical plan of the most recent
@@ -2849,17 +2702,13 @@ def dedup_bucketed_index_probe(spark, sf_dir):
             "doc_id",
         )
 
-    index = sigb(_band_index(_minhash(_shingles(_hist_docs(spark, sf_dir)))))
+    index = sigb(minhash_band_index(_hist_docs(spark, sf_dir)))
     table = f"spark_graft_bidx_{uuidlib.uuid4().hex[:10]}"
     write_bucketed(index, table, keys=["sigb"], num_buckets=16)
     try:
         idx = read_bucketed(spark, table)
         shard_bands = sigb(
-            _band_index(
-                _minhash(
-                    _shingles(_new_shard(spark, sf_dir, _INC_NEAR_OFFSET, 11))
-                )
-            )
+            minhash_band_index(_new_shard(spark, sf_dir, _INC_NEAR_OFFSET, 11))
         ).withColumnRenamed("doc_id", "new_doc_id")
         joined = shard_bands.join(idx, "sigb").select(
             "new_doc_id", F.col("doc_id").alias("dup_of")
@@ -2953,49 +2802,41 @@ def text_knn_graph(spark, sf_dir):
     has no sub-quadratic plan. Ranking ties break on peer gid
     ascending, so the graph is bit-deterministic against the oracle,
     which replays the identical minhash/banding pipeline in DuckDB."""
-    sh = _cached_shingles(spark, sf_dir)
-    gsets = sh.groupBy("gid").agg(F.collect_set("sh").alias("shs"))
+    gsets = _cached_shingles(spark, sf_dir).groupBy("gid").agg(
+        F.collect_set("sh").alias("shs")
+    )
+    i = F.size(F.array_intersect("sa", "sb"))
     cosz = (
         _cached_gid_pairs(spark, sf_dir)
-        .join(
-            gsets.select(F.col("gid").alias("gid_a"), F.col("shs").alias("sa")),
+        .join(gsets.toDF("gid_a", "sa"), "gid_a")
+        .join(gsets.toDF("gid_b", "sb"), "gid_b")
+        .select(
             "gid_a",
-        )
-        .join(
-            gsets.select(F.col("gid").alias("gid_b"), F.col("shs").alias("sb")),
             "gid_b",
-        )
-        .select(
-            F.col("gid_a").alias("ga"),
-            F.col("gid_b").alias("gb"),
-            F.size(F.array_intersect("sa", "sb")).cast("long").alias("i"),
-            F.size("sa").cast("long").alias("na"),
-            F.size("sb").cast("long").alias("nb"),
+            (F.lit(1000000.0) * i / (F.size("sa") + F.size("sb") - i)).alias("jac"),
         )
     )
-    sym = cosz.selectExpr(
-        "ga AS g", "gb AS p", "i", "na AS n_self", "nb AS n_peer"
-    ).unionByName(
-        cosz.selectExpr(
-            "gb AS g", "ga AS p", "i", "nb AS n_self", "na AS n_peer"
-        )
-    )
-    jac = (
-        F.lit(1000000.0)
-        * F.col("i")
-        / (F.col("n_self") + F.col("n_peer") - F.col("i"))
-    )
-    w = Window.partitionBy("g").orderBy(jac.desc(), "p")
     return (
-        sym.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
+        _top_k(cosz, 3, "gid", "peer_gid")
         .select(
-            F.col("g").alias("gid"),
-            "rank",
-            F.col("p").alias("peer_gid"),
-            F.round(jac).cast("long").alias("jaccard_1e6"),
+            "gid", "rank", "peer_gid", F.round("jac").cast("long").alias("jaccard_1e6")
         )
         .orderBy("gid", "rank")
+    )
+
+
+def _top_k(edges, k, node, peer):
+    """Top-k ranking stage: symmetrize the ``(a, b, score)`` edges and
+    keep each ``node``'s ``k`` best peers, score descending, ties broken
+    by ``peer`` ascending, as ``(node, peer, score, rank)``. The window
+    shuffles edges, never the corpus."""
+    a, b, score = edges.columns
+    sym = edges.toDF(node, peer, score).unionByName(
+        edges.select(F.col(b).alias(node), F.col(a).alias(peer), score)
+    )
+    w = Window.partitionBy(node).orderBy(F.col(score).desc(), peer)
+    return sym.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= F.lit(int(k))
     )
 
 
@@ -3014,7 +2855,7 @@ def exact_dup_groups(docs):
     oracles, exposed for frames the registry does not know about.
     One shuffle (the group-min aggregate); the join back is
     AQE-planned, broadcast while the group table is small."""
-    g = docs.select("doc_id", F.md5("text").alias("gid"))
+    g = _members(docs)
     mins = g.groupBy("gid").agg(F.min("doc_id").alias("_survivor"))
     return g.join(mins, "gid").select(
         "doc_id",
@@ -3056,37 +2897,11 @@ def near_dup_pairs(docs, tau_1e6=500000):
     frame is an executor-local checkpoint (pair-volume-sized,
     dup-proportional) so the internal caches are released before the
     caller executes it."""
-    docs = docs.select("doc_id", "text")
-    members = docs.select("doc_id", F.md5("text").alias("gid")).persist()
-    gsh = (
-        _shingles(
-            docs.where(F.length("text") >= 8)
-            .select(F.md5("text").alias("doc_id"), "text")
-            .dropDuplicates(["doc_id"])
-        )
-        .withColumnRenamed("doc_id", "gid")
-        .persist()
-    )
-    bands = None
-    try:
-        # eager checkpoint, as in `_cached_gid_pairs`: the gate reads
-        # the band index three times; released in the finally once the
-        # (eager) result checkpoint exists
-        bands = checkpointed(
-            _band_index(_minhash(gsh.withColumnRenamed("gid", "doc_id")))
-        )
-        gpairs = _band_pairs(bands).select(
-            F.col("doc_a").alias("gid_a"),
-            F.col("doc_b").alias("gid_b"),
-        )
+    members, gsh = _text_groups(docs.select("doc_id", "text"), keep_short=True)
+    with _scoped(members.persist(), gsh.persist()), _minhash_gid_pairs(gsh) as gp:
         return _expand_group_pairs(
-            members, _jaccard_verify(gsh, gpairs, tau_1e6), jaccard_1e6=1_000_000
+            members, _jaccard_verify(gsh, gp, tau_1e6), jaccard_1e6=1_000_000
         ).localCheckpoint(eager=True)
-    finally:
-        members.unpersist()
-        gsh.unpersist()
-        if bands is not None:
-            release_frame(bands)
 
 
 def containment_pairs(docs, tau_1e6=_CONTAIN_1E6, stop_df=_STOP_SH_DF):
@@ -3129,101 +2944,25 @@ def containment_pairs(docs, tau_1e6=_CONTAIN_1E6, stop_df=_STOP_SH_DF):
         raise ValueError(
             "containment_pairs: tau_1e6 must be in (0, 1000000]"
         )
-    docs = docs.select("doc_id", "text")
-    members = docs.select("doc_id", F.md5("text").alias("gid")).persist()
-    gsh = (
-        _shingles(
-            docs.where(F.length("text") >= 8)
-            .select(F.md5("text").alias("doc_id"), "text")
-            .dropDuplicates(["doc_id"])
-        )
-        .withColumnRenamed("doc_id", "gid")
-        .persist()
-    )
-    # scaffolding persists: every DataFrame reference below re-executes
-    # its subplan independently (hot twice, ha, hb, sizes twice), so
-    # without these the per-gid / per-shingle aggregates recompute
-    # once per consumer — same hazard _cached_gid_co_counts documents
-    sizes = gsh.groupBy("gid").agg(F.count(F.lit(1)).alias("n")).persist()
-    shdf = gsh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).persist()
-    # hot (df > stop_df) is the small Zipf head — the only frame safe
-    # to force-broadcast at any corpus size; rare = all − hot, so the
-    # discovery restriction is a LEFT ANTI join against broadcast(hot)
-    # (never an inner join against the corpus-cardinality rare list)
-    hot = shdf.where(F.col("df") > stop_df).select("sh")
-    ghot = (
-        gsh.join(F.broadcast(hot), "sh")
-        .groupBy("gid")
-        .agg(F.collect_set("sh").alias("hs"))
-        .persist()
-    )
-    try:
-        # in-task discovery over the rare-shingle posting lists, each
-        # bounded at ``stop_df`` gids by the hot anti-join above
-        shr = gsh.join(F.broadcast(hot), "sh", "left_anti")
-        co = (
-            bucket_pairs(shr, ("sh",), "gid", None, out_a="ga", out_b="gb")
-            .groupBy("ga", "gb")
-            .agg(F.count(F.lit(1)).alias("i_rare"))
-        )
-        ha = ghot.select(F.col("gid").alias("ga"), F.col("hs").alias("ha"))
-        hb = ghot.select(F.col("gid").alias("gb"), F.col("hs").alias("hb"))
-        i_hot = F.when(
-            F.col("ha").isNotNull() & F.col("hb").isNotNull(),
-            F.size(F.array_intersect("ha", "hb")),
-        ).otherwise(0)
-        # per-text frames (sizes, hot arrays) join by gid with NO
-        # broadcast hint — corpus-cardinality build sides; AQE
-        # broadcasts them while they fit, shuffles when they don't
-        co = (
-            co.join(
-                sizes.withColumnRenamed("gid", "ga").withColumnRenamed(
-                    "n", "na"
+    members, gsh = _text_groups(docs.select("doc_id", "text"), keep_short=True)
+    with _scoped(members.persist(), gsh.persist()), _gid_co_counts(gsh, stop_df) as co:
+        return (
+            _contained(co, tau_1e6)
+            .join(
+                members.select(
+                    F.col("gid").alias("gid_s"), F.col("doc_id").alias("contained_id")
                 ),
-                "ga",
+                "gid_s",
             )
             .join(
-                sizes.withColumnRenamed("gid", "gb").withColumnRenamed(
-                    "n", "nb"
+                members.select(
+                    F.col("gid").alias("gid_l"), F.col("doc_id").alias("container_id")
                 ),
-                "gb",
+                "gid_l",
             )
-            .join(ha, "ga", "left")
-            .join(hb, "gb", "left")
-            .withColumn("i", (F.col("i_rare") + i_hot).cast("long"))
-        )
-        score = F.lit(1000000.0) * F.col("i") / F.least("na", "nb")
-        small_first = F.col("na") <= F.col("nb")
-        gp = co.where(
-            (score >= F.lit(tau_1e6)) & (F.col("na") != F.col("nb"))
-        ).select(
-            F.when(small_first, F.col("ga")).otherwise(F.col("gb")).alias(
-                "gid_s"
-            ),
-            F.when(small_first, F.col("gb")).otherwise(F.col("ga")).alias(
-                "gid_l"
-            ),
-            F.round(score).cast("long").alias("containment_1e6"),
-        )
-        ms = members.select(
-            F.col("gid").alias("gid_s"), F.col("doc_id").alias("contained_id")
-        )
-        ml = members.select(
-            F.col("gid").alias("gid_l"), F.col("doc_id").alias("container_id")
-        )
-        res = (
-            gp.join(ms, "gid_s")
-            .join(ml, "gid_l")
             .select("contained_id", "container_id", "containment_1e6")
+            .localCheckpoint(eager=True)
         )
-        from spark_data_test_spark.plans.audit import simple_plan
-
-        global _last_containment_plan
-        _last_containment_plan = simple_plan(res)
-        return res.localCheckpoint(eager=True)
-    finally:
-        for frame in (members, gsh, sizes, shdf, ghot):
-            frame.unpersist()
 
 
 def simhash_near_dup_pairs(docs, max_hamming=_SP_HAM_K):
@@ -3251,27 +2990,14 @@ def simhash_near_dup_pairs(docs, max_hamming=_SP_HAM_K):
             f"is only exact up to {_SP_HAM_K} differing bits"
         )
     docs = docs.select("doc_id", "text")
-    members = docs.select("doc_id", F.md5("text").alias("gid")).persist()
-    sums = checkpointed(_sp_vote_sums(docs))
-    totals = sums.agg(
-        F.expr("count(*) AS d"),
-        *[F.expr(f"sum(s{p}) AS t{p}") for p in range(_SP_BITS)],
-    )
-    fp = checkpointed(
-        sums.crossJoin(F.broadcast(totals)).selectExpr(
-            "gid", f"{_SP_LO_SQL} AS lo", f"{_SP_HI_SQL} AS hi"
-        )
-    )
-    try:
+    with _sp_fingerprints(docs) as (fp, _), _scoped(
+        checkpointed(fp), _members(docs).persist()
+    ) as (fp, members):
         gpairs = _sp_gid_pairs(_sp_banded(fp), max_hamming=max_hamming)
         m_fp = members.join(fp.select("gid"), "gid")
         return _expand_group_pairs(m_fp, gpairs, hamming=0).localCheckpoint(
             eager=True
         )
-    finally:
-        members.unpersist()
-        release_frame(sums)
-        release_frame(fp)
 
 
 def knn_text_graph(docs, k=3):
@@ -3295,19 +3021,8 @@ def knn_text_graph(docs, k=3):
     minimum verify floor (any shared shingle), so the whole build is
     bounded by candidate pairs; the top-k window shuffles edges, not
     the corpus."""
-    pairs = near_dup_pairs(docs, tau_1e6=1)
-    sym = pairs.selectExpr(
-        "doc_a AS doc_id", "doc_b AS peer_id", "jaccard_1e6"
-    ).unionByName(
-        pairs.selectExpr("doc_b AS doc_id", "doc_a AS peer_id", "jaccard_1e6")
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("jaccard_1e6").desc(), "peer_id"
-    )
-    return (
-        sym.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
-        .select("doc_id", "peer_id", "rank", "jaccard_1e6")
+    return _top_k(near_dup_pairs(docs, tau_1e6=1), k, "doc_id", "peer_id").select(
+        "doc_id", "peer_id", "rank", "jaccard_1e6"
     )
 
 

@@ -275,8 +275,9 @@ def expand_group_pairs(members, gid_pairs, **intra):
     Jaccard score); every pair inside one group is emitted too,
     because identical contents pair with themselves, and gets the
     constants named in ``intra`` (e.g. ``hamming=0``), cast to the
-    carried column's type. The two halves are disjoint (same versus
-    different gid), so no distinct is needed."""
+    carried column's type. A doc listed under two groups (one id, two
+    texts) never pairs with itself. The two halves are disjoint (same
+    versus different gid), so no distinct is needed."""
     carried = [c for c in gid_pairs.columns if c not in ("gid_a", "gid_b")]
     if sorted(intra) != sorted(carried):
         raise ValueError(
@@ -288,6 +289,7 @@ def expand_group_pairs(members, gid_pairs, **intra):
     cross = (
         gid_pairs.join(ma, "gid_a")
         .join(mb, "gid_b")
+        .where(F.col("_da") != F.col("_db"))
         .select(
             F.least("_da", "_db").alias("doc_a"),
             F.greatest("_da", "_db").alias("doc_b"),

@@ -422,29 +422,35 @@ def test_containment_family_broadcast_discipline(spark, sf_dir):
     """Round-12 pin (VERDICT r11 item 1): the containment family's only
     FORCED broadcast is the small Zipf-head HOT shingle list — the
     rare-shingle restriction is a left_anti join against it (rare =
-    all − hot), and every per-text frame (sizes, hot arrays, member
-    maps) joins by key with NO hint so AQE decides. With the
-    auto-broadcast threshold disabled, any BroadcastHashJoin left in
-    the plan is a forced hint — assert each one is keyed on the
-    shingle column, never on the corpus-cardinality gid/doc keys."""
+    all − hot), and every per-text frame (sizes, hot arrays) joins by
+    key with NO hint so AQE decides. With the auto-broadcast threshold
+    disabled, any BroadcastHashJoin left in the plan is a forced hint —
+    assert each one is keyed on the shingle column, never on the
+    corpus-cardinality gid/doc keys. Checked on the one build's plan
+    hook after each entry point (registered query, `containment_pairs`)."""
     from spark_data_test_spark import containment_pairs
     from spark_data_test_spark.operators import dedup
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     clear_all()  # force a fresh gid-co build
+    plans = []
     try:
+        dedup._last_gid_co_plan = None
         dedup.dedup_containment(spark, sf_dir)
+        plans.append(dedup._last_gid_co_plan)
         docs = (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
             .selectExpr("doc_id", "text")
             .limit(200)
         )
+        dedup._last_gid_co_plan = None
         containment_pairs(docs)
+        plans.append(dedup._last_gid_co_plan)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         clear_all()
-    for plan in (dedup._last_gid_co_plan, dedup._last_containment_plan):
+    for plan in plans:
         assert plan is not None, "plan hooks were not captured"
         bhj = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
         assert bhj, "the forced hot-list broadcast must survive"
@@ -724,18 +730,30 @@ def test_gid_co_discovery_is_in_task(spark, sf_dir):
     stop-capped posting lists — no shuffled join keyed on the shingle
     column may reappear (the only sh-keyed joins are the broadcast
     hot-list anti/inner attaches, covered by the broadcast-discipline
-    pin). Asserted on the pre-persist build hook."""
+    pin). Asserted on the pre-persist build hook after each entry
+    point: the registered query and `containment_pairs` run one build."""
+    from spark_data_test_spark import containment_pairs
     from spark_data_test_spark.operators import dedup
 
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .selectExpr("doc_id", "text")
+        .limit(200)
+    )
     clear_all()
     try:
-        dedup.dedup_containment(spark, sf_dir)
-        plan = dedup._last_gid_co_plan
-        assert plan is not None, "plan hook was not captured"
-        for line in plan.splitlines():
-            if "SortMergeJoin" in line or "ShuffledHashJoin" in line:
-                assert "sh#" not in line, line
-        assert "Generate" in plan, plan
+        for run in (
+            lambda: dedup.dedup_containment(spark, sf_dir),
+            lambda: containment_pairs(docs),
+        ):
+            dedup._last_gid_co_plan = None
+            run()
+            plan = dedup._last_gid_co_plan
+            assert plan is not None, "plan hook was not captured"
+            for line in plan.splitlines():
+                if "SortMergeJoin" in line or "ShuffledHashJoin" in line:
+                    assert "sh#" not in line, line
+            assert "Generate" in plan, plan
     finally:
         clear_all()
 
