@@ -149,79 +149,71 @@ def _cosine(dot_col, qn2, cn2):
     )
 
 
-def _score_against_cents(emb, cents):
-    """Every vector scored against every (broadcast) centroid —
-    retained for QUERY-batch-sized scoring tables (the round-18
-    fold-assign helpers below replace it on every corpus-sized path:
-    the n x ncells row explosion plus the argmax/window shuffle
-    collapse into a per-row fold over the packed model)."""
-    return (
-        emb.select("vec_id", F.col("e").alias("qe"), F.col("n2").alias("qn2"))
-        .crossJoin(F.broadcast(cents))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
-    )
-
-
 def _cents_packed(cents):
     """The whole broadcast-sized centroid model as ONE single-row frame
-    holding a cent_id-sorted array<struct<cent_id, ce, cn2>>. Attaching
-    it is a 1-row broadcast nested-loop join: each vector row gains the
-    model as an array column and folds over it IN PLACE, instead of
-    `_score_against_cents`'s n x ncells row explosion plus an n-row
-    argmax/window exchange (guide §2.4 — the shuffle disappears; the
-    per-row arithmetic is the identical expression tree). collect_list
-    order is nondeterministic but array_sort on the unique cent_id
-    makes the packed array — and every fold below — deterministic."""
+    holding a cent_id-sorted array of its rows, ``cent_id`` first and
+    then the model's own vector and norm columns (so each cosine tree
+    below reads its own column names). Attaching it is a 1-row
+    broadcast nested-loop join: each row gains the model as an array
+    column and folds over it IN PLACE, instead of an n x ncells row
+    explosion plus an n-row argmax/window exchange (guide §2.4).
+    collect_list order is nondeterministic, but array_sort on the
+    unique leading cent_id makes the packed array — and every fold
+    below — deterministic."""
+    rest = [c for c in cents.columns if c != "cent_id"]
     return F.broadcast(
         cents.agg(
             F.array_sort(
-                F.collect_list(F.struct("cent_id", "ce", "cn2"))
+                F.collect_list(F.struct("cent_id", *rest))
             ).alias("_cents")
         )
     )
 
 
-# Per-centroid cosine inside the fold: the same _DOT / _cosine
-# expression tree as `_score_against_cents` evaluated against the
-# packed entry `ct` — exact bigint dot, then the identical
-# double-division, so every cosine is bit-identical to the old path.
+# The two per-centroid cosine op trees over the packed entry ``ct``.
+# `_COS_INT_CT` scores an integer (vec_id, e, n2) row against
+# `train_ivf_centroids`' (cent_id, ce, cn2): exact bigint dot, then
+# ``dot / (sqrt(n2) * sqrt(cn2))`` — the tree the registered IVF
+# oracles replay. `_COS_D_CT` scores a normalized (_id, _v, _n2) row
+# against (cent_id, _cv, _cn2): ``dot / sqrt(n2 * cn2)`` with the dot
+# folded in dimension order — the tree of the library and of the
+# index-probe oracles. The trees round differently, so each pins its
+# own oracles bit for bit.
 _COS_INT_CT = (
     "cast(aggregate(zip_with(e, ct.ce, (x, y) -> x * y),"
     " cast(0 as bigint), (acc, x) -> acc + x) as double)"
     " / (sqrt(cast(n2 as double)) * sqrt(cast(ct.cn2 as double)))"
 )
-
-# Fold-argmax over the packed model: array_max's lexicographic struct
-# comparison on ('c', 'nc') IS max_by's / ROW_NUMBER's
-# (cos DESC, cent_id ASC) tie-break (nc = -cent_id, unique).
-_BEST_CELL_INT = (
-    "array_max(transform(_cents, ct -> named_struct("
-    f"'c', {_COS_INT_CT}, 'nc', -ct.cent_id, 'cid', ct.cent_id)))"
+_COS_D_CT = (
+    "aggregate(zip_with(_v, ct._cv, (x, y) -> x * y),"
+    " cast(0.0 AS double), (acc, x) -> acc + x)"
+    " / sqrt(_n2 * ct._cn2)"
 )
 
 
-def _argmax_cell_int(emb, cents):
-    """Input columns + (_cell, _cos): each vector's argmax-cosine
-    trained cell and its winning cosine, computed as a pure per-row
-    fold — no row explosion, no exchange. Bit-identical to the rn=1
-    row of the old window / max_by assignment (empty-model edge:
-    array_max over an empty packed array is NULL, filtered here,
-    matching the old crossJoin-with-empty's zero rows).
+def _argmax_cell(frame, cents, cos):
+    """Input columns + (_cell, _cos): each row's argmax-cosine cell
+    under the broadcast model and its winning cosine, as a pure per-row
+    fold — no row explosion, no exchange. ``cos`` is one of the cosine
+    trees above. array_max's struct comparison on ('c', 'nc') IS
+    max_by's / ROW_NUMBER's (cos DESC, cent_id ASC) tie-break
+    (nc = -cent_id, unique). Empty-model edge: array_max over an empty
+    packed array is NULL, filtered here, matching an empty crossJoin.
 
     The fold is routed through explode(array(...)) so the Generate
     node materializes `_best` ONCE per row as an attribute: lambda
     expressions are excluded from Spark's common-subexpression
     elimination, so filtering and field-extracting a projected fold
     would re-run the whole ncells x dim fold 2-3x per row (measured
-    1.8x slower than the window shape it replaces; with the single
-    evaluation the fold wins on both CPU and shuffle)."""
-    cols = list(emb.columns)
+    1.8x slower than the window shape it replaced)."""
+    best = (
+        "array_max(transform(_cents, ct -> named_struct("
+        f"'c', {cos}, 'nc', -ct.cent_id, 'cid', ct.cent_id)))"
+    )
+    cols = list(frame.columns)
     return (
-        emb.crossJoin(_cents_packed(cents))
-        .select(
-            *cols, F.explode(F.array(F.expr(_BEST_CELL_INT))).alias("_best")
-        )
+        frame.crossJoin(_cents_packed(cents))
+        .select(*cols, F.explode(F.array(F.expr(best))).alias("_best"))
         .where(F.col("_best").isNotNull())
         .select(
             *cols,
@@ -231,12 +223,12 @@ def _argmax_cell_int(emb, cents):
     )
 
 
-def _topn_cells_int(emb, cents, nprobe):
-    """Input columns + cell: each vector's ``nprobe`` best cells by the
-    same (cos DESC, cent_id ASC) comparator the old row_number window
-    ordered by — an in-place sort of the packed model, sliced to
-    nprobe, exploded (one output row per kept cell, same multiplicity
-    as the rn <= nprobe filter)."""
+def _topn_cells(frame, cents, nprobe, cos):
+    """Input columns + _cell, one row per kept cell: each row's
+    ``nprobe`` best cells by the (cos DESC, cent_id ASC) comparator a
+    row_number window over a crossJoin would order by — an in-place
+    sort of the packed model, sliced to nprobe and exploded (the same
+    multiplicity as an rn <= nprobe filter)."""
     order = (
         "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1"
         " WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1"
@@ -244,13 +236,13 @@ def _topn_cells_int(emb, cents, nprobe):
     )
     topn = (
         "transform(slice(array_sort(transform(_cents, ct -> named_struct("
-        f"'c', {_COS_INT_CT}, 'cid', ct.cent_id)), {order}),"
+        f"'c', {cos}, 'cid', ct.cent_id)), {order}),"
         f" 1, {int(nprobe)}), p -> p.cid)"
     )
-    cols = list(emb.columns)
+    cols = list(frame.columns)
     return (
-        emb.crossJoin(_cents_packed(cents))
-        .select(*cols, F.explode(F.expr(topn)).alias("cell"))
+        frame.crossJoin(_cents_packed(cents))
+        .select(*cols, F.explode(F.expr(topn)).alias("_cell"))
     )
 
 
@@ -258,10 +250,54 @@ def _assign_cells(emb, cents, nprobe):
     """Multi-probe cell assignment: each vector lands in its ``nprobe``
     argmax-cosine centroid cells (deterministic cent_id tie-break)."""
     if int(nprobe) == 1:
-        return _argmax_cell_int(emb, cents).select(
-            "vec_id", F.col("_cell").alias("cell")
-        )
-    return _topn_cells_int(emb, cents, nprobe).select("vec_id", "cell")
+        cells = _argmax_cell(emb, cents, _COS_INT_CT)
+    else:
+        cells = _topn_cells(emb, cents, nprobe, _COS_INT_CT)
+    return cells.select("vec_id", F.col("_cell").alias("cell"))
+
+
+def _exact_cosine_topk(emb):
+    """(query_id, neighbor_id, rank, cos): each query's (vec_id < nq)
+    ``_TOPK`` nearest vectors by exact cosine, ties broken by
+    neighbor_id — the query set broadcast over one corpus scan, then a
+    per-query window (the oracles' exact top-k)."""
+    q = emb.where(F.col("vec_id") < _NQ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("n2").alias("qn2"),
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("e").alias("ce"),
+        F.col("n2").alias("cn2"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), "neighbor_id"
+    )
+    return (
+        c.crossJoin(F.broadcast(q))
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("dot", F.expr(_DOT))
+        .withColumn("cos", _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= _TOPK)
+    )
+
+
+def _ivf_candidates(emb, cents):
+    """(query_id, neighbor_id): every vector of the cells a query
+    (vec_id < nq) probes — its ``_NPROBE`` nearest trained cells —
+    under each vector's argmax cell, the query itself excluded (the
+    oracles' ``cand``)."""
+    assign = _assign_cells(emb, cents, nprobe=1)
+    probes = _assign_cells(
+        emb.where(F.col("vec_id") < _NQ), cents, _NPROBE
+    ).select(F.col("vec_id").alias("query_id"), "cell")
+    return (
+        probes.join(assign, "cell")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
 
 
 # Trained centroids memo: (sf_dir, rounds) -> (rows, schema). Centroid
@@ -358,13 +394,13 @@ def train_ivf_centroids(spark, sf_dir, rounds=_KM_ROUNDS, force_retrain=False):
         for _ in range(rounds):
             # Lloyd round in ONE map-side-combinable aggregation (round
             # 18, guide §2.4): the argmax assignment is a pure per-row
-            # fold over the packed broadcast model (`_argmax_cell_int`
-            # — no n*ncells explosion, no n-row argmax shuffle; the
-            # fold's array_max on (cos, -cent_id) reproduces the
-            # oracle's ROW_NUMBER(ORDER BY cos DESC, cent_id) argmax
+            # fold over the packed broadcast model (`_argmax_cell` — no
+            # n*ncells explosion, no n-row argmax shuffle; the fold's
+            # array_max on (cos, -cent_id) reproduces the oracle's
+            # ROW_NUMBER(ORDER BY cos DESC, cent_id) argmax
             # bit-for-bit), so the only exchange left per round is the
             # ncells-row centroid-mean aggregate below.
-            per_vec = _argmax_cell_int(emb, cents).select(
+            per_vec = _argmax_cell(emb, cents, _COS_INT_CT).select(
                 "vec_id", F.col("_cell").alias("cell"), "e"
             )
             # element-wise integer mean: exact bigint sums, truncated
@@ -464,35 +500,11 @@ def similarity_ivf_train(spark, sf_dir):
 def similarity_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k: query set broadcast, one scan of the
     corpus, per-query window top-k."""
-    emb = _int_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("cos") * 1000000).cast("long").alias("score_1e6"),
-        )
+    return _exact_cosine_topk(_int_embeddings(spark, sf_dir)).select(
+        "query_id",
+        "neighbor_id",
+        "rank",
+        F.round(F.col("cos") * 1000000).cast("long").alias("score_1e6"),
     )
 
 
@@ -549,17 +561,7 @@ def similarity_ivf_ann(spark, sf_dir):
     fraction drops to ~nprobe/sqrt(n) and keeps shrinking as the corpus
     grows, unlike a fixed centroid count."""
     emb = _int_embeddings(spark, sf_dir)
-    cents = train_ivf_centroids(spark, sf_dir)
-    assign = _assign_cells(emb, cents, nprobe=1)
-    probes = _assign_cells(
-        emb.where(F.col("vec_id") < _NQ), cents, _NPROBE
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    cand = (
-        probes.join(assign, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-
+    cand = _ivf_candidates(emb, train_ivf_centroids(spark, sf_dir))
     qe = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -647,45 +649,12 @@ def similarity_ann_recall_report(spark, sf_dir):
     nq query vectors, not n^2); the candidate side reuses the
     trained-centroid assignment."""
     emb = _int_embeddings(spark, sf_dir)
-    cents = train_ivf_centroids(spark, sf_dir)
-
-    # candidate stage (same plan as similarity_ivf_ann's cand)
-    assign = _assign_cells(emb, cents, nprobe=1)
-    probes = _assign_cells(
-        emb.where(F.col("vec_id") < _NQ), cents, _NPROBE
-    ).select(F.col("vec_id").alias("query_id"), "cell")
     cand = (
-        probes.join(assign, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        _ivf_candidates(emb, train_ivf_centroids(spark, sf_dir))
         .distinct()
         .withColumn("is_cand", F.lit(1))
     )
-
-    # exact top-k stage (same plan as similarity_cosine_topk)
-    q = emb.where(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("n2").alias("cn2"),
-    )
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), "neighbor_id"
-    )
-    exact = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT))
-        .withColumn("cos", _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
-        .withColumn("rank", F.row_number().over(w_ex))
-        .where(F.col("rank") <= _TOPK)
-        .select("query_id", "neighbor_id")
-    )
-
+    exact = _exact_cosine_topk(emb).select("query_id", "neighbor_id")
     return (
         exact.join(cand, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -751,13 +720,6 @@ _PQ_SUBDIM = _DIM // _PQ_M  # dims per subspace (16)
 _PQ_K = 16  # codebook entries per subspace
 _PQ_TOPK = 3
 
-# Integer L2 over a subvector pair — exact bigint, so every PQ ranking
-# below is bit-deterministic (no float comparisons anywhere).
-_PQ_L2 = (
-    "aggregate(zip_with(sub, csub, (x, y) -> (x - y) * (x - y)), "
-    "cast(0 as bigint), (acc, x) -> acc + x)"
-)
-
 _PQ_CODEBOOK_CACHE = FrameCache(max_entries=2)
 _PQ_CODES_CACHE = FrameCache(max_entries=2)
 
@@ -811,67 +773,13 @@ codes AS (
   WHERE rn = 1)"""
 
 
-def _pq_subvectors(emb):
-    """(vec_id, s, sub) — each quantized vector split into _PQ_M
-    16-dim subvectors, one row per subspace."""
-    return emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.expr(
-                            f"slice(e, {s * _PQ_SUBDIM + 1}, {_PQ_SUBDIM})"
-                        ).alias("sub"),
-                    )
-                    for s in range(_PQ_M)
-                ]
-            )
-        ).alias("r"),
-    ).select("vec_id", "r.s", "r.sub")
-
-
-def _pq_cb_packed(codebook):
-    """The PQ codebook packed per subspace: ``(s, _cb)`` where ``_cb``
-    is a cent_id-sorted array<struct<cent_id, csub>> — m broadcast
-    rows, so joining it on ``s`` attaches a subspace's whole codebook
-    to each subvector row WITHOUT the sub x ncodes row explosion
-    (guide §2.4; array_sort on the unique cent_id makes the fold
-    below deterministic despite collect_list's free ordering)."""
-    return F.broadcast(
-        codebook.groupBy("s").agg(
-            F.array_sort(
-                F.collect_list(F.struct("cent_id", "csub"))
-            ).alias("_cb")
-        )
-    )
-
-
-# Fold-argmin over the packed subspace codebook: the same exact-bigint
-# _PQ_L2 per entry, and array_min's struct comparison on ('d', 'cid')
-# IS min_by's (d, cent_id) tie-break.
-_BEST_CODE_INT = (
-    "array_min(transform(_cb, cb -> named_struct("
-    "'d', aggregate(zip_with(sub, cb.csub, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as bigint), (acc, x) -> acc + x),"
-    "'cid', cb.cent_id)))"
-)
-
-
-def _pq_assign(sub, codebook):
-    """Nearest codebook entry per (vec_id, subspace) by exact integer
-    L2 with cent_id tie-break — a pure per-row fold over the packed
-    broadcast codebook (round 18): no sub x ncodes explosion, no
-    argmin shuffle; bit-identical distances and the identical
-    (d, cent_id) winner rule as the old min_by aggregate."""
-    return (
-        sub.join(_pq_cb_packed(codebook), "s")
-        .withColumn("_best", F.expr(_BEST_CODE_INT))
-        .select(
-            "vec_id", "s", F.col("_best.cid").alias("cent_id"), "sub"
-        )
-    )
+def _pq_vectors(emb):
+    """The quantized vectors as the (_id, _v) frame the library's PQ
+    kernels (`_pq_split`, `_pq_nearest`, `_adc_tables`) read. They
+    stay bigint: each kernel folds integer L2 terms into a double sum,
+    and every such sum (at most 64 x (2 * 10^6)^2 < 2^53) is exact, so
+    the registered PQ values and winners are the integer ones."""
+    return emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("_v"))
 
 
 def _pq_codebook(spark, sf_dir):
@@ -883,24 +791,21 @@ def _pq_codebook(spark, sf_dir):
 
     def build():
         emb = _int_embeddings(spark, sf_dir)
-        sub = _pq_subvectors(emb)
+        vecs = _pq_vectors(emb)
         seeds = (
             emb.withColumn(
                 "mix", (F.col("vec_id") * _MIX_A + _MIX_C) % F.lit(_MIX_M)
             )
             .orderBy("mix", "vec_id")
             .limit(_PQ_K)
-            .select(F.col("vec_id").alias("cent_id"))
+            .select(F.col("vec_id").alias("_id"))
         )
-        cb0 = (
-            _pq_subvectors(
-                emb.join(F.broadcast(seeds), emb.vec_id == seeds.cent_id)
-                .select("vec_id", "e", "n2")
-            )
-            .select(F.col("vec_id").alias("cent_id"), "s",
-                    F.col("sub").alias("csub"))
+        cb0 = _pq_split(
+            vecs.join(F.broadcast(seeds), "_id"), _PQ_M, _PQ_SUBDIM
+        ).select(
+            F.col("_id").alias("cent_id"), "s", F.col("sub").alias("csub")
         )
-        a1 = _pq_assign(sub, cb0)
+        a1 = _pq_nearest(_pq_split(vecs, _PQ_M, _PQ_SUBDIM), cb0)
         sums = a1.groupBy("s", F.col("cent_id").alias("cell")).agg(
             F.count(F.lit(1)).alias("c"),
             *[
@@ -930,12 +835,48 @@ def _pq_codes(spark, sf_dir):
     the representation ADC search scans INSTEAD of raw vectors."""
     return _PQ_CODES_CACHE.get_or_create(
         (spark.sparkContext.applicationId, sf_dir),
-        lambda: _pq_assign(
-            _pq_subvectors(_int_embeddings(spark, sf_dir)),
+        lambda: _pq_nearest(
+            _pq_split(
+                _pq_vectors(_int_embeddings(spark, sf_dir)), _PQ_M, _PQ_SUBDIM
+            ),
             _pq_codebook(spark, sf_dir),
         )
-        .select("vec_id", "s", "cent_id")
+        .select(F.col("_id").alias("vec_id"), "s", "cent_id")
         .persist(),
+    )
+
+
+def _query_tables(spark, sf_dir):
+    """The ADC distance tables of the queries (vec_id < nq), broadcast:
+    nq x m x ncodes rows (the oracles' ``qd``)."""
+    queries = _int_embeddings(spark, sf_dir).where(F.col("vec_id") < _NQ)
+    tables = _adc_tables(
+        _pq_vectors(queries), _pq_codebook(spark, sf_dir), (_PQ_M, _PQ_SUBDIM)
+    )
+    return F.broadcast(tables)
+
+
+def _flat_adc(spark, sf_dir):
+    """(query_id, vec_id, adc_dist): every query's ADC distance to
+    every other encoded vector (the oracles' ``adc``)."""
+    tables = _query_tables(spark, sf_dir)
+    return _adc(_pq_codes(spark, sf_dir), tables, ["s", "cent_id"])
+
+
+def _adc_topk(adc, k):
+    """(query_id, neighbor_id, adc_dist, rank): each query's ``k``
+    smallest ADC distances, ties broken by neighbor id, as bigints
+    (exact: the sums are integers below 2^53)."""
+    w = Window.partitionBy("query_id").orderBy("adc_dist", "vec_id")
+    return (
+        adc.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= int(k))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("adc_dist").cast("long").alias("adc_dist"),
+            F.col("rank").cast("long").alias("rank"),
+        )
     )
 
 
@@ -1033,32 +974,9 @@ def similarity_pq_ann(spark, sf_dir):
     top-k. Exact integer arithmetic end-to-end makes the approximate
     ranking itself bit-deterministic — the oracle replays training,
     encoding, and ADC in SQL and the hash must match."""
-    codes = _pq_codes(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    queries_sub = _pq_subvectors(
-        _int_embeddings(spark, sf_dir).where(F.col("vec_id") < _NQ)
-    )
-    qd = (
-        queries_sub.join(F.broadcast(cb), "s")
-        .withColumn("d", F.expr(_PQ_L2))
-        .select(F.col("vec_id").alias("q"), "s", "cent_id", "d")
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["s", "cent_id"])
-        .where(F.col("vec_id") != F.col("q"))
-        .groupBy("q", F.col("vec_id").alias("x"))
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("q").orderBy("adc_dist", "x")
     return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= _PQ_TOPK)
-        .select(
-            F.col("q").alias("q_vec_id"),
-            F.col("x").alias("neighbor_id"),
-            "adc_dist",
-            F.col("rn").cast("long").alias("rank"),
-        )
+        _adc_topk(_flat_adc(spark, sf_dir), _PQ_TOPK)
+        .withColumnRenamed("query_id", "q_vec_id")
         .orderBy("q_vec_id", "rank")
     )
 
@@ -1115,46 +1033,15 @@ def similarity_ivfpq_ann(spark, sf_dir):
     `_pq_codebook`); the oracle replays coarse training, probing, PQ
     training, encoding, and ADC in one CTE chain."""
     emb = _int_embeddings(spark, sf_dir)
-    cents = train_ivf_centroids(spark, sf_dir)
-    assign = _assign_cells(emb, cents, nprobe=1)
-    probes = _assign_cells(
-        emb.where(F.col("vec_id") < _NQ), cents, _NPROBE
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    cand = (
-        probes.join(assign, "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    cand = _ivf_candidates(emb, train_ivf_centroids(spark, sf_dir)).select(
+        "query_id", F.col("neighbor_id").alias("vec_id")
     )
-
-    cb = _pq_codebook(spark, sf_dir)
-    codes = _pq_codes(spark, sf_dir)
-    qd = (
-        _pq_subvectors(emb.where(F.col("vec_id") < _NQ))
-        .join(F.broadcast(cb), "s")
-        .withColumn("d", F.expr(_PQ_L2))
-        .select(F.col("vec_id").alias("query_id"), "s", "cent_id", "d")
+    adc = _adc(
+        cand.join(_pq_codes(spark, sf_dir), "vec_id"),
+        _query_tables(spark, sf_dir),
+        ["query_id", "s", "cent_id"],
     )
-    adc = (
-        cand.join(
-            codes.select(F.col("vec_id").alias("neighbor_id"), "s", "cent_id"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qd), ["query_id", "s", "cent_id"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w_rank = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= _IVF_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _adc_topk(adc, _IVF_TOPK).orderBy("query_id", "rank")
 
 
 @query(
@@ -1205,27 +1092,9 @@ def similarity_pq_recall_report(spark, sf_dir):
     numbers are bit-deterministic and the oracle replays them
     verbatim."""
     emb = _int_embeddings(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    codes = _pq_codes(spark, sf_dir)
-    qd = (
-        _pq_subvectors(emb.where(F.col("vec_id") < _NQ))
-        .join(F.broadcast(cb), "s")
-        .withColumn("d", F.expr(_PQ_L2))
-        .select(F.col("vec_id").alias("q"), "s", "cent_id", "d")
+    adc_topk = _adc_topk(_flat_adc(spark, sf_dir), _PQ_TOPK).select(
+        "query_id", "neighbor_id"
     )
-    adc = (
-        codes.join(F.broadcast(qd), ["s", "cent_id"])
-        .where(F.col("vec_id") != F.col("q"))
-        .groupBy(F.col("q").alias("query_id"), F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    adc_topk = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .where(F.col("rn") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-
     qe = emb.where(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -1398,14 +1267,14 @@ def similarity_centroid_outliers(spark, sf_dir):
     growing term is the argmax over the N x k scores. A row_number
     window shuffled ALL N x k rows on vec_id; the round-7 max-struct
     aggregate pre-combined them map-side (~N rows crossed); the
-    round-18 `_argmax_cell_int` fold computes the same argmax
+    round-18 `_argmax_cell` fold computes the same argmax
     (lexicographic max on (cos, -cent_id) == cos desc, cent_id asc —
     the oracle's fassign rule) per row over the packed broadcast
     model, so NO assignment rows cross an exchange at all — the only
     remaining shuffle is the per-cell bottom-5 window."""
     emb = _int_embeddings(spark, sf_dir)
     cents = train_ivf_centroids(spark, sf_dir)
-    assigned = _argmax_cell_int(emb, cents).select(
+    assigned = _argmax_cell(emb, cents, _COS_INT_CT).select(
         "vec_id",
         F.col("_cell").alias("cell"),
         F.col("_cos").alias("cos"),
@@ -1548,7 +1417,7 @@ def similarity_incremental_ingest(spark, sf_dir):
         )
         .withColumn("n2", F.expr(_NORM2))
     )
-    assigned = _argmax_cell_int(shard, cents).select(
+    assigned = _argmax_cell(shard, cents, _COS_INT_CT).select(
         "vec_id",
         F.col("_cell").alias("cell"),
         F.expr("cast(round(_cos * 1000000) as bigint)").alias("cos_1e6"),
@@ -1821,7 +1690,7 @@ def similarity_ivfpq_index_probe(spark, sf_dir):
     and the final probe prunes to each query's {_NPROBE} best cells
     before ADC-ranking only those cells' resolved rows. The oracle
     replays coarse training, the library's cell-assignment cosine
-    (``dot / sqrt(n2 * cn2)`` — the exact op tree `_argmax_cell_d`
+    (``dot / sqrt(n2 * cn2)`` — the exact op tree `_COS_D_CT`
     evaluates, so assignment ties break identically), PQ encoding for
     base and shard, latest-wins supersession, tombstones, probing, and
     candidate-restricted ADC. Scale shape: probes touch O(batch x
@@ -2072,29 +1941,7 @@ def similarity_refined_ann(spark, sf_dir):
     vectors for batch x shortlist rows only — never the corpus — and
     both stages rank in per-query windows."""
     emb = _int_embeddings(spark, sf_dir)
-    codes = _pq_codes(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    qd = (
-        _pq_subvectors(emb.where(F.col("vec_id") < _NQ))
-        .join(F.broadcast(cb), "s")
-        .withColumn("d", F.expr(_PQ_L2))
-        .select(F.col("vec_id").alias("q"), "s", "cent_id", "d")
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["s", "cent_id"])
-        .where(F.col("vec_id") != F.col("q"))
-        .groupBy("q", "vec_id")
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("q").orderBy("adc_dist", "vec_id")
-    shortlist = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 4 * _PQ_TOPK)
-        .select(
-            F.col("q").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-        )
-    )
+    shortlist = _adc_topk(_flat_adc(spark, sf_dir), 4 * _PQ_TOPK)
     refined = refine_topk(
         shortlist,
         emb.where(F.col("vec_id") < _NQ).select("vec_id", "e"),
@@ -2131,8 +1978,13 @@ def cosine_topk(corpus, queries, k=10, id_col="vec_id", vec_col="emb"):
     ``(query_id, neighbor_id, rank, cosine)`` with ties broken by
     ``neighbor_id``; a corpus row sharing the query's id is excluded
     (self-match), and zero-norm vectors on either side are dropped
-    (cosine undefined). Use the trained IVF/PQ family when the query
-    set no longer broadcasts or the corpus no longer rescans."""
+    (cosine undefined). A row whose vector dim differs from its
+    frame's first vector drops; queries and corpus of different dims
+    raise. Use the trained IVF/PQ family when the query set no longer
+    broadcasts or the corpus no longer rescans."""
+    queries, qdim = _dim_locked(queries, vec_col)
+    corpus, cdim = _dim_locked(corpus, vec_col)
+    _check_same_dim(qdim, cdim, "cosine_topk")
     qn2 = F.expr(
         "aggregate(qe, cast(0.0 AS double), (acc, x) ->"
         " acc + cast(x AS double) * cast(x AS double))"
@@ -2175,11 +2027,8 @@ def cosine_topk(corpus, queries, k=10, id_col="vec_id", vec_col="emb"):
     )
 
 
-def _norm_vectors(frame, id_col, vec_col, op):
-    """(_id, _v double array, _n2) with zero-norm vectors dropped —
-    the shared entry normalization of the frame-level ANN operators."""
-    if frame.select(F.size(F.col(vec_col)).alias("d")).first() is None:
-        raise ValueError(f"{op}: input frame is empty")
+def _normalized(frame, id_col, vec_col):
+    """(_id, _v double array, _n2) with zero-norm vectors dropped."""
     as_vec = f"transform({vec_col}, x -> cast(x AS double))"
     norm2 = "aggregate(_v, cast(0.0 AS double), (acc, x) -> acc + x * x)"
     return (
@@ -2189,79 +2038,27 @@ def _norm_vectors(frame, id_col, vec_col, op):
     )
 
 
-def _cents_packed_d(cents):
-    """Double-family twin of `_cents_packed`: the (cent_id, _cv, _cn2)
-    model as ONE single-row broadcast frame holding a cent_id-sorted
-    struct array, so assignment is a per-row fold instead of an
-    n x ncells crossJoin + argmax shuffle (guide §2.4)."""
-    return F.broadcast(
-        cents.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cent_id", "_cv", "_cn2"))
-            ).alias("_cents")
+def _norm_locked(frame, id_col, vec_col, op):
+    """``(frame, dim)``: the `_normalized` entry frame of the
+    frame-level ANN operators with every row whose dim differs from
+    the first nonzero vector's dropped (`_dim_locked`); dim is None
+    when no nonzero vector exists. An empty input raises."""
+    v, dim = _dim_locked(_normalized(frame, id_col, vec_col))
+    if dim is None and frame.first() is None:
+        raise ValueError(f"{op}: input frame is empty")
+    return v, dim
+
+
+def _norm_vectors(frame, id_col, vec_col, op):
+    """The dim-locked frame of `_norm_locked`."""
+    return _norm_locked(frame, id_col, vec_col, op)[0]
+
+
+def _check_same_dim(qdim, cdim, op):
+    if qdim is not None and cdim is not None and qdim != cdim:
+        raise ValueError(
+            f"{op}: query vector dim {qdim} != corpus vector dim {cdim}"
         )
-    )
-
-
-# Per-centroid cosine inside the fold: ``dot / sqrt(n2 * cn2)`` with
-# the dot folded in dimension order and a single sqrt of the norm
-# product — the op tree the registered oracles replay.
-_COS_D_CT = (
-    "aggregate(zip_with(_v, ct._cv, (x, y) -> x * y),"
-    " cast(0.0 AS double), (acc, x) -> acc + x)"
-    " / sqrt(_n2 * ct._cn2)"
-)
-
-# array_max's struct comparison on ('c', 'nc') IS max_by's /
-# ROW_NUMBER's (cos DESC, cent_id ASC) tie-break (nc = -cent_id).
-_BEST_CELL_D = (
-    "array_max(transform(_cents, ct -> named_struct("
-    f"'c', {_COS_D_CT}, 'nc', -ct.cent_id, 'cid', ct.cent_id)))"
-)
-
-
-def _argmax_cell_d(frame, cents):
-    """Input columns + _cell: each (_id, _v, _n2) row's argmax-cosine
-    cell under the broadcast model, as a pure per-row fold — the
-    shared assignment core of `_train_double_cells`' Lloyd rounds,
-    `ivf_topk`, and every index build/ingest/commit path — the same
-    winners a crossJoin + max_by((cos, -cent_id)) aggregate picks
-    (empty-model edge: the NULL best is filtered, matching an empty
-    crossJoin).
-    Routed through explode(array(...)) so the fold evaluates ONCE per
-    row — see `_argmax_cell_int`'s lambda-CSE note."""
-    cols = list(frame.columns)
-    return (
-        frame.crossJoin(_cents_packed_d(cents))
-        .select(
-            *cols, F.explode(F.array(F.expr(_BEST_CELL_D))).alias("_best")
-        )
-        .where(F.col("_best").isNotNull())
-        .select(*cols, F.col("_best.cid").alias("_cell"))
-    )
-
-
-def _topn_cells_d(frame, cents, nprobe):
-    """Input columns + _cell, one row per kept cell: each row's
-    ``nprobe`` best cells by the (cos DESC, cent_id ASC) comparator a
-    row_number window over a crossJoin would order by — an in-place
-    sort of the packed model, sliced and exploded; the cell pick of
-    `ivf_topk`, `semantic_prune` and every index probe."""
-    order = (
-        "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1"
-        " WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1"
-        " ELSE 0 END"
-    )
-    topn = (
-        "transform(slice(array_sort(transform(_cents, ct -> named_struct("
-        f"'c', {_COS_D_CT}, 'cid', ct.cent_id)), {order}),"
-        f" 1, {int(nprobe)}), p -> p.cid)"
-    )
-    cols = list(frame.columns)
-    return (
-        frame.crossJoin(_cents_packed_d(cents))
-        .select(*cols, F.explode(F.expr(topn)).alias("_cell"))
-    )
 
 
 def _train_double_cells(c, ncells, rounds, op):
@@ -2274,10 +2071,10 @@ def _train_double_cells(c, ncells, rounds, op):
     the end. Returns the broadcast-wrapped local centroid frame
     (cent_id, _cv, _cn2)."""
     spark = c.sparkSession
-    dim = c.select(F.size("_v").alias("d")).first()["d"]
     n = c.count()
     if n == 0:
         raise ValueError(f"{op}: corpus has no nonzero vectors")
+    dim = c.select(F.size("_v").alias("d")).first()["d"]
     cells = int(ncells) if ncells else int(math.ceil(math.sqrt(n)))
     seeds = (
         c.withColumn("_mix", F.xxhash64(F.col("_id").cast("string")))
@@ -2294,7 +2091,9 @@ def _train_double_cells(c, ncells, rounds, op):
     )
     cents = seeds
     for _ in range(int(rounds)):
-        per_vec = _argmax_cell_d(c, cents).select("_id", "_cell", "_v")
+        per_vec = _argmax_cell(c, cents, _COS_D_CT).select(
+            "_id", "_cell", "_v"
+        )
         sums = per_vec.groupBy("_cell").agg(
             F.count("*").alias("_c"),
             *[F.sum(F.col("_v")[i]).alias(f"_s{i}") for i in range(dim)],
@@ -2354,7 +2153,9 @@ def ivf_topk(
     mean uses known-width sum columns (dimension read once from the
     first corpus row), keeping every aggregation whole-stage-codegen.
     Vectors are cast to double once on entry, so integer and float
-    embedding columns both work.
+    embedding columns both work. A row whose vector dim differs from
+    its frame's first nonzero vector drops; queries and corpus of
+    different dims raise.
 
     Cache lifetime: the normalized corpus projection is persisted for
     the call (training forces it; the returned frame's assignment and
@@ -2362,18 +2163,19 @@ def ivf_topk(
     MEMORY_AND_DISK storage and are LRU-evicted under pressure; call
     ``spark.catalog.clearCache()`` (or unpersist via the storage tab)
     to reclaim them eagerly after consuming the result."""
-    c = _norm_vectors(corpus, id_col, vec_col, "ivf_topk")
-    q = _norm_vectors(queries, id_col, vec_col, "ivf_topk")
+    c, cdim = _norm_locked(corpus, id_col, vec_col, "ivf_topk")
+    q, qdim = _norm_locked(queries, id_col, vec_col, "ivf_topk")
+    _check_same_dim(qdim, cdim, "ivf_topk")
 
     # -- train: deterministic spherical k-means on the corpus ---------
     c = c.persist()  # seeds + every Lloyd round + assignment re-consume it
     cents = _train_double_cells(c, ncells, rounds, "ivf_topk")
 
     # -- probe: corpus -> argmax cell, queries -> nprobe cells --------
-    assign = _argmax_cell_d(c, cents).select(
+    assign = _argmax_cell(c, cents, _COS_D_CT).select(
         F.col("_id").alias("neighbor_id"), "_cell"
     )
-    probes = _topn_cells_d(q, cents, nprobe).select(
+    probes = _topn_cells(q, cents, nprobe, _COS_D_CT).select(
         F.col("_id").alias("query_id"), "_cell"
     )
     cand = (
@@ -2470,7 +2272,7 @@ def semantic_prune(
     reps = reps.persist()
     cents = _train_double_cells(reps, ncells, rounds, "semantic_prune")
 
-    assign = _topn_cells_d(reps, cents, nprobe).select("_id", "_cell")
+    assign = _topn_cells(reps, cents, nprobe, _COS_D_CT).select("_id", "_cell")
     payload = assign.join(reps, "_id")
     a = payload.select(
         F.col("_id").alias("_ga"),
@@ -3226,16 +3028,18 @@ def _pq_pack_codes(codes, id_col):
 # -- family codec hooks -----------------------------------------------------
 
 
-def _dim_locked(q):
-    """First-row dim lock over a ``_v`` frame: ``(rows of that dim,
-    dim)`` — ragged rows are a data bug upstream and drop rather than
-    mis-split or NULL-pad a ``zip_with`` — or ``(q, None)`` when the
-    frame is empty."""
-    first = q.select(F.size("_v").alias("d")).first()
+def _dim_locked(q, col="_v"):
+    """First-row dim lock over a vector column: ``(rows of the dim of
+    the first non-NULL vector, dim)`` — ragged rows are a data bug
+    upstream and drop rather than mis-split or NULL-pad a ``zip_with``
+    — or ``(q, None)`` when no row holds a vector."""
+    first = (
+        q.where(F.col(col).isNotNull()).select(F.size(col).alias("d")).first()
+    )
     if first is None:
         return q, None
     dim = int(first.d)
-    return q.where(F.size("_v") == dim), dim
+    return q.where(F.size(col) == dim), dim
 
 
 def _check_pq_dims(dim, committed, op):
@@ -3257,7 +3061,7 @@ def _ivf_batch(d, committed, op, id_col, vec_col):
     mismatched vector would NULL-pad the cosine fold and land an
     unsound posting row. An all-zero-norm batch passes through empty
     (the probe answers nothing, the ingest commits nothing)."""
-    q, dim = _dim_locked(_norm_vectors(d, id_col, vec_col, op))
+    q, dim = _norm_locked(d, id_col, vec_col, op)
     cdim = int(committed.shape["dim"] or 0)
     if dim is not None and dim != cdim:
         raise ValueError(
@@ -3275,7 +3079,7 @@ def _pq_batch(d, committed, op, id_col, vec_col):
 def _ivfpq_batch(d, committed, op, id_col, vec_col):
     """Zero-norm drop (a zero vector has no coarse cell), then the
     codebook shape checks; None for an all-zero-norm batch."""
-    q, dim = _dim_locked(_norm_vectors(d, id_col, vec_col, op))
+    q, dim = _norm_locked(d, id_col, vec_col, op)
     if dim is None:
         return None
     _check_pq_dims(dim, committed, op)
@@ -3293,7 +3097,7 @@ def _cents(frames):
 
 def _probed_cells(q, committed, nprobe):
     """(query_id, cell): each query's ``nprobe`` best committed cells."""
-    return _topn_cells_d(q, _cents(committed.frames), nprobe).select(
+    return _topn_cells(q, _cents(committed.frames), nprobe, _COS_D_CT).select(
         F.col("_id").alias("query_id"), F.col("_cell").alias("cell")
     )
 
@@ -3310,7 +3114,7 @@ def _packed_codes(vectors, frames):
 def _ivf_encode(vectors, frames):
     """(vec_id, cell, v, n2): each vector's argmax-cosine committed
     cell, carrying the vector itself (IVF-Flat inverted lists)."""
-    return _argmax_cell_d(vectors, _cents(frames)).select(
+    return _argmax_cell(vectors, _cents(frames), _COS_D_CT).select(
         F.col("_id").alias("vec_id"),
         F.col("_cell").alias("cell"),
         F.col("_v").alias("v"),
@@ -3349,18 +3153,27 @@ def _ivf_score(q, log, committed, nprobe):
     )
 
 
-def _adc(candidates, q, committed, keys):
-    """(query_id, vec_id, adc_dist): each candidate's ADC distance, the
-    sum of its m lookups in the query's exact float distance table to
-    every codebook entry (nq x m x ncodes rows, joined WITHOUT a hint —
-    AQE broadcasts modest batches); self-matches excluded."""
-    m, subdim = int(committed.shape["m"]), int(committed.shape["subdim"])
-    tables = (
-        _pq_split(q, m, subdim)
-        .join(F.broadcast(committed.frames["codebook"]), "s")
+def _adc_tables(q, codebook, shape):
+    """(query_id, s, cent_id, d): each (_id, _v) query's exact L2
+    distance table to every entry of a codebook of ``shape`` (m,
+    subdim) — nq x m x ncodes rows. The one ADC table of the
+    registered queries, `pq_topk` and the PQ and IVF-PQ index
+    probes."""
+    return (
+        _pq_split(q, *shape)
+        .join(F.broadcast(codebook), "s")
         .withColumn("d", F.expr(_PQ_L2F))
         .select(F.col("_id").alias("query_id"), "s", "cent_id", "d")
     )
+
+
+def _adc(candidates, tables, keys):
+    """(query_id, vec_id, adc_dist): each candidate's ADC distance, the
+    sum of its m lookups in its query's `_adc_tables`; self-matches
+    excluded. ``candidates`` carries vec_id plus the ``keys`` its rows
+    join the tables on. The library joins the tables WITHOUT a hint
+    (AQE broadcasts modest batches; a corpus-sized batch shuffles);
+    the registered queries broadcast their nq-row tables."""
     return (
         candidates.join(tables, keys)
         .where(F.col("vec_id") != F.col("query_id"))
@@ -3369,10 +3182,16 @@ def _adc(candidates, q, committed, keys):
     )
 
 
+def _committed_tables(q, committed):
+    """The batch's ADC tables against the committed codebook."""
+    shape = (int(committed.shape["m"]), int(committed.shape["subdim"]))
+    return _adc_tables(q, committed.frames["codebook"], shape)
+
+
 def _pq_score(q, log, committed, nprobe):
     # flat PQ: every live code row is a candidate (O(index) per query)
     flat = log.select("vec_id", F.posexplode("codes").alias("s", "cent_id"))
-    return _adc(flat, q, committed, ["s", "cent_id"])
+    return _adc(flat, _committed_tables(q, committed), ["s", "cent_id"])
 
 
 def _ivfpq_score(q, log, committed, nprobe):
@@ -3381,7 +3200,9 @@ def _ivfpq_score(q, log, committed, nprobe):
         "vec_id", "cell", F.posexplode("codes").alias("s", "cent_id")
     )
     cand = _probed_cells(q, committed, nprobe).join(flat, "cell")
-    return _adc(cand, q, committed, ["query_id", "s", "cent_id"])
+    return _adc(
+        cand, _committed_tables(q, committed), ["query_id", "s", "cent_id"]
+    )
 
 
 def _cell_stats(resolved, stale):
@@ -3649,7 +3470,9 @@ def ivf_index_stats(spark, index_path):
 # ANY (id, vector) frame: float arithmetic, any dim divisible by m,
 # ids of any orderable type (seed order is xxhash64 of the id string —
 # the engine's pure-function sampling trick — instead of the integer
-# LCG the oracle replays).
+# LCG the oracle replays). The split, encode and ADC kernels below are
+# also the registered family's: it feeds them its quantized vectors and
+# codebook (DESIGN.md "ANN kernels").
 # ---------------------------------------------------------------------------
 
 _PQ_L2F = (
@@ -3689,27 +3512,10 @@ def _pq_split(frame, m, subdim):
     ).select("_id", "r.s", "r.sub")
 
 
-def _pq_cb_packed_f(codebook):
-    """Float-family twin of `_pq_cb_packed`: the codebook packed per
-    subspace as ``(s, _cb)`` with ``_cb`` a cent_id-sorted
-    array<struct<cent_id, csub>> — m broadcast rows, so joining on
-    ``s`` attaches a subspace's whole codebook to each subvector row
-    without the sub x ncodes row explosion (array_sort on the unique
-    cent_id makes the fold deterministic despite collect_list's free
-    ordering; cent_id is any orderable id type here, which struct
-    comparison handles the same way min_by's tie-break struct did)."""
-    return F.broadcast(
-        codebook.groupBy("s").agg(
-            F.array_sort(
-                F.collect_list(F.struct("cent_id", "csub"))
-            ).alias("_cb")
-        )
-    )
-
-
-# Fold-argmin over the packed float codebook: the same `_PQ_L2F`
-# expression per entry (identical double fold order), and array_min's
-# struct comparison on ('d', 'cid') IS min_by's (d, cent_id) tie-break.
+# Fold-argmin over a subspace's packed codebook: exact L2 per entry
+# (integer terms into a double sum for the registered quantized
+# vectors — exact below 2^53), and array_min's struct comparison on
+# ('d', 'cid') IS min_by's (d, cent_id) tie-break.
 _BEST_CODE_F = (
     "array_min(transform(_cb, cb -> named_struct("
     "'d', aggregate(zip_with(sub, cb.csub, (x, y) -> (x - y) * (x - y)),"
@@ -3719,16 +3525,19 @@ _BEST_CODE_F = (
 
 
 def _pq_nearest(sub, codebook):
-    """Nearest codebook entry per (_id, s): exact float L2 with cent_id
-    tie-break, as a pure per-row fold over the packed broadcast
-    codebook (the model is m x ncodes rows — broadcast-sized at any
-    corpus size, same argument as the registered `_pq_assign`, whose
-    integer fold this mirrors): bit-identical distances and the
-    identical (d, cent_id) winner rule as the old min_by aggregate,
-    with no sub x ncodes explosion and no corpus-sized argmin
-    exchange."""
+    """Nearest codebook entry per (_id, s) with cent_id tie-break, as a
+    pure per-row fold: the codebook is packed per subspace as ``(s,
+    _cb)`` with ``_cb`` a cent_id-sorted array<struct<cent_id, csub>> —
+    m broadcast rows, so joining on ``s`` attaches a subspace's whole
+    codebook to each subvector row without the sub x ncodes row
+    explosion or a corpus-sized argmin exchange (array_sort on the
+    unique cent_id makes the fold deterministic despite collect_list's
+    free ordering; cent_id is any orderable id type)."""
+    packed = codebook.groupBy("s").agg(
+        F.array_sort(F.collect_list(F.struct("cent_id", "csub"))).alias("_cb")
+    )
     return (
-        sub.join(_pq_cb_packed_f(codebook), "s")
+        sub.join(F.broadcast(packed), "s")
         .withColumn("_best", F.expr(_BEST_CODE_F))
         .select("_id", "s", F.col("_best.cid").alias("cent_id"), "sub")
     )
@@ -3882,31 +3691,22 @@ def pq_topk(
             f"subvector dim {int(cb_row.subdim)} (query dim {dim}, "
             f"m={mq})"
         )
-    qsub = _pq_split(qframe, mq, dim // mq)
-    # per-query distance table to every codebook entry: nq x m x
-    # ncodes rows — joined to the corpus codes WITHOUT a hint (AQE
-    # broadcasts modest batches; a huge batch shuffles on (s, code))
-    qd = (
-        qsub.join(F.broadcast(codebook), "s")
-        .withColumn("d", F.expr(_PQ_L2F))
-        .select(F.col("_id").alias("_q"), "s", "cent_id", "d")
+    adc = _adc(
+        codes.select(
+            F.col(id_col).alias("vec_id"), "s", F.col("code").alias("cent_id")
+        ),
+        _adc_tables(qframe, codebook, (mq, dim // mq)),
+        ["s", "cent_id"],
     )
-    adc = (
-        codes.withColumnRenamed("code", "cent_id")
-        .join(qd, ["s", "cent_id"])
-        .where(F.col(id_col) != F.col("_q"))
-        .groupBy("_q", id_col)
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("_q").orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("vec_id").asc()
     )
     return (
         adc.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= int(k))
         .select(
-            F.col("_q").alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
             "rank",
             "adc_dist",
         )
@@ -4240,8 +4040,12 @@ def refine_topk(
     resolver = _pq_dedup_ids(resolver, id_col, vec_col)
     queries = _pq_dedup_ids(queries, id_col, vec_col)
     if metric == "cosine":
-        r = _norm_vectors(resolver, id_col, vec_col, "refine_topk")
-        q = _norm_vectors(queries, id_col, vec_col, "refine_topk")
+        # no first-row dim lock here: a ragged pair drops below, on
+        # its own, whichever row a frame happens to start with
+        if resolver.first() is None or queries.first() is None:
+            raise ValueError("refine_topk: input frame is empty")
+        r = _normalized(resolver, id_col, vec_col)
+        q = _normalized(queries, id_col, vec_col)
     else:
         # zero-norm vectors ARE meaningful under L2 (only cosine is
         # undefined at zero norm), so the l2 path keeps them; the

@@ -588,8 +588,8 @@ def test_refined_ann_and_index_probe_plan_discipline(spark, sf_dir):
 
 def test_argmax_fold_evaluates_once(spark):
     """Round-18 pin (the lambda-CSE gotcha): the packed-model argmax
-    helpers must route the fold through a Generate (explode of a
-    one-element array) so it materializes ONCE per row — lambda
+    fold must route through a Generate (explode of a one-element
+    array), under both cosine trees, so it materializes ONCE per row — lambda
     expressions are excluded from common-subexpression elimination, so
     a projected fold referenced by the null filter plus the field
     extractions would re-run the whole ncells x dim fold 2-3x per row
@@ -598,8 +598,9 @@ def test_argmax_fold_evaluates_once(spark):
     from pyspark.sql import functions as F
 
     from spark_data_test_spark.operators.similarity import (
-        _argmax_cell_d,
-        _argmax_cell_int,
+        _COS_D_CT,
+        _COS_INT_CT,
+        _argmax_cell,
     )
     from spark_data_test_spark.plans.audit import formatted_plan
 
@@ -610,7 +611,7 @@ def test_argmax_fold_evaluates_once(spark):
         [(7, [1, 0], 1), (8, [0, 1], 1)],
         "cent_id long, ce array<int>, cn2 long",
     )
-    plan = formatted_plan(_argmax_cell_int(emb, cents))
+    plan = formatted_plan(_argmax_cell(emb, cents, _COS_INT_CT))
     assert plan.count("zip_with") == 1, plan
     assert "Generate" in plan, plan
 
@@ -621,7 +622,7 @@ def test_argmax_fold_evaluates_once(spark):
         [(7, [1.0, 0.0], 1.0), (8, [0.0, 1.0], 1.0)],
         "cent_id long, _cv array<double>, _cn2 double",
     )
-    plan_d = formatted_plan(_argmax_cell_d(frame, cents_d))
+    plan_d = formatted_plan(_argmax_cell(frame, cents_d, _COS_D_CT))
     assert plan_d.count("zip_with") == 1, plan_d
     assert "Generate" in plan_d, plan_d
 

@@ -102,3 +102,87 @@ def test_bench_names_are_registered():
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
     missing = [n for n in (*bench.HEADLINE, *bench.WARMUP) if n not in names]
     assert not missing, f"bench names not in the registry: {missing}"
+
+
+def _package_module(dotted):
+    """The package module (or subpackage) named ``dotted``, or None when
+    it is not one."""
+    import importlib
+
+    if not dotted.startswith("spark_data_test_spark"):
+        return None
+    try:
+        return importlib.import_module(dotted)
+    except ModuleNotFoundError:
+        return None
+
+
+def _resolves(obj, name):
+    """``obj.name`` exists, as an attribute or as a submodule."""
+    import types
+
+    if hasattr(obj, name):
+        return True
+    if isinstance(obj, types.ModuleType):
+        return _package_module(f"{obj.__name__}.{name}") is not None
+    return False
+
+
+def test_script_package_imports_resolve():
+    """Every ``from spark_data_test_spark... import X`` and every
+    ``module.attr`` use on a package module in ``scripts/*.py``,
+    ``bench.py`` and ``__spark_entry__.py`` names something the package
+    defines — scripts are not run by the suite, so a deleted or renamed
+    private helper would otherwise only surface when someone runs the
+    script. Static (AST), no Spark session."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = sorted(glob.glob(os.path.join(root, "scripts", "*.py")))
+    files += [os.path.join(root, f) for f in ("bench.py", "__spark_entry__.py")]
+    broken = []
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        rel = os.path.relpath(path, root)
+        bound = {}  # local name -> package module it is bound to
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                mod = _package_module(node.module or "")
+                if mod is None:
+                    continue
+                for a in node.names:
+                    if not _resolves(mod, a.name):
+                        broken.append(f"{rel}:{node.lineno} {a.name}")
+                    sub = _package_module(f"{node.module}.{a.name}")
+                    if sub is not None:
+                        bound[a.asname or a.name] = sub
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    mod = _package_module(a.name)
+                    if mod is None:
+                        continue
+                    if a.asname:
+                        bound[a.asname] = mod
+                    else:
+                        top = a.name.split(".")[0]
+                        bound[top] = _package_module(top)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            chain, base = [], node
+            while isinstance(base, ast.Attribute):
+                chain.append(base.attr)
+                base = base.value
+            if not isinstance(base, ast.Name) or base.id not in bound:
+                continue
+            obj = bound[base.id]
+            for attr in reversed(chain):
+                if not _resolves(obj, attr):
+                    broken.append(f"{rel}:{node.lineno} {base.id}...{attr}")
+                    break
+                obj = _package_module(f"{obj.__name__}.{attr}")
+                if obj is None:
+                    break  # past the module chain: a value's own attributes
+    assert not broken, f"unresolved package names: {sorted(set(broken))}"

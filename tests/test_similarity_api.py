@@ -1624,3 +1624,126 @@ def test_ivf_index_ingest_rejects_crashed_rebuild(spark, tmp_path):
             nprobe=2,
             commit=True,
         )
+
+
+def test_ragged_query_rows_never_rank(spark):
+    """A query row whose dimension differs from the first query row's
+    drops (the index family's first-row rule) instead of ranking
+    neighbours with a NULL cosine, and a query batch whose dimension
+    differs from the corpus raises naming both dimensions."""
+    import pytest
+
+    from spark_data_test_spark import ivf_topk
+
+    schema = "vec_id long, emb array<double>"
+    corpus, queries = _fixture(n=12, nq=3, dim=4, seed=5)
+    cdf = spark.createDataFrame(corpus, schema)
+    clean = spark.createDataFrame(queries, schema)
+    ragged = spark.createDataFrame(queries + [(99, [0.5, -0.25, 1.0])], schema)
+    short = spark.createDataFrame([(98, [0.5, -0.25, 1.0])], schema)
+    runs = {
+        "cosine_topk": lambda q: cosine_topk(cdf, q, k=3),
+        "ivf_topk": lambda q: ivf_topk(cdf, q, k=3, nprobe=100, ncells=3),
+    }
+    for name, run in runs.items():
+        want = {tuple(r) for r in run(clean).collect()}
+        rows = run(ragged).collect()
+        assert all(r.cosine is not None for r in rows), name
+        assert {tuple(r) for r in rows} == want, name
+        with pytest.raises(
+            ValueError, match="query vector dim 3 != corpus vector dim 4"
+        ):
+            run(short).collect()
+    # empty query frames keep their behaviour
+    assert cosine_topk(cdf, clean.limit(0), k=3).count() == 0
+    with pytest.raises(ValueError, match="input frame is empty"):
+        ivf_topk(cdf, clean.limit(0), k=3)
+
+
+def test_ragged_corpus_rows_drop(spark, tmp_path):
+    """A corpus row whose dimension differs from the first row's drops
+    before training instead of failing the Lloyd sums with an array
+    index error: every corpus-side entry point answers as if the row
+    were absent."""
+    import pytest
+
+    from spark_data_test_spark import (
+        ivf_index_build,
+        ivf_topk,
+        ivfpq_index_build,
+        semantic_prune,
+    )
+
+    schema = "vec_id long, emb array<double>"
+    corpus, queries = _fixture(n=12, nq=3, dim=4, seed=5)
+    clean = spark.createDataFrame(corpus, schema)
+    ragged = spark.createDataFrame(corpus + [(77, [0.3, 0.9])], schema)
+    qdf = spark.createDataFrame(queries, schema)
+
+    def topk(c):
+        return {tuple(r) for r in ivf_topk(c, qdf, k=3, ncells=3).collect()}
+
+    def prune(c):
+        return {tuple(r) for r in semantic_prune(c, tau=0.5, ncells=3).collect()}
+
+    assert topk(ragged) == topk(clean)
+    assert prune(ragged) == prune(clean)
+    # a corpus with no nonzero vector raises the trainer's error
+    zeros = spark.createDataFrame([(1, [0.0] * 4), (2, [0.0] * 4)], schema)
+    with pytest.raises(ValueError, match="corpus has no nonzero vectors"):
+        ivf_topk(zeros, qdf, k=3)
+    n = ivf_index_build(clean, str(tmp_path / "ivf_a"), ncells=3)
+    assert ivf_index_build(ragged, str(tmp_path / "ivf_b"), ncells=3) == n
+    n = ivfpq_index_build(clean, str(tmp_path / "pq_a"), ncells=3, m=2, ncodes=4)
+    assert (
+        ivfpq_index_build(ragged, str(tmp_path / "pq_b"), ncells=3, m=2, ncodes=4)
+        == n
+    )
+
+
+def test_registered_pq_codes_equal_library_encode(spark, sf_dir):
+    """The registered integer PQ encoding and the library's `pq_encode`
+    of the same quantized vectors against the same codebook agree code
+    for code (integer L2 sums stay below 2^53, so the double fold picks
+    the same winners)."""
+    import spark_data_test_spark.operators.similarity as sim
+    from spark_data_test_spark import pq_encode
+
+    emb = sim._int_embeddings(spark, sf_dir)
+    cb = sim._pq_codebook(spark, sf_dir)
+    codes = sim._pq_codes(spark, sf_dir).select("vec_id", "s", "cent_id")
+    lib = pq_encode(emb, cb, vec_col="e").select("vec_id", "s", "code")
+    got = {tuple(r) for r in codes.collect()}
+    want = {tuple(r) for r in lib.collect()}
+    assert len(got) == 4 * emb.count()
+    assert got == want
+
+
+def test_registered_pq_ann_equals_pq_topk(spark, sf_dir):
+    """`similarity_pq_ann` is `pq_topk` with the registered codebook on
+    the same query ids, ADC distances cast back to bigint."""
+    from pyspark.sql import functions as F
+
+    import spark_data_test_spark.operators.similarity as sim
+    from spark_data_test_spark import pq_topk
+
+    emb = sim._int_embeddings(spark, sf_dir).select("vec_id", "e")
+    got = {
+        (r.q_vec_id, r.neighbor_id, r.rank, r.adc_dist)
+        for r in sim.similarity_pq_ann(spark, sf_dir).collect()
+    }
+    lib = pq_topk(
+        emb,
+        emb.where(F.col("vec_id") < sim._NQ),
+        k=sim._PQ_TOPK,
+        codebook=sim._pq_codebook(spark, sf_dir),
+        vec_col="e",
+    )
+    want = {
+        (r.query_id, r.neighbor_id, r.rank, r.adc_dist)
+        for r in lib.withColumn(
+            "adc_dist", F.col("adc_dist").cast("long")
+        ).collect()
+    }
+    assert len(got) == sim._NQ * sim._PQ_TOPK
+    assert got == want
