@@ -894,15 +894,13 @@ def _embedding_pairs(spark, sf_dir):
 
 def _build_embedding_pairs(spark, sf_dir):
     from spark_data_test_spark.operators.similarity import (
+        _DOT,
         _assign_cells,
         _cosine,
         _int_embeddings,
         train_ivf_centroids,
     )
 
-    dot_expr = F.expr(
-        "aggregate(zip_with(qe, ce, (x, y) -> x * y), cast(0 as bigint), (acc, x) -> acc + x)"
-    )
     emb = _int_embeddings(spark, sf_dir)
     cents = train_ivf_centroids(spark, sf_dir)
     # Exact-dup groups: one shuffle on the quantized vector itself.
@@ -952,7 +950,7 @@ def _build_embedding_pairs(spark, sf_dir):
     gscored = (
         a.join(b, "cell")
         .where(F.col("gid_a") < F.col("gid_b"))
-        .withColumn("dot", dot_expr)
+        .withColumn("dot", F.expr(_DOT))
         .withColumn("cos", _cosine(F.col("dot"), F.col("qn2"), F.col("cn2")))
         .where(F.col("cos") >= 0.3)
         .groupBy("gid_a", "gid_b")

@@ -1979,7 +1979,7 @@ def cosine_topk(corpus, queries, k=10, id_col="vec_id", vec_col="emb"):
     ``neighbor_id``; a corpus row sharing the query's id is excluded
     (self-match), and zero-norm vectors on either side are dropped
     (cosine undefined). A row whose vector dim differs from its
-    frame's first vector drops; queries and corpus of different dims
+    frame's most common dim drops; queries and corpus of different dims
     raise. Use the trained IVF/PQ family when the query set no longer
     broadcasts or the corpus no longer rescans."""
     queries, qdim = _dim_locked(queries, vec_col)
@@ -2038,12 +2038,12 @@ def _normalized(frame, id_col, vec_col):
     )
 
 
-def _norm_locked(frame, id_col, vec_col, op):
+def _norm_locked(frame, id_col, vec_col, op, prefer=None):
     """``(frame, dim)``: the `_normalized` entry frame of the
     frame-level ANN operators with every row whose dim differs from
-    the first nonzero vector's dropped (`_dim_locked`); dim is None
+    the locked nonzero-vector dim dropped (`_dim_locked`); dim is None
     when no nonzero vector exists. An empty input raises."""
-    v, dim = _dim_locked(_normalized(frame, id_col, vec_col))
+    v, dim = _dim_locked(_normalized(frame, id_col, vec_col), prefer=prefer)
     if dim is None and frame.first() is None:
         raise ValueError(f"{op}: input frame is empty")
     return v, dim
@@ -2150,11 +2150,11 @@ def ivf_topk(
     Scale posture: centroids are broadcast-sized (~sqrt(n) rows) and
     ride F.broadcast; the only corpus-sized shuffles are the per-round
     assignment aggregate and the final cell equi-join; the per-dim
-    mean uses known-width sum columns (dimension read once from the
-    first corpus row), keeping every aggregation whole-stage-codegen.
+    mean uses known-width sum columns (dimension read once, by the
+    dim lock), keeping every aggregation whole-stage-codegen.
     Vectors are cast to double once on entry, so integer and float
     embedding columns both work. A row whose vector dim differs from
-    its frame's first nonzero vector drops; queries and corpus of
+    its frame's most common nonzero-vector dim drops; queries and corpus of
     different dims raise.
 
     Cache lifetime: the normalized corpus projection is persisted for
@@ -3028,17 +3028,19 @@ def _pq_pack_codes(codes, id_col):
 # -- family codec hooks -----------------------------------------------------
 
 
-def _dim_locked(q, col="_v"):
-    """First-row dim lock over a vector column: ``(rows of the dim of
-    the first non-NULL vector, dim)`` — ragged rows are a data bug
-    upstream and drop rather than mis-split or NULL-pad a ``zip_with``
-    — or ``(q, None)`` when no row holds a vector."""
-    first = (
-        q.where(F.col(col).isNotNull()).select(F.size(col).alias("d")).first()
-    )
-    if first is None:
+def _dim_locked(q, col="_v", prefer=None):
+    """Dim lock over a vector column: ``(rows of the locked dim, dim)``
+    — ragged rows are a data bug upstream and drop rather than
+    mis-split or NULL-pad a ``zip_with`` — or ``(q, None)`` when no row
+    holds a vector. The lock is ``prefer`` (a committed index's dim)
+    when some row has it, else the most common non-NULL vector dim,
+    ties to the smaller. One histogram action; the lock never depends
+    on row order."""
+    rows = q.where(F.col(col).isNotNull()).groupBy(F.size(col).alias("d")).count()
+    hist = {int(r.d): r["count"] for r in rows.collect()}
+    if not hist:
         return q, None
-    dim = int(first.d)
+    dim = prefer if prefer in hist else min(hist, key=lambda d: (-hist[d], d))
     return q.where(F.size(col) == dim), dim
 
 
@@ -3061,8 +3063,8 @@ def _ivf_batch(d, committed, op, id_col, vec_col):
     mismatched vector would NULL-pad the cosine fold and land an
     unsound posting row. An all-zero-norm batch passes through empty
     (the probe answers nothing, the ingest commits nothing)."""
-    q, dim = _norm_locked(d, id_col, vec_col, op)
     cdim = int(committed.shape["dim"] or 0)
+    q, dim = _norm_locked(d, id_col, vec_col, op, prefer=cdim)
     if dim is not None and dim != cdim:
         raise ValueError(
             f"{op}: batch vector dim {dim} != committed centroid dim {cdim}"
@@ -3070,8 +3072,12 @@ def _ivf_batch(d, committed, op, id_col, vec_col):
     return q
 
 
+def _pq_dim(committed):
+    return int(committed.shape["m"]) * int(committed.shape["subdim"])
+
+
 def _pq_batch(d, committed, op, id_col, vec_col):
-    q, dim = _pq_frame(d, id_col, vec_col, op)
+    q, dim = _pq_frame(d, id_col, vec_col, op, prefer=_pq_dim(committed))
     _check_pq_dims(dim, committed, op)
     return q
 
@@ -3079,7 +3085,7 @@ def _pq_batch(d, committed, op, id_col, vec_col):
 def _ivfpq_batch(d, committed, op, id_col, vec_col):
     """Zero-norm drop (a zero vector has no coarse cell), then the
     codebook shape checks; None for an all-zero-norm batch."""
-    q, dim = _norm_locked(d, id_col, vec_col, op)
+    q, dim = _norm_locked(d, id_col, vec_col, op, prefer=_pq_dim(committed))
     if dim is None:
         return None
     _check_pq_dims(dim, committed, op)
@@ -3481,12 +3487,12 @@ _PQ_L2F = (
 )
 
 
-def _pq_frame(corpus, id_col, vec_col, op):
+def _pq_frame(corpus, id_col, vec_col, op, prefer=None):
     f = corpus.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).where(F.col("_v").isNotNull())
-    f, dim = _dim_locked(f)
+    f, dim = _dim_locked(f, prefer=prefer)
     if dim is None:
         raise ValueError(f"{op}: empty input frame")
     return f, dim
@@ -4040,8 +4046,8 @@ def refine_topk(
     resolver = _pq_dedup_ids(resolver, id_col, vec_col)
     queries = _pq_dedup_ids(queries, id_col, vec_col)
     if metric == "cosine":
-        # no first-row dim lock here: a ragged pair drops below, on
-        # its own, whichever row a frame happens to start with
+        # no frame-wide dim lock here: a ragged pair drops below, on
+        # its own, whatever dims the rest of the frame holds
         if resolver.first() is None or queries.first() is None:
             raise ValueError("refine_topk: input frame is empty")
         r = _normalized(resolver, id_col, vec_col)

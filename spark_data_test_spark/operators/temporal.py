@@ -433,6 +433,12 @@ _DAY_US = 86_400_000_000
 _HOUR_US = 3_600_000_000
 
 
+def _epoch_day(ts_col):
+    """``day``: the UTC epoch day of a timestamp column (integer
+    ``div`` on epoch micros, the oracles' ``epoch_us(ts) // _DAY_US``)."""
+    return F.expr(f"unix_micros({ts_col}) div {_DAY_US}").alias("day")
+
+
 @query(
     "events_hypertable_rollup",
     f"""
@@ -455,17 +461,15 @@ def events_hypertable_rollup(spark, sf_dir):
     At scale this is the materialization pattern for multi-resolution
     dashboards: Spark's partial aggregation combines map-side per
     (day, hour) before the single shuffle, and coarser levels reduce
-    from the finer — no per-resolution re-scan of raw events.
+    from the finer — no per-resolution re-scan of raw events. Runs
+    `hypertable_rollup`.
     """
-    ev = t(spark, sf_dir, "events")
-    base = ev.select(
-        F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
-        F.expr(f"unix_micros(ts) div {_HOUR_US}").alias("hour"),
-        cents(F.col("value")).alias("c"),
-    )
-    return base.rollup("day", "hour").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("c").alias("value_cents"),
+    ev = t(spark, sf_dir, "events").select("ts", cents(F.col("value")).alias("c"))
+    return hypertable_rollup(
+        ev,
+        "ts",
+        [F.count(F.lit(1)).alias("n_events"), F.sum("c").alias("value_cents")],
+        {"day": _DAY_US // 1_000_000, "hour": _HOUR_US // 1_000_000},
     )
 
 
@@ -507,47 +511,11 @@ def events_funnel_analysis(spark, sf_dir):
     reduce and a global count. No per-stage self-joins — the naive
     formulation shuffles the events table once per funnel step; this
     shape scales with funnel depth for free since every window shares
-    one partitioning."""
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    us = F.unix_micros("ts")
-    s1 = ev.select(
-        "user_id",
-        "event_type",
-        us.alias("us"),
-    ).withColumn(
-        "t_signup",
-        F.min(F.when(F.col("event_type") == "signup", F.col("us"))).over(w),
-    )
-    s2 = s1.withColumn(
-        "t_click",
-        F.min(
-            F.when(
-                (F.col("event_type") == "click")
-                & (F.col("us") >= F.col("t_signup")),
-                F.col("us"),
-            )
-        ).over(w),
-    )
-    s3 = s2.withColumn(
-        "t_purchase",
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("us") >= F.col("t_click")),
-                F.col("us"),
-            )
-        ).over(w),
-    )
-    per_user = s3.groupBy("user_id").agg(
-        F.max("t_signup").alias("t_signup"),
-        F.max("t_click").alias("t_click"),
-        F.max("t_purchase").alias("t_purchase"),
-    )
+    one partitioning. Runs the `_funnel_times` stage `funnel` runs."""
+    steps = ("signup", "click", "purchase")
+    per_user = _funnel_times(t(spark, sf_dir, "events"), steps)
     return per_user.agg(
-        F.count("t_signup").alias("n_signup"),
-        F.count("t_click").alias("n_click"),
-        F.count("t_purchase").alias("n_purchase"),
+        *[F.count(f"_t{i}").alias(f"n_{s}") for i, s in enumerate(steps)]
     )
 
 
@@ -633,19 +601,12 @@ def events_retention_cohorts(spark, sf_dir):
     partial aggregation, first-day is one groupBy on user_id, and the
     join back is user-keyed — the cohort matrix itself is tiny
     (weeks x offsets), so the final aggregate collapses fast. No
-    per-cohort re-scan of raw events."""
-    ev = t(spark, sf_dir, "events")
-    act = ev.select(
-        "user_id", F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day")
-    ).distinct()
-    firsts = act.groupBy("user_id").agg(F.min("day").alias("d0"))
-    weeks = act.join(firsts, "user_id").select(
-        "user_id",
-        F.expr("d0 div 7").alias("cohort_week"),
-        F.expr("(day - d0) div 7").alias("week_offset"),
-    )
-    return weeks.groupBy("cohort_week", "week_offset").agg(
-        F.countDistinct("user_id").alias("n_users")
+    per-cohort re-scan of raw events. Runs `retention_cohorts`."""
+    ev = t(spark, sf_dir, "events").select("user_id", _epoch_day("ts"))
+    return retention_cohorts(ev, "user_id", "day").select(
+        F.col("cohort").alias("cohort_week"),
+        F.col("period_offset").alias("week_offset"),
+        "n_users",
     )
 
 
@@ -757,23 +718,13 @@ def events_attribution_last_touch(spark, sf_dir):
     as the as-of join above (attribution IS an as-of join of purchases
     against touches, fused into one stream instead of two). One hash
     shuffle on user_id, partial aggregation on the tiny channel
-    dimension after; value sums ride integer cents."""
+    dimension after; value sums ride integer cents. Runs
+    `last_touch_attribution`."""
     ev = t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"), "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    touch = F.when(F.col("event_type") != "purchase", F.col("event_type"))
-    return (
-        ev.withColumn("channel", F.last(touch, ignorenulls=True).over(w))
-        .where(F.col("event_type") == "purchase")
-        .groupBy(F.coalesce("channel", F.lit("(none)")).alias("channel"))
-        .agg(
-            F.count(F.lit(1)).alias("n_conversions"),
-            F.sum(cents(F.col("value"))).alias("value_cents"),
-        )
-    )
+    return last_touch_attribution(
+        ev, "user_id", "ts", "event_type", "event_id", "purchase",
+        value_col=cents(F.col("value")),
+    ).withColumnRenamed("value", "value_cents")
 
 
 @query(
@@ -802,22 +753,11 @@ def events_gap_fill(spark, sf_dir):
     ranges (span, not corpus, drives the blowup), and the fill join is
     a (user, day) equi-join between two frames already aggregated from
     one scan — partial aggregation map-side, one shuffle each, never a
-    calendar cross join."""
+    calendar cross join. Runs `gap_fill`."""
     ev = t(spark, sf_dir, "events")
-    act = ev.groupBy(
-        "user_id", F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    span = act.groupBy("user_id").agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    days = span.select(
-        "user_id", F.explode(F.expr("sequence(d0, d1)")).alias("day")
-    )
-    return days.join(act, ["user_id", "day"], "left").select(
-        "user_id",
-        "day",
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_events"),
-        F.when(F.col("n").isNull(), 1).otherwise(0).cast("long").alias("gap_filled"),
+    act = ev.groupBy("user_id", _epoch_day("ts")).agg(F.count(F.lit(1)).alias("n"))
+    return gap_fill(act, ["user_id"], "day", ["n"]).select(
+        "user_id", "day", F.col("n").cast("long").alias("n_events"), "gap_filled"
     )
 
 
@@ -859,26 +799,12 @@ def events_anomaly_daily(spark, sf_dir):
     Shape at 100 TB: two map-side-combinable aggregates (events ->
     (type, day), then (type)) and a broadcast-size stats join back —
     the daily frame is bounded by types x days, never by event
-    volume."""
+    volume. Runs `anomaly_zscore`."""
     ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_events").alias("s"),
-        F.sum(F.col("n_events") * F.col("n_events")).alias("ss"),
+    daily = ev.groupBy("event_type", _epoch_day("ts")).agg(
+        F.count(F.lit(1)).alias("n_events")
     )
-    dev = (F.col("n") * F.col("n_events") - F.col("s")).cast("double")
-    spread = (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
-    return daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "day",
-        "n_events",
-        F.when(dev * dev > 9.0 * spread, 1).otherwise(0).cast("long").alias(
-            "is_anomaly"
-        ),
-    )
+    return anomaly_zscore(daily, "event_type", "day", "n_events", 3)
 
 
 _ROLL_US = 3_600_000_000  # trailing 1-hour frame, in microseconds
@@ -975,19 +901,13 @@ def events_cumulative_distinct_users(spark, sf_dir):
     day-level frame — event volume never reaches the window, and the
     only per-user shuffle is the first aggregate. The naive
     formulation (per-day distinct over an expanding self-join) is
-    O(days * events); this is O(events + days)."""
-    ev = t(spark, sf_dir, "events")
-    first_seen = ev.groupBy("user_id").agg(
-        F.min(F.expr(f"unix_micros(ts) div {_DAY_US}")).alias("day")
-    )
-    daily_new = first_seen.groupBy("day").agg(
-        F.count(F.lit(1)).alias("new_users")
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return daily_new.select(
+    O(days * events); this is O(events + days). Runs
+    `cumulative_distinct`."""
+    ev = t(spark, sf_dir, "events").select("user_id", _epoch_day("ts"))
+    return cumulative_distinct(ev, "user_id", "day").select(
         "day",
-        "new_users",
-        F.sum("new_users").over(w).alias("cumulative_users"),
+        F.col("new_entities").alias("new_users"),
+        F.col("cumulative_entities").alias("cumulative_users"),
     )
 
 
@@ -1025,21 +945,14 @@ def events_transition_matrix(spark, sf_dir):
     a self-join (a join on `trans` would plan the whole scan->window->
     agg pipeline twice — measured 5 exchanges and a double events scan
     vs 3 exchanges, of which two move only the types^2 frame). Each
-    probability is a single IEEE division of exact counts."""
+    probability is a single IEEE division of exact counts. Runs
+    `transition_matrix`."""
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).where(F.col("prev_type").isNotNull())
-    trans = seq.groupBy("prev_type", F.col("event_type").alias("next_type")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    total = F.sum("n").over(Window.partitionBy("prev_type"))
-    return trans.select(
-        "prev_type",
-        "next_type",
+    return transition_matrix(ev, order_cols=("ts", "event_id")).select(
+        F.col("prev_state").alias("prev_type"),
+        F.col("next_state").alias("next_type"),
         "n",
-        (F.col("n").cast("double") / total.cast("double")).alias("p"),
+        "p",
     )
 
 
@@ -1173,36 +1086,19 @@ def events_seasonal_naive_backtest(spark, sf_dir):
     Shape at 100 TB: one partial-agg-friendly groupBy to the daily
     grain (map-side combines do the heavy lifting; the daily frame is
     types x days), then a tiny equi self-join on (type, day-7) and a
-    per-type roll-up — the raw event scan happens exactly once."""
-    ev = t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
-            cents(F.col("value")).alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("c"))
-    )
-    prior = daily.select(
-        F.col("event_type").alias("event_type"),
-        (F.col("day") + _SEASON_DAYS).alias("day"),
-        F.col("c").alias("pc"),
-    )
-    scored = daily.join(prior, ["event_type", "day"]).select(
-        "event_type",
-        F.abs(F.col("c") - F.col("pc")).alias("abs_err"),
-        (F.col("c") - F.col("pc")).alias("err"),
+    per-type roll-up — the raw event scan happens exactly once. Runs
+    `seasonal_backtest`."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_type", _epoch_day("ts"), cents(F.col("value")).alias("c")
     )
     return (
-        scored.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_forecast_days"),
-            F.sum("abs_err").cast("long").alias("total_abs_err_cents"),
-            F.sum("err").cast("long").alias("bias_cents"),
-            F.expr("cast(sum(abs_err) div count(*) AS bigint)").alias(
-                "mae_cents"
-            ),
+        seasonal_backtest(ev, "event_type", "day", "c", _SEASON_DAYS)
+        .select(
+            "event_type",
+            F.col("n_forecast").alias("n_forecast_days"),
+            F.col("total_abs_err").cast("long").alias("total_abs_err_cents"),
+            F.col("bias").cast("long").alias("bias_cents"),
+            F.col("mae").cast("long").alias("mae_cents"),
         )
         .orderBy("event_type")
     )
@@ -1298,39 +1194,19 @@ def events_cohort_ltv(spark, sf_dir):
     back is user-keyed, and everything after lives on the tiny
     (cohorts x offsets) grid — the cumulative window and the
     per-cohort size join never touch raw events. One scan, two
-    user-keyed shuffles, then grid-sized work."""
-    ev = t(spark, sf_dir, "events")
-    ev0 = ev.select(
-        "user_id",
-        F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
-        cents(F.col("value")).alias("c"),
-    )
-    firsts = ev0.groupBy("user_id").agg(F.min("day").alias("d0"))
-    wk = ev0.join(firsts, "user_id").select(
-        F.expr("d0 div 7").alias("cohort_week"),
-        F.expr("(day - d0) div 7").alias("week_offset"),
-        "c",
-    )
-    csize = firsts.select(F.expr("d0 div 7").alias("cohort_week")).groupBy(
-        "cohort_week"
-    ).agg(F.count(F.lit(1)).alias("cohort_users"))
-    weekly = wk.groupBy("cohort_week", "week_offset").agg(
-        F.sum("c").cast("long").alias("weekly_value_cents")
-    )
-    w = Window.partitionBy("cohort_week").orderBy("week_offset")
-    cum = weekly.withColumn(
-        "cum_value_cents",
-        F.sum("weekly_value_cents").over(w).cast("long"),
+    user-keyed shuffles, then grid-sized work. Runs `cohort_ltv`."""
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", _epoch_day("ts"), cents(F.col("value")).alias("c")
     )
     return (
-        cum.join(csize, "cohort_week")
+        cohort_ltv(ev, "user_id", "day", "c", 7)
         .select(
-            "cohort_week",
-            "week_offset",
-            "weekly_value_cents",
-            "cum_value_cents",
+            F.col("cohort").alias("cohort_week"),
+            F.col("period_offset").alias("week_offset"),
+            F.col("period_value").cast("long").alias("weekly_value_cents"),
+            F.col("cum_value").cast("long").alias("cum_value_cents"),
             F.col("cohort_users").cast("long").alias("cohort_users"),
-            F.expr("cast(cum_value_cents div cohort_users AS bigint)").alias(
+            F.expr("cast(cum_value div cohort_users AS bigint)").alias(
                 "ltv_per_user_cents"
             ),
         )
@@ -1365,7 +1241,15 @@ def gap_fill(df, keys, bucket_col, value_cols=(), step=1):
             bucket_col
         ),
     )
-    filled = spine.join(df, keys + [bucket_col], "left")
+    # one struct of the keys joins NULL keys too (a struct equals a
+    # struct with the same NULL fields), so a NULL-keyed observed row
+    # is never reported as a filled gap
+    k = F.struct(*keys).alias("_k")
+    filled = spine.select("*", k).join(
+        df.select(k, *[c for c in df.columns if c not in keys]),
+        ["_k", bucket_col],
+        "left",
+    )
     # the gap flag reads a value column BEFORE the zero-fill coalesce
     # rewrites it (generated spine rows have NULL there by definition)
     probe = value_cols[0] if value_cols else None
@@ -1483,6 +1367,27 @@ def transition_matrix(
     )
 
 
+def _funnel_times(events, steps, keys="user_id", state_col="event_type", ts_col="ts"):
+    """Per-key funnel stage times: ``(keys..., _t0, ..., _t{n-1})``,
+    ``_ti`` the epoch micros of the earliest step-``i`` event at-or-after
+    ``_t{i-1}`` (NULL when the key never converts through step ``i``).
+    Chained conditional-min windows over one key partitioning, then a
+    per-key max — the stage `funnel` and `events_funnel_analysis` share."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    w = Window.partitionBy(*keys)
+    cur = events.select(
+        *keys, F.col(state_col).alias("_state"), F.unix_micros(ts_col).alias("_us")
+    )
+    for i, step in enumerate(steps):
+        cond = F.col("_state") == F.lit(step)
+        if i:
+            cond = cond & (F.col("_us") >= F.col(f"_t{i - 1}"))
+        cur = cur.withColumn(f"_t{i}", F.min(F.when(cond, F.col("_us"))).over(w))
+    return cur.groupBy(*keys).agg(
+        *[F.max(f"_t{i}").alias(f"_t{i}") for i in range(len(steps))]
+    )
+
+
 def funnel(events, steps, keys="user_id", state_col="event_type", ts_col="ts"):
     """Library operator: ordered conversion funnel over arbitrary
     frames — the frame-level, depth-generic form of the registered
@@ -1498,32 +1403,12 @@ def funnel(events, steps, keys="user_id", state_col="event_type", ts_col="ts"):
     formulation self-joins the event table once per step). The final
     rollup is a per-key reduce plus one count aggregate per step over
     the key-level frame."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
     steps = list(steps)
     if not steps:
         raise ValueError("funnel: steps must be non-empty")
-    w = Window.partitionBy(*keys)
-    us = F.unix_micros(F.col(ts_col))
-    cur = events.select(
-        *keys, F.col(state_col).alias("_state"), us.alias("_us")
-    )
-    prev_t = None
-    tcols = []
-    for i, step in enumerate(steps):
-        tcol = f"_t{i}"
-        cond = F.col("_state") == F.lit(step)
-        if prev_t is not None:
-            cond = cond & (F.col("_us") >= F.col(prev_t))
-        cur = cur.withColumn(
-            tcol, F.min(F.when(cond, F.col("_us"))).over(w)
-        )
-        prev_t = tcol
-        tcols.append(tcol)
-    per_key = cur.groupBy(*keys).agg(
-        *[F.max(c).alias(c) for c in tcols]
-    )
+    per_key = _funnel_times(events, steps, keys, state_col, ts_col)
     counts = per_key.agg(
-        *[F.count(c).cast("long").alias(f"_n{i}") for i, c in enumerate(tcols)]
+        *[F.count(f"_t{i}").cast("long").alias(f"_n{i}") for i in range(len(steps))]
     )
     spark = events.sparkSession
     step_names = local_df(

@@ -76,13 +76,9 @@ CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
 )
 def text_language_id(spark, sf_dir):
     """Language-ID by stopword-trigram voting with a fixed-priority
-    argmax tie-break (en > de > fr > es)."""
-    d = _lang_scores_spark(t(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        F.expr(_PRED_SQL).alias("pred_lang"),
-    )
+    argmax tie-break (en > de > fr > es). Runs `language_id`."""
+    d = language_id(t(spark, sf_dir, "documents"))
+    return d.select("doc_id", F.col("lang").alias("labeled_lang"), "pred_lang")
 
 
 @query(
@@ -103,29 +99,15 @@ def text_language_id(spark, sf_dir):
 )
 def text_quality_score(spark, sf_dir):
     """Quality heuristics: word count, average word length, and a
-    bounded composite score — identical arithmetic on both engines."""
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.length("text").alias("n_chars_actual"),
-        (
-            F.length(F.trim(F.col("text")))
-            - F.length(F.replace(F.trim(F.col("text")), F.lit(" "), F.lit("")))
-            + 1
-        ).alias("n_words"),
-    )
-    avg_wl = (F.col("n_chars_actual") - F.col("n_words") + 1).cast("double") / F.col(
-        "n_words"
-    )
-    quality = (
-        F.least(F.lit(1.0), F.col("n_words").cast("double") / 100.0) * 0.5
-        + F.least(F.lit(1.0), avg_wl / 8.0) * 0.5
-    )
+    bounded composite score — identical arithmetic on both engines.
+    Runs `quality_score`."""
+    d = quality_score(t(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
-        "n_chars_actual",
+        F.col("n_chars").alias("n_chars_actual"),
         "n_words",
-        avg_wl.alias("avg_word_len"),
-        quality.alias("quality"),
+        "avg_word_len",
+        "quality",
     )
 
 
@@ -141,17 +123,10 @@ def text_quality_score(spark, sf_dir):
 )
 def text_token_count(spark, sf_dir):
     """Token counting: whitespace tokens + a BPE-ish estimate
-    (~4 chars/token, the common LLM rule of thumb)."""
-    d = t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        (
-            F.length(F.trim(F.col("text")))
-            - F.length(F.replace(F.trim(F.col("text")), F.lit(" "), F.lit("")))
-            + 1
-        ).alias("ws_tokens"),
-        F.expr("cast((length(text) + 3) div 4 as bigint)").alias("est_bpe_tokens"),
-    )
+    (~4 chars/token, the common LLM rule of thumb). Runs
+    `token_counts`."""
+    d = token_counts(t(spark, sf_dir, "documents"))
+    return d.select("doc_id", "ws_tokens", "est_bpe_tokens")
 
 
 @query(
@@ -172,20 +147,11 @@ def text_token_count(spark, sf_dir):
 def text_fingerprint(spark, sf_dir):
     """Document fingerprinting: 4 MinHash values over strided char-8-gram
     shingles (the rolling-hash-sketch idea; md5 is the portable hash
-    family, seeded by suffixing the seed index)."""
-    d = t(spark, sf_dir, "documents").where(F.length("text") >= 8)
-    sh = d.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(1, length(text) - 7, 4), i -> substring(text, i, 8))")
-        ).alias("sh"),
-    )
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("sh"), F.lit(f"#{k}")))).alias(f"fp{k}")
-            for k in range(4)
-        ]
-    )
+    family, seeded by suffixing the seed index). Runs `fingerprint`,
+    which takes each minimum in-row (`array_min`), so the query plans
+    no shuffle; the oracle's explode + GROUP BY min is the independent
+    formulation."""
+    return fingerprint(t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -309,51 +275,18 @@ def corpus_decontaminate(spark, sf_dir):
     beyond the final per-doc count. Counting DISTINCT shared n-grams
     and distinct eval docs hit gives the triage signal the dedup
     decision needs (1 shared 16-gram = boilerplate; hundreds = a
-    leaked document)."""
+    leaked document). Runs `decontaminate`."""
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
     planted = d.where(F.col("doc_id") < _DECON_EVAL).select(
         (F.col("doc_id") + 300000).alias("doc_id"),
         F.concat(F.lit("eval leak: "), F.col("text")).alias("text"),
     )
     corpus = d.unionByName(planted)
-    # deliberately NOT .distinct(): that would shuffle every corpus
-    # shingle before the join; the broadcast join filters to eval
-    # matches first and the final COUNT(DISTINCT ...) dedups repeated
-    # (doc, shingle) occurrences — same result, and the only shuffle
-    # proportional to the corpus carries just the matching slice
-    csh = corpus.where(
-        (F.length("text") >= _DECON_L) & (F.col("doc_id") >= _DECON_EVAL)
-    ).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(text) - {_DECON_L - 1},"
-                f" {_DECON_STRIDE}), i -> substring(text, i, {_DECON_L}))"
-            )
-        ).alias("sh"),
-    )
-    esh = (
-        d.where((F.length("text") >= _DECON_L) & (F.col("doc_id") < _DECON_EVAL))
-        .select(
-            F.col("doc_id").alias("eval_id"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, length(text) - {_DECON_L - 1}),"
-                    f" i -> substring(text, i, {_DECON_L}))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    # the eval dictionary is the broadcast side by construction (eval
-    # sets are thousands of docs; corpora are billions)
-    return (
-        csh.join(F.broadcast(esh), "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("sh").alias("n_shared_ngrams"),
-            F.countDistinct("eval_id").alias("n_eval_docs"),
-        )
+    return decontaminate(
+        corpus.where(F.col("doc_id") >= _DECON_EVAL),
+        d.where(F.col("doc_id") < _DECON_EVAL),
+        n=_DECON_L,
+        stride=_DECON_STRIDE,
     )
 
 
@@ -443,7 +376,7 @@ def text_pii_scrub(spark, sf_dir):
     ``regexp_replace`` — whole-stage codegen, zero shuffles before the
     filter, trivially linear at 100 TB. Patterns are deliberately
     dialect-portable (character classes + bounded quantifiers behave
-    identically in Java regex and RE2)."""
+    identically in Java regex and RE2). Runs `pii_scrub`."""
     d = t(spark, sf_dir, "documents")
     corpus = d.select(
         "doc_id",
@@ -460,15 +393,11 @@ def text_pii_scrub(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    hits = corpus.select(
+    hits = pii_scrub(corpus).select(
         "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(_EMAIL_RE), F.lit(0))).cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all("text", F.lit(_PHONE_RE), F.lit(0))).cast("long").alias("n_phones"),
-        F.regexp_replace(
-            F.regexp_replace("text", _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ).alias("scrubbed"),
+        F.col("n_email").alias("n_emails"),
+        F.col("n_phone").alias("n_phones"),
+        "scrubbed",
     )
     return hits.where(F.col("n_emails") + F.col("n_phones") > 0)
 
@@ -512,40 +441,9 @@ def text_repetition_profile(spark, sf_dir):
     scan with higher-order array functions), then per-(doc, gram)
     counts whose partial aggregation rides the same partitioning —
     no window over raw tokens, no second scan. Docs with < 2 tokens
-    have no bigram and drop out (inner join), mirroring the oracle."""
-    d = t(spark, sf_dir, "documents")
-    ws = F.expr("filter(split(text, ' '), w -> w <> '')")
-    base = d.select("doc_id", ws.alias("ws"))
-    toks = base.select("doc_id", F.explode("ws").alias("g"))
-    # the size >= 2 guard matters beyond this corpus: Spark's
-    # sequence(1, size - 1) on a 0-token doc is sequence(1, -1), which
-    # generates DESCENDING [1, 0, -1] and faults element_at — the
-    # synthetic documents always have >= 2 tokens, but the shared
-    # expression (repetition_profile runs on arbitrary frames) must not
-    # rely on that
-    bgs = base.select(
-        "doc_id",
-        F.explode(F.expr(_BIGRAMS_EXPR)).alias("g"),
-    )
-
-    def stats(grams, maxc, total):
-        return (
-            grams.groupBy("doc_id", "g")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("doc_id")
-            .agg(F.max("c").alias(maxc), F.sum("c").alias(total))
-        )
-
-    ts = stats(toks, "max_tok", "n_toks")
-    bs = stats(bgs, "max_bg", "n_bgs")
-    ratio = lambda a, b: F.round(
-        F.lit(1000000.0) * F.col(a) / F.col(b)
-    ).cast("long")
-    return ts.join(bs, "doc_id").select(
-        "doc_id",
-        ratio("max_tok", "n_toks").alias("top_token_1e6"),
-        ratio("max_bg", "n_bgs").alias("top_bigram_1e6"),
-    )
+    have no bigram and drop out (inner join), mirroring the oracle.
+    Runs `repetition_profile`."""
+    return repetition_profile(t(spark, sf_dir, "documents"))
 
 
 _TFIDF_K = 3
@@ -586,22 +484,8 @@ def text_tfidf_topk(spark, sf_dir):
     explode output with map-side partials; df aggregates FROM tf (no
     second corpus scan); the df join is token-keyed (AQE broadcasts it
     while the vocabulary head is small); the top-k window shuffles on
-    doc_id. No global sorts, no re-tokenization."""
-    d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).where(F.col("tok") != "")
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy(
-        (F.col("tf").cast("double") / F.col("df")).desc(), "tok"
-    )
-    return (
-        tf.join(df, "tok")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _TFIDF_K)
-        .select("doc_id", "tok", "tf", "df", "rank")
-    )
+    doc_id. No global sorts, no re-tokenization. Runs `tfidf_topk`."""
+    return tfidf_topk(t(spark, sf_dir, "documents"), k=_TFIDF_K)
 
 
 # Trained-classifier coefficients in milli-units: (intercept, n_words,
@@ -948,13 +832,10 @@ def text_langid_confusion(spark, sf_dir):
     Reuses `text_language_id`'s scoring verbatim, so the two queries
     pin each other; the matrix is bounded by |languages|^2 regardless
     of corpus size, and the whole computation is one scan-side score
-    plus one map-side-combinable count."""
-    d = _lang_scores_spark(t(spark, sf_dir, "documents"))
-    pred = F.expr(_PRED_SQL)
-    return (
-        d.select(F.col("lang").alias("labeled_lang"), pred.alias("pred_lang"))
-        .groupBy("labeled_lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+    plus one map-side-combinable count. Runs `language_id`."""
+    d = language_id(t(spark, sf_dir, "documents"))
+    return d.groupBy(F.col("lang").alias("labeled_lang"), "pred_lang").agg(
+        F.count(F.lit(1)).alias("n_docs")
     )
 
 
@@ -993,49 +874,9 @@ def text_ngram_novelty(spark, sf_dir):
     aggregate — no windows, no driver collection; every stage keys on
     hash-distributed columns, so the plan survives a 1000-executor
     corpus unchanged. The ratio is emitted as an integer micro-units
-    column so the oracle hash compare is float-free."""
-    d = t(spark, sf_dir, "documents")
-    sh = (
-        d.where(F.length("text") >= 8)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(text) - 7, 4),"
-                    " i -> substring(text, i, 8))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    # Two aggregates + a doc-level join instead of joining first_seen
-    # back onto the full shingle set: a shingle is novel for exactly
-    # the doc that owns its min doc_id, so counting first_seen rows BY
-    # first_doc yields per-doc novel counts directly — the expensive
-    # shingle relation is shuffled for the two aggregates only, and
-    # the join runs at document cardinality, not shingle cardinality.
-    per_doc = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    novel = (
-        sh.groupBy("sh")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_novel"))
-    )
-    return (
-        per_doc.join(novel, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce(F.col("n_novel"), F.lit(0).cast("long")).alias(
-                "n_novel"
-            ),
-            F.expr(
-                "cast(round(1000000.0 * coalesce(n_novel, 0) / n_shingles)"
-                " as bigint)"
-            ).alias("novelty_1e6"),
-        )
-        .orderBy("doc_id")
-    )
+    column so the oracle hash compare is float-free. Runs
+    `ngram_novelty`."""
+    return ngram_novelty(t(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 def ngram_novelty(docs, id_col="doc_id", text_col="text"):
@@ -1073,6 +914,12 @@ def ngram_novelty(docs, id_col="doc_id", text_col="text"):
         )
         .distinct()
     )
+    # Two aggregates + a doc-level join instead of joining first_seen
+    # back onto the full shingle set: a shingle is novel for exactly
+    # the doc that owns its min id, so counting first_seen rows BY
+    # first doc yields per-doc novel counts directly — the shingle
+    # relation is shuffled for the two aggregates only, and the join
+    # runs at document cardinality, not shingle cardinality.
     per_doc = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     novel = (
         sh.groupBy("sh")
@@ -1107,10 +954,12 @@ def language_id(docs):
     plus ``pred_lang`` (one of en/de/fr/es — stopword-trigram voting
     with the fixed-priority argmax tie-break en > de > fr > es), the
     same pure-Catalyst expression tree the registered
-    `text_language_id` query hash-matches against DuckDB. No UDFs, no
-    shuffles — a map-only projection."""
+    `text_language_id` query hash-matches against DuckDB. A NULL text
+    gets a NULL ``pred_lang`` (it has no markers to vote with). No
+    UDFs, no shuffles — a map-only projection."""
     scored = _lang_scores_spark(docs)
-    return scored.withColumn("pred_lang", F.expr(_PRED_SQL)).drop(
+    pred = F.when(F.col("text").isNotNull(), F.expr(_PRED_SQL))
+    return scored.withColumn("pred_lang", pred).drop(
         "padded", *[f"s_{lang}" for lang in _LANG_ORDER]
     )
 
@@ -1121,7 +970,9 @@ def quality_score(docs):
     plus ``n_chars``, ``n_words``, ``avg_word_len``, and a bounded
     composite ``quality`` in [0, 1] — the registered
     `text_quality_score` arithmetic (exact integer word counts from
-    trimmed space counting; identical on any engine). Map-only."""
+    trimmed space counting; identical on any engine). A NULL text gets
+    NULL in every added column (``least`` would skip the NULL operands
+    and score it 1.0). Map-only."""
     n_chars = F.length("text")
     n_words = (
         F.length(F.trim(F.col("text")))
@@ -1132,9 +983,10 @@ def quality_score(docs):
     avg_wl = (F.col("n_chars") - F.col("n_words") + 1).cast("double") / F.col(
         "n_words"
     )
-    quality = (
+    quality = F.when(
+        F.col("text").isNotNull(),
         F.least(F.lit(1.0), F.col("n_words").cast("double") / 100.0) * 0.5
-        + F.least(F.lit(1.0), avg_wl / 8.0) * 0.5
+        + F.least(F.lit(1.0), avg_wl / 8.0) * 0.5,
     )
     return d.withColumn("avg_word_len", avg_wl).withColumn("quality", quality)
 
@@ -1323,7 +1175,7 @@ def fingerprint(
     Plan shape: ENTIRELY in-row — the shingle array, the per-seed
     transforms, and the `array_min` reductions all run inside one
     codegen projection, so the operator adds ZERO shuffles (the
-    registered query's explode + groupBy formulation shuffles every
+    oracle's explode + GROUP BY formulation would shuffle every
     shingle; this is the round-8 in-row minhash lesson applied).
     Documents shorter than ``shingle_len`` are dropped, matching the
     registered contract (they have no shingles; `sequence()` would

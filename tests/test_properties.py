@@ -6,8 +6,10 @@ reflexivity, missing-row accounting, symmetry, and tolerance monotonicity.
 Examples are kept small — each runs a real Spark comparison.
 """
 
+import datetime as _dt
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from spark_data_test_spark import DatasetParams, TestParams, compare_dataframes
@@ -270,3 +272,100 @@ def test_wav_decoder_never_misparses_junk(junk):
     else:
         with _pytest.raises(ValueError):
             decode_wav(junk)
+
+
+# --- degenerate inputs to the temporal and text exports -------------------
+
+_T0 = _dt.datetime(2024, 1, 1, 9, 0)
+_EVENTS = (
+    "user_id string, event_type string, ts timestamp, event_id long, value long",
+    [("u", "signup", _T0, 1, 5), ("u", "purchase", _T0 + _dt.timedelta(hours=2), 2, 7)],
+)
+_SERIES = ("k string, b long, n long", [("a", 1, 1), ("a", 3, 2)])
+_DOCS = (
+    "doc_id long, text string",
+    [(1, "the cat and the dog of the house"), (2, "der hund und die katze")],
+)
+
+
+def _degenerate_exports():
+    import pyspark.sql.functions as F
+
+    import spark_data_test_spark as s
+
+    return {
+        "gap_fill": (_SERIES, lambda d: s.gap_fill(d, ["k"], "b", ["n"])),
+        "retention_cohorts": (_SERIES, lambda d: s.retention_cohorts(d, "k", "b")),
+        "transition_matrix": (_EVENTS, s.transition_matrix),
+        "funnel": (_EVENTS, lambda d: s.funnel(d, ["signup", "click", "purchase"])),
+        "anomaly_zscore": (_SERIES, lambda d: s.anomaly_zscore(d, "k", "b", "n")),
+        "cumulative_distinct": (_SERIES, lambda d: s.cumulative_distinct(d, "k", "b")),
+        "hypertable_rollup": (
+            _EVENTS,
+            lambda d: s.hypertable_rollup(
+                d, "ts", [F.count(F.lit(1)).alias("n")], {"day": 86400, "hour": 3600},
+                keys=["user_id"],
+            ),
+        ),
+        "last_touch_attribution": (
+            _EVENTS,
+            lambda d: s.last_touch_attribution(
+                d, "user_id", "ts", "event_type", "event_id", "purchase", "value"
+            ),
+        ),
+        "cohort_ltv": (_SERIES, lambda d: s.cohort_ltv(d, "k", "b", "n")),
+        "seasonal_backtest": (_SERIES, lambda d: s.seasonal_backtest(d, "k", "b", "n", 7)),
+        "language_id": (_DOCS, s.language_id),
+        "quality_score": (_DOCS, s.quality_score),
+        "token_counts": (_DOCS, s.token_counts),
+        "fingerprint": (_DOCS, s.fingerprint),
+        "decontaminate": (_DOCS, lambda d: s.decontaminate(d, d)),
+        "tfidf_topk": (_DOCS, s.tfidf_topk),
+        "pii_scrub": (_DOCS, s.pii_scrub),
+        "repetition_profile": (_DOCS, s.repetition_profile),
+        "ngram_novelty": (_DOCS, s.ngram_novelty),
+    }
+
+
+def _degenerate_inputs(schema, rows):
+    """Empty, all-NULL keys (the first column), and NULL/empty values:
+    one row with every non-key column NULL, one with its strings empty."""
+    types = [f.split()[1] for f in schema.split(",")]
+    blank = tuple(
+        "" if i and types[i] == "string" else v for i, v in enumerate(rows[1])
+    )
+    return {
+        "empty": [],
+        "null_keys": [(None, *r[1:]) for r in rows],
+        "null_text": [(rows[0][0], *[None] * (len(rows[0]) - 1)), blank],
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_degenerate_exports()))
+def test_exports_survive_degenerate_inputs(spark, name):
+    """Every export behind a registered temporal or text query runs an
+    empty frame, all-NULL keys and NULL/empty values without raising;
+    an empty input gives no rows (`funnel`: one zero row per step); a
+    NULL key is a key like any other (`gap_fill` fills between its
+    observed buckets) and a NULL text scores NULL (`language_id`,
+    `quality_score`)."""
+    (schema, rows), run = _degenerate_exports()[name]
+    got = {
+        kind: run(spark.createDataFrame(data, schema)).collect()
+        for kind, data in _degenerate_inputs(schema, rows).items()
+    }
+    if name == "funnel":
+        assert [(r.step_idx, r.n_converted) for r in got["empty"]] == [
+            (1, 0), (2, 0), (3, 0)
+        ]
+    else:
+        assert got["empty"] == []
+    if name == "gap_fill":
+        assert {tuple(r) for r in got["null_keys"]} == {
+            (None, 1, 1, 0), (None, 2, 0, 1), (None, 3, 2, 0)
+        }
+    if name in ("language_id", "quality_score"):
+        col = "pred_lang" if name == "language_id" else "quality"
+        scored = {r.text: r[col] for r in got["null_text"]}
+        assert scored[None] is None
+        assert scored[""] is not None

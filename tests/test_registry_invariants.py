@@ -186,3 +186,88 @@ def test_script_package_imports_resolve():
                 if obj is None:
                     break  # past the module chain: a value's own attributes
     assert not broken, f"unresolved package names: {sorted(set(broken))}"
+
+
+# registered query -> the export (or shared private stage) it calls.
+# A query of this table is that call plus renames, casts, a filter or
+# an orderBy; DESIGN.md "Registered queries over exports" lists the
+# twins that stay separate and why.
+_QUERY_EXPORTS = {
+    "temporal": {
+        "events_gap_fill": "gap_fill",
+        "events_retention_cohorts": "retention_cohorts",
+        "events_transition_matrix": "transition_matrix",
+        "events_funnel_analysis": "_funnel_times",
+        "events_anomaly_daily": "anomaly_zscore",
+        "events_cumulative_distinct_users": "cumulative_distinct",
+        "events_hypertable_rollup": "hypertable_rollup",
+        "events_attribution_last_touch": "last_touch_attribution",
+        "events_cohort_ltv": "cohort_ltv",
+        "events_seasonal_naive_backtest": "seasonal_backtest",
+    },
+    "text": {
+        "text_language_id": "language_id",
+        "text_langid_confusion": "language_id",
+        "text_quality_score": "quality_score",
+        "text_token_count": "token_counts",
+        "text_fingerprint": "fingerprint",
+        "corpus_decontaminate": "decontaminate",
+        "text_tfidf_topk": "tfidf_topk",
+        "text_pii_scrub": "pii_scrub",
+        "text_repetition_profile": "repetition_profile",
+        "text_ngram_novelty": "ngram_novelty",
+    },
+}
+
+
+def _module_calls(module):
+    """Function name -> (names it calls, the `join`/`over`/`Window`
+    names its body uses) for the top-level functions of
+    ``operators/<module>.py``; decorators (the oracle SQL) excluded."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "spark_data_test_spark", "operators", f"{module}.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    out = {}
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        nodes = [n for stmt in fn.body for n in ast.walk(stmt)]
+        called = {
+            n.func.id
+            for n in nodes
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+        }
+        own = {
+            n.attr for n in nodes
+            if isinstance(n, ast.Attribute) and n.attr in ("join", "over")
+        } | {n.id for n in nodes if isinstance(n, ast.Name) and n.id == "Window"}
+        out[fn.name] = (called, own)
+    return out
+
+
+def test_registered_queries_call_their_exports():
+    """Each query of `_QUERY_EXPORTS` calls its export and keeps no
+    window or join of its own, so the registered query and the library
+    export cannot fork into two implementations again. Static (AST), no
+    Spark session."""
+    import spark_data_test_spark as pkg
+
+    names = set(_registry_names()[0])
+    broken = []
+    for module, pairs in _QUERY_EXPORTS.items():
+        calls = _module_calls(module)
+        for q, export in pairs.items():
+            assert q in names, f"{q} is not registered"
+            assert export.startswith("_") or hasattr(pkg, export), export
+            called, own = calls[q]
+            if export not in called:
+                broken.append(f"{q} does not call {export}")
+            if own:
+                broken.append(f"{q} builds its own {sorted(own)}")
+    if "_funnel_times" not in _module_calls("temporal")["funnel"][0]:
+        broken.append("funnel does not call _funnel_times")
+    assert not broken, broken

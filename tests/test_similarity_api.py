@@ -1627,8 +1627,8 @@ def test_ivf_index_ingest_rejects_crashed_rebuild(spark, tmp_path):
 
 
 def test_ragged_query_rows_never_rank(spark):
-    """A query row whose dimension differs from the first query row's
-    drops (the index family's first-row rule) instead of ranking
+    """A query row whose dimension differs from the batch's most common
+    dimension drops (the index family's dim lock) instead of ranking
     neighbours with a NULL cosine, and a query batch whose dimension
     differs from the corpus raises naming both dimensions."""
     import pytest
@@ -1661,8 +1661,8 @@ def test_ragged_query_rows_never_rank(spark):
 
 
 def test_ragged_corpus_rows_drop(spark, tmp_path):
-    """A corpus row whose dimension differs from the first row's drops
-    before training instead of failing the Lloyd sums with an array
+    """A corpus row whose dimension differs from the corpus's most
+    common dimension drops before training instead of failing the Lloyd sums with an array
     index error: every corpus-side entry point answers as if the row
     were absent."""
     import pytest
@@ -1747,3 +1747,67 @@ def test_registered_pq_ann_equals_pq_topk(spark, sf_dir):
     }
     assert len(got) == sim._NQ * sim._PQ_TOPK
     assert got == want
+
+
+def test_dim_lock_ignores_a_ragged_first_row(spark, tmp_path):
+    """The dim lock keeps the most common dim, not the first row's: a
+    3-dim row placed first in a 4-dim corpus or query batch drops, and
+    every entry point answers as if it were absent (a first-row lock
+    rejected the correct 4-dim batch, or dropped every 4-dim row)."""
+    from spark_data_test_spark import (
+        ivf_index_build,
+        ivf_topk,
+        pq_train,
+        semantic_prune,
+    )
+
+    schema = "vec_id long, emb array<double>"
+    corpus, queries = _fixture(n=60, nq=4, dim=4, seed=11)
+    odd = (999, [0.5, -0.25, 1.0])
+    clean = spark.createDataFrame(corpus, schema)
+    ragged = spark.createDataFrame([odd] + corpus, schema)
+    qdf = spark.createDataFrame(queries, schema)
+    qragged = spark.createDataFrame([odd] + queries, schema)
+    assert ragged.first().vec_id == 999
+
+    def rows(df):
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        }
+
+    for run in (
+        lambda c, q: cosine_topk(c, q, k=3),
+        lambda c, q: ivf_topk(c, q, k=3, ncells=3),
+    ):
+        want = rows(run(clean, qdf))
+        assert want
+        assert rows(run(ragged, qdf)) == want
+        assert rows(run(clean, qragged)) == want
+    prune = rows(semantic_prune(clean, tau=0.5, ncells=3))
+    assert rows(semantic_prune(ragged, tau=0.5, ncells=3)) == prune
+    # same codebook entries; the centroid sums may fold in another order
+    book = {(r.s, r.cent_id): r.csub for r in pq_train(clean, m=2, ncodes=4).collect()}
+    got = {(r.s, r.cent_id): r.csub for r in pq_train(ragged, m=2, ncodes=4).collect()}
+    assert book and got.keys() == book.keys()
+    assert all(
+        abs(x - y) < 1e-12 for k in book for x, y in zip(got[k], book[k])
+    )
+    n = ivf_index_build(clean, str(tmp_path / "ivf_a"), ncells=3)
+    assert n and ivf_index_build(ragged, str(tmp_path / "ivf_b"), ncells=3) == n
+
+
+def test_dim_lock_ties_go_to_the_smaller_dim(spark):
+    """Two dims with equal row counts lock to the smaller one."""
+    from spark_data_test_spark.operators.similarity import _dim_locked
+
+    schema = "vec_id long, _v array<double>"
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0]), (3, [4.0, 5.0, 6.0]),
+         (4, [3.0, 4.0]), (5, None)],
+        schema,
+    )
+    locked, dim = _dim_locked(df)
+    assert dim == 2
+    assert sorted(r.vec_id for r in locked.collect()) == [2, 4]
+    assert _dim_locked(df.where("vec_id = 5"))[1] is None
