@@ -11,9 +11,10 @@ at amplified scale (VERDICT r8 item 4): splits the per-batch work into
   commit    write_state_version of the batch's bands      batch bands
 
 by replaying the exact foreachBatch stage pipeline (same internals:
-`_shingle_set` projection shape, `_band_index`, persisted-index probe,
-array-attach verify) over the same three deterministic arrival batches
-(b = doc_id % 3), with a forced materialization between stages. The
+the MinHash kernel's `_shingle_sets`, `_signatures`, `_band_index`,
+persisted-index probe, `_attach_sets`/`_set_jaccard` verify) over
+the same three deterministic arrival batches (b = doc_id % 3), with
+a forced materialization between stages. The
 streaming harness itself (availableNow micro-batch scheduling,
 checkpoint commits, sink append) is NOT replayed — the difference
 between this script's total and the recorded bench line is the harness
@@ -64,12 +65,14 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from spark_data_test_spark.operators.dedup import (
-        SHINGLES_EXPR,
-        _N_HASHES,
+        _attach_sets,
         _band_index,
         _hist_docs,
         _is_historical,
         _load_or_build_minhash_index,
+        _set_jaccard,
+        _shingle_sets,
+        _signatures,
     )
     from spark_data_test_spark.operators.relational import t
     from spark_data_test_spark.state import (
@@ -81,12 +84,6 @@ def main():
         _STREAM_NEAR_BASE_OFFSET,
         _STREAM_NEAR_HIST_OFFSET,
     )
-
-    def shingle_set(df):
-        return df.where(F.length("text") >= 8).select(
-            "doc_id",
-            F.expr(f"array_distinct({SHINGLES_EXPR})").alias("sa"),
-        )
 
     def run_factor(factor):
         sf_dir = (
@@ -147,17 +144,8 @@ def main():
             idx = hist_idx if deltas is None else hist_idx.unionByName(deltas)
 
             t0 = time.time()
-            bset = shingle_set(batch_df).persist()
-            sig = bset.select(
-                "doc_id",
-                *[
-                    F.array_min(
-                        F.expr(f"transform(sa, s -> md5(concat(s, '#{k}')))")
-                    ).alias(f"h{k}")
-                    for k in range(_N_HASHES)
-                ],
-            )
-            bands = _band_index(sig).persist()
+            bset = _shingle_sets(batch_df).persist()
+            bands = _band_index(_signatures(bset)).persist()
             n_bands = bands.count()
             n_rows = bset.count()
             stages["staging"] += time.time() - t0
@@ -194,23 +182,11 @@ def main():
                 cand.select(F.col("dup_of").alias("doc_id")).distinct(),
                 "doc_id",
             )
-            pset = (
-                shingle_set(partners)
-                .withColumnRenamed("sa", "sb")
-                .withColumnRenamed("doc_id", "dup_of")
-            )
-            i = F.size(F.array_intersect("sa", "sb")).cast("long")
-            jac = (
-                F.lit(1000000.0)
-                * i
-                / (F.size("sa").cast("long") + F.size("sb").cast("long") - i)
-            )
+            i, jac = _set_jaccard()
             verified = (
-                cand.join(
-                    bset.withColumnRenamed("doc_id", "new_doc_id"),
-                    "new_doc_id",
+                _attach_sets(
+                    cand, "new_doc_id", bset, "dup_of", _shingle_sets(partners)
                 )
-                .join(pset, "dup_of")
                 .where(i > 0)
                 .select(
                     "new_doc_id",

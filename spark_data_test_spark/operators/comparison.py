@@ -215,11 +215,12 @@ def compare_dataframes(spark, source_df, target_df, params, compute_unmatched_du
     # ONE aggregation over the narrow projection feeds BOTH the row-level
     # and the overall report (previously: a window+distinct pass for the
     # row report plus a separate groupBy reduce for the overall — two
-    # shuffles of the full narrow frame). The join output is already
-    # hash-partitioned on the keys, so this groupBy adds no exchange;
-    # what persists is one row per key (cnt, per-side multiplicities,
-    # match/missing maxima, and the distinct (status, verdict) combos
-    # that the row report used to obtain via distinct()).
+    # shuffles of the full narrow frame). A FULL OUTER join's output
+    # partitioning is unknown (either side's key may be NULL), so this
+    # groupBy plans one more exchange on the keys after the sort-merge
+    # join; what persists is one row per key (cnt, per-side
+    # multiplicities, match/missing maxima, and the distinct (status,
+    # verdict) combos that the row report used to obtain via distinct()).
     missing_status = (
         F.when(chk_src.isNull(), MISSING_AT_SOURCE_STATUS)
         .when(chk_tgt.isNull(), MISSING_AT_TARGET_STATUS)
@@ -249,7 +250,10 @@ def compare_dataframes(spark, source_df, target_df, params, compute_unmatched_du
     # Slow-path subset: present on both sides, checksum mismatch, still
     # unmatched after tolerance. Small in the common mostly-matching
     # case; persisted because the column report, the per-column dumps,
-    # and their collect() all consume it.
+    # and their collect() all consume it. It is a SECOND pass over the
+    # inputs: the both-present filter turns the full outer join into an
+    # inner one, which plans as its own broadcast hash join over fresh
+    # scans and recomputes each side's SHA-256 in its scan filter.
     unmatched_records = (
         joined.filter(both_present & ~fast_match)
         .drop(_SRC_KEY_CNT, _TGT_KEY_CNT)

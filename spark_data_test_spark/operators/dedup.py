@@ -23,8 +23,10 @@ keeping false candidates ~J^3 per band (4x2 banding admitted ~n^2
 random collisions at the x10-amplified scale: 1.32M candidates for 54k
 docs, 24x fewer at 4x3).
 
-100 TB notes: every stage is a hash-partitioned groupBy/join on a
-bounded key space (shingle, band signature); the only quadratic step —
+100 TB notes: shingle sets and MinHash signatures are in-row maps over
+the distinct texts (one exchange, on the text hash); banding and
+verify are hash-partitioned aggregates/joins on band signatures and
+candidate pairs; the only quadratic step —
 pair verification — is restricted to LSH candidates, which is the point
 of banding. md5 is used as the portable seeded hash family so the DuckDB
 oracle reproduces signatures bit-for-bit; a production deployment can
@@ -135,25 +137,65 @@ def _near_corpus(spark, sf_dir):
 
 
 # The ONE definition of the engine's shingling: strided char-8-grams.
-# _shingles explodes it to (doc_id, sh) rows for corpus-level pipelines
-# (the dictionary-hashed MinHash below); the streaming incremental path
-# consumes it as a per-doc ARRAY (array_distinct of this expression) so
-# a micro-batch fingerprints with ZERO shuffles — both produce the same
-# shingle SET, which is what every Jaccard/minhash downstream consumes.
+# Every MinHash site consumes it as a per-text SET column
+# (`_shingle_sets`: array_distinct of this expression, one map-side
+# projection); sites that need (id, sh) rows explode that set.
 SHINGLES_EXPR = (
     "transform(sequence(1, length(text) - 7, 4),"
     " i -> substring(text, i, 8))"
 )
 
 
-def _shingles(corpus, id_col="doc_id"):
-    """Distinct strided char-8-gram shingles per ``id_col`` (set
-    semantics)."""
-    return (
-        corpus.where(F.length("text") >= 8)
-        .select(id_col, F.explode(F.expr(SHINGLES_EXPR)).alias("sh"))
-        .distinct()
+def _shingle_sets(docs, id_col="doc_id"):
+    """``(id_col, sa)``: the distinct strided char-8-gram shingle SET of
+    each text at least 8 characters long, in-row (no shuffle)."""
+    return docs.where(F.length("text") >= 8).select(
+        id_col, F.expr(f"array_distinct({SHINGLES_EXPR})").alias("sa")
     )
+
+
+def _shingle_rows(sets, id_col="doc_id"):
+    """``(id_col, sh)`` rows of a `_shingle_sets` frame: one row per set
+    element, distinct per id by construction."""
+    return sets.select(id_col, F.explode("sa").alias("sh"))
+
+
+def _signatures(sets, id_col="doc_id"):
+    """MinHash signature stage: ``(id_col, h0..h11)``, each ``h{k}`` the
+    minimum of ``md5(sh || '#k')`` over the row's shingle set, computed
+    in-row from the set column — the same values the DuckDB oracles'
+    ``min(md5(sh || '#k')) ... GROUP BY`` produce. Hashing every set
+    element is more md5 work than hashing a corpus dictionary of
+    distinct shingles once, but it needs no shingle-row shuffle, no
+    broadcast vocabulary and no signature groupBy; the dictionary
+    chain it replaced cost perfbench `curate`'s `near_dup_pairs`
+    about 19 s of CPU against about 11 s (DESIGN.md §3)."""
+    return sets.select(
+        id_col,
+        *[
+            F.array_min(
+                F.expr(f"transform(sa, s -> md5(concat(s, '#{k}')))")
+            ).alias(f"h{k}")
+            for k in range(_N_HASHES)
+        ],
+    )
+
+
+def _set_jaccard():
+    """``(i, jac)``: the intersection size of the ``sa`` and ``sb``
+    shingle-set columns and their Jaccard in micro-units — the double
+    the DuckDB oracles' ``1000000.0 * i / (na + nb - i)`` computes."""
+    i = F.size(F.array_intersect("sa", "sb")).cast("long")
+    n = F.size("sa").cast("long") + F.size("sb").cast("long")
+    return i, F.lit(1000000.0) * i / (n - i)
+
+
+def _attach_sets(pairs, a, sets_a, b, sets_b):
+    """Join the ``(id, set)`` frames ``sets_a`` onto the ``a`` column
+    of ``pairs`` as ``sa`` and ``sets_b`` onto the ``b`` column as
+    ``sb`` — the candidate-sized attach every verify intersects
+    in-task."""
+    return pairs.join(sets_a.toDF(a, "sa"), a).join(sets_b.toDF(b, "sb"), b)
 
 
 def _members(docs):
@@ -190,29 +232,41 @@ def _scoped(*frames):
 
 
 def _text_groups(docs, keep_short=False):
-    """Text-groups stage: ``(members, gsh)`` — the ``(doc_id, gid)``
-    members and the ``(gid, sh)`` shingles of each distinct text of a
-    ``(doc_id, text)`` frame. Texts are deduped BEFORE the explode, so
-    shingling cost tracks the distinct-text count, not the doc count.
-    Members cover the docs that can shingle at all (length >= 8) — the
-    only docs the registered pipeline could ever pair; the library
-    exports pass ``keep_short=True`` so identical short texts still pair
-    through the group expansion."""
+    """Text-groups stage: ``(members, sets)`` — the ``(doc_id, gid)``
+    members and the ``(gid, sa)`` shingle set of each distinct text of
+    a ``(doc_id, text)`` frame, one row per distinct text of length
+    >= 8. Texts are deduped BEFORE shingling, so shingling and
+    fingerprinting cost track the distinct-text count, not the doc
+    count. The dedup is ONE exchange, a fixed-width repartition on
+    gid: AQE coalesces a plain distinct's small text shuffle into a
+    single task, which then ran every text's md5 work alone (sf0.1
+    `near_dup_pairs` wall 7.9-9.1 s -> 13.9-17.1 s); a repartition by
+    number is never coalesced, and the dropDuplicates on the same key
+    plans no second exchange. Members cover the docs that can shingle
+    at all (length >= 8) — the only docs the registered pipeline could
+    ever pair; the library exports pass ``keep_short=True`` so
+    identical short texts still pair through the group expansion."""
     long_docs = docs.where(F.length("text") >= 8)
     members = _members(docs if keep_short else long_docs)
-    return members, _shingles(_reps(long_docs), "gid")
+    n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    reps = (
+        long_docs.select(F.md5("text").alias("gid"), "text")
+        .repartition(n, "gid")
+        .dropDuplicates(["gid"])
+    )
+    return members, _shingle_sets(reps, "gid")
 
 
 @contextlib.contextmanager
-def _minhash_gid_pairs(gsh):
+def _minhash_gid_pairs(sets):
     """MinHash group-pair candidates stage: distinct ``(gid_a, gid_b)``
-    (``gid_a < gid_b``) band collisions of the ``(gid, sh)`` rows. The
+    (``gid_a < gid_b``) band collisions of the ``(gid, sa)`` sets. The
     band index is eagerly checkpointed because the gated expansion
     reads it three times — each read would otherwise re-run the whole
-    minhash subtree — and released when the block exits, so the caller
-    materializes what it keeps inside the block."""
+    signature subtree — and released when the block exits, so the
+    caller materializes what it keeps inside the block."""
     bands = checkpointed(
-        _band_index(_minhash(gsh.withColumnRenamed("gid", "doc_id")))
+        _band_index(_signatures(sets.withColumnRenamed("gid", "doc_id")))
     )
     with _scoped(bands):
         yield _band_pairs(bands).select(
@@ -220,7 +274,7 @@ def _minhash_gid_pairs(gsh):
         )
 
 
-# EXACT-DEDUP-BEFORE-NEAR-DUP: every text-derived structure (shingles,
+# EXACT-DEDUP-BEFORE-NEAR-DUP: every text-derived structure (shingle sets,
 # minhash signatures, band buckets, jaccard intersections) depends only
 # on the TEXT, so the whole LSH pipeline runs once per DISTINCT text
 # ("group", keyed by md5(text)) and candidate group pairs are expanded
@@ -231,7 +285,7 @@ def _minhash_gid_pairs(gsh):
 # below are memoized per (application, sf_dir) and bounded (shared
 # FrameCache: LRU refresh on hit, unpersist on eviction/clear).
 _MEMBERS_CACHE = FrameCache(max_entries=2)
-_SHINGLE_CACHE = FrameCache(max_entries=2)
+_SETS_CACHE = FrameCache(max_entries=2)
 _GID_PAIRS_CACHE = FrameCache(max_entries=2)
 _PAIRS_CACHE = FrameCache(max_entries=2)
 # (vec_id, cell, e, n2) assignment payload for embedding dedup: the cell
@@ -275,21 +329,21 @@ def _cached_members(spark, sf_dir):
     )
 
 
-def _cached_shingles(spark, sf_dir):
-    """Memoized `_text_groups` shingles of the near-dup corpus."""
-    return _SHINGLE_CACHE.get_or_create(
+def _cached_sets(spark, sf_dir):
+    """Memoized `_text_groups` shingle sets of the near-dup corpus."""
+    return _SETS_CACHE.get_or_create(
         _key(spark, sf_dir),
         lambda: _text_groups(_near_corpus(spark, sf_dir))[1].persist(),
     )
 
 
 def _cached_gid_pairs(spark, sf_dir):
-    """Memoized `_minhash_gid_pairs` over the cached shingles, checkpointed
+    """Memoized `_minhash_gid_pairs` over the cached sets, checkpointed
     (a leaf scan: the lineage would re-analyze on the driver for every
     downstream consumer)."""
 
     def build():
-        with _minhash_gid_pairs(_cached_shingles(spark, sf_dir)) as gpairs:
+        with _minhash_gid_pairs(_cached_sets(spark, sf_dir)) as gpairs:
             return checkpointed(gpairs)
 
     return _GID_PAIRS_CACHE.get_or_create(_key(spark, sf_dir), build)
@@ -301,35 +355,6 @@ def _cached_band_pairs(spark, sf_dir):
         lambda: _expand_group_pairs(
             _cached_members(spark, sf_dir), _cached_gid_pairs(spark, sf_dir)
         ).persist(),
-    )
-
-
-def _minhash(sh):
-    """Per-doc MinHash signature via a distinct-shingle dictionary.
-
-    Shingles repeat heavily across documents (~29x on the synthetic
-    corpus), so each distinct shingle is hashed once per seed and the
-    hashes are joined back to the (doc, shingle) rows, instead of
-    re-running 8 md5 calls per occurrence. The dictionary (distinct
-    shingles + 8 hex hashes) is broadcast — a natural-language shingle
-    vocabulary is orders of magnitude smaller than the occurrence
-    table; swap the hint for a shuffle join if the vocabulary outgrows
-    executor memory.
-    """
-    dictionary = sh.select("sh").distinct().select(
-        "sh",
-        *[
-            F.md5(F.concat(F.col("sh"), F.lit(f"#{k}"))).alias(f"h{k}")
-            for k in range(_N_HASHES)
-        ],
-    )
-    # explicit hint: sizes derived from the pre-explode file make the
-    # exploded (doc, shingle) side look tiny, so without it Catalyst
-    # broadcasts the WRONG side (the 29x-larger occurrence table)
-    return (
-        sh.join(F.broadcast(dictionary), "sh")
-        .groupBy("doc_id")
-        .agg(*[F.min(f"h{k}").alias(f"h{k}") for k in range(_N_HASHES)])
     )
 
 
@@ -401,10 +426,10 @@ def dedup_minhash_lsh(spark, sf_dir):
     identical texts share every band by construction). The join key is
     (band, sig), so candidate generation is a hash join, never
     all-pairs, and on a corpus with k exact copies per text the bucket
-    self-join shrinks by k^2 versus per-doc banding. The shingle,
+    self-join shrinks by k^2 versus per-doc banding. The shingle-set,
     membership, and pair tables are persisted (session-memoized, see
-    _cached_shingles/_cached_members/_cached_band_pairs): they feed the
-    Jaccard verify step, and recomputing them means re-exploding and
+    _cached_sets/_cached_members/_cached_band_pairs): they feed the
+    Jaccard verify step, and recomputing them means re-shingling and
     re-hashing the corpus."""
     return _cached_band_pairs(spark, sf_dir)
 
@@ -712,39 +737,22 @@ def dedup_simhash_pairs(spark, sf_dir):
     return _expand_group_pairs(memb, _sp_gid_pairs(_sp_banded(fp)), hamming=0)
 
 
-def _jaccard_verify(gsh, gpairs, tau_1e6):
+def _jaccard_verify(sets, gpairs, tau_1e6):
     """Exact shingle-set Jaccard on candidate group pairs: ``(gid_a,
     gid_b, jaccard_1e6)`` for the pairs of ``gpairs`` whose Jaccard
-    over the ``(gid, sh)`` rows of ``gsh`` is at least ``tau_1e6``
-    micro-units. The shingle table is first restricted to groups that
-    appear in some candidate pair (a semi-join shape), so the
-    set-intersection join runs over the candidate slice, not the full
-    vocabulary. Join strategies are left to AQE: on a dup-heavy corpus
-    the candidate set is bounded only by duplicate density, and a
-    forced broadcast would OOM the driver exactly when dedup matters
-    most. The double compare is the one the DuckDB oracles replay."""
-    cand_gids = (
-        gpairs.select(F.col("gid_a").alias("gid"))
-        .union(gpairs.select(F.col("gid_b").alias("gid")))
-        .distinct()
-    )
-    sh_cand = gsh.join(cand_gids, "gid")
-    sizes = sh_cand.groupBy("gid").agg(F.count("*").alias("n"))
-    a, b = sh_cand.alias("a"), sh_cand.alias("b")
-    inter = (
-        gpairs.join(a, F.col("a.gid") == F.col("gid_a"))
-        .join(
-            b,
-            (F.col("b.gid") == F.col("gid_b")) & (F.col("b.sh") == F.col("a.sh")),
-        )
-        .groupBy("gid_a", "gid_b")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = F.lit(1000000.0) * F.col("i") / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
+    over the ``(gid, sa)`` sets is at least ``tau_1e6`` micro-units.
+    Both sets attach to each candidate pair and intersect in-task, so
+    the verify is two candidate-sized joins — no shingle-row self-join
+    and no size aggregates. ``i > 0`` keeps the oracle's inner shingle
+    join, which never emits a pair with no shared shingle. Join
+    strategies are left to AQE: on a dup-heavy corpus the candidate
+    set is bounded only by duplicate density, and a forced broadcast
+    would OOM the driver exactly when dedup matters most. The double
+    compare is the one the DuckDB oracles replay."""
+    i, jac = _set_jaccard()
     return (
-        inter.join(sizes.alias("sa"), F.col("sa.gid") == F.col("gid_a"))
-        .join(sizes.alias("sb"), F.col("sb.gid") == F.col("gid_b"))
-        .where(jac >= F.lit(int(tau_1e6)))
+        _attach_sets(gpairs, "gid_a", sets, "gid_b", sets)
+        .where((i > 0) & (jac >= F.lit(int(tau_1e6))))
         .select("gid_a", "gid_b", F.round(jac).cast("long").alias("jaccard_1e6"))
     )
 
@@ -783,7 +791,7 @@ def dedup_near_jaccard(spark, sf_dir):
     with k exact copies per text this cuts the verify join by k^2
     (`_jaccard_verify` runs on the candidate slice)."""
     gpairs = _jaccard_verify(
-        _cached_shingles(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
+        _cached_sets(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
     )
     return _expand_group_pairs(
         _cached_members(spark, sf_dir), gpairs, jaccard_1e6=1_000_000
@@ -1329,11 +1337,11 @@ _GID_CO_SAMPLED_SQL = _GID_CO_SQL.replace(
 
 
 @contextlib.contextmanager
-def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
+def _gid_co_counts(sets, stop_df=_STOP_SH_DF, sampled=False):
     """gid co-count stage: ``(ga, gb, i, na, nb)`` — the EXACT
-    shared-shingle count of each distinct-text pair of the ``(gid, sh)``
-    rows with both shingle-set sizes, from the shingle inverted index
-    with STOP-SHINGLE-CAPPED discovery:
+    shared-shingle count of each distinct-text pair of the ``(gid, sa)``
+    shingle sets with both set sizes, from the shingle inverted index
+    (the exploded sets) with STOP-SHINGLE-CAPPED discovery:
 
     * discovery: restricted to shingles with document frequency
       <= ``stop_df``, so its volume is bounded by per-RARE-shingle df
@@ -1361,7 +1369,7 @@ def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
     while they fit on the driver and shuffles when they don't.
 
     ``sampled=True`` (the recall report's eval slice, whose caller has
-    already restricted ``gsh``) keeps the persisted rare-shingle
+    already restricted ``sets``) keeps the persisted rare-shingle
     self-join for discovery — on the quartered volume the in-task
     expansion measured ~1.3x slower end-to-end — and PREFILTERS
     discovered pairs by a conservative Jaccard upper bound
@@ -1373,12 +1381,15 @@ def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
 
     The scaffolding frames are persisted for the block (each reference
     below re-executes its subplan otherwise: hot twice, ha, hb and
-    sizes twice — measured 2x the whole build at sf0.1) and released
-    when it exits, so the caller materializes the result inside it."""
+    sizes twice — measured 2x the whole build at sf0.1; the exploded
+    rows feed three of them, and re-exploding the sets for each cost
+    `dedup_containment` about 1.5 s at sf0.1) and released when it
+    exits, so the caller materializes the result inside it."""
     from spark_data_test_spark.plans.audit import simple_plan
 
     global _last_gid_co_plan
-    sizes = gsh.groupBy("gid").agg(F.count(F.lit(1)).alias("n"))
+    gsh = _shingle_rows(sets, "gid")
+    sizes = sets.select("gid", F.size("sa").cast("long").alias("n"))
     shdf = gsh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     hot = shdf.where(F.col("df") > stop_df).select("sh")
     ghot = (
@@ -1387,7 +1398,7 @@ def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
         .agg(F.collect_set("sh").alias("hs"))
     )
     shr = gsh.join(F.broadcast(hot), "sh", "left_anti")
-    scaffolds = (sizes, shdf, ghot, shr) if sampled else (sizes, shdf, ghot)
+    scaffolds = (gsh, sizes, shdf, ghot) + ((shr,) if sampled else ())
     with _scoped(*(frame.persist() for frame in scaffolds)):
         if sampled:
             a, b = shr.alias("a"), shr.alias("b")
@@ -1430,18 +1441,18 @@ def _gid_co_counts(gsh, stop_df=_STOP_SH_DF, sampled=False):
 
 
 def _cached_gid_co_counts(spark, sf_dir, sampled=False):
-    """Memoized `_gid_co_counts` over the cached shingles: the recall
+    """Memoized `_gid_co_counts` over the cached sets: the recall
     report reads the ``sampled`` build over the deterministic
     `_EVAL_SAMPLE_PRED` slice of distinct texts (input rows halve, join
     output quarters), containment the full build."""
 
     def build():
-        sh = _cached_shingles(spark, sf_dir)
+        sets = _cached_sets(spark, sf_dir)
         if sampled:
             # gid IS md5(text), so the slice predicate is a cheap
             # first-character test on the key itself
-            sh = sh.where(F.substring("gid", 1, 1) <= "7")
-        with _gid_co_counts(sh, sampled=sampled) as co:
+            sets = sets.where(F.substring("gid", 1, 1) <= "7")
+        with _gid_co_counts(sets, sampled=sampled) as co:
             out = co.persist()
             out.count()  # materialize before the scaffolds are released
             return out
@@ -2110,9 +2121,9 @@ def dedup_incremental_minhash(spark, sf_dir):
     index = _load_or_build_minhash_index(spark, sf_dir)
     hist_index = index.where(_is_historical(F.col("doc_id")))
     shard = _new_shard(spark, sf_dir, _INC_NEAR_OFFSET, 11)
-    nsh = _shingles(shard).persist()
+    nset = _shingle_sets(shard).persist()
     try:
-        nbands = _band_index(_minhash(nsh)).persist()
+        nbands = _band_index(_signatures(nset)).persist()
         try:
             cand = (
                 hist_index.alias("h")
@@ -2129,72 +2140,40 @@ def dedup_incremental_minhash(spark, sf_dir):
             )
             # exact-verify slice: shingle only the matched partners
             partners = cand.select(F.col("dup_of").alias("doc_id")).distinct()
-            hsh = _shingles(
+            hset = _shingle_sets(
                 _hist_docs(spark, sf_dir).join(partners, "doc_id", "left_semi")
-            ).persist()
-            try:
-                nsz = nsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-                hsz = hsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-                a, b = nsh.alias("a"), hsh.alias("b")
-                inter = (
-                    cand.join(a, F.col("a.doc_id") == F.col("new_doc_id"))
-                    .join(
-                        b,
-                        (F.col("b.doc_id") == F.col("dup_of"))
-                        & (F.col("b.sh") == F.col("a.sh")),
-                    )
-                    .groupBy("new_doc_id", "dup_of")
-                    .agg(F.count(F.lit(1)).alias("i"))
+            )
+            i, jac = _set_jaccard()
+            result = (
+                _attach_sets(cand, "new_doc_id", nset, "dup_of", hset)
+                .where(i > 0)
+                .select(
+                    "new_doc_id",
+                    "dup_of",
+                    F.round(jac).cast("long").alias("jaccard_1e6"),
+                    (jac >= 500000).alias("is_dup"),
                 )
-                jac = (
-                    F.lit(1000000.0)
-                    * F.col("i")
-                    / (F.col("na") + F.col("nb") - F.col("i"))
-                )
-                result = (
-                    inter.join(
-                        nsz.select(
-                            F.col("doc_id").alias("new_doc_id"),
-                            F.col("n").alias("na"),
-                        ),
-                        "new_doc_id",
-                    )
-                    .join(
-                        hsz.select(
-                            F.col("doc_id").alias("dup_of"),
-                            F.col("n").alias("nb"),
-                        ),
-                        "dup_of",
-                    )
-                    .select(
-                        "new_doc_id",
-                        "dup_of",
-                        F.round(jac).cast("long").alias("jaccard_1e6"),
-                        (jac >= 500000).alias("is_dup"),
-                    )
-                    .orderBy("new_doc_id", "dup_of")
-                )
-                # Materialize DISTRIBUTED (executor-local checkpoint,
-                # no driver collect — result volume is real-dup-pair-
-                # proportional and driver memory must not bound it)
-                # BEFORE the commit below prunes the pre-merge version
-                # the lineage reads, and before the finally-unpersists
-                # release the frames it derives from.
-                result = result.localCheckpoint()
-                # advance the index: history + this shard, committed as
-                # the next version — the durable side effect the next
-                # shard's probe reads
-                state_path = _minhash_index_path(sf_dir)
-                os.makedirs(state_path, exist_ok=True)
-                write_state_version(
-                    hist_index.unionByName(nbands), state_path, retain=2
-                )
-            finally:
-                hsh.unpersist()
+                .orderBy("new_doc_id", "dup_of")
+            )
+            # Materialize DISTRIBUTED (executor-local checkpoint, no
+            # driver collect — result volume is real-dup-pair-
+            # proportional and driver memory must not bound it) BEFORE
+            # the commit below prunes the pre-merge version the lineage
+            # reads, and before the finally-unpersists release the
+            # frames it derives from.
+            result = result.localCheckpoint()
+            # advance the index: history + this shard, committed as the
+            # next version — the durable side effect the next shard's
+            # probe reads
+            state_path = _minhash_index_path(sf_dir)
+            os.makedirs(state_path, exist_ok=True)
+            write_state_version(
+                hist_index.unionByName(nbands), state_path, retain=2
+            )
         finally:
             nbands.unpersist()
     finally:
-        nsh.unpersist()
+        nset.unpersist()
     return result
 
 
@@ -2564,12 +2543,15 @@ def _shingle_overlap(docs, group_col, text_col):
     shingle-keyed self-join."""
     gq = "`" + group_col.replace("`", "``") + "`"
     tq = "`" + text_col.replace("`", "``") + "`"
-    ssh = _shingles(
-        docs.select(F.col(gq).alias("_grp"), F.col(tq).alias("text")).where(
-            F.col("_grp").isNotNull()
+    ssh = _shingle_rows(
+        _shingle_sets(
+            docs.select(F.col(gq).alias("_grp"), F.col(tq).alias("text")).where(
+                F.col("_grp").isNotNull()
+            ),
+            "_grp",
         ),
         "_grp",
-    )
+    ).distinct()
     shared = (
         bucket_pairs(ssh, ("sh",), "_grp", None, "group_a", "group_b")
         .groupBy("group_a", "group_b")
@@ -2800,20 +2782,11 @@ def text_knn_graph(spark, sf_dir):
     has no sub-quadratic plan. Ranking ties break on peer gid
     ascending, so the graph is bit-deterministic against the oracle,
     which replays the identical minhash/banding pipeline in DuckDB."""
-    gsets = _cached_shingles(spark, sf_dir).groupBy("gid").agg(
-        F.collect_set("sh").alias("shs")
-    )
-    i = F.size(F.array_intersect("sa", "sb"))
-    cosz = (
-        _cached_gid_pairs(spark, sf_dir)
-        .join(gsets.toDF("gid_a", "sa"), "gid_a")
-        .join(gsets.toDF("gid_b", "sb"), "gid_b")
-        .select(
-            "gid_a",
-            "gid_b",
-            (F.lit(1000000.0) * i / (F.size("sa") + F.size("sb") - i)).alias("jac"),
-        )
-    )
+    sets = _cached_sets(spark, sf_dir)
+    _, jac = _set_jaccard()
+    cosz = _attach_sets(
+        _cached_gid_pairs(spark, sf_dir), "gid_a", sets, "gid_b", sets
+    ).select("gid_a", "gid_b", jac.alias("jac"))
     return (
         _top_k(cosz, 3, "gid", "peer_gid")
         .select(
@@ -2871,7 +2844,8 @@ def minhash_band_index(docs):
     no rows). Two frames with equal texts produce identical rows, so an
     index built here is probe-compatible with every banding join in
     the engine."""
-    return _band_index(_minhash(_shingles(docs.select("doc_id", "text"))))
+    sets = _shingle_sets(docs.select("doc_id", "text"))
+    return _band_index(_signatures(sets))
 
 
 def near_dup_pairs(docs, tau_1e6=500000):
@@ -2895,10 +2869,10 @@ def near_dup_pairs(docs, tau_1e6=500000):
     frame is an executor-local checkpoint (pair-volume-sized,
     dup-proportional) so the internal caches are released before the
     caller executes it."""
-    members, gsh = _text_groups(docs.select("doc_id", "text"), keep_short=True)
-    with _scoped(members.persist(), gsh.persist()), _minhash_gid_pairs(gsh) as gp:
+    members, sets = _text_groups(docs.select("doc_id", "text"), keep_short=True)
+    with _scoped(members.persist(), sets.persist()), _minhash_gid_pairs(sets) as gp:
         return _expand_group_pairs(
-            members, _jaccard_verify(gsh, gp, tau_1e6), jaccard_1e6=1_000_000
+            members, _jaccard_verify(sets, gp, tau_1e6), jaccard_1e6=1_000_000
         ).localCheckpoint(eager=True)
 
 
@@ -2942,8 +2916,8 @@ def containment_pairs(docs, tau_1e6=_CONTAIN_1E6, stop_df=_STOP_SH_DF):
         raise ValueError(
             "containment_pairs: tau_1e6 must be in (0, 1000000]"
         )
-    members, gsh = _text_groups(docs.select("doc_id", "text"), keep_short=True)
-    with _scoped(members.persist(), gsh.persist()), _gid_co_counts(gsh, stop_df) as co:
+    members, sets = _text_groups(docs.select("doc_id", "text"), keep_short=True)
+    with _scoped(members.persist(), sets.persist()), _gid_co_counts(sets, stop_df) as co:
         return (
             _contained(co, tau_1e6)
             .join(
@@ -3260,32 +3234,18 @@ def minhash_index_probe(
         )
         # exact verify on the candidate slice only: per-doc shingle
         # SETS attach to the pair frame and intersect in-task
-        def sset(df, out):
-            return df.where(F.length("text") >= 8).select(
-                F.col("doc_id").alias(out),
-                F.expr(f"array_distinct({SHINGLES_EXPR})").alias(f"_{out}_sa"),
-            )
-
         partners = resolver.select("doc_id", "text").join(
             cand.select(F.col("dup_of").alias("doc_id")).distinct(), "doc_id"
         )
-        a = sset(new_docs, "new_doc_id")
-        b = sset(partners, "dup_of")
-        i = F.size(F.array_intersect("_new_doc_id_sa", "_dup_of_sa")).cast(
-            "long"
-        )
-        jac = (
-            F.lit(1000000.0)
-            * i
-            / (
-                F.size("_new_doc_id_sa").cast("long")
-                + F.size("_dup_of_sa").cast("long")
-                - i
-            )
-        )
+        _, jac = _set_jaccard()
         result = (
-            cand.join(a, "new_doc_id")
-            .join(b, "dup_of")
+            _attach_sets(
+                cand,
+                "new_doc_id",
+                _shingle_sets(new_docs),
+                "dup_of",
+                _shingle_sets(partners),
+            )
             .where(F.round(jac).cast("long") >= int(tau_1e6))
             .select(
                 "new_doc_id",

@@ -884,7 +884,11 @@ def multimodal_crossmodal_agreement(spark, sf_dir):
     shared with `multimodal_phash_neardup`, so the marginal cost here
     is the text-side semi-join + shingle intersect, not a second run
     of the image pipeline."""
-    from spark_data_test_spark.operators.dedup import _shingles
+    from spark_data_test_spark.operators.dedup import (
+        _attach_sets,
+        _set_jaccard,
+        _shingle_sets,
+    )
 
     pairs = _phash_pairs(spark, sf_dir)
     off = F.lit(_IMG_PLANT_OFFSET)
@@ -907,24 +911,11 @@ def multimodal_crossmodal_agreement(spark, sf_dir):
     docs = (
         t(spark, sf_dir, "documents").select("doc_id", "text").join(need, "doc_id")
     )
-    gsets = (
-        _shingles(docs)
-        .groupBy("doc_id")
-        .agg(F.collect_set("sh").alias("shs"))
-    )
-    joined = norm.join(
-        gsets.select(F.col("doc_id").alias("ta"), F.col("shs").alias("sa")),
-        "ta",
-    ).join(
-        gsets.select(F.col("doc_id").alias("tb"), F.col("shs").alias("sb")),
-        "tb",
-    )
-    i = F.size(F.array_intersect("sa", "sb")).cast("long")
-    na = F.size("sa").cast("long")
-    nb = F.size("sb").cast("long")
-    jac = F.lit(1000000.0) * i / (na + nb - i)
+    sets = _shingle_sets(docs)
+    _, jac = _set_jaccard()
     return (
-        joined.select(
+        _attach_sets(norm, "ta", sets, "tb", sets)
+        .select(
             "doc_a",
             "doc_b",
             "hamming",

@@ -218,13 +218,13 @@ def corpus_dedup_waterfall(spark, sf_dir):
     from spark_data_test_spark.operators.dedup import (
         _cached_gid_pairs,
         _cached_members,
-        _cached_shingles,
+        _cached_sets,
         _jaccard_verify,
     )
 
     members = _cached_members(spark, sf_dir)
     verified = _jaccard_verify(
-        _cached_shingles(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
+        _cached_sets(spark, sf_dir), _cached_gid_pairs(spark, sf_dir), 500000
     ).select("gid_a", "gid_b")
     # greedy min-id survivor rule at group level: each group's
     # survivor is its min doc_id; a verified group pair removes the

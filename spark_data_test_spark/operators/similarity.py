@@ -2042,15 +2042,29 @@ def _norm_locked(frame, id_col, vec_col, op, prefer=None):
     """``(frame, dim)``: the `_normalized` entry frame of the
     frame-level ANN operators with every row whose dim differs from
     the locked nonzero-vector dim dropped (`_dim_locked`); dim is None
-    when no nonzero vector exists. An empty input raises."""
-    v, dim = _dim_locked(_normalized(frame, id_col, vec_col), prefer=prefer)
+    when no nonzero vector exists. An empty input raises.
+
+    The returned frame is PERSISTED and the caller releases it: the
+    dim histogram runs over the persisted projection, so the lock and
+    every later read share one pass over the input. A ragged input
+    (more than one dim) is filtered into its own persisted frame from
+    that cached pass."""
+    base = _normalized(frame, id_col, vec_col).persist()
+    hist = _dim_hist(base)
+    dim = _lock_dim(hist, prefer)
     if dim is None and frame.first() is None:
+        base.unpersist()
         raise ValueError(f"{op}: input frame is empty")
+    if len(hist) <= 1:
+        return base, dim
+    v = base.where(F.size("_v") == dim).persist()
+    v.count()
+    base.unpersist()
     return v, dim
 
 
 def _norm_vectors(frame, id_col, vec_col, op):
-    """The dim-locked frame of `_norm_locked`."""
+    """The dim-locked, persisted frame of `_norm_locked`."""
     return _norm_locked(frame, id_col, vec_col, op)[0]
 
 
@@ -2157,18 +2171,20 @@ def ivf_topk(
     its frame's most common nonzero-vector dim drops; queries and corpus of
     different dims raise.
 
-    Cache lifetime: the normalized corpus projection is persisted for
-    the call (training forces it; the returned frame's assignment and
-    rescore sides reuse it). The blocks use Spark's default
-    MEMORY_AND_DISK storage and are LRU-evicted under pressure; call
+    Cache lifetime: the normalized corpus and query projections are
+    persisted for the call (the dim lock's histogram forces them; the
+    returned frame's assignment and rescore sides reuse them). The
+    blocks use Spark's default MEMORY_AND_DISK storage and are
+    LRU-evicted under pressure; call
     ``spark.catalog.clearCache()`` (or unpersist via the storage tab)
     to reclaim them eagerly after consuming the result."""
+    # both projections come back persisted: seeds, every Lloyd round
+    # and the assignment re-consume the corpus side
     c, cdim = _norm_locked(corpus, id_col, vec_col, "ivf_topk")
     q, qdim = _norm_locked(queries, id_col, vec_col, "ivf_topk")
     _check_same_dim(qdim, cdim, "ivf_topk")
 
     # -- train: deterministic spherical k-means on the corpus ---------
-    c = c.persist()  # seeds + every Lloyd round + assignment re-consume it
     cents = _train_double_cells(c, ncells, rounds, "ivf_topk")
 
     # -- probe: corpus -> argmax cell, queries -> nprobe cells --------
@@ -2824,6 +2840,7 @@ def _index_probe(
     # rank window (duplicate neighbors, corrupt ranks); persisted
     # BEFORE the validation first()s so the dedup shuffle runs once
     d = _pq_dedup_ids(queries, id_col, vec_col).persist()
+    q = None
     try:
         q = spec.batch(d, committed, op, id_col, vec_col)
         if q is None:
@@ -2859,6 +2876,8 @@ def _index_probe(
         return result
     finally:
         d.unpersist()
+        if q is not None:  # the IVF dim lock persisted it
+            q.unpersist()
 
 
 def _index_ingest(spec, batch, index_path, id_col, vec_col):
@@ -2870,6 +2889,7 @@ def _index_ingest(spec, batch, index_path, id_col, vec_col):
     log_path = f"{index_path}/{spec.log}"
     _assert_log_stamp(spark, log_path, committed.stamp, op, spec.live)
     d = _pq_dedup_ids(batch, id_col, vec_col).persist()
+    q = None
     try:
         if d.first() is None:
             return 0
@@ -2888,6 +2908,8 @@ def _index_ingest(spec, batch, index_path, id_col, vec_col):
         return n
     finally:
         d.unpersist()
+        if q is not None:  # the IVF dim lock persisted it
+            q.unpersist()
 
 
 def _index_delete(spec, spark, index_path, ids, id_col):
@@ -3028,19 +3050,30 @@ def _pq_pack_codes(codes, id_col):
 # -- family codec hooks -----------------------------------------------------
 
 
+def _dim_hist(q, col="_v"):
+    """``{dim: rows}`` over the non-NULL vectors of ``col``: one
+    histogram action."""
+    rows = q.where(F.col(col).isNotNull()).groupBy(F.size(col).alias("d")).count()
+    return {int(r.d): r["count"] for r in rows.collect()}
+
+
+def _lock_dim(hist, prefer=None):
+    """The locked dim of a `_dim_hist`: ``prefer`` (a committed index's
+    dim) when some row has it, else the most common dim, ties to the
+    smaller; None for an empty histogram. Never depends on row order."""
+    if not hist:
+        return None
+    return prefer if prefer in hist else min(hist, key=lambda d: (-hist[d], d))
+
+
 def _dim_locked(q, col="_v", prefer=None):
     """Dim lock over a vector column: ``(rows of the locked dim, dim)``
     — ragged rows are a data bug upstream and drop rather than
     mis-split or NULL-pad a ``zip_with`` — or ``(q, None)`` when no row
-    holds a vector. The lock is ``prefer`` (a committed index's dim)
-    when some row has it, else the most common non-NULL vector dim,
-    ties to the smaller. One histogram action; the lock never depends
-    on row order."""
-    rows = q.where(F.col(col).isNotNull()).groupBy(F.size(col).alias("d")).count()
-    hist = {int(r.d): r["count"] for r in rows.collect()}
-    if not hist:
+    holds a vector (`_lock_dim` picks the dim)."""
+    dim = _lock_dim(_dim_hist(q, col), prefer)
+    if dim is None:
         return q, None
-    dim = prefer if prefer in hist else min(hist, key=lambda d: (-hist[d], d))
     return q.where(F.size(col) == dim), dim
 
 
@@ -3066,6 +3099,7 @@ def _ivf_batch(d, committed, op, id_col, vec_col):
     cdim = int(committed.shape["dim"] or 0)
     q, dim = _norm_locked(d, id_col, vec_col, op, prefer=cdim)
     if dim is not None and dim != cdim:
+        q.unpersist()
         raise ValueError(
             f"{op}: batch vector dim {dim} != committed centroid dim {cdim}"
         )
@@ -3087,8 +3121,13 @@ def _ivfpq_batch(d, committed, op, id_col, vec_col):
     codebook shape checks; None for an all-zero-norm batch."""
     q, dim = _norm_locked(d, id_col, vec_col, op, prefer=_pq_dim(committed))
     if dim is None:
+        q.unpersist()
         return None
-    _check_pq_dims(dim, committed, op)
+    try:
+        _check_pq_dims(dim, committed, op)
+    except ValueError:
+        q.unpersist()
+        raise
     return q
 
 
@@ -3363,7 +3402,7 @@ def ivf_index_build(
     Corpus ids are expected unique (the FAISS add-with-ids contract;
     only probe/ingest BATCHES collapse duplicate ids). Commit, pin and
     stamp rules: see the persisted-index section comment."""
-    c = _norm_vectors(corpus, id_col, vec_col, "ivf_index_build").persist()
+    c = _norm_vectors(corpus, id_col, vec_col, "ivf_index_build")
     try:
         if centroids is None:
             centroids = _trained_centroids(
@@ -3877,7 +3916,7 @@ def ivfpq_index_build(
     c = _norm_vectors(
         _pq_dedup_ids(corpus, id_col, vec_col),
         id_col, vec_col, "ivfpq_index_build",
-    ).persist()
+    )
     try:
         if centroids is None:
             centroids = _trained_centroids(

@@ -862,7 +862,7 @@ def text_langid_confusion(spark, sf_dir):
 def text_ngram_novelty(spark, sf_dir):
     """Per-document NOVELTY scoring: the fraction of a doc's distinct
     char-8-gram shingles (the dedup family's stride-4 scheme,
-    operators/dedup.py `_shingles`) that the corpus had not seen in any
+    operators/dedup.py `SHINGLES_EXPR`) that the corpus had not seen in any
     earlier document (first_seen = min doc_id over the shingle) — the
     curation signal pipelines use to rank boilerplate-heavy or
     template-derived documents below genuinely new content when

@@ -1544,13 +1544,15 @@ def streaming_incremental_minhash(spark, sf_dir):
     siblings at the next run's setup) — never collected on the
     driver."""
     from spark_data_test_spark.operators.dedup import (
-        SHINGLES_EXPR,
-        _N_HASHES,
         _assert_offset_headroom,
+        _attach_sets,
         _band_index,
         _hist_docs,
         _is_historical,
         _load_or_build_minhash_index,
+        _set_jaccard,
+        _shingle_sets,
+        _signatures,
     )
     from spark_data_test_spark.operators.relational import t
     from spark_data_test_spark.state import (
@@ -1600,48 +1602,24 @@ def streaming_incremental_minhash(spark, sf_dir):
     # The PERSISTENT minhash index the batch incremental family
     # maintains ("the index is the asset") is probed IN PLACE — sliced
     # back to the historical docs exactly like dedup_incremental_minhash
-    # (the slice is identical to _band_index(_minhash(_shingles(hist)))
-    # because the committed index was built from it); the run's state
-    # log holds ONLY stream deltas, so no O(corpus) per-run v0 copy.
+    # (the slice is identical to minhash_band_index(hist) because the
+    # committed index was built from it); the run's state log holds
+    # ONLY stream deltas, so no O(corpus) per-run v0 copy.
     hist_idx = (
         _load_or_build_minhash_index(spark, sf_dir)
         .where(_is_historical(F.col("doc_id")))
         .select("doc_id", "band", "sig", F.lit("history").alias("src"))
     )
 
-    def _shingle_set(df):
-        # per-doc shingle SET as ONE map-side projection — the same
-        # set _shingles produces by explode+distinct, without the two
-        # shuffles. A micro-batch is the wrong place for the corpus
-        # dictionary-hash minhash (its distinct-shingle dictionary
-        # and signature groupBy are two more shuffles amortized over
-        # a CORPUS, not a batch); per-batch rows are fingerprinted
-        # in-row instead: 12 array_min(transform(md5)) expressions
-        # over the persisted set column. Identical values by
-        # construction — min over the same distinct-shingle set of
-        # the same md5(sh || '#k') — so probes against the
-        # dictionary-built persistent index match bit-for-bit
-        # (the hash-equality the oracle pins).
-        return df.where(F.length("text") >= 8).select(
-            "doc_id",
-            F.expr(f"array_distinct({SHINGLES_EXPR})").alias("sa"),
-        )
-
     def process(batch_df, batch_id):
         spk = batch_df.sparkSession
         deltas = read_state_union(spk, state_path)
         idx = hist_idx if deltas is None else hist_idx.unionByName(deltas)
-        bset = _shingle_set(batch_df.select("doc_id", "text")).persist()
-        sig = bset.select(
-            "doc_id",
-            *[
-                F.array_min(
-                    F.expr(f"transform(sa, s -> md5(concat(s, '#{k}')))")
-                ).alias(f"h{k}")
-                for k in range(_N_HASHES)
-            ],
-        )
-        bands = _band_index(sig).persist()
+        # the batch's shingle sets feed both its signatures and the
+        # verify: the same in-row kernel as the batch dedup family, so
+        # its band rows match the persistent index bit-for-bit
+        bset = _shingle_sets(batch_df.select("doc_id", "text")).persist()
+        bands = _band_index(_signatures(bset)).persist()
         try:
             probe = (
                 bands.alias("s")
@@ -1667,36 +1645,16 @@ def streaming_incremental_minhash(spark, sf_dir):
                 cand.select(F.col("dup_of").alias("doc_id")).distinct(),
                 "doc_id",
             )
-            # array-attach verify (the text_knn_graph shape): per-doc
-            # shingle SETS join onto the candidate frame and intersect
-            # in-task — two hash joins sized by the candidate count
-            # instead of shingle-level joins + two groupBys. `i > 0`
-            # mirrors the oracle's inner shingle join, which drops a
-            # (theoretical) band collision with zero shared shingles.
-            # Both set columns come from the shuffle-free _shingle_set
-            # projection: the batch side reuses the persisted bset,
-            # the partner side maps over the resolver slice in-row.
-            pset = (
-                _shingle_set(partners)
-                .withColumnRenamed("sa", "sb")
-                .withColumnRenamed("doc_id", "dup_of")
-            )
-            i = F.size(F.array_intersect("sa", "sb")).cast("long")
-            jac = (
-                F.lit(1000000.0)
-                * i
-                / (
-                    F.size("sa").cast("long")
-                    + F.size("sb").cast("long")
-                    - i
-                )
-            )
+            # the kernel's array-attach verify: the batch side reuses
+            # the persisted bset, the partner side maps over the
+            # resolver slice in-row. `i > 0` mirrors the oracle's inner
+            # shingle join, which drops a (theoretical) band collision
+            # with zero shared shingles.
+            i, jac = _set_jaccard()
             (
-                cand.join(
-                    bset.withColumnRenamed("doc_id", "new_doc_id"),
-                    "new_doc_id",
+                _attach_sets(
+                    cand, "new_doc_id", bset, "dup_of", _shingle_sets(partners)
                 )
-                .join(pset, "dup_of")
                 .where(i > 0)
                 .select(
                     "new_doc_id",

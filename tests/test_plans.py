@@ -676,10 +676,8 @@ def test_band_pairs_expansion_is_in_task(spark, sf_dir):
     from spark_data_test_spark.operators import dedup
     from spark_data_test_spark.plans.audit import plan_op_counts, simple_plan
 
-    sh = dedup._cached_shingles(spark, sf_dir).withColumnRenamed(
-        "gid", "doc_id"
-    )
-    df = dedup._band_pairs(dedup._band_index(dedup._minhash(sh)))
+    sets = dedup._cached_sets(spark, sf_dir).withColumnRenamed("gid", "doc_id")
+    df = dedup._band_pairs(dedup._band_index(dedup._signatures(sets)))
     counts = plan_op_counts(df)
     assert counts["SortMergeJoin"] + counts["ShuffledHashJoin"] <= 1, counts
     assert counts["CartesianProduct"] == 0, counts
@@ -690,6 +688,31 @@ def test_band_pairs_expansion_is_in_task(spark, sf_dir):
     assert counts["Generate"] >= 3, counts
     assert counts["ObjectHashAggregate"] >= 1, counts
     assert "LeftAnti" in simple_plan(df)  # the broadcast hot-key gate
+
+
+def test_minhash_fingerprint_stage_plans_one_exchange(spark, sf_dir):
+    """The MinHash fingerprint stage (distinct texts -> shingle sets ->
+    signatures) plans exactly ONE Exchange, the fixed-width gid
+    repartition that dedups texts (never coalesced into one task by
+    AQE), then computes every shingle set and md5 signature in-row: no
+    shuffle of shingle rows (no Generate anywhere) and no join against
+    a shingle hash dictionary."""
+    from spark_data_test_spark.operators import dedup
+    from spark_data_test_spark.operators.relational import t
+    from spark_data_test_spark.plans.audit import plan_op_counts, simple_plan
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _, sets = dedup._text_groups(docs)
+    df = dedup._signatures(sets, "gid")
+    counts = plan_op_counts(df)
+    plan = simple_plan(df)
+    assert counts["Exchange"] == 1, counts
+    assert "hashpartitioning(gid" in plan, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
+    assert counts["Generate"] == 0, counts
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+                 "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert counts[join] == 0, counts
 
 
 def test_simhash_pair_banding_is_in_task(spark, sf_dir):

@@ -1811,3 +1811,51 @@ def test_dim_lock_ties_go_to_the_smaller_dim(spark):
     assert dim == 2
     assert sorted(r.vec_id for r in locked.collect()) == [2, 4]
     assert _dim_locked(df.where("vec_id = 5"))[1] is None
+
+
+def _range_rows_scanned(spark, since):
+    """Rows out of every ``Range`` scan node of the SQL executions
+    after id ``since``, read from Spark's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    total = 0
+    for r in range(runs.size()):
+        eid = runs.apply(r).executionId()
+        if eid <= since:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            if nodes.apply(i).name() != "Range":
+                continue
+            metrics = nodes.apply(i).metrics()
+            for j in range(metrics.size()):
+                if metrics.apply(j).name() == "number of output rows":
+                    v = values.get(metrics.apply(j).accumulatorId())
+                    total += int(v.get().replace(",", "")) if v.isDefined() else 0
+    return total
+
+
+def test_ivf_index_build_scans_its_input_once(spark, tmp_path):
+    """The dim lock's histogram reads the persisted normalized
+    projection that training and encoding read after it, so one
+    `ivf_index_build` scans its input once (the lock used to run over
+    an unpersisted lineage that the build then computed again)."""
+    from pyspark.sql import functions as F
+
+    from spark_data_test_spark import ivf_index_build
+
+    n = 200
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.cos(F.col("id") * (j + 1)) for j in range(4)]).alias("emb"),
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = store.executionsList()
+    since = max(
+        [runs.apply(r).executionId() for r in range(runs.size())], default=-1
+    )
+    assert ivf_index_build(corpus, str(tmp_path / "idx"), ncells=3) == n
+    assert _range_rows_scanned(spark, since) == n

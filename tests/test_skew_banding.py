@@ -100,7 +100,7 @@ def test_stop_shingle_cap_blocks_boilerplate_discovery(
     """Boilerplate shingles (df = 10^4) are hotter than _STOP_SH_DF, so
     the co-count discovery join cannot pair docs through them: the
     discovered pair set tracks the planted twins, not corpus^2."""
-    sh = dd._cached_shingles(spark, hot_boilerplate_dir)
+    sh = dd._shingle_rows(dd._cached_sets(spark, hot_boilerplate_dir), "gid")
     hottest = (
         sh.groupBy("sh").count().agg(F.max("count").alias("m")).first().m
     )
