@@ -541,45 +541,69 @@ def orders_rfm_segments(spark, sf_dir):
     monetary (lifetime cents), each banded 1-4 against FIXED business
     thresholds, then the segment grid is aggregated.
 
-    Fixed bands instead of ntile-quartiles is a scale decision, not a
-    shortcut: a global ntile needs a total order over all customers
-    (single-partition window — the classic driver-killer), while fixed
-    thresholds keep the whole query two map-side-combinable hash
-    aggregates (customer, then the <= 64-cell segment grid) with zero
-    sorts. Recency arithmetic is integer epoch-microsecond floor
-    division, monetary is integer cents — both engines agree
-    bit-for-bit."""
-    o = t(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.expr(
-            f"(unix_micros(timestamp'{_RFM_ANCHOR}') - unix_micros(max(o_orderdate)))"
-            f" div {_RFM_DAY_US}"
-        ).alias("r_days"),
-        F.count(F.lit(1)).alias("freq"),
-        F.sum(cents(F.col("o_totalprice"))).alias("m_cents"),
-    )
-    band = lambda c, b4, b3, b2: (
-        F.when(c >= b4, 4).when(c >= b3, 3).when(c >= b2, 2).otherwise(1)
-    )
-    scored = per_cust.select(
-        F.when(F.col("r_days") <= 180, 4)
-        .when(F.col("r_days") <= 365, 3)
-        .when(F.col("r_days") <= 730, 2)
-        .otherwise(1)
-        .alias("r_score"),
-        band(F.col("freq"), 15, 10, 5).alias("f_score"),
-        band(F.col("m_cents"), 400_000_000, 250_000_000, 100_000_000).alias(
-            "m_score"
-        ),
-        "m_cents",
-    )
-    return scored.groupBy("r_score", "f_score", "m_score").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum("m_cents").alias("m_cents_total"),
+    The call of `rfm_segments` with the oracle's monetary cutoffs.
+    Fixed bands instead of ntile-quartiles keep the query two
+    map-side-combinable hash aggregates with zero sorts (see the
+    export). Recency is integer epoch-microsecond floor division; the
+    export sums the integer cents as double, which is exact while a
+    total stays below 2^53 cents, so ``value_total`` casts back to the
+    oracle's bigint bit-for-bit."""
+    o = t(spark, sf_dir, "orders").withColumn("c", cents(F.col("o_totalprice")))
+    return rfm_segments(
+        o,
+        _RFM_ANCHOR,
+        "o_custkey",
+        "o_orderdate",
+        "c",
+        monetary=(400_000_000, 250_000_000, 100_000_000),
+    ).select(
+        "r_score",
+        "f_score",
+        "m_score",
+        "n_customers",
+        F.col("value_total").cast("long").alias("m_cents_total"),
     )
 
 
 _ABC_BUCKET_CENTS = 1 << 20  # ~$10.5k revenue per distribution bucket
+
+
+def _pareto_cumsum(keyed, key, value, bkt):
+    """The two-phase distributed running sum `parts_abc_pareto` and
+    `pareto_classes` share: ``keyed`` carries one row per ``key`` with
+    its ``value`` and a magnitude bucket ``bkt`` (higher values in
+    higher buckets). The per-bucket totals make a tiny frame whose
+    descending prefix sums broadcast back, and each key's inclusive
+    running sum ``_cum`` = its bucket's prefix + an intra-bucket
+    running sum (window partitioned BY BUCKET: bounded partitions, no
+    global sort); ties order by (value desc, key). Adds ``_cum`` and
+    the grand ``_total`` (a broadcast one-row cross join)."""
+    bkt_prefix = (
+        keyed.groupBy(bkt)
+        .agg(F.sum(value).alias("_bsum"))
+        .withColumn(
+            "_prefix",
+            F.coalesce(
+                F.sum("_bsum").over(
+                    Window.orderBy(F.col(bkt).desc()).rowsBetween(
+                        Window.unboundedPreceding, -1
+                    )
+                ),
+                F.lit(0),
+            ),
+        )
+        .select(bkt, "_prefix")
+    )
+    w_intra = (
+        Window.partitionBy(bkt)
+        .orderBy(F.col(value).desc(), key)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        keyed.join(F.broadcast(bkt_prefix), bkt)
+        .withColumn("_cum", F.col("_prefix") + F.sum(value).over(w_intra))
+        .crossJoin(F.broadcast(keyed.agg(F.sum(value).alias("_total"))))
+    )
 
 
 @query(
@@ -612,54 +636,25 @@ def parts_abc_pareto(spark, sf_dir):
     95%, C after — with the global running sum computed WITHOUT a
     single-partition window.
 
-    Two-phase distributed cumsum: per-part revenue is range-bucketed by
-    magnitude (``r div 2^20``; a few hundred buckets regardless of
-    part count since per-part revenue doesn't grow with sf), the
-    per-bucket totals make a tiny frame whose descending prefix sums
-    broadcast back, and each part's global cum = its bucket's prefix +
-    an intra-bucket running sum (window partitioned BY BUCKET — bounded
-    partitions, no global sort). Share thresholds are exact integer
-    cross-multiplications; ties order by (revenue desc, partkey) in
-    both phases. The DuckDB oracle is the textbook single global window
+    Two-phase distributed cumsum, the `_pareto_cumsum` stage
+    `pareto_classes` runs too: per-part revenue is range-bucketed by
+    magnitude (a fixed ``r div 2^20``; a few hundred buckets regardless
+    of part count since per-part revenue doesn't grow with sf) instead
+    of the export's data-derived width. Share thresholds are exact
+    integer cross-multiplications instead of the export's double
+    shares; ties order by (revenue desc, partkey) in both phases. The DuckDB oracle is the textbook single global window
     — an independent formulation, so the hash-match validates the
     two-phase decomposition itself."""
     li = t(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(cents(F.col("l_extendedprice"))).alias("r")
     ).withColumn("bkt", F.expr(f"r div {_ABC_BUCKET_CENTS}"))
-    tot = rev.agg(F.sum("r").alias("total"))
-    # tiny frame: one row per occupied revenue bucket; prefix = total of
-    # all strictly-higher buckets (descending order)
-    bkt_prefix = (
-        rev.groupBy("bkt")
-        .agg(F.sum("r").alias("bsum"))
-        .withColumn(
-            "prefix",
-            F.coalesce(
-                F.sum("bsum").over(
-                    Window.orderBy(F.col("bkt").desc()).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("bkt", "prefix")
-    )
-    w_intra = (
-        Window.partitionBy("bkt")
-        .orderBy(F.col("r").desc(), "pk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = (
-        rev.join(F.broadcast(bkt_prefix), "bkt")
-        .withColumn("cum", F.col("prefix") + F.sum("r").over(w_intra))
-        .crossJoin(F.broadcast(tot))
-    )
+    cum, total = F.col("_cum"), F.col("_total")
     return (
-        ranked.select(
-            F.when(F.col("cum") * 5 <= F.col("total") * 4, "A")
-            .when(F.col("cum") * 20 <= F.col("total") * 19, "B")
+        _pareto_cumsum(rev, "pk", "r", "bkt")
+        .select(
+            F.when(cum * 5 <= total * 4, "A")
+            .when(cum * 20 <= total * 19, "B")
             .otherwise("C")
             .alias("abc_class"),
             "r",
@@ -778,6 +773,43 @@ def orders_open_backlog_daily(spark, sf_dir):
     )
 
 
+def _ab_moments(frame, keys, in_a, c):
+    """The per-arm moments and Welch z `events_ab_test_readout` and
+    `ab_readout` share: ONE map-side-combinable aggregate per ``keys``
+    group of CONDITIONAL sums, ``na``/``sa``/``ssa`` over the rows
+    where the 0/1 ``in_a`` is 1 and ``nb``/``sb``/``ssb`` over the rest
+    (n, sum and sum of squares of ``c`` — one shuffle, no arm
+    self-join), plus ``z_score``: the Welch two-sample z of the arm
+    means, a fixed tree of IEEE ops over those moments with n-1
+    sample variances. Empty/singleton arms give a NULL z instead of
+    IEEE Inf/NaN (Spark would emit them from the 0/0 and x/0
+    divisions, while DuckDB's behavior depends on its
+    ieee_floating_point_ops setting)."""
+    w = frame.groupBy(*keys).agg(
+        F.sum(in_a).alias("na"),
+        F.sum(in_a * c).alias("sa"),
+        F.sum(in_a * c * c).alias("ssa"),
+        F.sum(1 - in_a).alias("nb"),
+        F.sum((1 - in_a) * c).alias("sb"),
+        F.sum((1 - in_a) * c * c).alias("ssb"),
+    )
+    nad, sad, ssad = (F.col(x).cast("double") for x in ("na", "sa", "ssa"))
+    nbd, sbd, ssbd = (F.col(x).cast("double") for x in ("nb", "sb", "ssb"))
+    var_term_a = (nad * ssad - sad * sad) / (
+        nad * nad * (F.col("na") - 1).cast("double")
+    )
+    var_term_b = (nbd * ssbd - sbd * sbd) / (
+        nbd * nbd * (F.col("nb") - 1).cast("double")
+    )
+    return w.withColumn(
+        "z_score",
+        F.when(
+            (F.col("na") > 1) & (F.col("nb") > 1),
+            (sad / nad - sbd / nbd) / F.sqrt(var_term_a + var_term_b),
+        ),
+    )
+
+
 @query(
     "events_ab_test_readout",
     """
@@ -832,48 +864,27 @@ def events_ab_test_readout(spark, sf_dir):
     as `ml_linear_regression_train`; a streaming engine computing this
     from per-partition float sums could not hash-match anything).
     Sample-variance denominators use n-1; the z is in cents-space
-    (scale cancels in the ratio)."""
+    (scale cancels in the ratio). The moments and the z tree are the
+    `_ab_moments` stage `ab_readout` runs; the query feeds it integer
+    cents, so its moments are exact bigints, and its means are the
+    oracle's ``sa / (100 n)`` (the export's are double sums over n)."""
     assigned = t(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
         "event_type",
         cents(F.col("value")).alias("c"),
     )
-    in_a, c = F.col("in_a"), F.col("c")
-    w = assigned.groupBy("event_type").agg(
-        F.sum(in_a).alias("na"),
-        F.sum(in_a * c).alias("sa"),
-        F.sum(in_a * c * c).alias("ssa"),
-        F.sum(1 - in_a).alias("nb"),
-        F.sum((1 - in_a) * c).alias("sb"),
-        F.sum((1 - in_a) * c * c).alias("ssb"),
-    )
-    nad, sad, ssad = (F.col(c).cast("double") for c in ("na", "sa", "ssa"))
-    nbd, sbd, ssbd = (F.col(c).cast("double") for c in ("nb", "sb", "ssb"))
-    var_term_a = (nad * ssad - sad * sad) / (
-        nad * nad * (F.col("na") - 1).cast("double")
-    )
-    var_term_b = (nbd * ssbd - sbd * sbd) / (
-        nbd * nbd * (F.col("nb") - 1).cast("double")
-    )
-    # Empty/singleton arms: Spark would emit IEEE Inf/NaN from the 0/0
-    # and x/0 divisions while DuckDB's behavior depends on its
-    # ieee_floating_point_ops setting — guard BOTH engines to NULL so
-    # sparse event types hash identically (means need n > 0, the Welch
-    # variance terms need n > 1).
-    return w.select(
+    na, nb = F.col("na"), F.col("nb")
+    return _ab_moments(
+        assigned, ["event_type"], F.col("in_a"), F.col("c")
+    ).select(
         "event_type",
         "na",
         "nb",
-        F.when(
-            F.col("na") > 0, sad / (100 * F.col("na")).cast("double")
-        ).alias("mean_a"),
-        F.when(
-            F.col("nb") > 0, sbd / (100 * F.col("nb")).cast("double")
-        ).alias("mean_b"),
-        F.when(
-            (F.col("na") > 1) & (F.col("nb") > 1),
-            (sad / nad - sbd / nbd) / F.sqrt(var_term_a + var_term_b),
-        ).alias("z_score"),
+        F.when(na > 0, F.col("sa").cast("double") / (100 * na).cast("double"))
+        .alias("mean_a"),
+        F.when(nb > 0, F.col("sb").cast("double") / (100 * nb).cast("double"))
+        .alias("mean_b"),
+        "z_score",
     )
 
 
@@ -1014,27 +1025,20 @@ def events_value_histogram(spark, sf_dir):
     simple addition — a data-dependent range re-bins on every run and
     can never be merged). One scan, one (type, bucket)-keyed aggregate
     with map-side partials; exact integer cents so both engines bucket
-    identically. Bucketing is FLOOR division on BOTH sides — Spark via
-    ``(c - pmod(c, w)) div w`` (pmod is the non-negative remainder, so
-    the numerator is an exact multiple of w and truncating ``div``
-    equals floor), and the DuckDB oracle via the same identity with
-    ``((c % w) + w) % w`` as its non-negative mod, since DuckDB's
-    integer ``//`` (like Spark's bare ``div``) truncates toward zero
-    and would send -100 cents to bucket 0 instead of -1. Pure integer
-    arithmetic throughout — no double rounding at any magnitude."""
-    ev = t(spark, sf_dir, "events")
-    c = "cast(round(value * 100) as bigint)"
-    w = _HIST_WIDTH_CENTS
-    bucket = F.least(
-        F.expr(f"({c} - pmod({c}, {w})) div {w}"),
-        F.lit(_HIST_MAX_BUCKET).cast("long"),
+    identically. The call of `value_histogram`: its bucket is
+    ``floor(double(c) / w)``, which equals the oracle's floor division
+    ``(c - ((c % w) + w) % w) // w`` for every ``|c| < 2^53`` (the
+    double quotient is within half an ulp of the true one, and a
+    non-integer quotient sits at least 1/w from the next integer, so
+    rounding never carries it across a bucket edge). DuckDB's integer
+    ``//`` truncates toward zero, hence the non-negative mod there:
+    -100 cents is bucket -1, not 0."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_type", cents(F.col("value")).alias("c")
     )
-    return (
-        ev.select("event_type", bucket.alias("bucket"))
-        .groupBy("event_type", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("event_type", "bucket")
-    )
+    return value_histogram(
+        ev, "c", _HIST_WIDTH_CENTS, _HIST_MAX_BUCKET, keys="event_type"
+    ).orderBy("event_type", "bucket")
 
 
 _DUP_PAY_PCT_NUM = 10  # amount tolerance: |a-b| <= 1% of the smaller
@@ -1078,41 +1082,31 @@ def orders_duplicate_payment_scan(spark, sf_dir):
     never corpus-quadratic, and both predicates evaluate INSIDE the
     equi-join before anything pair-shaped shuffles. A skewed mega-
     customer would surface in AQE's skew-join splitting; the exact
-    analog of the text family's banded candidates + in-join verify."""
+    analog of the text family's banded candidates + in-join verify.
+    The call of `duplicate_scan` plus renames and the oracle's order."""
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         cents(F.col("o_totalprice")).alias("pc"),
         F.expr(f"unix_micros(o_orderdate) div {_RFM_DAY_US}").alias("day"),
     )
-    a, b = o.alias("a"), o.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.o_custkey") == F.col("b.o_custkey"))
-            & (F.col("a.o_orderkey") < F.col("b.o_orderkey"))
-            & (
-                F.abs(F.col("a.day") - F.col("b.day")) <= _DUP_PAY_DAYS
-            )
-            & (
-                F.lit(_DUP_PAY_PCT_DEN)
-                * F.abs(F.col("a.pc") - F.col("b.pc"))
-                <= F.lit(_DUP_PAY_PCT_NUM)
-                * F.least(F.col("a.pc"), F.col("b.pc"))
-            ),
-        )
-        .select(
-            F.col("a.o_custkey").alias("custkey"),
-            F.col("a.o_orderkey").alias("order_a"),
-            F.col("b.o_orderkey").alias("order_b"),
-            F.col("a.pc").alias("amount_a_cents"),
-            F.col("b.pc").alias("amount_b_cents"),
-            F.abs(F.col("a.day") - F.col("b.day"))
-            .cast("long")
-            .alias("days_apart"),
-        )
-        .orderBy("custkey", "order_a", "order_b")
-    )
+    return duplicate_scan(
+        o,
+        "o_custkey",
+        "o_orderkey",
+        "pc",
+        "day",
+        _DUP_PAY_DAYS,
+        _DUP_PAY_PCT_NUM,
+        _DUP_PAY_PCT_DEN,
+    ).select(
+        F.col("entity").alias("custkey"),
+        F.col("id_a").alias("order_a"),
+        F.col("id_b").alias("order_b"),
+        F.col("amount_a").alias("amount_a_cents"),
+        F.col("amount_b").alias("amount_b_cents"),
+        F.col("time_apart").alias("days_apart"),
+    ).orderBy("custkey", "order_a", "order_b")
 
 
 def pareto_classes(
@@ -1176,33 +1170,8 @@ def pareto_classes(
         F.col(key_col).alias("_k"),
         F.col(value_col).cast("double").alias("_v"),
     ).withColumn("_bkt", F.floor(F.col("_v") / F.lit(width)))
-    tot = keyed.agg(F.sum("_v").alias("_total"))
-    bkt_prefix = (
-        keyed.groupBy("_bkt")
-        .agg(F.sum("_v").alias("_bsum"))
-        .withColumn(
-            "_prefix",
-            F.coalesce(
-                F.sum("_bsum").over(
-                    Window.orderBy(F.col("_bkt").desc()).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .select("_bkt", "_prefix")
-    )
-    w_intra = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.col("_v").desc(), "_k")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = (
-        keyed.join(F.broadcast(bkt_prefix), "_bkt")
-        .withColumn("_cum", F.col("_prefix") + F.sum("_v").over(w_intra))
-        .crossJoin(F.broadcast(tot))
-        .withColumn("_share", F.col("_cum") / F.col("_total"))
+    ranked = _pareto_cumsum(keyed, "_k", "_v", "_bkt").withColumn(
+        "_share", F.col("_cum") / F.col("_total")
     )
     cls = F.when(F.col("_share") <= thresholds[0], labels[0])
     for t_i, lab in zip(thresholds[1:], labels[1:-1]):
@@ -1224,15 +1193,17 @@ def value_histogram(df, value_col, width, max_bucket=None, keys=()):
     ``max_bucket``), NOT data-dependent min/max, so yesterday's
     histogram is comparable to today's and partial histograms merge by
     simple addition. Bucketing is true FLOOR division (negative values
-    land in negative buckets, never bucket 0). Returns
-    ``(keys..., bucket, cnt)``.
+    land in negative buckets, never bucket 0); a NULL value counts in
+    the NULL bucket. Returns ``(keys..., bucket, cnt)``.
 
     Shape at 100 TB: one scan, one (keys, bucket)-keyed aggregate with
     map-side partials."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     bucket = F.floor(F.col(value_col).cast("double") / F.lit(float(width)))
     if max_bucket is not None:
-        bucket = F.least(bucket, F.lit(int(max_bucket)))
+        # not least(): it skips a NULL, so a NULL value would count in
+        # the clamped tail bucket instead of the NULL bucket
+        bucket = F.when(bucket > int(max_bucket), int(max_bucket)).otherwise(bucket)
     return (
         df.select(*keys, bucket.cast("long").alias("bucket"))
         .groupBy(*keys, "bucket")
@@ -1255,34 +1226,19 @@ def ab_readout(events, arm_col, value_col, keys=()):
     by the group alone — one shuffle, no arm self-join; the z-score is
     a fixed tree of IEEE ops over those moments."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    in_a = F.col(arm_col).cast("int")
-    c = F.col(value_col).cast("double")
-    w = events.groupBy(*keys).agg(
-        F.sum(in_a).alias("na"),
-        F.sum(in_a * c).alias("sa"),
-        F.sum(in_a * c * c).alias("ssa"),
-        F.sum(1 - in_a).alias("nb"),
-        F.sum((1 - in_a) * c).alias("sb"),
-        F.sum((1 - in_a) * c * c).alias("ssb"),
-    )
-    nad, sad, ssad = (F.col(x).cast("double") for x in ("na", "sa", "ssa"))
-    nbd, sbd, ssbd = (F.col(x).cast("double") for x in ("nb", "sb", "ssb"))
-    var_term_a = (nad * ssad - sad * sad) / (
-        nad * nad * (F.col("na") - 1).cast("double")
-    )
-    var_term_b = (nbd * ssbd - sbd * sbd) / (
-        nbd * nbd * (F.col("nb") - 1).cast("double")
-    )
-    return w.select(
+    na, nb = F.col("na"), F.col("nb")
+    return _ab_moments(
+        events,
+        keys,
+        F.col(arm_col).cast("int"),
+        F.col(value_col).cast("double"),
+    ).select(
         *keys,
-        F.col("na").cast("long").alias("n_treat"),
-        F.col("nb").cast("long").alias("n_control"),
-        F.when(F.col("na") > 0, sad / nad).alias("mean_treat"),
-        F.when(F.col("nb") > 0, sbd / nbd).alias("mean_control"),
-        F.when(
-            (F.col("na") > 1) & (F.col("nb") > 1),
-            (sad / nad - sbd / nbd) / F.sqrt(var_term_a + var_term_b),
-        ).alias("z_score"),
+        na.cast("long").alias("n_treat"),
+        nb.cast("long").alias("n_control"),
+        F.when(na > 0, F.col("sa") / na.cast("double")).alias("mean_treat"),
+        F.when(nb > 0, F.col("sb") / nb.cast("double")).alias("mean_control"),
+        "z_score",
     )
 
 

@@ -355,46 +355,15 @@ _LOGISTIC_MEMO = register_memo({})
 
 
 def _fit_logistic(feat, sf_dir=None):
-    """The integer-exact GD loop (see `ml_logistic_quality_train`):
-    `_GD_ITERS` aggregate passes, each collecting the 4-scalar weight
-    model card to the driver (bounded, like the simhash centering
-    vector) and advancing by a truncating integer step."""
+    """The trained weights of both logistic queries: `_gd_weights`
+    over the (y, x1, x2, x3) frame, memoized per (application,
+    sf_dir) when ``sf_dir`` is given."""
     key = None
     if sf_dir is not None:
         key = (feat.sparkSession.sparkContext.applicationId, sf_dir)
         if key in _LOGISTIC_MEMO:
             return list(_LOGISTIC_MEMO[key])
-    w = [0, 0, 0, 0]
-    for _ in range(_GD_ITERS):
-        ri = (
-            f"cast(round((y - (0.5 + (z / 2) / (1 + abs(z)))) * 1000000)"
-            f" as bigint)"
-        )
-        z = (
-            f"cast({w[0]} + {w[1]} * x1 + {w[2]} * x2 + {w[3]} * x3"
-            f" as double) / 1000000"
-        )
-        row = (
-            feat.selectExpr("y", "x1", "x2", "x3", f"{z} as z")
-            .selectExpr("x1", "x2", "x3", f"{ri} as ri")
-            .agg(
-                F.sum("ri").alias("g0"),
-                F.sum(F.expr("case when x1 = 1 then ri else 0 end")).alias(
-                    "g1"
-                ),
-                F.sum(F.expr("case when x2 = 1 then ri else 0 end")).alias(
-                    "g2"
-                ),
-                F.sum(F.expr("case when x3 = 1 then ri else 0 end")).alias(
-                    "g3"
-                ),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()[0]
-        )
-        n = int(row["n"])
-        g = [int(row[f"g{j}"]) for j in range(4)]
-        w = [w[j] + _tdiv(_GD_LR_NUM * g[j], n) for j in range(4)]
+    w = _gd_weights(feat, 3, _GD_ITERS, _GD_LR_NUM)
     if key is not None:
         _LOGISTIC_MEMO[key] = list(w)
     return w
@@ -441,30 +410,16 @@ def ml_logistic_quality_train(spark, sf_dir):
     weight 'model card' rides the driver like the simhash centering
     vector); the final row carries n, the trained weights, and an
     integer accuracy readout — at 100 TB each step is one map-side-
-    combined pass, and nothing about the arithmetic changes."""
-    feat = _logistic_feat(spark, sf_dir).persist()
+    combined pass, and nothing about the arithmetic changes.
 
+    `logit_fit` over the three features: the same `_gd_weights` loop
+    (through the `_fit_logistic` memo, so the calibration query reuses
+    the fit) and the same `_logit_report`. Its gradient is
+    sum(x_j * ri), which on these 0/1 features is exactly the oracle's
+    CASE-WHEN form."""
+    feat = _logistic_feat(spark, sf_dir).persist()
     try:
-        w = _fit_logistic(feat, sf_dir)
-        zi = f"{w[0]} + {w[1]} * x1 + {w[2]} * x2 + {w[3]} * x3"
-        return feat.selectExpr("y", f"({zi}) as zi").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.lit(w[0]).cast("long").alias("w0_1e6"),
-            F.lit(w[1]).cast("long").alias("w1_1e6"),
-            F.lit(w[2]).cast("long").alias("w2_1e6"),
-            F.lit(w[3]).cast("long").alias("w3_1e6"),
-            F.sum(
-                F.expr("case when (zi >= 0) = (y = 1) then 1 else 0 end")
-            ).cast("long").alias("n_correct"),
-        ).selectExpr(
-            "n",
-            "w0_1e6",
-            "w1_1e6",
-            "w2_1e6",
-            "w3_1e6",
-            "n_correct",
-            "(100 * n_correct) div n as accuracy_pct",
-        )
+        return _logit_report(feat, _fit_logistic(feat, sf_dir))
     finally:
         feat.unpersist()
 
@@ -506,10 +461,7 @@ def ml_logistic_calibration(spark, sf_dir):
     feat = _logistic_feat(spark, sf_dir).persist()
     try:
         w = _fit_logistic(feat, sf_dir)
-        z = (
-            f"cast({w[0]} + {w[1]} * x1 + {w[2]} * x2 + {w[3]} * x3"
-            f" as double) / 1000000"
-        )
+        z = f"cast({_linear(w)} as double) / 1000000"
         return (
             feat.selectExpr("y", "x1", "x2", "x3", f"{z} as z")
             .groupBy("x1", "x2", "x3", "z")
@@ -586,57 +538,68 @@ def logit_fit(df, x_cols, y_col, iters=2, lr_num=4):
         keep = keep & F.col(x).isNotNull()
     feat = feat.where(keep).persist()
     try:
-        w = [0] * (p + 1)
-        for _ in range(iters):
-            z = (
-                "cast("
-                + " + ".join([str(w[0])]
-                             + [f"{w[j]} * x{j}" for j in range(1, p + 1)])
-                + " as double) / 1000000"
-            )
-            ri = (
-                "cast(round((y - (0.5 + (z / 2) / (1 + abs(z))))"
-                " * 1000000) as bigint)"
-            )
-            row = (
-                feat.selectExpr("y", *xnames, f"{z} as z")
-                .selectExpr(*xnames, f"{ri} as ri")
-                .agg(
-                    F.sum("ri").alias("g0"),
-                    *[
-                        F.sum(F.col(x) * F.col("ri")).alias(f"g{j}")
-                        for j, x in enumerate(xnames, start=1)
-                    ],
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()[0]
-            )
-            n = int(row["n"])
-            if n == 0:
-                raise ValueError("logit_fit: no non-NULL training rows")
-            g = [int(row[f"g{j}"]) for j in range(p + 1)]
-            w = [w[j] + _tdiv(lr_num * g[j], n) for j in range(p + 1)]
-        zi = " + ".join(
-            [str(w[0])] + [f"{w[j]} * x{j}" for j in range(1, p + 1)]
-        )
-        return (
-            feat.selectExpr("y", f"({zi}) as zi")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.lit(w[j]).cast("long").alias(f"w{j}_1e6")
-                    for j in range(p + 1)
-                ],
-                F.sum(
-                    F.expr("case when (zi >= 0) = (y = 1) then 1 else 0 end")
-                ).cast("long").alias("n_correct"),
-            )
-            .selectExpr(
-                "n",
-                *[f"w{j}_1e6" for j in range(p + 1)],
-                "n_correct",
-                "(100 * n_correct) div n as accuracy_pct",
-            )
-        )
+        return _logit_report(feat, _gd_weights(feat, p, iters, lr_num))
     finally:
         feat.unpersist()
+
+
+def _linear(w):
+    """The SQL of the linear score w0 + w1 * x1 + ... + wp * xp."""
+    return " + ".join([str(w[0])] + [f"{w[j]} * x{j}" for j in range(1, len(w))])
+
+
+def _gd_weights(feat, p, iters, lr_num):
+    """The integer-exact GD loop over a (y, x1..xp) frame: zero-init
+    micro-unit weights, then ``iters`` aggregate passes, each
+    collecting the p+2 scalar gradient 'model card' to the driver
+    (bounded, like the simhash centering vector) and advancing by the
+    truncating integer step w += (lr_num * g) div n."""
+    xnames = [f"x{j}" for j in range(1, p + 1)]
+    w = [0] * (p + 1)
+    for _ in range(iters):
+        z = f"cast({_linear(w)} as double) / 1000000"
+        ri = (
+            "cast(round((y - (0.5 + (z / 2) / (1 + abs(z))))"
+            " * 1000000) as bigint)"
+        )
+        row = (
+            feat.selectExpr("y", *xnames, f"{z} as z")
+            .selectExpr(*xnames, f"{ri} as ri")
+            .agg(
+                F.sum("ri").alias("g0"),
+                *[
+                    F.sum(F.col(x) * F.col("ri")).alias(f"g{j}")
+                    for j, x in enumerate(xnames, start=1)
+                ],
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()[0]
+        )
+        n = int(row["n"])
+        if n == 0:
+            raise ValueError("logit_fit: no non-NULL training rows")
+        g = [int(row[f"g{j}"]) for j in range(p + 1)]
+        w = [w[j] + _tdiv(lr_num * g[j], n) for j in range(p + 1)]
+    return w
+
+
+def _logit_report(feat, w):
+    """The one-row training report over a (y, x1..xp) frame and its
+    micro-unit weights ``w``: (n, w0_1e6..wp_1e6, n_correct,
+    accuracy_pct), accuracy by sign agreement, truncating percent."""
+    return (
+        feat.selectExpr("y", f"({_linear(w)}) as zi")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.lit(wj).cast("long").alias(f"w{j}_1e6") for j, wj in enumerate(w)],
+            F.sum(
+                F.expr("case when (zi >= 0) = (y = 1) then 1 else 0 end")
+            ).cast("long").alias("n_correct"),
+        )
+        .selectExpr(
+            "n",
+            *[f"w{j}_1e6" for j in range(len(w))],
+            "n_correct",
+            "(100 * n_correct) div n as accuracy_pct",
+        )
+    )

@@ -347,32 +347,9 @@ def profile_columns(spark, sf_dir):
     distinct aggregate) — still a single job and shuffle set, vs the
     naive one-job-per-column profiler. At 100 TB swap exact distincts
     for approx_count_distinct to drop the Expand replication; the exact
-    form is kept here because sketches can't be oracle-checked."""
-    o = t(spark, sf_dir, "orders")
-    stats = o.agg(
-        *[
-            e
-            for c in _PROFILE_COLS
-            for e in (
-                (F.count(F.lit(1)) - F.count(c)).alias(f"nulls_{c}"),
-                F.count_distinct(F.col(c)).alias(f"distinct_{c}"),
-            )
-        ]
-    )
-    return stats.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("column_name"),
-                        F.col(f"nulls_{c}").alias("n_nulls"),
-                        F.col(f"distinct_{c}").alias("n_distinct"),
-                    )
-                    for c in _PROFILE_COLS
-                ]
-            )
-        ).alias("p")
-    ).select("p.column_name", "p.n_nulls", "p.n_distinct")
+    form is kept here because sketches can't be oracle-checked. The
+    call of `profile` over the four columns."""
+    return profile(t(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
 @query(
@@ -409,9 +386,8 @@ def upsert_latest_wins(spark, sf_dir):
     when Delta/Iceberg MERGE isn't available; at scale pair it with
     dynamic partition overwrite so only touched partitions rewrite.
     The oracle merges via anti-join instead (an independent
-    formulation of the same semantics)."""
-    from pyspark.sql import Window
-
+    formulation of the same semantics). The call of `latest_wins`
+    plus the per-status count."""
     o = t(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey", "o_orderstatus", cents(F.col("o_totalprice")).alias("price_cents")
@@ -435,18 +411,13 @@ def upsert_latest_wins(spark, sf_dir):
             )
         )
     )
-    merged = base.withColumn("_rank", F.lit(0)).unionByName(
-        updates.withColumn("_rank", F.lit(1))
-    )
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("_rank").desc())
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rank", "_rn")
-    )
-    return latest.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("price_cents").alias("price_cents_total"),
+    return (
+        latest_wins(base, updates, "o_orderkey")
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("price_cents").alias("price_cents_total"),
+        )
     )
 
 
@@ -524,30 +495,17 @@ def dq_constraint_report(spark, sf_dir):
     decides); all single-table row predicates FUSE into one conditional
     aggregate — one scan covers every NOT NULL + range rule on the
     table, instead of a scan per rule. Adding a rule is adding a CASE
-    column, not a pass over 100 TB."""
+    column, not a pass over 100 TB. The uniqueness and FK pieces are
+    the `_dq_unique` / `_dq_fk` stages `dq_check` runs; the row rules
+    stay here, because this report sums three CASE counts into one
+    constraint and `dq_check` gives each rule its own row."""
     orders = t(spark, sf_dir, "orders")
     customer = t(spark, sf_dir, "customer")
     lineitem = t(spark, sf_dir, "lineitem")
 
-    pk = (
-        orders.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") > 1)
-        .agg(
-            F.coalesce(F.sum(F.col("cnt") - 1), F.lit(0))
-            .cast("long")
-            .alias("violations")
-        )
-        .select(F.lit("orders_pk_unique").alias("constraint_name"), "violations")
-    )
-    fk_cust = (
-        orders.join(
-            customer.select("c_custkey"),
-            orders.o_custkey == F.col("c_custkey"),
-            "left_anti",
-        )
-        .agg(F.count(F.lit(1)).alias("violations"))
-        .select(F.lit("orders_custkey_fk").alias("constraint_name"), "violations")
+    pk = _dq_unique(orders, "o_orderkey", "orders_pk_unique")
+    fk_cust = _dq_fk(
+        orders, "o_custkey", customer, "c_custkey", "orders_custkey_fk", 0
     )
     row_rules = orders.agg(
         # coalesce: SUM over an EMPTY table is NULL, which would report
@@ -578,14 +536,8 @@ def dq_constraint_report(spark, sf_dir):
     ).select(
         F.lit("lineitem_quantity_range").alias("constraint_name"), "violations"
     )
-    fk_order = (
-        lineitem.join(
-            orders.select(F.col("o_orderkey").alias("_ok")),
-            lineitem.l_orderkey == F.col("_ok"),
-            "left_anti",
-        )
-        .agg(F.count(F.lit(1)).alias("violations"))
-        .select(F.lit("lineitem_orderkey_fk").alias("constraint_name"), "violations")
+    fk_order = _dq_fk(
+        lineitem, "l_orderkey", orders, "o_orderkey", "lineitem_orderkey_fk", 1
     )
     checks = pk.unionByName(fk_cust).unionByName(row_rules).unionByName(qty).unionByName(fk_order)
     return checks.select(
@@ -651,25 +603,10 @@ def blocked_fuzzy_pairs(df, value_col, block_col, max_dist):
     before the block self-join, so cost tracks distinct values per
     block, not row counts; the output is deduplicated too, so a value
     pair sharing several blocks (the multi-blocking-pass shape) is
-    still emitted once."""
-    named = df.select(
-        F.col(value_col).alias("val"), F.col(block_col).alias("blk")
-    ).distinct()
-    a, b = named.alias("a"), named.alias("b")
-    dist = F.levenshtein(F.col("a.val"), F.col("b.val"))
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.val") < F.col("b.val")),
-        )
-        .where(dist <= max_dist)
-        .select(
-            F.col("a.val").alias("value_a"),
-            F.col("b.val").alias("value_b"),
-            dist.cast("long").alias("edit_distance"),
-        )
-        .distinct()
+    still emitted once. The self-link of `fuzzy_match`, each
+    unordered pair kept once."""
+    return fuzzy_match(df, df, value_col, block_col, max_dist).where(
+        F.col("value_a") < F.col("value_b")
     )
 
 
@@ -825,7 +762,7 @@ def orders_incremental_agg_merge(spark, sf_dir):
 
     The split is deterministic (even/odd key) purely to stage the
     demonstration; in production the halves are yesterday's stored
-    state and today's partition."""
+    state and today's partition. The merge is `merge_agg_state`."""
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", cents(F.col("o_totalprice")).alias("c")
     )
@@ -837,16 +774,11 @@ def orders_incremental_agg_merge(spark, sf_dir):
             F.max("c").alias("max_cents"),
         )
 
-    base = agg_state(o.where(F.col("o_orderkey") % 2 == 1))
-    delta = agg_state(o.where(F.col("o_orderkey") % 2 == 0))
-    return (
-        base.unionByName(delta)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.sum("n_orders").alias("n_orders"),
-            F.sum("total_cents").alias("total_cents"),
-            F.max("max_cents").alias("max_cents"),
-        )
+    return merge_agg_state(
+        agg_state(o.where(F.col("o_orderkey") % 2 == 1)),
+        agg_state(o.where(F.col("o_orderkey") % 2 == 0)),
+        "o_orderstatus",
+        {"n_orders": "sum", "total_cents": "sum", "max_cents": "max"},
     )
 
 
@@ -1197,6 +1129,48 @@ def cdc_apply(
     )
 
 
+def _dq_unique(df, cols, name):
+    """One ``(constraint_name, violations)`` row: the surplus rows of
+    duplicated ``cols`` tuples, sum(count - 1) over the keys seen more
+    than once — a keyed count, one map-side-combined shuffle."""
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    return (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .where(F.col("_cnt") > 1)
+        .agg(
+            F.coalesce(F.sum(F.col("_cnt") - 1), F.lit(0))
+            .cast("long")
+            .alias("violations")
+        )
+        .select(F.lit(name).alias("constraint_name"), "violations")
+    )
+
+
+def _dq_fk(df, cols, src, ref_cols, name, tag):
+    """One ``(constraint_name, violations)`` row: the rows of ``df``
+    whose ``cols`` tuple finds no partner among ``src``'s ``ref_cols``
+    (a LEFT ANTI probe; the ref side broadcasts when small, AQE
+    decides). The ref columns get collision-proof aliases (``tag`` in
+    the name) and are referenced through the aliased frame OBJECT, so
+    a df that itself carries a ``_dq0_ref0``-style column (or a ref
+    derived from df) can never make the join condition ambiguous."""
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    ref_cols = [ref_cols] if isinstance(ref_cols, str) else list(ref_cols)
+    ref = src.select(
+        *[src[rc].alias(f"_dq{tag}_ref{j}") for j, rc in enumerate(ref_cols)]
+    )
+    cond = None
+    for j, c in enumerate(cols):
+        term = df[c] == ref[f"_dq{tag}_ref{j}"]
+        cond = term if cond is None else cond & term
+    return (
+        df.join(ref, cond, "left_anti")
+        .agg(F.count(F.lit(1)).alias("violations"))
+        .select(F.lit(name).alias("constraint_name"), "violations")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Library surface: frame-level warehouse gates (round 10) — the
 # arbitrary-frame forms of `dq_constraint_report` (fused declarative
@@ -1264,48 +1238,16 @@ def dq_check(df, rules):
             )
             fused.append((name, f"_v{i}"))
         elif typ == "unique":
-            cols = rule["cols"]
-            cols = [cols] if isinstance(cols, str) else list(cols)
-            pieces.append(
-                df.groupBy(*cols)
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .where(F.col("_cnt") > 1)
-                .agg(
-                    F.coalesce(F.sum(F.col("_cnt") - 1), F.lit(0))
-                    .cast("long")
-                    .alias("violations")
-                )
-                .select(
-                    F.lit(name).alias("constraint_name"), "violations"
-                )
-            )
+            pieces.append(_dq_unique(df, rule["cols"], name))
         elif typ == "fk":
-            cols = rule["cols"]
-            cols = [cols] if isinstance(cols, str) else list(cols)
-            ref_cols = rule.get("ref_cols", cols)
-            ref_cols = (
-                [ref_cols] if isinstance(ref_cols, str) else list(ref_cols)
-            )
-            # collision-proof aliases (rule index in the name) and
-            # references through the aliased frame OBJECT, so a df that
-            # itself carries a `_ref0`-style column (or a ref derived
-            # from df) can never make the join condition ambiguous
-            src = rule["ref"]
-            ref = src.select(
-                *[
-                    src[rc].alias(f"_dq{i}_ref{j}")
-                    for j, rc in enumerate(ref_cols)
-                ]
-            )
-            cond = None
-            for j, c in enumerate(cols):
-                term = df[c] == ref[f"_dq{i}_ref{j}"]
-                cond = term if cond is None else cond & term
             pieces.append(
-                df.join(ref, cond, "left_anti")
-                .agg(F.count(F.lit(1)).alias("violations"))
-                .select(
-                    F.lit(name).alias("constraint_name"), "violations"
+                _dq_fk(
+                    df,
+                    rule["cols"],
+                    rule["ref"],
+                    rule.get("ref_cols", rule["cols"]),
+                    name,
+                    i,
                 )
             )
         else:

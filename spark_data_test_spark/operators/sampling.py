@@ -342,18 +342,13 @@ def sample_token_budget(spark, sf_dir):
     One window cumsum partitioned by source (single shuffle); the kept
     set is a prefix in hash order, so re-running with a bigger budget
     EXTENDS the sample instead of reshuffling it — the property that
-    makes dataset ablations comparable."""
-    d = t(spark, sf_dir, "documents")
-    w = (
-        Window.partitionBy("source")
-        .orderBy(_hash_bucket(F.col("doc_id"), salt=53), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = d.select("doc_id", "source", _n_tok_col().alias("n_tok")).withColumn(
-        "c", F.sum("n_tok").over(w)
+    makes dataset ablations comparable. The call of `token_budget`
+    plus the per-source count."""
+    d = t(spark, sf_dir, "documents").select(
+        "doc_id", "source", _n_tok_col().alias("n_tok")
     )
     return (
-        cum.where(F.col("c") - F.col("n_tok") < _TOK_BUDGET)
+        token_budget(d, "source", "doc_id", "n_tok", _TOK_BUDGET, salt=53)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),

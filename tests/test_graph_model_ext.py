@@ -515,17 +515,31 @@ def test_library_logit_fit_matches_bruteforce(spark):
 
 def test_library_logit_fit_parity_with_registered_trainer(spark):
     from spark_data_test_spark import logit_fit
-    from spark_data_test_spark.operators.ml import _GD_ITERS, _fit_logistic
+    import duckdb
+
+    from spark_data_test_spark.operators.ml import _GD_ITERS, _fit_logistic, _gd_ctes
 
     rows = [
         (1, 1, 0, 1), (1, 1, 1, 0), (0, 0, 0, 1), (0, 0, 1, 0),
         (1, 1, 1, 1), (0, 0, 0, 0), (1, 0, 1, 1), (0, 1, 0, 0),
     ]
     feat = spark.createDataFrame(rows, "y long, x1 long, x2 long, x3 long")
-    want = _fit_logistic(feat)  # the registered queries' CASE-WHEN gradient
+    # the oracle's CTE chain: the CASE WHEN x=1 THEN ri gradient
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE feat AS SELECT * FROM (VALUES "
+        + ", ".join(str(r) for r in rows)
+        + ") t(y, x1, x2, x3)"
+    )
+    want = list(
+        con.execute(
+            f"WITH {_gd_ctes()} SELECT w0, w1, w2, w3 FROM w{_GD_ITERS}"
+        ).fetchone()
+    )
     got = logit_fit(feat, ["x1", "x2", "x3"], "y", iters=_GD_ITERS).collect()[0]
     # sum(x·ri) == CASE WHEN x=1 THEN ri form on indicator features
     assert [got.w0_1e6, got.w1_1e6, got.w2_1e6, got.w3_1e6] == want
+    assert _fit_logistic(feat) == want  # the registered queries' fit
 
 
 def test_library_logit_fit_null_rows_excluded(spark):

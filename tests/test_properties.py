@@ -324,6 +324,44 @@ def _degenerate_exports():
         "pii_scrub": (_DOCS, s.pii_scrub),
         "repetition_profile": (_DOCS, s.repetition_profile),
         "ngram_novelty": (_DOCS, s.ngram_novelty),
+        "rfm_segments": (
+            _EVENTS,
+            lambda d: s.rfm_segments(d, "2024-02-01 00:00:00", "user_id", "ts", "value"),
+        ),
+        "pareto_classes": (_SERIES, lambda d: s.pareto_classes(d, "k", "n")),
+        "ab_readout": (
+            _SERIES,
+            lambda d: s.ab_readout(d.withColumn("arm", F.col("b") > 1), "arm", "n", "k"),
+        ),
+        "value_histogram": (_SERIES, lambda d: s.value_histogram(d, "n", 2, 5, keys="k")),
+        "duplicate_scan": (_SERIES, lambda d: s.duplicate_scan(d, "k", "b", "n", "b", 7)),
+        "token_budget": (_SERIES, lambda d: s.token_budget(d, "k", "b", "n", 2)),
+        "merge_agg_state": (
+            _SERIES,
+            lambda d: s.merge_agg_state(d, d, "k", {"n": "sum", "b": "max"}),
+        ),
+        "latest_wins": (
+            _SERIES,
+            lambda d: s.latest_wins(d, d.withColumn("n", F.col("n") + 1), "k", "b"),
+        ),
+        "dq_check": (
+            _SERIES,
+            lambda d: s.dq_check(
+                d,
+                [
+                    {"name": "nn", "type": "not_null", "cols": ["b"]},
+                    {"name": "pos", "type": "expr", "expr": "n > 0"},
+                    {"name": "uq", "type": "unique", "cols": ["k", "b"]},
+                    {"name": "fk", "type": "fk", "cols": ["k"], "ref": d},
+                ],
+            ),
+        ),
+        "profile": (_SERIES, s.profile),
+        "logit_fit": (
+            _SERIES,
+            lambda d: s.logit_fit(d.withColumn("y", F.col("n") % 2), ["b"], "y"),
+        ),
+        "blocked_fuzzy_pairs": (_DOCS, lambda d: s.blocked_fuzzy_pairs(d, "text", "doc_id", 2)),
     }
 
 
@@ -343,27 +381,42 @@ def _degenerate_inputs(schema, rows):
 
 @pytest.mark.parametrize("name", sorted(_degenerate_exports()))
 def test_exports_survive_degenerate_inputs(spark, name):
-    """Every export behind a registered temporal or text query runs an
-    empty frame, all-NULL keys and NULL/empty values without raising;
-    an empty input gives no rows (`funnel`: one zero row per step); a
-    NULL key is a key like any other (`gap_fill` fills between its
-    observed buckets) and a NULL text scores NULL (`language_id`,
+    """Every export behind a registered query of DESIGN.md "Registered
+    queries over exports" runs an empty frame, all-NULL keys and
+    NULL/empty values without raising; an empty input gives no rows,
+    except `funnel` (one zero row per step), `profile` and `dq_check`
+    (one zero row per column or rule) and `logit_fit` (its documented
+    ValueError: nothing to train on); a NULL key is a key like any
+    other (`gap_fill` fills between its observed buckets), a NULL
+    value counts in the NULL bucket, not the clamped tail
+    (`value_histogram`), and a NULL text scores NULL (`language_id`,
     `quality_score`)."""
     (schema, rows), run = _degenerate_exports()[name]
-    got = {
-        kind: run(spark.createDataFrame(data, schema)).collect()
-        for kind, data in _degenerate_inputs(schema, rows).items()
-    }
+    got = {}
+    for kind, data in _degenerate_inputs(schema, rows).items():
+        frame = spark.createDataFrame(data, schema)
+        if name == "logit_fit" and kind == "empty":
+            with pytest.raises(ValueError, match="no non-NULL training rows"):
+                run(frame)
+            continue
+        got[kind] = run(frame).collect()
+    empty = sorted(tuple(r) for r in got.get("empty", []))
     if name == "funnel":
         assert [(r.step_idx, r.n_converted) for r in got["empty"]] == [
             (1, 0), (2, 0), (3, 0)
         ]
+    elif name == "profile":
+        assert empty == [("b", 0, 0), ("k", 0, 0), ("n", 0, 0)]
+    elif name == "dq_check":
+        assert empty == [("fk", 0, 1), ("nn", 0, 1), ("pos", 0, 1), ("uq", 0, 1)]
     else:
-        assert got["empty"] == []
+        assert empty == []
     if name == "gap_fill":
         assert {tuple(r) for r in got["null_keys"]} == {
             (None, 1, 1, 0), (None, 2, 0, 1), (None, 3, 2, 0)
         }
+    if name == "value_histogram":
+        assert ("a", None, 1) in {tuple(r) for r in got["null_text"]}
     if name in ("language_id", "quality_score"):
         col = "pred_lang" if name == "language_id" else "quality"
         scored = {r.text: r[col] for r in got["null_text"]}

@@ -188,10 +188,10 @@ def test_script_package_imports_resolve():
     assert not broken, f"unresolved package names: {sorted(set(broken))}"
 
 
-# registered query -> the export (or shared private stage) it calls.
-# A query of this table is that call plus renames, casts, a filter or
-# an orderBy; DESIGN.md "Registered queries over exports" lists the
-# twins that stay separate and why.
+# registered query -> the export (or shared private stage) it calls,
+# or a tuple of them. A query of this table is that call plus renames,
+# casts, a filter, an orderBy or a group count; DESIGN.md "Registered
+# queries over exports" lists the twins that stay separate and why.
 _QUERY_EXPORTS = {
     "temporal": {
         "events_gap_fill": "gap_fill",
@@ -216,6 +216,51 @@ _QUERY_EXPORTS = {
         "text_pii_scrub": "pii_scrub",
         "text_repetition_profile": "repetition_profile",
         "text_ngram_novelty": "ngram_novelty",
+    },
+    "analytics": {
+        "orders_rfm_segments": "rfm_segments",
+        "parts_abc_pareto": "_pareto_cumsum",
+        "events_ab_test_readout": "_ab_moments",
+        "events_value_histogram": "value_histogram",
+        "orders_duplicate_payment_scan": "duplicate_scan",
+    },
+    "sampling": {
+        "sample_split_stratified": "split_assign",
+        "pack_sequences": "pack_bins",
+        "sample_token_budget": "token_budget",
+    },
+    "relational_ext": {
+        "orders_incremental_agg_merge": "merge_agg_state",
+        "upsert_latest_wins": "latest_wins",
+        "dq_constraint_report": ("_dq_unique", "_dq_fk"),
+        "profile_columns": "profile",
+        "part_fuzzy_match": "blocked_fuzzy_pairs",
+    },
+    "ml": {
+        "ml_linear_regression_train": "ols_fit",
+        "lineitem_correlation_matrix": "corr_matrix",
+        "ml_logistic_quality_train": ("_fit_logistic", "_logit_report"),
+        "ml_logistic_calibration": "_fit_logistic",
+    },
+}
+
+# shared stage -> the functions that must call it: a private stage of
+# `_QUERY_EXPORTS` stays the one its library export runs too, and
+# `blocked_fuzzy_pairs` stays the self-link of `fuzzy_match`.
+_SHARED_STAGES = {
+    "temporal": {"_funnel_times": ("funnel",)},
+    "analytics": {
+        "_pareto_cumsum": ("pareto_classes",),
+        "_ab_moments": ("ab_readout",),
+    },
+    "relational_ext": {
+        "_dq_unique": ("dq_check",),
+        "_dq_fk": ("dq_check",),
+        "fuzzy_match": ("blocked_fuzzy_pairs",),
+    },
+    "ml": {
+        "_gd_weights": ("logit_fit", "_fit_logistic"),
+        "_logit_report": ("logit_fit",),
     },
 }
 
@@ -250,24 +295,30 @@ def _module_calls(module):
 
 
 def test_registered_queries_call_their_exports():
-    """Each query of `_QUERY_EXPORTS` calls its export and keeps no
-    window or join of its own, so the registered query and the library
-    export cannot fork into two implementations again. Static (AST), no
-    Spark session."""
+    """Each query of `_QUERY_EXPORTS` calls its export (or stages) and
+    keeps no window or join of its own, and each stage of
+    `_SHARED_STAGES` is called by every function listed for it, so a
+    registered query and its library export cannot fork into two
+    implementations again. Static (AST), no Spark session."""
     import spark_data_test_spark as pkg
 
     names = set(_registry_names()[0])
     broken = []
     for module, pairs in _QUERY_EXPORTS.items():
         calls = _module_calls(module)
-        for q, export in pairs.items():
+        for q, exports in pairs.items():
             assert q in names, f"{q} is not registered"
-            assert export.startswith("_") or hasattr(pkg, export), export
             called, own = calls[q]
-            if export not in called:
-                broken.append(f"{q} does not call {export}")
+            for export in (exports,) if isinstance(exports, str) else exports:
+                assert export.startswith("_") or hasattr(pkg, export), export
+                if export not in called:
+                    broken.append(f"{q} does not call {export}")
             if own:
                 broken.append(f"{q} builds its own {sorted(own)}")
-    if "_funnel_times" not in _module_calls("temporal")["funnel"][0]:
-        broken.append("funnel does not call _funnel_times")
+    for module, stages in _SHARED_STAGES.items():
+        calls = _module_calls(module)
+        for stage, callers in stages.items():
+            for fn in callers:
+                if stage not in calls[fn][0]:
+                    broken.append(f"{fn} does not call {stage}")
     assert not broken, broken
